@@ -106,6 +106,57 @@ class CatalogSpec extends SparkSpec {
       7L -> 300L, 8L -> 400L))
   }
 
+  /** One copy-on-write and one merge-on-read table holding (1, 10.0),
+    * (2, 20.0), each passed to `body` with its name and root. */
+  private def onCowAndMor(prefix: String)(body: (String, String) => Unit): Unit =
+    Seq(s"${prefix}_cow" -> "", s"${prefix}_mor" -> " TBLPROPERTIES ('graft.mor.key' = 'k')")
+      .foreach { case (t, props) =>
+        sqlDf(s"DROP TABLE IF EXISTS snap.default.$t")
+        sqlDf(s"CREATE TABLE snap.default.$t (k BIGINT, v DOUBLE)$props")
+        sqlDf(s"INSERT INTO snap.default.$t VALUES (1, 10.0), (2, 20.0)")
+        body(s"snap.default.$t", rootOf(t))
+      }
+
+  private def kv(table: String): Seq[(Long, Double)] =
+    sqlDf(s"SELECT k, v FROM $table ORDER BY k").as[(Long, Double)].collect().toSeq
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  test("MERGE with duplicate source keys raises cardinality violation (COW, MOR)") {
+    // two source rows match target k=1: the SQL contract requires an
+    // error, not a silent fan-out into two updated copies of the row
+    Seq((1L, 11.0), (1L, 12.0), (3L, 30.0)).toDF("k", "v")
+      .createOrReplaceTempView("merge_card_dup_s")
+    onCowAndMor("mcard") { (t, root) =>
+      val before = Snapshots.maxCommitted(root)
+      val ex = intercept[Exception](sqlDf(
+        s"""MERGE INTO $t t USING merge_card_dup_s s ON t.k = s.k
+           |WHEN MATCHED THEN UPDATE SET v = s.v
+           |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""".stripMargin))
+      assert(messages(ex).exists(_.contains("MERGE_CARDINALITY_VIOLATION")),
+        s"$t: expected the cardinality error, got: $ex")
+      assert(Snapshots.maxCommitted(root) == before,
+        s"$t: a cardinality-violating MERGE must not commit")
+      assert(kv(t) == Seq(1L -> 10.0, 2L -> 20.0))
+    }
+  }
+
+  test("insert-only MERGE tolerates duplicate source matches (COW, MOR)") {
+    // k=1 matches TWICE, but no WHEN MATCHED clause consumes the match:
+    // target rows pass through exactly once, only k=3 inserts
+    Seq((1L, 11.0), (1L, 12.0), (3L, 30.0)).toDF("k", "v")
+      .createOrReplaceTempView("merge_insonly_s")
+    onCowAndMor("minsonly") { (t, root) =>
+      val before = Snapshots.maxCommitted(root)
+      sqlDf(s"""MERGE INTO $t t USING merge_insonly_s s ON t.k = s.k
+               |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""".stripMargin)
+      assert(Snapshots.maxCommitted(root) == before + 1, s"$t: one commit")
+      assert(kv(t) == Seq(1L -> 10.0, 2L -> 20.0, 3L -> 30.0),
+        s"$t: target rows must survive exactly once, insert applied once")
+    }
+  }
+
   test("native DELETE on a merge-on-read table writes delete files, not a rewrite") {
     sqlDf("DROP TABLE IF EXISTS snap.default.mor")
     sqlDf("CREATE TABLE snap.default.mor (k BIGINT, m BIGINT) " +
