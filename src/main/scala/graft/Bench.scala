@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Compact (summary, full-detail) JSON pair for a bench run. The
     * driver captures only the LAST 2000 chars of output (observed in
@@ -48,28 +47,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Pin UTC explicitly (not only via build.sbt javaOptions) so the
-      // timed workload resolves timestamp literals exactly like the
-      // UTC-pinned Verify run regardless of how this main is launched.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE coalescing for cached plans: a guard-persisted slice
-      // otherwise pins 32 map partitions onto every consumer stage
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // Sort-based shuffle even at low reducer counts: the bypass-merge
-      // writer opens one temp file PER REDUCER per map task and then
-      // concatenates them — M·R stream creations per shuffle (profiled
-      // at ~60% of executor CPU on the pair-join queries here; the same
-      // M·R small-stream explosion as guide §2.2 at cluster scale). The
-      // serialized sort writer emits one file per map task. Env knob
-      // restores Spark's default (200) for A/B.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm run at the smallest SF before timing: whole-stage-codegen
     // (janino) compiles each distinct plan shape once per JVM (~0.5-1 s

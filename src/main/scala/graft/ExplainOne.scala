@@ -1,15 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Scratch plan printer for local iteration:
   * runMain graft.ExplainOne <sfDir> <q1> <q2> ... — the manual
   * companion to the mechanical PlanGuardSpec/PlanAudit checks. */
 object ExplainOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     args.tail.foreach { q =>
       println(s"==== $q ====")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
@@ -549,19 +548,20 @@ object PlanAudit {
         |until a rewrite commit absorbs the deletes (also spec-pinned,
         |as is vacuum keeping referenced delete files).""".stripMargin,
     "sql_update_delete" ->
-      """UPDATE / DELETE statements against the snapshot store (r9):
-        |Spark's parser produces the UpdateTable / DeleteFromTable tree
-        |and RowSql lowers each onto ONE embarrassingly-parallel
-        |scan→project/filter→write — expect ZERO exchanges in either
-        |lowered plan (contrast MERGE's full-outer shuffle join): every
-        |task rewrites exactly its own input split, so the statement
-        |cost is one table pass regardless of cluster width. The
-        |write-back is copy-on-write through the atomic manifest
-        |commit; time travel keeps each pre-statement version. At
-        |100 TB the production refinement is scoping the rewrite to
-        |files whose zone maps can satisfy the predicate and carrying
-        |untouched files forward by reference in the manifest — the
-        |append-manifest machinery this store already has.""".stripMargin,
+      """UPDATE then DELETE on a copy-on-write snap. catalog table
+        |(r9): Spark's own analyzer rewrites each statement into a
+        |ReplaceData plan that computes the full survivor set,
+        |executors stage parquet, and the commit is ONE atomic
+        |full-rewrite manifest; time travel keeps each pre-statement
+        |version. Both statements run eagerly inside spark.sql, so the
+        |plan below is the key's read of the post-statement head: one
+        |BatchScan of the rewritten table (the rewrite re-materialized
+        |every survivor into one file) feeding the two-phase
+        |HashAggregate and the ordering sort. At 100 TB the production
+        |refinement is scoping the rewrite to files whose zone maps can
+        |satisfy the predicate and carrying untouched files forward by
+        |reference in the manifest — the append-manifest machinery
+        |this store already has.""".stripMargin,
     "stream_snapshot_append" ->
       """Exactly-once streaming ingest into the snapshot store (r9):
         |each micro-batch is one idempotent APPEND commit
@@ -671,21 +671,19 @@ object PlanAudit {
         |the delete never un-prunes a partition, and the pruned read
         |applies exactly the deletes whose scope covers it.""".stripMargin,
     "cdc_merge_sql" ->
-      """MERGE INTO as a SQL statement (r9). Stock Spark 4 parses MERGE
-        |but refuses to execute it on any default-catalog table — the
-        |probe (pinned in MergeSqlSpec) fails with
-        |[UNSUPPORTED_FEATURE.TABLE_OPERATION] "Table … does not support
-        |MERGE INTO TABLE"; execution lives behind v2
-        |row-level-operation connectors (Delta/Iceberg) that are not on
-        |this classpath and cannot be added under the build rules. So
-        |graft.plans.MergeSql interprets the PARSED MergeIntoTable tree
-        |itself: expect ONE full-outer SortMergeJoin (or broadcast under
-        |AQE when the source is small) on the merge keys, the three
-        |clause families lowered to first-match-wins CASE chains in a
-        |single projection, then a copy-on-write parquet write published
-        |by the snapshot store's atomic manifest commit — the same
-        |read-isolation guarantee a Delta MERGE gives. Spec-pinned equal
-        |to the DataFrame cdc_merge_apply row for row.""".stripMargin,
+      """MERGE INTO as a SQL statement on a copy-on-write snap.
+        |catalog table (r9). Stock Spark 4 refuses MERGE on
+        |default-catalog tables; the graft catalog's row-level
+        |operations let Spark's own RewriteMergeIntoTable plan it —
+        |clause semantics and the cardinality check included
+        |(CatalogSpec pins both on COW and MOR tables) — and the
+        |ReplaceData write commits ONE atomic full-rewrite manifest, the
+        |same read isolation a Delta MERGE gives. The MERGE runs eagerly
+        |inside spark.sql, so the plan below is the key's read of the
+        |post-merge head: one BatchScan of the merged table and the
+        |range-partitioned sort of the ORDER BY. Spec-pinned equal to
+        |the DataFrame cdc_merge_apply row for row
+        |(CdcMergeSpec).""".stripMargin,
     "snapshot_stats_prune" ->
       """File skipping on manifest column bounds (r15), explicit API.
         |readStatsPruned keeps only files whose recorded [min,max] for
@@ -895,12 +893,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit (generated by graft.PlanAudit)\n\n")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Scratch per-query timer for local iteration: runMain graft.TimeOne <sfDir> <q1> <q2> ...
   * Repeat a query name for extra timed passes. Set SPARK_GRAFT_PROFILE=1
   * to print per-Spark-job wall time + callsite during the timed passes
@@ -9,16 +8,9 @@ object TimeOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_CONF="k=v;k2=v2" — scratch conf A/B without a rebuild
-    val b0 = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true") // AQE coalescing for cached plans: a guard-persisted slice
-      // otherwise pins 32 map partitions onto every consumer stage
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
+    // SPARK_GRAFT_CONF="k=v;k2=v2" — scratch conf A/B without a rebuild,
+    // applied over the shared session confs
+    val b0 = GraftSession.builder(cpus)
     val spark = sys.env.get("SPARK_GRAFT_CONF").iterator
       .flatMap(_.split(';')).filter(_.contains('='))
       .foldLeft(b0) { (b, kv) =>

@@ -18,9 +18,9 @@ import java.nio.file.{Files, Paths}
   * lets Spark's OWN analyzer execute DELETE / UPDATE / MERGE INTO
   * against snapshot tables (RewriteDeleteFromTable /
   * RewriteUpdateTable / RewriteMergeIntoTable engage on any table
-  * implementing `SupportsRowLevelOperations`; probes pinned in
-  * MergeSqlSpec showed stock Spark refusing these statements on
-  * default-catalog tables — this is the catalog that accepts them).
+  * implementing `SupportsRowLevelOperations`; stock Spark refuses
+  * these statements on default-catalog tables — this is the catalog
+  * that accepts them, and the only SQL path for snapshot tables).
   *
   * Two modes, chosen per table:
   *

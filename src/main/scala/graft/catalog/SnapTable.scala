@@ -288,10 +288,14 @@ class GraftTable(tableName: String, val root: String,
     * [[legacyIntBucket]]) DEGRADES to None rather than refusing or
     * serving wrongly: the synthetic segment is derived (the key column
     * stays in the data files), so scans without the spec read every
-    * row value-exactly — the table merely loses bucket pruning and SPJ
-    * until a rewrite (compaction, CTAS) re-stamps it. Refusing instead
-    * would dead-end even the remediation read; pruning with the wrong
-    * hash would be silent corruption. */
+    * row value-exactly — the table merely loses bucket pruning and SPJ.
+    * The loss is permanent for that table: only CREATE TABLE writes the
+    * stamp (no rewrite or compaction re-stamps it, and SET TBLPROPERTIES
+    * of the bucket prop is refused), so regaining pruning and SPJ means
+    * recreating the table (`CREATE TABLE … PARTITIONED BY (bucket(n,
+    * col)) AS SELECT` from it, under a new name). Refusing instead
+    * would dead-end even the remediation read; pruning with the
+    * wrong hash would be silent corruption. */
   def bucketSpec: Option[(String, Int)] =
     meta.flatMap { m =>
       val spec = SnapBucket.of(m._2)

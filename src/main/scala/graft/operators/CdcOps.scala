@@ -233,17 +233,15 @@ object CdcOps {
     * clause semantics, cardinality check, the works) and the commit is
     * the catalog's atomic copy-on-write manifest publish — readers
     * interleaved with the merge see pre- or post-merge state, never a
-    * mix. This closes the round-12 gap: the statement a real user
-    * types now runs with zero graft-side tree interception (the
-    * [[graft.plans.MergeSql]] lowering interpreter stays for
-    * catalog-less sessions, spec-pinned in MergeSqlSpec).
+    * mix. The statement a real user types runs with zero graft-side
+    * tree interception.
     *
     * Each invocation DROP + re-CREATEs the pristine slice before
     * merging, so the statement is deterministic on a repeatedly-run
     * surface (Bench warm + timed passes). The oracle replays the same
     * semantics in ANSI SQL over the ORIGINAL tables — lossless through
     * the versioned write. */
-  val cdcMergeSql: Q = (s, dir) => {
+  val cdcMergeStatement: Q = (s, dir) => {
     import s.implicits._
     val (t, _) = SnapCat.table(s, "merge_cust", dir)
     s.sql(s"DROP TABLE IF EXISTS $t")
@@ -268,7 +266,7 @@ object CdcOps {
   }
 
   val queries: Map[String, Q] = Map(
-    "cdc_merge_sql" -> cdcMergeSql,
+    "cdc_merge_sql" -> cdcMergeStatement,
     "pipeline_cdc_roundtrip" -> cdcPipelineRoundtrip,
     "cdc_snapshot_diff" -> cdcSnapshotDiff,
     "cdc_upsert_latest" -> cdcUpsertLatest,

@@ -426,9 +426,7 @@ object WarehouseOps {
     *
     * Each invocation DROP + re-CREATEs the table (the statements are
     * destructive by design), keeping the key deterministic across
-    * repeated Bench/Verify passes. The legacy lowering interpreter
-    * ([[graft.plans.RowSql]]) stays for catalog-less sessions and its
-    * plan-shape contract is still spec-pinned (RowSqlSpec). */
+    * repeated Bench/Verify passes. */
   val sqlUpdateDelete: Q = (s, dir) => {
     import s.implicits._
     val (t, _) = SnapCat.table(s, "cow_cust", dir)

@@ -69,7 +69,7 @@ object Snapshots {
 
   /** A resolved table version: the immutable file set of one commit,
     * plus any pending merge-on-read delete files ([[commitDelete]],
-    * [[commitUpsert]]). `fileSeq` maps CROSS-ROOT files (published by
+    * [[commitStagedDelta]]). `fileSeq` maps CROSS-ROOT files (published by
     * reference from another root, [[publishFrom]]) to their EFFECTIVE
     * sequence number in THIS root — the version the publish committed
     * at. A published file's own `v########` path segment carries the
@@ -2267,7 +2267,7 @@ object Snapshots {
     * Contract: `keyCol` must identify rows (a primary key). The delete
     * is SCOPED to the files present when it committed
     * ([[DeleteFile.coversBelow]], the sequence-number rule of Iceberg
-    * v2 equality deletes): a later append or [[commitUpsert]] that
+    * v2 equality deletes): a later append or [[commitStagedDelta]] that
     * re-adds the key IS visible — no rewrite needed first. */
   def commitDelete(root: String, keyCol: String)(write: String => Unit): Long =
     commitDelete(root, Seq(keyCol))(write)
@@ -2284,32 +2284,12 @@ object Snapshots {
   }
 
   /** Every `#del:@<v>:<key>:<path>` writer must reject names that
-    * break the line's 3-way split — shared by [[commitDelete]],
-    * [[commitUpsert]] and [[commitStagedDelta]] so a ':'-bearing key
+    * break the line's 3-way split — shared by [[commitDelete]] and
+    * [[commitStagedDelta]] so a ':'-bearing key
     * (legal SQL via backticks) can never silently corrupt a manifest. */
   private def requireKeyName(c: String): Unit =
     require(!c.contains(',') && !c.contains(':'),
       s"delete key column name must not contain ',' or ':' (manifest syntax): $c")
-
-  /** Subdirectory an upsert's writer stages its delete-key parquet
-    * under (the rest of the staging dir is the new data). */
-  val upsertDelSubdir = "_delkeys"
-
-  /** MERGE-ON-READ UPSERT, one atomic commit (the Hudi upsert shape):
-    * `write(stagingDir)` stages the REWRITTEN ROWS as data and the
-    * rewritten keys as a delete-key parquet under
-    * `stagingDir/_delkeys/`. The published manifest carries the
-    * parent's files + the new data files, plus a scoped `#del` line
-    * hiding the keys' OLD versions — the delete covers only files
-    * staged before this commit, so the new rows (staged AT this
-    * commit's version) shine through. Readers see pre- or post-upsert
-    * state, never a mix, and the upsert costs O(touched rows), never
-    * a table rewrite. */
-  def commitUpsert(root: String, keyCol: String)(write: String => Unit): Long = {
-    requireKeyName(keyCol)
-    commitImpl(root, carryForward = true, txn = None,
-      upsertKey = Some(keyCol))(write)
-  }
 
   /** RESTORE (Delta's `RESTORE TABLE ... TO VERSION AS OF`): publish a
     * NEW commit whose file list (and pending-delete lines) are exactly
@@ -2738,7 +2718,6 @@ object Snapshots {
   private def commitImpl(root: String, carryForward: Boolean,
       txn: Option[(String, Long)],
       stagedAsDeletes: Option[String] = None,
-      upsertKey: Option[String] = None,
       rowsUnchanged: Boolean = false)(write: String => Unit): Long = {
     // the attempt's own staging dir, discarded (and only it) on a lost
     // race before the retry re-stages
@@ -2764,38 +2743,26 @@ object Snapshots {
         if (v > 1L && (carryForward || stagedAsDeletes.isDefined))
           Some(resolveAt(root, v - 1))
         else None
-      // upsert staging splits on the _delkeys subdir: delete keys
-      // there, new data everywhere else in the staged dir
-      val (stagedDelKeys, stagedData) =
-        staged.partition(_.contains(s"/$upsertDelSubdir/"))
       val files = stagedAsDeletes match {
         case Some(_) => parent.getOrElse(throw new IllegalStateException(
           s"merge-on-read delete needs a committed table under $root")).files
-        case None => parent.map(_.files).getOrElse(Nil) ++ stagedData
+        case None => parent.map(_.files).getOrElse(Nil) ++ staged
       }
-      // pending deletes carry forward on append/delete/upsert commits;
-      // a full rewrite (carryForward = false) clears them — the
-      // rewrite materializes the surviving rows. New delete lines are
-      // SCOPED to this commit: they cover only files staged at
-      // versions < v, so an upsert's own rewritten rows (and any later
-      // append of a deleted key) stay visible.
-      val newDelFiles = stagedAsDeletes match {
-        case Some(k) => staged.map(DeleteFile(k, _, v))
-        case None => upsertKey.toSeq.flatMap(k => stagedDelKeys.map(DeleteFile(k, _, v)))
-      }
-      upsertKey.foreach { _ =>
-        require(stagedDelKeys.nonEmpty && stagedData.nonEmpty,
-          s"an upsert must stage both new rows and $upsertDelSubdir/ keys in $dataDir")
-      }
+      // pending deletes carry forward on append/delete commits; a full
+      // rewrite (carryForward = false) clears them — the rewrite
+      // materializes the surviving rows. New delete lines are SCOPED to
+      // this commit: they cover only files staged at versions < v, so
+      // any later append of a deleted key stays visible.
+      val newDelFiles = stagedAsDeletes.toSeq.flatMap(k => staged.map(DeleteFile(k, _, v)))
       // seq pins for carried cross-root (published) files survive every
       // carry-forward commit; a full rewrite drops them with the files
       val header = (if (rowsUnchanged) Seq(rowsUnchangedLine) else Nil) ++
         (parent.map(_.deletes).getOrElse(Nil) ++ newDelFiles).map(delLine) ++
         parent.map(p => seqLines(p.fileSeq, files)).getOrElse(Nil) ++
         parent.map(p => statsLines(p.statsRaw, files)).getOrElse(Nil) ++
-        (if (stagedAsDeletes.isDefined) Nil else newStatsLines(stagedData)) ++
+        (if (stagedAsDeletes.isDefined) Nil else newStatsLines(staged)) ++
         parent.map(p => bloomLines(p.blooms, files)).getOrElse(Nil) ++
-        (if (stagedAsDeletes.isDefined) Nil else newBloomLines(root, stagedData)) ++
+        (if (stagedAsDeletes.isDefined) Nil else newBloomLines(root, staged)) ++
         parent.map(p => posLines(p.posDeletes, files)).getOrElse(Nil)
       (txn.map { case (a, e) => s"#txn:$a:$e" }.toSeq, header, files)
     }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -17,12 +16,7 @@ import java.nio.file.{Files, Paths}
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -4,11 +4,12 @@ import graft.catalog.GraftCatalog
 import graft.sources.Snapshots
 import org.apache.spark.sql.DataFrame
 
-/** The DataSourceV2 catalog: every statement here executes through
-  * SPARK'S OWN analyzer — no graft-side parsed-tree interception. The
-  * negative probes pinned in MergeSqlSpec/RowSqlSpec (stock Spark
-  * refusing MERGE/UPDATE/DELETE on default-catalog tables) flip to
-  * positive paths once the table comes from [[GraftCatalog]]. */
+/** The DataSourceV2 catalog, the one SQL path for snapshot tables:
+  * every statement here — MERGE, UPDATE, DELETE and VERSION/TIMESTAMP
+  * AS OF included — executes through SPARK'S OWN analyzer, with no
+  * graft-side parsed-tree interception. Stock Spark refuses the
+  * row-level statements on default-catalog tables; a table from
+  * [[GraftCatalog]] accepts them. */
 class CatalogSpec extends SparkSpec {
   import spark.implicits._
 
@@ -106,14 +107,15 @@ class CatalogSpec extends SparkSpec {
       7L -> 300L, 8L -> 400L))
   }
 
-  /** One copy-on-write and one merge-on-read table holding (1, 10.0),
-    * (2, 20.0), each passed to `body` with its name and root. */
-  private def onCowAndMor(prefix: String)(body: (String, String) => Unit): Unit =
+  /** One copy-on-write and one merge-on-read table (key `k`) holding
+    * `rows`, each passed to `body` with its name and root. */
+  private def onCowAndMor(prefix: String, cols: String = "k BIGINT, v DOUBLE",
+      rows: String = "(1, 10.0), (2, 20.0)")(body: (String, String) => Unit): Unit =
     Seq(s"${prefix}_cow" -> "", s"${prefix}_mor" -> " TBLPROPERTIES ('graft.mor.key' = 'k')")
       .foreach { case (t, props) =>
         sqlDf(s"DROP TABLE IF EXISTS snap.default.$t")
-        sqlDf(s"CREATE TABLE snap.default.$t (k BIGINT, v DOUBLE)$props")
-        sqlDf(s"INSERT INTO snap.default.$t VALUES (1, 10.0), (2, 20.0)")
+        sqlDf(s"CREATE TABLE snap.default.$t ($cols)$props")
+        sqlDf(s"INSERT INTO snap.default.$t VALUES $rows")
         body(s"snap.default.$t", rootOf(t))
       }
 
@@ -155,6 +157,157 @@ class CatalogSpec extends SparkSpec {
       assert(kv(t) == Seq(1L -> 10.0, 2L -> 20.0, 3L -> 30.0),
         s"$t: target rows must survive exactly once, insert applied once")
     }
+  }
+
+  test("MERGE with a misspelled SET or INSERT column raises and commits nothing") {
+    Seq((1L, 11.0), (3L, 30.0)).toDF("k", "v").createOrReplaceTempView("merge_badcol_s")
+    onCowAndMor("mbadcol") { (t, root) =>
+      val before = Snapshots.maxCommitted(root)
+      intercept[Exception](sqlDf(
+        s"""MERGE INTO $t t USING merge_badcol_s s ON t.k = s.k
+           |WHEN MATCHED THEN UPDATE SET vee = s.v""".stripMargin))
+      intercept[Exception](sqlDf(
+        s"""MERGE INTO $t t USING merge_badcol_s s ON t.k = s.k
+           |WHEN NOT MATCHED THEN INSERT (kk, v) VALUES (s.k, s.v)""".stripMargin))
+      assert(Snapshots.maxCommitted(root) == before, s"$t: nothing committed")
+      assert(kv(t) == Seq(1L -> 10.0, 2L -> 20.0))
+    }
+  }
+
+  test("UPDATE: a NULL predicate keeps the old value (COW, MOR)") {
+    onCowAndMor("updnull", "k BIGINT, v DOUBLE, s STRING",
+        "(1, 1.0, 'a'), (2, -1.0, 'b'), (3, NULL, 'c')") { (t, _) =>
+      sqlDf(s"UPDATE $t SET s = concat(s, '!') WHERE v > 0.0")
+      // k=1: v>0 TRUE → updated; k=2: FALSE → kept; k=3: NULL → kept
+      val got = sqlDf(s"SELECT s FROM $t ORDER BY k").as[String].collect().toSeq
+      assert(got == Seq("a!", "b", "c"), s"$t: three-valued UPDATE broke: $got")
+    }
+  }
+
+  test("DELETE: a NULL predicate keeps the row (COW, MOR)") {
+    onCowAndMor("delnull", rows = "(1, 1.0), (2, -1.0), (3, NULL)") { (t, _) =>
+      sqlDf(s"DELETE FROM $t WHERE v > 0.0")
+      val kept = sqlDf(s"SELECT k FROM $t ORDER BY k").as[Long].collect().toSeq
+      assert(kept == Seq(2L, 3L), s"$t: three-valued DELETE broke: $kept")
+    }
+  }
+
+  test("UPDATE with a misspelled SET column raises and commits nothing") {
+    onCowAndMor("updbadcol") { (t, root) =>
+      val before = Snapshots.maxCommitted(root)
+      intercept[Exception](sqlDf(s"UPDATE $t SET vee = 9.0"))
+      assert(Snapshots.maxCommitted(root) == before,
+        s"$t: a rejected statement must not commit a version")
+    }
+  }
+
+  test("DELETE through a target alias (COW, MOR)") {
+    onCowAndMor("delalias") { (t, _) =>
+      sqlDf(s"DELETE FROM $t AS x WHERE x.v > 15.0")
+      assert(kv(t) == Seq(1L -> 10.0))
+    }
+  }
+
+  test("COW UPDATE and DELETE each commit a version; earlier ones stay readable") {
+    sqlDf("DROP TABLE IF EXISTS snap.default.cowver")
+    sqlDf("CREATE TABLE snap.default.cowver AS SELECT id, 1.0D AS v FROM range(10)")
+    val v1 = Snapshots.maxCommitted(rootOf("cowver"))
+    sqlDf("UPDATE snap.default.cowver SET v = 2.0 WHERE id < 5")
+    sqlDf("DELETE FROM snap.default.cowver WHERE id >= 8")
+    val after = sqlDf("SELECT * FROM snap.default.cowver")
+    assert(after.count() == 8)
+    assert(after.filter($"v" === 2.0).count() == 5)
+    // v1 is untouched history; the two statements made versions 2 and 3
+    val old = sqlDf(s"SELECT * FROM snap.default.cowver VERSION AS OF $v1")
+    assert(old.count() == 10 && old.filter($"v" === 1.0).count() == 10,
+      "pre-statement version must stay readable and pristine")
+    assert(Snapshots.maxCommitted(rootOf("cowver")) == v1 + 2)
+  }
+
+  test("MOR UPDATE/DELETE matching no row commit nothing; key update is delete+insert") {
+    sqlDf("DROP TABLE IF EXISTS snap.default.morempty")
+    sqlDf("CREATE TABLE snap.default.morempty (k BIGINT, v DOUBLE) " +
+      "TBLPROPERTIES ('graft.mor.key' = 'k')")
+    sqlDf("INSERT INTO snap.default.morempty VALUES (1, 5.0), (2, 6.0)")
+    val root = rootOf("morempty")
+    val v0 = Snapshots.maxCommitted(root)
+    // no row matches → NO commit, no empty delete files
+    sqlDf("DELETE FROM snap.default.morempty WHERE v > 100.0")
+    sqlDf("UPDATE snap.default.morempty SET v = 0.0 WHERE v > 100.0")
+    assert(Snapshots.maxCommitted(root) == v0,
+      "statements matching nothing must not advance the head")
+    assert(Snapshots.resolve(root).get.deletes.isEmpty)
+    // the happy path lands one atomic delta commit
+    sqlDf("UPDATE snap.default.morempty SET v = v + 1 WHERE k = 1")
+    assert(kv("snap.default.morempty") == Seq(1L -> 6.0, 2L -> 6.0))
+    assert(Snapshots.maxCommitted(root) == v0 + 1)
+    // assigning the key column is a correct delete-old-key +
+    // insert-new-key: the update arrives split, so the delete scopes
+    // to the old key and the new row shines through
+    sqlDf("UPDATE snap.default.morempty SET k = k + 10 WHERE k = 1")
+    assert(Snapshots.maxCommitted(root) == v0 + 2)
+    assert(kv("snap.default.morempty") == Seq(2L -> 6.0, 11L -> 6.0))
+  }
+
+  test("VERSION AS OF: a cross-version self-join in one statement") {
+    sqlDf("DROP TABLE IF EXISTS snap.default.ttjoin")
+    sqlDf("CREATE TABLE snap.default.ttjoin AS SELECT id, 'a' AS tag FROM range(5)")
+    sqlDf("INSERT INTO snap.default.ttjoin SELECT id, 'b' FROM range(5, 8)")
+    // "what landed since v1" — head anti-joined to v1, in ONE statement
+    val added = sqlDf(
+      """SELECT h.id FROM snap.default.ttjoin h
+        |LEFT JOIN snap.default.ttjoin VERSION AS OF 1 o ON h.id = o.id
+        |WHERE o.id IS NULL ORDER BY h.id""".stripMargin)
+    assert(added.as[Long].collect().toSeq == Seq(5L, 6L, 7L))
+  }
+
+  test("TIMESTAMP AS OF resolves newest-commit-<=-literal; pre-history errors") {
+    sqlDf("DROP TABLE IF EXISTS snap.default.ttts")
+    sqlDf("CREATE TABLE snap.default.ttts AS SELECT id FROM range(5)")
+    sqlDf("INSERT INTO snap.default.ttts SELECT id FROM range(5, 8)")
+    val root = rootOf("ttts")
+    val t1 = Snapshots.commitTimestamp(root, 1L).get
+    val t2 = Snapshots.commitTimestamp(root, 2L).get
+    assert(t1 < t2, "commit timestamps must be strictly monotonic")
+    def litOf(us: Long): String = java.time.Instant
+      .ofEpochSecond(us / 1000000L, (us % 1000000L) * 1000L)
+      .atZone(java.time.ZoneOffset.UTC)
+      .format(java.time.format.DateTimeFormatter
+        .ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS"))
+    def countAsOf(ts: String): Long =
+      sqlDf(s"SELECT COUNT(*) FROM snap.default.ttts TIMESTAMP AS OF '$ts'")
+        .as[Long].head()
+    assert(countAsOf(litOf(t1)) == 5L, "exactly v1's commit instant pins v1")
+    assert(countAsOf(litOf(t2 - 1)) == 5L, "between commits resolves backward, not forward")
+    assert(countAsOf(litOf(t2)) == 8L, "at v2's instant the append is visible")
+    assert(countAsOf(litOf(t2 + 1000000L)) == 8L, "after the head sees the head")
+    val ex = intercept[Exception](countAsOf(litOf(t1 - 1)))
+    assert(messages(ex).exists(_.contains("predates retained history")), ex)
+    val exExpr = intercept[Exception](countAsOf("not a timestamp"))
+    assert(messages(exExpr).exists(_.contains("INVALID_TIME_TRAVEL_TIMESTAMP_EXPR")), exExpr)
+  }
+
+  test("VERSION AS OF 'tag': a retag re-points, a missing tag raises") {
+    sqlDf("DROP TABLE IF EXISTS snap.default.tttag")
+    sqlDf("CREATE TABLE snap.default.tttag AS SELECT id FROM range(5)")
+    sqlDf("INSERT INTO snap.default.tttag SELECT id FROM range(5, 8)")
+    val root = rootOf("tttag")
+    val (v1, v2) = (1L, Snapshots.maxCommitted(root))
+    Snapshots.tag(root, "cut", v1)
+    def countAt(ref: String): Long =
+      sqlDf(s"SELECT COUNT(*) FROM snap.default.tttag VERSION AS OF $ref").as[Long].head()
+    assert(countAt("'cut'") == 5L, "tag resolves to v1")
+    assert(countAt(v2.toString) == 8L, "numeric versions still resolve directly")
+    Snapshots.tag(root, "cut", v2) // mutable ref: re-point
+    assert(countAt("'cut'") == 8L, "retag re-points the same name")
+    val exMissing = intercept[Exception](countAt("'nope'"))
+    assert(messages(exMissing).exists(_.contains("no tag or branch 'nope'")), exMissing)
+    val exUncommitted = intercept[IllegalStateException](
+      Snapshots.tag(root, "future", v2 + 7))
+    assert(exUncommitted.getMessage.contains("not committed"))
+    val exBadName = intercept[IllegalArgumentException](
+      Snapshots.tag(root, "bad/name", v1))
+    assert(exBadName.getMessage.contains("tag name"))
   }
 
   test("native DELETE on a merge-on-read table writes delete files, not a rewrite") {

@@ -6,6 +6,11 @@ import org.apache.spark.sql.functions._
 class Round12OpsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Stage a merge-on-read delete of `ids` on key column `id`. */
+  private def deleteIds(root: String, ids: Long*): Long =
+    graft.sources.Snapshots.commitDelete(root, "id")(out =>
+      ids.toDF("id").write.mode("append").parquet(out))
+
   test("ts_sessionize cuts sessions at the 30-minute gap, hand-checked") {
     // user 1: events at t0, +10m, +40m10s (gap 30m10s → new session),
     //         +41m (same session). user 2: one event (one session).
@@ -50,32 +55,6 @@ class Round12OpsSpec extends SparkSpec {
     assert(got.count() == 1, "strict > threshold: boundary stays in-session")
   }
 
-  test("named tags: VERSION AS OF 'tag' resolves, retag re-points, errors are clear") {
-    import graft.sources.Snapshots
-    import graft.plans.TimeTravelSql
-    val root = s"${Qx.tmpOut("tagspec", sf())}/store"
-    val v1 = Snapshots.commit(root)(out =>
-      spark.range(5).select($"id").write.mode("append").parquet(out))
-    val v2 = Snapshots.commitAppend(root)(out =>
-      spark.range(5, 8).select($"id").write.mode("append").parquet(out))
-    Snapshots.tag(root, "cut", v1)
-    def countAt(ref: String): Long = TimeTravelSql.sql(spark,
-      s"SELECT COUNT(*) AS n FROM t VERSION AS OF $ref", Map("t" -> root))
-      .as[Long].head()
-    assert(countAt("'cut'") == 5L, "tag resolves to v1")
-    assert(countAt(v2.toString) == 8L, "numeric versions still resolve directly")
-    Snapshots.tag(root, "cut", v2) // mutable ref: re-point
-    assert(countAt("'cut'") == 8L, "retag re-points the same name")
-    val exMissing = intercept[IllegalArgumentException](countAt("'nope'"))
-    assert(exMissing.getMessage.contains("no tag 'nope'"))
-    val exUncommitted = intercept[IllegalStateException](
-      Snapshots.tag(root, "future", v2 + 7))
-    assert(exUncommitted.getMessage.contains("not committed"))
-    val exBadName = intercept[IllegalArgumentException](
-      Snapshots.tag(root, "bad/name", v1))
-    assert(exBadName.getMessage.contains("tag name"))
-  }
-
   test("restore rolls the head back as a new commit; history rolls forward") {
     import graft.sources.Snapshots
     val root = s"${Qx.tmpOut("restspec", sf())}/store"
@@ -99,13 +78,11 @@ class Round12OpsSpec extends SparkSpec {
 
   test("restore carries a version's pending MOR deletes with it") {
     import graft.sources.Snapshots
-    import graft.plans.RowSql
     val root = s"${Qx.tmpOut("restmor", sf())}/store"
     Snapshots.commit(root)(out =>
       spark.range(10).select($"id", ($"id" * 2).as("v"))
         .write.mode("append").parquet(out))
-    RowSql.deleteMergeOnRead(spark,
-      "DELETE FROM t WHERE id >= 7", Map("t" -> root), "id")
+    deleteIds(root, 7L, 8L, 9L)
     val vDel = Snapshots.maxCommitted(root)
     Snapshots.commitAppend(root)(out =>
       spark.range(20, 23).select($"id", ($"id" * 2).as("v"))
@@ -118,7 +95,6 @@ class Round12OpsSpec extends SparkSpec {
 
   test("WAP publish appends staged files by reference; MOR deletes scope correctly around publishes") {
     import graft.sources.Snapshots
-    import graft.plans.RowSql
     val base = Qx.tmpOut("wapspec", sf())
     val main = s"$base/main"
     val staging = s"$base/staging"
@@ -139,8 +115,7 @@ class Round12OpsSpec extends SparkSpec {
     // number ABOVE the pending delete's coversBelow, so they escape a
     // delete that predates them — while the delete still covers main's
     // own older files (r12's cross-root misread, fixed via seq pinning)
-    RowSql.deleteMergeOnRead(spark,
-      "DELETE FROM t WHERE id = 1", Map("t" -> main), "id")
+    deleteIds(main, 1L)
     val staging3 = s"$base/staging3"
     Snapshots.commit(staging3)(out =>
       spark.range(300, 302).select($"id").write.mode("append").parquet(out))
@@ -151,8 +126,7 @@ class Round12OpsSpec extends SparkSpec {
     // ...and a delete committed AFTER a publish covers the published
     // rows (the r12 advisory bug: staging's own v-counter used to leak
     // into main's scoping and let published rows escape later deletes)
-    RowSql.deleteMergeOnRead(spark,
-      "DELETE FROM t WHERE id = 301", Map("t" -> main), "id")
+    deleteIds(main, 301L)
     assert(Snapshots.read(spark, main).select($"id").as[Long].collect().toSet
       == (Set(0L, 2L, 3L, 4L) ++ (100L until 103L) ++ Set(300L)),
       "post-publish delete covers the published batch via its #seq pin")
@@ -160,8 +134,7 @@ class Round12OpsSpec extends SparkSpec {
     val staging2 = s"$base/staging2"
     Snapshots.commit(staging2)(out =>
       spark.range(200, 205).select($"id").write.mode("append").parquet(out))
-    RowSql.deleteMergeOnRead(spark,
-      "DELETE FROM t WHERE id = 201", Map("t" -> staging2), "id")
+    deleteIds(staging2, 201L)
     val main2 = s"$base/main2"
     Snapshots.commit(main2)(out =>
       spark.range(3).select($"id").write.mode("append").parquet(out))

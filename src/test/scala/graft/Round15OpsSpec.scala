@@ -5,8 +5,7 @@ import graft.sources.Snapshots
 
 /** Round-15 hardening pins: the dropped-column chain ledger (a
   * rename-then-drop must not split a straddling time-travel read into
-  * half-null spellings), and subquery-aware CTE shadowing in the
-  * VERSION AS OF substitution. */
+  * half-null spellings). */
 class Round15OpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -372,36 +371,5 @@ class Round15OpsSpec extends SparkSpec {
     assert(p2.contains("BroadcastHashJoin"),
       s"MOR snap table must broadcast from manifest stats:\n$p2")
     assert(j2.count() == 490)
-  }
-
-  test("VERSION AS OF substitution: a CTE inside an IN-subquery shadows the snapshot name") {
-    import graft.plans.TimeTravelSql
-    val root = s"${Qx.tmpOut("r15cte", sf())}/store"
-    val p = java.nio.file.Paths.get(root)
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
-      } finally walk.close()
-    }
-    Snapshots.commit(root)(out =>
-      spark.range(10).select($"id").write.mode("append").parquet(out))
-    spark.range(100, 103).select($"id".as("k")).createOrReplaceTempView("r15_probe")
-    // the CTE named `sales` lives INSIDE the IN-subquery; it must shadow
-    // the snapshot table there — a collection that misses expression-
-    // embedded subqueries would substitute the store read (ids 0..9)
-    // and return zero rows
-    val out = TimeTravelSql.sql(spark,
-      """SELECT k FROM r15_probe
-        |WHERE k IN (WITH sales AS (SELECT 101 AS s) SELECT s FROM sales)""".stripMargin,
-      Map("sales" -> root)).as[Long].collect().toSeq
-    assert(out == Seq(101L),
-      s"CTE inside the subquery must win over the snapshot table: got $out")
-    // and a genuine snapshot reference inside a subquery still resolves
-    val out2 = TimeTravelSql.sql(spark,
-      "SELECT k FROM r15_probe WHERE k - 95 IN (SELECT id FROM sales)",
-      Map("sales" -> root)).as[Long].collect().toSeq.sorted
-    assert(out2 == Seq(100L, 101L, 102L))
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.catalog.GraftCatalog
 import graft.sources.Snapshots
 import org.apache.spark.sql.functions._
 
@@ -23,6 +24,24 @@ class Round9OpsSpec extends SparkSpec {
     }
     root
   }
+
+  /** A merge-on-read catalog table keyed on `id` at a fresh root, for
+    * the steps that need a SQL statement (an UPDATE, a DELETE matching
+    * nothing); everything else drives the root through [[Snapshots]]. */
+  private def morTable(name: String, cols: String): (String, String) = {
+    val wh = Qx.tmpOut("r9wh", sf())
+    GraftCatalog.register(spark, "r9", Some(wh))
+    val root = s"$wh/default/$name"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    spark.sql(s"CREATE TABLE r9.default.$name ($cols) " +
+      "TBLPROPERTIES ('graft.mor.key' = 'id')")
+    (s"r9.default.$name", root)
+  }
+
+  /** Stage a merge-on-read delete of `ids` on key column `id`. */
+  private def deleteIds(root: String, ids: Long*): Long =
+    Snapshots.commitDelete(root, "id")(out =>
+      ids.toDF("id").write.mode("append").parquet(out))
 
   private def writeTagged(out: String, tag: Int, rows: Long): Unit =
     spark.range(rows).select(lit(tag).as("tag"), $"id")
@@ -295,13 +314,12 @@ class Round9OpsSpec extends SparkSpec {
   }
 
   test("merge-on-read delete: base files never move, deletes stack, vacuum keeps them, rewrite absorbs") {
-    import graft.plans.RowSql
-    val root = freshRoot("morspec")
+    val (t, root) = morTable("morspec", "id BIGINT, v DOUBLE")
     val v1 = Snapshots.commit(root)(out =>
       spark.range(10).select($"id", ($"id" * 1.0).as("v"))
         .write.mode("append").parquet(out))
     val baseFiles = Snapshots.resolve(root).get.files
-    RowSql.deleteMergeOnRead(spark, "DELETE FROM t WHERE id >= 8", Map("t" -> root), "id")
+    deleteIds(root, 8L, 9L)
     val snap2 = Snapshots.resolve(root).get
     assert(snap2.files == baseFiles, "MOR delete must not touch base files")
     assert(snap2.deletes.nonEmpty && snap2.deletes.forall(_.keyCol == "id"))
@@ -314,12 +332,12 @@ class Round9OpsSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
       s"deletes must apply as a broadcast anti join:\n$plan")
     // stacked deletes compose
-    RowSql.deleteMergeOnRead(spark, "DELETE FROM t WHERE id < 2", Map("t" -> root), "id")
+    deleteIds(root, 0L, 1L)
     assert(Snapshots.read(spark, root).count() == 6)
     assert(Snapshots.resolve(root).get.deletes.size >= 2)
     // a DELETE matching nothing commits nothing
     val vBefore = Snapshots.maxCommitted(root)
-    RowSql.deleteMergeOnRead(spark, "DELETE FROM t WHERE id > 100", Map("t" -> root), "id")
+    spark.sql(s"DELETE FROM $t WHERE id > 100")
     assert(Snapshots.maxCommitted(root) == vBefore, "empty delete must be a no-op")
     // vacuum to the head alone: referenced delete files survive the sweep
     Snapshots.vacuum(root, keepLast = 1)
@@ -336,14 +354,12 @@ class Round9OpsSpec extends SparkSpec {
   }
 
   test("merge-on-read upsert: one atomic commit, old versions hidden, re-inserted keys visible") {
-    import graft.plans.RowSql
-    val root = freshRoot("morupspec")
+    val (t, root) = morTable("morupspec", "id BIGINT, v DOUBLE")
     val v1 = Snapshots.commit(root)(out =>
       spark.range(10).select($"id", lit(1.0).as("v"))
         .write.mode("append").parquet(out))
     val baseFiles = Snapshots.resolve(root).get.files
-    RowSql.updateMergeOnRead(spark,
-      "UPDATE t SET v = 2.0 WHERE id < 3", Map("t" -> root), "id")
+    spark.sql(s"UPDATE $t SET v = 2.0 WHERE id < 3")
     // exactly ONE commit happened, base files still pinned
     val snap = Snapshots.resolve(root).get
     assert(snap.version == v1 + 1, "an upsert is one atomic commit")
@@ -355,13 +371,11 @@ class Round9OpsSpec extends SparkSpec {
     assert(Snapshots.readAt(spark, root, v1).filter($"v" === 2.0).count() == 0,
       "time travel must see the pre-upsert values")
     // an UPDATE matching nothing commits nothing
-    RowSql.updateMergeOnRead(spark,
-      "UPDATE t SET v = 9.9 WHERE id > 100", Map("t" -> root), "id")
+    spark.sql(s"UPDATE $t SET v = 9.9 WHERE id > 100")
     assert(Snapshots.maxCommitted(root) == snap.version)
     // scoping: delete a key, then APPEND it back — the re-insert is
     // visible because the delete covers only the files before it
-    RowSql.deleteMergeOnRead(spark,
-      "DELETE FROM t WHERE id = 5", Map("t" -> root), "id")
+    deleteIds(root, 5L)
     assert(Snapshots.read(spark, root).count() == 9)
     Snapshots.commitAppend(root)(out =>
       Seq((5L, 9.0)).toDF("id", "v").write.mode("append").parquet(out))
@@ -372,13 +386,11 @@ class Round9OpsSpec extends SparkSpec {
   }
 
   test("partition-pruned reads compose with pending merge-on-read deletes, version-scoped") {
-    import graft.plans.RowSql
     val root = freshRoot("snapprudel")
     Snapshots.commit(root)(out =>
       spark.range(10).select($"id", ($"id" % 2).cast("string").as("p"))
         .write.partitionBy("p").mode("append").parquet(out))
-    RowSql.deleteMergeOnRead(spark,
-      "DELETE FROM t WHERE id = 3", Map("t" -> root), "id")
+    deleteIds(root, 3L)
     // pruned read with the delete pending: delete-applied rows of ONLY
     // the requested partition — no rewrite-first required
     val pruned = Snapshots.readPartitionPruned(spark, root, "p", Seq("1"))
@@ -396,8 +408,7 @@ class Round9OpsSpec extends SparkSpec {
       spark.range(3, 4).select($"id", lit("1").as("p"))
         .write.partitionBy("p").mode("append").parquet(out))
     // a second stacked delete hides id=7 everywhere below its version
-    RowSql.deleteMergeOnRead(spark,
-      "DELETE FROM t WHERE id = 7", Map("t" -> root), "id")
+    deleteIds(root, 7L)
     val stacked = Snapshots.readPartitionPruned(spark, root, "p", Seq("1"))
     assert(stacked.select($"id").as[Long].collect().toSet ==
       Set(1L, 3L, 5L, 9L),
@@ -419,54 +430,6 @@ class Round9OpsSpec extends SparkSpec {
     assert(pruned.select($"id").as[Long].collect().toSet == Set(0L, 2L, 4L))
     assert(pruned.select($"p").distinct().as[String].collect().toSeq == Seq("a:b c"),
       "the partition column must round-trip the unescaped value")
-  }
-
-  test("VERSION AS OF SQL: a cross-version join in one statement") {
-    import graft.plans.TimeTravelSql
-    val root = freshRoot("ttsqlspec")
-    Snapshots.commit(root)(out =>
-      spark.range(5).select($"id", lit("a").as("tag"))
-        .write.mode("append").parquet(out))
-    Snapshots.commitAppend(root)(out =>
-      spark.range(5, 8).select($"id", lit("b").as("tag"))
-        .write.mode("append").parquet(out))
-    // "what landed since v1" — head anti-joined to v1, in ONE statement
-    val added = TimeTravelSql.sql(spark,
-      """SELECT h.id FROM t h LEFT JOIN t VERSION AS OF 1 o ON h.id = o.id
-        |WHERE o.id IS NULL ORDER BY h.id""".stripMargin,
-      Map("t" -> root))
-    assert(added.as[Long].collect().toSeq == Seq(5L, 6L, 7L))
-  }
-
-  test("TIMESTAMP AS OF SQL resolves newest-commit-<=-literal; pre-history errors") {
-    import graft.plans.TimeTravelSql
-    val root = freshRoot("ttasofts")
-    val v1 = Snapshots.commit(root)(out =>
-      spark.range(5).select($"id").write.mode("append").parquet(out))
-    val v2 = Snapshots.commitAppend(root)(out =>
-      spark.range(5, 8).select($"id").write.mode("append").parquet(out))
-    val t1 = Snapshots.commitTimestamp(root, v1).get
-    val t2 = Snapshots.commitTimestamp(root, v2).get
-    assert(t1 < t2, "commit timestamps must be strictly monotonic")
-    def litOf(us: Long): String = java.time.Instant
-      .ofEpochSecond(us / 1000000L, (us % 1000000L) * 1000L)
-      .atZone(java.time.ZoneOffset.UTC)
-      .format(java.time.format.DateTimeFormatter
-        .ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS"))
-    def countAsOf(us: Long): Long = TimeTravelSql.sql(spark,
-      s"SELECT COUNT(*) AS n FROM t TIMESTAMP AS OF '${litOf(us)}'",
-      Map("t" -> root)).as[Long].head()
-    assert(countAsOf(t1) == 5L, "exactly v1's commit instant pins v1")
-    assert(countAsOf(t2 - 1) == 5L, "between commits resolves backward, not forward")
-    assert(countAsOf(t2) == 8L, "at v2's instant the append is visible")
-    assert(countAsOf(t2 + 1000000L) == 8L, "after the head sees the head")
-    val ex = intercept[IllegalStateException](countAsOf(t1 - 1))
-    assert(ex.getMessage.contains("predates retained history"))
-    val exExpr = intercept[IllegalArgumentException] {
-      TimeTravelSql.sql(spark,
-        "SELECT * FROM t TIMESTAMP AS OF 'not a timestamp'", Map("t" -> root))
-    }
-    assert(exExpr.getMessage.contains("does not parse"))
   }
 
   test("a crashed writer's leftover tmp manifest never resolves and never blocks the next commit") {
