@@ -2725,8 +2725,8 @@ object WarehouseOps {
       SELECT nationkey, COUNT(*) AS n, ${Qx.dsumSql("acctbal")} AS total
       FROM d GROUP BY nationkey ORDER BY nationkey""",
     // Both eras recomputed from the ORIGINAL table via the slice
-    // predicates: a stale version resolution, a leaked era, or a
-    // substitution running the wrong version hash-mismatches.
+    // predicates: a stale version resolution or a leaked era
+    // hash-mismatches.
     "sql_time_travel" -> """
       SELECT 'v1' AS era, o_orderpriority, COUNT(*) AS n,
              CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total

@@ -2931,12 +2931,12 @@ object Snapshots {
     (removed, bytes)
   }
 
-  /** All parquet files under `dir`, RECURSIVELY — a `.partitionBy(col)`
-    * write stages its files inside `col=value/` subdirectories, and the
-    * manifest must pin those leaf files (their paths carry the
-    * partition value, which is what [[readPartitionPruned]] prunes on). */
-  /** Recursive parquet listing of a staging dir (skips `_`-prefixed
-    * metadata) — shared with the SQL interpreters' staged MOR writes. */
+  /** All parquet files under `dir`, RECURSIVELY, skipping `_`-prefixed
+    * metadata — a `.partitionBy(col)` write stages its files inside
+    * `col=value/` subdirectories, and the manifest must pin those leaf
+    * files (their paths carry the partition value, which is what
+    * [[readPartitionPruned]] prunes on). Shared with the catalog's
+    * staged row-level writes. */
   private[graft] def listParquet(dir: String): Seq[String] = {
     val d = Paths.get(dir)
     val walk = Files.walk(d)
