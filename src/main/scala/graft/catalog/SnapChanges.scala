@@ -211,11 +211,11 @@ private[catalog] class ChangesMicroBatchStream(root: String,
     * initial chunk counts its full state). Metadata-only. */
   private def stepFiles(s0: Long, v: Long, oldest: Long): Seq[String] =
     if (s0 == 0 && v == oldest) Snapshots.resolveAt(root, oldest).files
-    else if (Snapshots.rowsUnchangedAt(root, v)) Nil
     else {
       val cur = Snapshots.resolveAt(root, v)
+      if (cur.rowsUnchanged) Nil
       // a rewrite with materialized effects scans ONLY its sidecars
-      if (cur.changeFiles.nonEmpty) cur.changeFiles
+      else if (cur.changeFiles.nonEmpty) cur.changeFiles
       else {
         val prev = if (v == 1) Snapshot(0, Nil) else Snapshots.resolveAt(root, v - 1)
         val prevF = prev.files.toSet
@@ -376,13 +376,11 @@ private[catalog] class ChangesMicroBatchStream(root: String,
         s"retained version is $oldest) — restart from a fresh checkpoint")
     val from = if (s0 == 0) oldest else s0
     val out = Seq.newBuilder[InputPartition]
-    // commit wall-clock per version step, one metadata read
-    def tsOf(v: Long): Long = Snapshots.commitTimestamp(root, v).getOrElse(-1L)
     // inserts of one version: the version's VISIBLE rows of `files` —
     // ordinals its own DVs hide and keys its applicable delete sets
     // hide are skipped, so the feed never resurrects a hidden row
     def insertsOf(v: Long, snap: Snapshot, files: Seq[String]): Unit = {
-      val ts = tsOf(v)
+      val ts = snap.ts.getOrElse(-1L)
       val byDels = files.groupBy(f => applicableSets(snap, f, snap.deletes))
       byDels.toSeq.sortBy(_._2.head).foreach { case (dels, fs) =>
         val (withDv, plain) = fs.partition(snap.posDeletes.contains)
@@ -401,14 +399,17 @@ private[catalog] class ChangesMicroBatchStream(root: String,
     }
     // initial chunk: the oldest retained state, all insert, pending
     // deletes (vectors AND keyed sets) applied
-    if (s0 == 0)
-      insertsOf(oldest, Snapshots.resolveAt(root, oldest),
-        Snapshots.resolveAt(root, oldest).files)
+    if (s0 == 0) {
+      val snap0 = Snapshots.resolveAt(root, oldest)
+      insertsOf(oldest, snap0, snap0.files)
+    }
     ((from + 1) to e).foreach { v =>
-      if (!Snapshots.rowsUnchangedAt(root, v)) {
-        val cur = Snapshots.resolveAt(root, v)
+      // one manifest read per version: the marker and the commit
+      // wall-clock come with the resolved state
+      val cur = Snapshots.resolveAt(root, v)
+      if (!cur.rowsUnchanged) {
         val prev = if (v == 1) Snapshot(0, Nil) else Snapshots.resolveAt(root, v - 1)
-        val ts = tsOf(v) // one metadata read per version, not per group
+        val ts = cur.ts.getOrElse(-1L)
         val prevF = prev.files.toSet
         val curF = cur.files.toSet
         val added = cur.files.filterNot(prevF)

@@ -89,8 +89,7 @@ private[catalog] object SnapMetaTables {
       (1L to Snapshots.maxCommitted(root)).flatMap { v =>
         try {
           val s = Snapshots.resolveAt(root, v)
-          val ts = Snapshots.commitTimestamp(root, v)
-          Some(InternalRow(v, ts.map(Long.box).orNull,
+          Some(InternalRow(v, s.ts.map(Long.box).orNull,
             s.files.size, s.deletes.size))
         } catch { case _: IllegalStateException => None } // vacuumed version
       }.toArray

@@ -247,9 +247,9 @@ private[catalog] class GraftMicroBatchStream(root: String,
       // bytes without changing the row set: the stream passes over it
       // silently instead of refusing, the same way Delta treats
       // dataChange=false actions
-      if (Snapshots.rowsUnchangedAt(root, v)) Step(v, Nil, isChange = false)
+      val cur = Snapshots.resolveAt(root, v)
+      if (cur.rowsUnchanged) Step(v, Nil, isChange = false)
       else {
-        val cur = Snapshots.resolveAt(root, v)
         val prev = if (v == 1) Snapshot(0, Nil) else Snapshots.resolveAt(root, v - 1)
         val prevF = prev.files.toSet
         val curF = cur.files.toSet

@@ -23,8 +23,8 @@ import scala.jdk.CollectionConverters._
   *                                             ATTEMPT — racing writers
   *                                             can never touch each
   *                                             other's staged files)
-  *   root/_commits/00000001.manifest    one line per committed data file
-  *   root/_commits/00000002.manifest
+  *   root/_commits/00000001.manifest    one line per committed data file,
+  *   root/_commits/00000002.manifest    plus `#` headers ([[Manifest]])
   * }}}
   *
   * The COMMIT POINT is an atomic CREATE-IF-ABSENT of
@@ -99,7 +99,18 @@ object Snapshots {
       // streaming change feed serves O(touched) effects across it
       // instead of refusing. Not part of the table's data; referenced
       // for retention like delete sidecars
-      changeFiles: Seq[String] = Nil)
+      changeFiles: Seq[String] = Nil,
+      // commit timestamp, µs since epoch UTC (`#ts:`; None on
+      // pre-header manifests) — strictly monotonic per log
+      ts: Option[Long] = None,
+      // (appId, epoch) of an idempotent append ([[commitAppendTxn]])
+      txn: Option[(String, Long)] = None,
+      // the writer's ROWS-UNCHANGED declaration (Delta's
+      // `dataChange=false`): this commit relocated bytes without
+      // changing the logical row set (compaction, z-order, delete-file
+      // merge), so change feeds pass over it. Trusted, like Delta —
+      // stamping it on a row-changing commit is a writer bug
+      rowsUnchanged: Boolean = false)
 
   private def commitsDir(root: String): Path = Paths.get(root, "_commits")
 
@@ -199,69 +210,8 @@ object Snapshots {
     val m = manifestPath(root, version)
     if (!Files.exists(m)) throw new IllegalStateException(
       s"version $version of $root is not committed or is beyond retention")
-    parseManifest(m, version)
+    Manifest.read(m, version)
   }
-
-  /** Parse ONE manifest file into a [[Snapshot]] — the single reader
-    * shared by main-log resolution ([[resolveAt]]) and branch-log
-    * resolution ([[resolveBranchAt]]); the formats are identical by
-    * construction (fast-forward LINKS branch manifests into the main
-    * log verbatim). */
-  private def parseManifest(m: Path, version: Long): Snapshot = {
-    // lines starting with '#' are metadata headers: the #txn tag of an
-    // idempotent streaming append, #del:@<coversBelow>:<keyCol>:<path>
-    // lines recording scoped merge-on-read delete files (the
-    // version-less legacy form #del:<keyCol>:<path> covers everything),
-    // and #seq:<v>:<path> lines pinning a cross-root published file's
-    // effective sequence number in this root
-    val lines = Files.readAllLines(m, UTF_8).asScala.toSeq.filter(_.nonEmpty)
-    val dels = lines.collect { case l if l.startsWith(delPrefix) =>
-      val body = l.stripPrefix(delPrefix)
-      if (body.startsWith("@")) {
-        val Array(v, k, p) = body.stripPrefix("@").split(":", 3)
-        DeleteFile(k, p, v.toLong)
-      } else {
-        val sep = body.indexOf(':')
-        DeleteFile(body.substring(0, sep), body.substring(sep + 1), Long.MaxValue)
-      }
-    }
-    val seqs = lines.collect { case l if l.startsWith(seqPrefix) =>
-      val Array(v, p) = l.stripPrefix(seqPrefix).split(":", 2)
-      p -> v.toLong
-    }.toMap
-    val stats = lines.collect { case l if l.startsWith(statsPrefix) =>
-      val body = l.stripPrefix(statsPrefix)
-      statsPathOf(body).map(_ -> body)
-    }.flatten.toMap
-    val blooms = lines.collect {
-      // only the CURRENT sketch version is trusted ([[bloomVersion]]);
-      // other versions read as sketch-less files
-      case l if l.startsWith(s"$bloomPrefix$bloomVersion:") =>
-        val body = l.stripPrefix(s"$bloomPrefix$bloomVersion:")
-        val sep = body.indexOf(':')
-        body.substring(sep + 1) -> body.substring(0, sep) // file -> col
-    }.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    // #posdel:<datafile>:<posfile> — both paths are ':'-free by the
-    // commit-side guard, so the first ':' splits unambiguously
-    val posDels = lines.collect { case l if l.startsWith(posDelPrefix) =>
-      val body = l.stripPrefix(posDelPrefix)
-      val sep = body.indexOf(':')
-      body.substring(0, sep) -> body.substring(sep + 1)
-    }.groupBy(_._1).view.mapValues(_.map(_._2).distinct.sorted).toMap
-    val changes = lines.collect { case l if l.startsWith(changesPrefix) =>
-      l.stripPrefix(changesPrefix) }
-    Snapshot(version, lines.filterNot(_.startsWith("#")), dels, seqs, stats,
-      blooms, posDels, changes)
-  }
-
-  private val delPrefix = "#del:"
-  private val posDelPrefix = "#posdel:"
-  private val tsPrefix = "#ts:"
-  private val seqPrefix = "#seq:"
-  private val statsPrefix = "#stats:"
-  private val bloomPrefix = "#bloom:"
-  private val changesPrefix = "#changes:"
-  private val rowsUnchangedLine = "#rowsunchanged:1"
 
   // --- per-file BLOOM FILTERS (point-lookup file skipping) ---------------
   //
@@ -269,8 +219,8 @@ object Snapshots {
   // interleave across files (every file spans the whole domain). The
   // Hudi-bloom-index answer: an opt-in per-file Bloom filter over the
   // key's 64-bit hashes, written as a SIDECAR beside the data file
-  // (`<file>.bloom-<col>`) and referenced by a `#bloom:<col>:<file>`
-  // manifest line, so the catalog scan can refute `key = <literal>`
+  // (`<file>.bloom-<col>`) and referenced by a manifest bloom line
+  // ([[Manifest]]), so the catalog scan can refute `key = <literal>`
   // per file from a soft-cached ~90 KB sketch — no footer, no data
   // I/O. Opt-in via TBLPROPERTIES ('graft.bloom.cols'='k[,c2…]');
   // sizing via 'graft.bloom.items' (default 100k) / 'graft.bloom.fpp'
@@ -288,67 +238,44 @@ object Snapshots {
   def bloomSidecar(dataFile: String, col: String): String =
     s"$dataFile.bloom-$col"
 
-  /** Sketch-format version rendered into each `#bloom:` line: v2 =
-    * canonical-width XxHash64 (integral→long, float→double). Lines
-    * with any OTHER version are ignored by the reader (no sketch → no
-    * prune — correct, just unoptimized) and dropped from the next
-    * commit's carry-forward, so a hash-scheme change can never make an
-    * old sidecar wrongly refute a present key. */
-  private val bloomVersion = "v2"
-
-  private def bloomLine(col: String, file: String): String =
-    s"$bloomPrefix$bloomVersion:$col:$file"
-
-  /** Carried-forward `#bloom:` lines restricted to retained files. */
-  private def bloomLines(blooms: Map[String, Seq[String]],
-      files: Seq[String]): Seq[String] = {
-    val keep = files.toSet
-    blooms.toSeq.filter(kv => keep(kv._1)).sortBy(_._1)
-      .flatMap { case (f, cols) => cols.map(bloomLine(_, f)) }
-  }
-
-  /** The bloom column list a root opted into (empty = feature off). */
-  private def bloomColsOf(root: String): Seq[String] = {
+  /** The root's `_table.properties` (empty when absent or unreadable)
+    * — the ONE reader inside this object: a commit attempt reads it
+    * once and passes the map down to every rule that needs a key. */
+  private def tableProps(root: String): Map[String, String] = {
     val f = Paths.get(root, "_table.properties")
-    if (!Files.exists(f)) Nil
+    if (!Files.exists(f)) Map.empty
     else try {
       val p = new java.util.Properties()
       val in = Files.newBufferedReader(f, UTF_8)
       try p.load(in) finally in.close()
-      // ':' delimits the '#bloom:<ver>:<col>:<file>' manifest line
-      // (paths may contain ':'-free segments only after the col slot),
-      // so a column named with one would corrupt the col↔file split on
-      // read — the catalog refuses such properties and this reader
-      // drops them defensively for direct-API writers
-      Option(p.getProperty("graft.bloom.cols")).toSeq
-        .flatMap(_.split(',')).map(_.trim)
-        .filter(c => c.nonEmpty && !c.contains(':'))
-    } catch { case _: Exception => Nil }
+      p.asScala.toMap
+    } catch { case _: Exception => Map.empty }
   }
 
-  private def tableProp(root: String, key: String, dflt: String): String = {
-    val f = Paths.get(root, "_table.properties")
-    try {
-      val p = new java.util.Properties()
-      val in = Files.newBufferedReader(f, UTF_8)
-      try p.load(in) finally in.close()
-      Option(p.getProperty(key)).getOrElse(dflt)
-    } catch { case _: Exception => dflt }
-  }
+  /** The bloom column list a root opted into (empty = feature off). */
+  private def bloomColsOf(props: Map[String, String]): Seq[String] =
+    // ':' delimits the bloom manifest line's col↔file split
+    // ([[Manifest]]), so a column named with one would corrupt it on
+    // read — the catalog refuses such properties and this reader
+    // drops them defensively for direct-API writers
+    props.get("graft.bloom.cols").toSeq
+      .flatMap(_.split(',')).map(_.trim)
+      .filter(c => c.nonEmpty && !c.contains(':'))
 
   /** One distributed pass per opted-in column over the staged files:
     * per-file XxHash64 sketches aggregated with a Dataset
     * [[org.apache.spark.sql.expressions.Aggregator]] (OR-merge —
     * order-independent), sidecars written beside the data files, one
-    * manifest line each. No active session (pure file-API callers) or
-    * a column absent from the staged schema → skip silently; blooms
-    * are an optimization, never load-bearing. */
-  private def newBloomLines(root: String, staged: Seq[String]): Seq[String] = {
-    val cols = bloomColsOf(root)
-    if (cols.isEmpty || staged.isEmpty) return Nil
-    val spark = SparkSession.getActiveSession.getOrElse(return Nil)
-    val items = tableProp(root, "graft.bloom.items", "100000").toLong
-    val fpp = tableProp(root, "graft.bloom.fpp", "0.03").toDouble
+    * `blooms` entry each (file -> sketched columns). No active session
+    * (pure file-API callers) or a column absent from the staged schema
+    * → skip silently; blooms are an optimization, never load-bearing. */
+  private def newBlooms(props: Map[String, String],
+      staged: Seq[String]): Map[String, Seq[String]] = {
+    val cols = bloomColsOf(props)
+    if (cols.isEmpty || staged.isEmpty) return Map.empty
+    val spark = SparkSession.getActiveSession.getOrElse(return Map.empty)
+    val items = props.getOrElse("graft.bloom.items", "100000").toLong
+    val fpp = props.getOrElse("graft.bloom.fpp", "0.03").toDouble
     try {
       // one write's staged files share the writer schema — the first
       // footer serves the whole read, no scheduled inference job
@@ -357,7 +284,7 @@ object Snapshots {
         case None => spark.read.parquet(staged: _*)
       }
       val present = df.columns.toSet
-      cols.filter(present).sorted.flatMap { c =>
+      val sketched = cols.filter(present).sorted.flatMap { c =>
         import org.apache.spark.sql.functions.{col, input_file_name, xxhash64}
         import org.apache.spark.sql.types._
         import spark.implicits._
@@ -387,7 +314,7 @@ object Snapshots {
           val agg = new BloomAgg(items, fpp)
           // sidecars are written EXECUTOR-SIDE by the task holding each
           // file's finished sketch; only the O(files) path STRINGS
-          // travel to the driver for `#bloom:` manifest lines. (The
+          // travel to the driver for the manifest's bloom lines. (The
           // prior shape collected the raw sketch bytes — O(new files)
           // × ~90 KB through one JVM plus serial local I/O: fine for
           // incremental commits, a killer on the initial conversion of
@@ -403,10 +330,11 @@ object Snapshots {
                 java.nio.file.Paths.get(path + suffix), bytes)
               path
             }.collect()
-          paths.toSeq.sorted.map(bloomLine(c, _))
+          paths.toSeq.map(_ -> c)
         }
       }
-    } catch { case _: Exception => Nil }
+      sketched.groupMap(_._1)(_._2).view.mapValues(_.sorted: Seq[String]).toMap
+    } catch { case _: Exception => Map.empty }
   }
 
   /** Per-file Bloom aggregation buffer: Spark's mergeable
@@ -435,65 +363,31 @@ object Snapshots {
       org.apache.spark.sql.Encoders.BINARY
   }
 
-  /** Was version `v` committed with the ROWS-UNCHANGED marker — the
-    * writer's declaration (Delta's `dataChange=false`) that the commit
-    * relocated bytes but did not change the table's logical row set
-    * (compaction, z-order, delete-file merge)? One small metadata
-    * read; false for pre-marker manifests. Consumers use it to keep
-    * change feeds O(delta) across maintenance commits; like Delta, the
-    * declaration is trusted — stamping it on a row-changing commit is
-    * a writer bug. */
-  def rowsUnchangedAt(root: String, version: Long): Boolean = {
-    val m = manifestPath(root, version)
-    Files.exists(m) &&
-      Files.readAllLines(m, UTF_8).asScala.exists(_ == rowsUnchangedLine)
-  }
-
-  private def seqLine(path: String, v: Long): String = s"$seqPrefix$v:$path"
-
-  /** The carried-forward `#seq:` lines of a parent snapshot, restricted
-    * to the files actually retained in `files` — a rewrite that drops a
-    * published file drops its seq pin with it. */
-  private def seqLines(fileSeq: Map[String, Long], files: Seq[String]): Seq[String] = {
-    val keep = files.toSet
-    fileSeq.toSeq.filter(kv => keep(kv._1)).sortBy(_._1)
-      .map { case (p, v) => seqLine(p, v) }
-  }
-
   // --- per-file column statistics (file-skipping metadata) ----------------
   //
   // Every data-file-adding commit records, per staged file, the file's
-  // top-level column bounds as one `#stats:` header line — JSON of the
-  // form {"p":path,"rows":N,"cols":{c:{"min":v,"max":v,"nc":n}}} —
+  // top-level column bounds as one stats entry — JSON of the form
+  // {"p":path,"rows":N,"cols":{c:{"min":v,"max":v,"nc":n}}} —
   // aggregated from the parquet footer's row-group statistics: ONE
   // small footer read per new file, of a footer the writer just wrote
   // (Delta/Iceberg record the same numbers from their writer tasks).
   // Carry-forward commits (appends, deltas, restore, delete
-  // compaction) re-emit retained files' lines verbatim; a rewrite
-  // drops replaced files' stats with the files. [[readStatsPruned]]
+  // compaction) keep retained files' entries verbatim
+  // ([[Manifest.retain]]); a rewrite drops replaced files' stats with
+  // the files. [[readStatsPruned]]
   // uses the bounds to skip files a range predicate provably cannot
   // match — metadata-only, before any listing or footer I/O, the level
   // ABOVE parquet's own row-group zone maps.
 
-  /** The `"p"` path of a stats JSON body, without a full parse. */
-  private def statsPathOf(body: String): Option[String] =
-    try {
-      import org.json4s._
-      org.json4s.jackson.JsonMethods.parse(body) \ "p" match {
-        case JString(p) => Some(p)
-        case _ => None
-      }
-    } catch { case _: Exception => None }
-
-  /** Stats header line for one freshly staged file: footer row-group
+  /** Stats JSON body for one freshly staged file: footer row-group
     * stats aggregated to file-level [min, max, nullCount] per SUPPORTED
     * top-level column (integral, floating, UTF8 string — decimals,
     * INT96, nested and annotated-exotic types are skipped, which only
-    * costs pruning opportunity). Returns None (no line, file never
+    * costs pruning opportunity). Returns None (no entry, file never
     * pruned) on any read/shape trouble — stats are an optimization and
     * must never fail a commit. */
   /** One Hadoop conf for all footer reads: `new Configuration()` costs
-    * milliseconds (classpath resource scan) and statsLine runs once per
+    * milliseconds (classpath resource scan) and statsBody runs once per
     * staged file per commit — read-only here, so sharing is safe. */
   private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
 
@@ -575,7 +469,7 @@ object Snapshots {
     }
   }
 
-  private def statsLine(path: String): Option[String] =
+  private def statsBody(path: String): Option[String] =
     try {
       import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
       import org.json4s._
@@ -649,36 +543,37 @@ object Snapshots {
         }
         val json: JObject = ("p" -> path) ~ ("rows" -> rows) ~
           ("cols" -> JObject(cols.toList))
-        Some(statsPrefix + org.json4s.jackson.JsonMethods.compact(
+        Some(org.json4s.jackson.JsonMethods.compact(
           org.json4s.jackson.JsonMethods.render(json)))
       } finally reader.close()
     } catch { case _: Exception => None }
 
-  /** Stats lines for freshly staged data files (never delete-key
-    * files). Footers read on a bounded daemon pool (commit-time driver
-    * work; local-disk footer reads are I/O-bound, so 8-wide cuts a
-    * 30-file partitioned commit's stats pass ~6×), results kept in
-    * sorted-path order so manifests stay byte-deterministic. */
-  private def newStatsLines(files: Seq[String]): Seq[String] = {
-    val sorted = files.sorted
-    if (sorted.sizeIs <= 2) sorted.flatMap(statsLine)
+  /** Stats bodies for freshly staged data files (never delete-key
+    * files), keyed by path. Footers read on a bounded daemon pool
+    * (commit-time driver work; local-disk footer reads are I/O-bound,
+    * so 8-wide cuts a 30-file partitioned commit's stats pass ~6×). */
+  private def newStats(files: Seq[String]): Map[String, String] =
+    if (files.sizeIs <= 2) files.flatMap(f => statsBody(f).map(f -> _)).toMap
     else {
-      val out = new Array[Option[String]](sorted.size)
-      graft.Qx.inParallel(sorted.zipWithIndex) { case (f, i) =>
-        out(i) = statsLine(f)
+      val out = new Array[Option[String]](files.size)
+      graft.Qx.inParallel(files.zipWithIndex) { case (f, i) =>
+        out(i) = statsBody(f)
       }
-      out.toSeq.flatten
+      files.zip(out).collect { case (f, Some(b)) => f -> b }.toMap
     }
-  }
 
-  /** The carried-forward `#stats:` lines of a parent snapshot,
-    * restricted to the files retained in `files` — mirrors
-    * [[seqLines]]. */
-  private def statsLines(statsRaw: Map[String, String], files: Seq[String]): Seq[String] = {
-    val keep = files.toSet
-    statsRaw.toSeq.filter(kv => keep(kv._1)).sortBy(_._1)
-      .map { case (_, body) => statsPrefix + body }
-  }
+  /** This commit's additions on top of `base` (a retained parent, or an
+    * empty snapshot for a full rewrite): `staged` data files appended
+    * with their fresh stats and — unless `sketch` is off — bloom
+    * sketches; `pinAt` pins each one's `#seq` at the commit version
+    * (staged paths whose own version segment must not be trusted). */
+  private def withStaged(base: Snapshot, staged: Seq[String],
+      props: Map[String, String], pinAt: Option[Long] = None,
+      sketch: Boolean = true): Snapshot =
+    base.copy(files = base.files ++ staged,
+      fileSeq = base.fileSeq ++ pinAt.toSeq.flatMap(v => staged.map(_ -> v)),
+      statsRaw = base.statsRaw ++ newStats(staged),
+      blooms = base.blooms ++ (if (sketch) newBlooms(props, staged) else Map.empty))
 
   /** Total order used for both stats folding and pruning: integral
     * values compare exactly as longs, mixed numerics through
@@ -877,19 +772,7 @@ object Snapshots {
     * from its manifest's `#ts:` header; None for pre-header manifests.
     * One small metadata read — no data I/O. */
   def commitTimestamp(root: String, version: Long): Option[Long] =
-    manifestTimestamp(manifestPath(root, version))
-
-  private def manifestTimestamp(m: Path): Option[Long] = {
-    if (!Files.exists(m)) None
-    else {
-      val r = Files.newBufferedReader(m, UTF_8)
-      try Iterator.continually(r.readLine())
-        .takeWhile(l => l != null && l.startsWith("#"))
-        .collectFirst { case l if l.startsWith(tsPrefix) =>
-          l.stripPrefix(tsPrefix).toLong }
-      finally r.close()
-    }
-  }
+    Manifest.readTs(manifestPath(root, version))
 
   /** NAMED TAG (Iceberg-style): pin a human name to a committed
     * version under `_commits/<name>.tag`. Re-tagging replaces the
@@ -1088,7 +971,7 @@ object Snapshots {
       val m = branchManifestPath(root, name, v)
       if (!Files.exists(m)) throw new IllegalStateException(
         s"version $v of branch '$name' under $root is not committed")
-      parseManifest(m, v)
+      Manifest.read(m, v)
     }
   }
 
@@ -1112,75 +995,19 @@ object Snapshots {
   /** APPEND commit targeting the branch: stage files via `write` into
     * a writer-unique data dir (under the shared root, at the branch's
     * next version — main's numbering continued), carry the branch
-    * parent's files/deletes/stats/blooms forward, and publish with the
-    * same tmp+createLink atomicity as a main commit. Concurrent
-    * committers to one branch race on the link and the loser restages,
-    * exactly like main. */
-  def commitToBranch(root: String, name: String)(write: String => Unit): Long = {
-    require(branchFork(root, name).isDefined, s"no branch '$name' under $root")
-    var attempt = 0
-    while (true) {
-      val v = branchHead(root, name) + 1
-      val dataDir = newDataDir(root, v)
-      write(dataDir)
-      val staged = listParquet(dataDir)
-      require(staged.nonEmpty, s"branch commit produced no data files in $dataDir")
-      // same reserved-segment discipline as the main commit funnel: a
-      // branch writer must not stage synthetic layout segments on a
-      // root that declares no such layout
-      if (staged.exists(_.contains(s"/$bucketPathCol=")) &&
-          tableProp(root, graft.catalog.SnapBucket.prop, "").isEmpty &&
-          tableProp(root, graft.catalog.SnapBucket.retiredProp, "").isEmpty)
-        throw new IllegalArgumentException(
-          s"'$bucketPathCol' is a reserved path segment — see the main " +
-            "commit funnel's rule; rename the partition column")
-      if (staged.exists(_.contains(s"/$transformPathCol=")) &&
-          tableProp(root, graft.catalog.SnapTransform.prop, "").isEmpty &&
-          tableProp(root, graft.catalog.SnapTransform.retiredProp, "").isEmpty)
-        throw new IllegalArgumentException(
-          s"'$transformPathCol' is a reserved path segment — see the main " +
-            "commit funnel's rule; rename the partition column")
-      val parent = resolveBranchAt(root, name, v - 1)
-      val files = parent.files ++ staged
-      val header = parent.deletes.map(delLine) ++
-        seqLines(parent.fileSeq, files) ++
-        statsLines(parent.statsRaw, files) ++
-        newStatsLines(staged) ++
-        bloomLines(parent.blooms, files) ++
-        newBloomLines(root, staged) ++
-        posLines(parent.posDeletes, files)
-      val parentTs = manifestTimestamp(
-        if (v - 1 <= branchFork(root, name).get) manifestPath(root, v - 1)
-        else branchManifestPath(root, name, v - 1)).getOrElse(-1L)
-      val commitTs = math.max(
-        java.time.Instant.now().toEpochMilli * 1000L, parentTs + 1L)
-      val tmp = commitsDir(root).resolve(
-        s".tmp_${ProcessHandle.current().pid()}_${stageSeq.incrementAndGet()}")
-      Files.write(tmp, (s"$tsPrefix$commitTs\n" +
-        (if (header.isEmpty) "" else header.mkString("", "\n", "\n")) +
-        files.mkString("\n")).getBytes(UTF_8))
-      try {
-        Files.createLink(branchManifestPath(root, name, v), tmp)
-        Files.delete(tmp)
-        return v
-      } catch {
-        case _: FileAlreadyExistsException =>
-          Files.deleteIfExists(tmp)
-          deleteRecursively(Paths.get(dataDir))
-          attempt += 1
-          if (attempt > 5) throw new IllegalStateException(
-            s"lost the branch-commit race $attempt times on '$name' under $root")
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+    * parent's files/deletes/stats/blooms forward, and publish through
+    * the one commit funnel ([[publishManifest]]) with the same
+    * atomicity as a main commit. Concurrent committers to one branch
+    * race on the link and the loser restages, exactly like main. */
+  def commitToBranch(root: String, name: String)(write: String => Unit): Long =
+    commitImpl(root, carryForward = true, txn = None, branch = Some(name))(write)
 
   /** FAST-FORWARD publish, ATOMIC (r20): squash the branch's commits
     * into ONE main commit at fork+1, published by a single createLink —
     * all-or-nothing, so main is either at the fork or at the complete
     * branch state, never at an intermediate prefix of an
-    * audited-as-a-whole batch. The squash manifest is the branch HEAD
-    * manifest verbatim (it already folds every branch commit's files,
+    * audited-as-a-whole batch. The squash commit is the branch HEAD
+    * state (it already folds every branch commit's files,
     * deletes, stats, blooms and position deletes) with its scoping
     * renumbered into main's coordinates: branch-staged files pin
     * `#seq:` at the publish version (so a future main delete covers
@@ -1192,8 +1019,8 @@ object Snapshots {
     * head to retry). Afterwards the ref advances to the published
     * version and the branch keeps working (its next commit continues
     * from there). A crash between the link and the ref/cleanup
-    * bookkeeping is detected on re-run (the head manifest is
-    * byte-identical to the recomputed squash) and finished
+    * bookkeeping is detected on re-run (the head manifest parses to
+    * the recomputed squash) and finished
     * idempotently. Returns the published main version (fork+1). */
   def fastForward(root: String, name: String): Long = {
     val fork = branchFork(root, name).getOrElse(throw new IllegalStateException(
@@ -1201,16 +1028,15 @@ object Snapshots {
     val bh = branchHead(root, name)
     require(bh > fork, s"branch '$name' has no commits to publish")
     val target = fork + 1
-    val body0 = squashBody(root, name, fork, bh)
+    val squash0 = squash(root, name, fork, bh)
     // race / crash-recovery gate FIRST — before any diff job runs: a
     // lost race must cost nothing, and a crash-recovery re-run must
     // not re-stage effects the LINKED manifest already owns (the
-    // idempotency probe strips `#changes:` lines for that reason)
+    // idempotency probe ignores change files for that reason)
     val head = maxCommitted(root)
     if (head != fork) {
       // our own crashed publish (linked, died before bookkeeping)?
-      if (Files.exists(manifestPath(root, target)) &&
-          sameManifestBody(manifestPath(root, target), body0)) {
+      if (sameSquash(root, target, squash0)) {
         finishBranchPublish(root, name, fork, bh, target)
         return target
       }
@@ -1221,59 +1047,50 @@ object Snapshots {
     }
     // a REWRITE squash (the branch ran copy-on-write repairs, so
     // fork-era files left the state) on a `graft.changes.rewriteDiff`
-    // table materializes its fork→branch-head row diff as `#changes:`
+    // table materializes its fork→branch-head row diff as change-file
     // sidecars in the squash manifest — the same contract as a
     // main-log COW commit, so a CDC consumer tailing main survives a
     // WAP publish of a COW-repaired batch. (MOR-repaired branches need
     // nothing: their squash carries the re-scoped delete lines the
     // feed already serves.) Guards and declared-type projection are
     // shared with the per-statement path ([[graft.catalog.RewriteDiff]]).
-    val body = {
-      val headFiles = resolveBranchAt(root, name, bh).files.toSet
+    val published = {
+      val headFiles = squash0.files.toSet
       val rewrote = resolveAt(root, fork).files.exists(!headFiles(_))
-      if (!rewrote || tableProp(root,
-          graft.catalog.GraftTable.rewriteDiffProp, "") != "true") body0
+      if (!rewrote || !tableProps(root).get(
+          graft.catalog.GraftTable.rewriteDiffProp).contains("true")) squash0
       else {
         val sidecars =
           graft.catalog.RewriteDiff.stageBranchDiff(root, fork, name).sorted
-        if (sidecars.isEmpty) s"$rowsUnchangedLine\n$body0"
-        else sidecars.map(f => s"$changesPrefix$f")
-          .mkString("", "\n", "\n") + body0
+        if (sidecars.isEmpty) squash0.copy(rowsUnchanged = true)
+        else squash0.copy(changeFiles = sidecars)
       }
     }
-    val parentTs = manifestTimestamp(manifestPath(root, fork)).getOrElse(-1L)
-    val commitTs = math.max(
-      java.time.Instant.now().toEpochMilli * 1000L, parentTs + 1L)
-    val tmp = commitsDir(root).resolve(
-      s".tmp_${ProcessHandle.current().pid()}_${stageSeq.incrementAndGet()}")
-    Files.write(tmp, (s"$tsPrefix$commitTs\n" + body).getBytes(UTF_8))
-    try {
-      Files.createLink(manifestPath(root, target), tmp)
-    } catch {
-      case _: FileAlreadyExistsException =>
-        // idempotent only against OUR squash (a concurrent re-run);
-        // anything else is a lost race and nothing of ours landed
-        if (!sameManifestBody(manifestPath(root, target), body))
-          throw new java.util.ConcurrentModificationException(
-            s"cannot fast-forward '$name' into $root: a concurrent commit " +
-              s"took version $target — NOTHING was published; branch from " +
-              "the new head and re-stage")
-    } finally Files.deleteIfExists(tmp)
+    val commitTs = stampTs(Manifest.readTs(manifestPath(root, fork)))
+    // idempotent only against OUR squash (a concurrent re-run);
+    // anything else is a lost race and nothing of ours landed
+    if (!link(root, manifestPath(root, target), published.copy(ts = Some(commitTs))) &&
+        !sameSquash(root, target, published))
+      throw new java.util.ConcurrentModificationException(
+        s"cannot fast-forward '$name' into $root: a concurrent commit " +
+          s"took version $target — NOTHING was published; branch from " +
+          "the new head and re-stage")
     finishBranchPublish(root, name, fork, bh, target)
     target
   }
 
-  /** The squash manifest body (everything but the `#ts:` line) that
-    * publishes branch `name`'s head into main version fork+1: the
-    * branch head's manifest lines with (a) branch-staged files pinned
-    * via `#seq:` into main's scoping coordinates and (b) within-branch
-    * `#del:@` versions re-scoped. Deterministic for a given branch
-    * state — the crash-recovery path recomputes it byte-identically. */
-  private def squashBody(root: String, name: String, fork: Long, bh: Long): String = {
+  /** The squash commit that publishes branch `name`'s head into main
+    * version fork+1: the branch head's state with (a) branch-staged
+    * files pinned via `#seq` into main's scoping coordinates and (b)
+    * within-branch delete versions re-scoped; its ts, change files and
+    * rows-unchanged marker (which described bh vs bh-1) are not
+    * carried. Deterministic for a given branch state — the
+    * crash-recovery path recomputes it. */
+  private def squash(root: String, name: String, fork: Long, bh: Long): Snapshot = {
     val snap = resolveBranchAt(root, name, bh)
     def effSeq(f: String): Long = snap.fileSeq.getOrElse(f, fileVersion(f))
     val branchFiles = snap.files.filter(effSeq(_) > fork).toSet
-    // within-branch row-level deletes (legacy cover-everything lines
+    // within-branch row-level deletes (legacy cover-everything deletes
     // parse to MaxValue and keep their semantics verbatim)
     val branchDels = snap.deletes
       .filter(d => d.coversBelow > fork && d.coversBelow != Long.MaxValue)
@@ -1310,48 +1127,28 @@ object Snapshots {
     // files (seq ≥ fork+2) escape both delete groups.
     val covered = eras.headOption.map(_._1).getOrElse(Set.empty[String])
     val secondEraCbs = if (eras.size == 2) eras.last._2.toSet else Set.empty[Long]
-    val lines = Files.readAllLines(
-      branchManifestPath(root, name, bh), UTF_8).asScala.toSeq.filter(_.nonEmpty)
-    val rescoped = lines.flatMap {
-      case l if l.startsWith(tsPrefix) => None // caller stamps a fresh ts
-      case l if l == rowsUnchangedLine => None // described bh vs bh-1
-      case l if l.startsWith(seqPrefix) =>
-        // branch files re-pin below; fork-era/cross-root pins carry
-        val Array(_, p) = l.stripPrefix(seqPrefix).split(":", 2)
-        if (branchFiles(p)) None else Some(l)
-      case l if l.startsWith(s"$delPrefix@") =>
-        val Array(v, k, p) = l.stripPrefix(s"$delPrefix@").split(":", 3)
-        val cb = v.toLong
-        if (cb <= fork) Some(l)
-        else if (secondEraCbs(cb)) Some(s"$delPrefix@${fork + 2}:$k:$p")
-        else Some(s"$delPrefix@${fork + 1}:$k:$p")
-      case l => Some(l)
+    val deletes = snap.deletes.map { d =>
+      if (d.coversBelow <= fork || d.coversBelow == Long.MaxValue) d
+      else d.copy(coversBelow = if (secondEraCbs(d.coversBelow)) fork + 2 else fork + 1)
     }
     val pins = snap.files.filter(branchFiles)
-      .map(f => seqLine(f, if (covered(f)) fork else fork + 1))
-    (rescoped ++ pins).mkString("\n")
+      .map(f => f -> (if (covered(f)) fork else fork + 1))
+    Snapshot(fork + 1, snap.files, deletes, snap.fileSeq ++ pins,
+      snap.statsRaw, snap.blooms, snap.posDeletes)
   }
 
-  /** True iff `m`'s content minus its `#ts:` and `#changes:` lines
-    * equals `body` minus the same — the publish-idempotency probe (the
-    * squash body is deterministic; the timestamp and any effect-
-    * sidecar staging paths differ across attempts — the LINKED
-    * manifest's sidecars are authoritative, a re-run's re-staged
-    * effects are orphans the sweeps reclaim). */
-  private def sameManifestBody(m: Path, body: String): Boolean = {
-    // `#rowsunchanged:1` is stripped too: a row-preserving rewrite
-    // squash on a rewriteDiff table LINKS a manifest carrying that
-    // marker while the recomputed squashBody never does — without the
-    // strip, crash recovery between the link and finishBranchPublish
-    // mis-diagnosed its own published manifest as a lost race (r20
-    // ADVICE item; spec: "crashed rewrite-squash publish with an empty
-    // diff finishes idempotently").
-    def strip(lines: Seq[String]): String = lines
-      .filter(l => l.nonEmpty && !l.startsWith(tsPrefix) &&
-        !l.startsWith(changesPrefix) && l != rowsUnchangedLine)
-      .mkString("\n")
-    try strip(Files.readAllLines(m, UTF_8).asScala.toSeq) ==
-      strip(body.split('\n').toSeq)
+  /** Is main's `target` manifest this squash? The publish-idempotency
+    * probe: value equality with the timestamp, change files and
+    * rows-unchanged marker cleared — the timestamp differs across
+    * attempts, the LINKED manifest's effect sidecars are authoritative
+    * (a re-run's re-staged effects are orphans the sweeps reclaim), and
+    * a row-preserving rewrite squash on a rewriteDiff table links the
+    * marker the recomputed squash never carries (spec: "crashed
+    * rewrite-squash publish with an empty diff finishes idempotently"). */
+  private def sameSquash(root: String, target: Long, squash: Snapshot): Boolean = {
+    def core(s: Snapshot) = s.copy(ts = None, changeFiles = Nil, rowsUnchanged = false)
+    val m = manifestPath(root, target)
+    try Files.exists(m) && core(Manifest.read(m, target)) == core(squash)
     catch { case _: Exception => false }
   }
 
@@ -1405,7 +1202,7 @@ object Snapshots {
         val m = branchManifestPath(root, name, v)
         if (!Files.exists(m)) Nil
         else {
-          val s = parseManifest(m, v)
+          val s = Manifest.read(m, v)
           s.files ++ s.deletes.map(_.path) ++ s.posDeletes.values.flatten ++
             s.changeFiles
         }
@@ -1444,47 +1241,24 @@ object Snapshots {
         "(predates retained history)"))
   }
 
-  private def posLine(dataFile: String, posFile: String): String = {
-    // ':' is the line delimiter; our staging paths never carry one,
-    // and refusing here keeps the resolveAt split total
-    require(!dataFile.contains(':') && !posFile.contains(':'),
-      s"posdel paths must not contain ':': $dataFile / $posFile")
-    s"$posDelPrefix$dataFile:$posFile"
-  }
-
-  /** Carried-forward `#posdel:` lines restricted to retained files —
-    * a rewritten/compacted data file takes its position deletes with
-    * it (the rewrite materialized its surviving rows). */
-  private def posLines(pos: Map[String, Seq[String]],
-      files: Seq[String]): Seq[String] = {
-    val keep = files.toSet
-    pos.toSeq.filter(kv => keep(kv._1)).sortBy(_._1)
-      .flatMap { case (f, pfs) => pfs.map(posLine(f, _)) }
-  }
-
-  private def delLine(d: DeleteFile): String =
-    s"$delPrefix@${d.coversBelow}:${d.keyCol}:${d.path}"
-
   /** THE commit point, shared by every manifest publisher (plain/append
-    * commits, staged rewrites and deltas, txn-tagged appends, restore,
-    * by-reference publish, delete compaction): per attempt it takes the
-    * next version, lets `gate` veto or short-circuit, has `build`
-    * produce that attempt's manifest content FRESH (a lost race means
-    * the parent changed — content must re-derive, never replay), stamps
-    * the `#ts:` header clamped strictly above the parent's (TIMESTAMP
-    * AS OF stays monotonic under clock skew), writes a writer-unique
-    * tmp file, and publishes it with an atomic hard-link
-    * create-if-absent. NOT a rename: POSIX rename(2) silently REPLACES
-    * an existing target, so a racing loser would overwrite the winner's
-    * manifest; link creation is the primitive that atomically fails
-    * (EEXIST) when the target exists, and the link appears only fully
-    * formed — readers can never see a partial manifest.
+    * commits, branch commits, staged rewrites and deltas, txn-tagged
+    * appends, restore, by-reference publish, delete compaction): per
+    * attempt it takes the next version, lets `gate` veto or
+    * short-circuit, reads `_table.properties` once, has `build` produce
+    * that attempt's [[Snapshot]] FRESH (a lost race means the parent
+    * changed — content must re-derive, never replay), applies the
+    * reserved-segment rules, stamps the timestamp clamped strictly
+    * above the parent's (TIMESTAMP AS OF stays monotonic under clock
+    * skew), renders it ([[Manifest.render]]) and publishes it with
+    * [[link]]'s atomic create-if-absent.
     *
     *  - `gate(v)`: runs first each attempt at candidate version `v`;
     *    return false to no-op with the current head (txn idempotence),
     *    throw to abort the statement (write-conflict `basedOn`).
-    *  - `build(v)`: (pre-ts header lines, del/seq header lines, file
-    *    lines) for version `v`; may stage data as a side effect.
+    *  - `build(v, props)`: the commit at version `v` (its `version`
+    *    and `ts` are the funnel's to set); may stage data as a side
+    *    effect.
     *  - `onLost()`: cleanup after a lost race, before the retry
     *    (discard the attempt's own staged dir — never anyone else's).
     */
@@ -1495,7 +1269,7 @@ object Snapshots {
       // continuation (manifests under `_commits/branch_<name>/`, head
       // resolved via branchHead — versions continue main's numbering)
       branch: Option[String] = None)(
-      build: Long => (Seq[String], Seq[String], Seq[String])): Long = {
+      build: (Long, Map[String, String]) => Snapshot): Long = {
     Files.createDirectories(commitsDir(root))
     branch.foreach { b =>
       require(branchFork(root, b).isDefined, s"no branch '$b' under $root")
@@ -1505,67 +1279,75 @@ object Snapshots {
       branch.map(branchHead(root, _)).getOrElse(maxCommitted(root))
     def targetPath(v: Long): Path =
       branch.map(branchManifestPath(root, _, v)).getOrElse(manifestPath(root, v))
-    def parentTsOf(v: Long): Long = branch match {
+    def parentTsOf(v: Long): Option[Long] = branch match {
       case Some(b) if v - 1 > branchFork(root, b).get =>
-        manifestTimestamp(branchManifestPath(root, b, v - 1)).getOrElse(-1L)
-      case _ =>
-        if (v > 1L) commitTimestamp(root, v - 1).getOrElse(-1L) else -1L
+        Manifest.readTs(branchManifestPath(root, b, v - 1))
+      case _ => if (v > 1L) commitTimestamp(root, v - 1) else None
     }
     var attempt = 0
     while (true) {
       val head = headOf
       if (!gate(head + 1)) return head
       val v = head + 1
-      val (preTs, header, fileLines) = build(v)
+      val props = tableProps(root)
+      val snap = build(v, props)
       // '_gbucket' is a RESERVED path segment (SnapBucket layouts):
       // every path-recovering read drops it, so a direct-API writer
       // staging a GENUINE partition column by that name would silently
       // lose it on read. Refuse at the one commit funnel unless the
       // root declares a bucket layout in _table.properties (the
       // catalog DDL path already refuses the column name at CREATE).
-      if (fileLines.exists(_.contains(s"/$bucketPathCol=")) &&
-          tableProp(root, graft.catalog.SnapBucket.prop, "").isEmpty &&
+      def declared(k: String) = props.get(k).exists(_.nonEmpty)
+      if (snap.files.exists(_.contains(s"/$bucketPathCol=")) &&
+          !declared(graft.catalog.SnapBucket.prop) &&
           // a RETIRED layout's rewrites list surviving bucketed files
-          tableProp(root, graft.catalog.SnapBucket.retiredProp, "").isEmpty)
+          !declared(graft.catalog.SnapBucket.retiredProp))
         throw new IllegalArgumentException(
           s"'$bucketPathCol' is a reserved path segment (hash-bucket " +
             s"layouts derive it; reads never surface it) — a table under " +
             s"$root without a declared '${graft.catalog.SnapBucket.prop}' " +
             "property must not stage files under it. Rename the partition " +
             "column.")
-      if (fileLines.exists(_.contains(s"/$transformPathCol=")) &&
-          tableProp(root, graft.catalog.SnapTransform.prop, "").isEmpty &&
-          tableProp(root, graft.catalog.SnapTransform.retiredProp, "").isEmpty)
+      if (snap.files.exists(_.contains(s"/$transformPathCol=")) &&
+          !declared(graft.catalog.SnapTransform.prop) &&
+          !declared(graft.catalog.SnapTransform.retiredProp))
         throw new IllegalArgumentException(
           s"'$transformPathCol' is a reserved path segment (time/truncate " +
             s"transform layouts derive it; reads never surface it) — a " +
             s"table under $root without a declared " +
             s"'${graft.catalog.SnapTransform.prop}' property must not " +
             "stage files under it. Rename the partition column.")
-      val parentTs = parentTsOf(v)
-      val commitTs = math.max(
-        java.time.Instant.now().toEpochMilli * 1000L, parentTs + 1L)
-      val tmp = commitsDir(root).resolve(
-        s".tmp_${ProcessHandle.current().pid()}_${stageSeq.incrementAndGet()}")
-      val content = preTs.map(_ + "\n").mkString +
-        s"$tsPrefix$commitTs\n" +
-        (if (header.isEmpty) "" else header.mkString("", "\n", "\n")) +
-        fileLines.mkString("\n")
-      Files.write(tmp, content.getBytes(UTF_8))
-      try {
-        Files.createLink(targetPath(v), tmp)
-        Files.delete(tmp)
+      val ts = stampTs(parentTsOf(v))
+      if (link(root, targetPath(v), snap.copy(version = v, ts = Some(ts))))
         return v
-      } catch {
-        case _: FileAlreadyExistsException =>
-          Files.deleteIfExists(tmp)
-          onLost()
-          attempt += 1
-          if (attempt > 5) throw new IllegalStateException(
-            s"lost the $what race $attempt times under $root")
-      }
+      onLost()
+      attempt += 1
+      if (attempt > 5) throw new IllegalStateException(
+        s"lost the $what race $attempt times under $root")
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** A commit timestamp (µs since epoch, UTC) clamped strictly above
+    * the parent's. */
+  private def stampTs(parentTs: Option[Long]): Long =
+    math.max(java.time.Instant.now().toEpochMilli * 1000L, parentTs.getOrElse(-1L) + 1L)
+
+  /** Write `snap` to a writer-unique tmp file and publish it at
+    * `target` with an atomic hard-link create-if-absent; false when the
+    * target already exists (a lost race). NOT a rename: POSIX rename(2)
+    * silently REPLACES an existing target, so a racing loser would
+    * overwrite the winner's manifest; link creation is the primitive
+    * that atomically fails (EEXIST) when the target exists, and the
+    * link appears only fully formed — readers can never see a partial
+    * manifest. */
+  private def link(root: String, target: Path, snap: Snapshot): Boolean = {
+    val tmp = commitsDir(root).resolve(
+      s".tmp_${ProcessHandle.current().pid()}_${stageSeq.incrementAndGet()}")
+    Files.write(tmp, Manifest.render(snap).getBytes(UTF_8))
+    try { Files.createLink(target, tmp); true }
+    catch { case _: FileAlreadyExistsException => false }
+    finally Files.deleteIfExists(tmp)
   }
 
   private val fileVersionRe = """.*/v(\d{8})_[^/]*/.*""".r
@@ -1657,18 +1439,11 @@ object Snapshots {
     * key [[graft.catalog.GraftTable.writeMeta]] pins in
     * `_table.properties`) — what lets a ZERO-FILE snapshot read as an
     * empty frame instead of failing schema inference. */
-  private def declaredSchema(root: String): Option[org.apache.spark.sql.types.StructType] = {
-    val f = Paths.get(root, "_table.properties")
-    if (!Files.exists(f)) None
-    else try {
-      val p = new java.util.Properties()
-      val in = Files.newBufferedReader(f, UTF_8)
-      try p.load(in) finally in.close()
-      Option(p.getProperty("graft.schema.json")).map(j =>
-        org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-    } catch { case _: Exception => None }
-  }
+  private def declaredSchema(root: String): Option[org.apache.spark.sql.types.StructType] =
+    tableProps(root).get("graft.schema.json").flatMap(j =>
+      try Some(org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      catch { case _: Exception => None })
 
   /** Empty frame for a zero-file snapshot — a LEGITIMATE state (a
     * catalog DELETE matching every row publishes an empty rewrite). */
@@ -2045,7 +1820,7 @@ object Snapshots {
           val prev = resolveAt(root, v - 1)
           val cur = resolveAt(root, v)
           val curFiles = cur.files.toSet
-          if (rowsUnchangedAt(root, v)) Some(Nil)
+          if (cur.rowsUnchanged) Some(Nil)
           else if (prev.files.forall(curFiles) &&
             prev.deletes.toSet == cur.deletes.toSet &&
             prev.posDeletes == cur.posDeletes)
@@ -2255,7 +2030,7 @@ object Snapshots {
   /** MERGE-ON-READ delete commit: `write(stagingDir)` materializes a
     * parquet of DELETED KEY VALUES (single column `keyCol`), and the
     * published manifest carries the parent's data files UNCHANGED plus
-    * a `#del:<keyCol>:<path>` line per staged file (prior pending
+    * a scoped `#del` line per staged file (prior pending
     * deletes carry forward too). Readers apply the deletes as a
     * broadcast anti join ([[read]]): the delete costs O(deleted keys)
     * written — never a rewrite of the 100 TB base (contrast the
@@ -2278,18 +2053,11 @@ object Snapshots {
     * is deleted when ALL components match. Same version scoping. */
   def commitDelete(root: String, keyCols: Seq[String])(write: String => Unit): Long = {
     require(keyCols.nonEmpty, "commitDelete needs at least one key column")
-    keyCols.foreach(requireKeyName)
+    // refused BEFORE staging — [[Manifest.render]] re-checks the joined form
+    keyCols.foreach(Manifest.requireKeyName)
     commitImpl(root, carryForward = true, txn = None,
       stagedAsDeletes = Some(keyCols.mkString(",")))(write)
   }
-
-  /** Every `#del:@<v>:<key>:<path>` writer must reject names that
-    * break the line's 3-way split — shared by [[commitDelete]] and
-    * [[commitStagedDelta]] so a ':'-bearing key
-    * (legal SQL via backticks) can never silently corrupt a manifest. */
-  private def requireKeyName(c: String): Unit =
-    require(!c.contains(',') && !c.contains(':'),
-      s"delete key column name must not contain ',' or ':' (manifest syntax): $c")
 
   /** RESTORE (Delta's `RESTORE TABLE ... TO VERSION AS OF`): publish a
     * NEW commit whose file list (and pending-delete lines) are exactly
@@ -2304,13 +2072,7 @@ object Snapshots {
     * the same atomic create-if-absent commit point. */
   def restore(root: String, version: Long): Long = {
     val snap = resolveAt(root, version) // throws clearly if expired
-    publishManifest(root, "restore") { _ =>
-      (Nil,
-        snap.deletes.map(delLine) ++ seqLines(snap.fileSeq, snap.files) ++
-          statsLines(snap.statsRaw, snap.files) ++
-          posLines(snap.posDeletes, snap.files),
-        snap.files)
-    }
+    publishManifest(root, "restore")((_, _) => Manifest.retain(snap, snap.files))
   }
 
   /** WRITE-AUDIT-PUBLISH (Iceberg's WAP pattern): append the AUDITED
@@ -2341,33 +2103,22 @@ object Snapshots {
     require(snap.deletes.isEmpty && snap.posDeletes.isEmpty,
       s"staging head of $stagingRoot carries pending merge-on-read deletes; " +
         "rewrite (compact) before publishing")
-    Files.createDirectories(commitsDir(mainRoot))
-    appendManifest(mainRoot, snap.files, "publish", seqPinNew = true)
+    // by reference: the staging files are listed in place (no data
+    // movement), each pinned at the publish version; they belong to the
+    // staging root, so no sketches are built for them here
+    publishManifest(mainRoot, "publish") { (v, props) =>
+      withStaged(carried(mainRoot, None, v), snap.files, props,
+        pinAt = Some(v), sketch = false)
+    }
   }
 
-  /** Publish a manifest at the next version of `root` whose file list
-    * is the parent's plus `newFiles` (by reference — no staging, no
-    * data movement), with the usual monotonic `#ts:` header and
-    * atomic create-if-absent commit point. Shared by [[restore]]-style
-    * metadata-only commits. With `seqPinNew`, each new file gets a
-    * `#seq:` line pinning its effective sequence number to the
-    * committed version (cross-root publishes, where the path's own
-    * version segment belongs to a foreign counter). */
-  private def appendManifest(root: String, newFiles: Seq[String],
-      what: String, seqPinNew: Boolean = false): Long =
-    publishManifest(root, what) { v =>
-      // parent re-resolved per attempt: after a lost race the parent
-      // is the winner's head, not the one this writer started from
-      val parent = if (v > 1L) Some(resolveAt(root, v - 1)) else None
-      val files = parent.map(_.files).getOrElse(Nil) ++ newFiles
-      val header = parent.map(_.deletes).getOrElse(Nil).map(delLine) ++
-        parent.map(p => seqLines(p.fileSeq, p.files)).getOrElse(Nil) ++
-        (if (seqPinNew) newFiles.map(seqLine(_, v)) else Nil) ++
-        parent.map(p => statsLines(p.statsRaw, files)).getOrElse(Nil) ++
-        newStatsLines(newFiles) ++
-        parent.map(p => posLines(p.posDeletes, files)).getOrElse(Nil)
-      (Nil, header, files)
-    }
+  /** The parent of version `v` on a log, retained whole — the base of
+    * every carry-forward commit (empty below version 2). Re-resolved
+    * per attempt: after a lost race the parent is the winner's head,
+    * not the one this writer started from. */
+  private def carried(root: String, branch: Option[String], v: Long): Snapshot =
+    if (v > 1L) { val p = resolveLogAt(root, branch, v - 1); Manifest.retain(p, p.files) }
+    else Snapshot(v, Nil)
 
   /** Writer-unique staging dir for the DataSource-V2 write path, where
     * executors materialize files BEFORE the commit's version is known
@@ -2398,7 +2149,7 @@ object Snapshots {
     * error (Delta/Iceberg's serializable-rewrite rule) instead of
     * retrying at a higher version with the stale list; the caller
     * re-runs the whole statement against the new head. Append commits
-    * ([[commit]]/[[appendManifest]]) keep their optimistic retry —
+    * ([[commit]]/[[publishFrom]]) keep their optimistic retry —
     * they re-derive the parent file list inside the loop, so they
     * compose with any interleaving; only the replace path must
     * fail. */
@@ -2425,11 +2176,9 @@ object Snapshots {
               "contain. Re-run the statement against the current head.")
         }
         true
-      }, branch = branch) { v =>
-      (Nil, (if (rowsUnchanged) Seq(rowsUnchangedLine) else Nil) ++
-        changeFiles.sorted.map(f => s"$changesPrefix$f") ++
-        files.sorted.map(seqLine(_, v)) ++ newStatsLines(files) ++
-        newBloomLines(root, files.sorted), files.sorted)
+      }, branch = branch) { (v, props) =>
+      withStaged(Snapshot(v, Nil), files.sorted, props, pinAt = Some(v))
+        .copy(changeFiles = changeFiles.sorted, rowsUnchanged = rowsUnchanged)
     }
   }
 
@@ -2445,26 +2194,15 @@ object Snapshots {
   def commitStagedDelta(root: String, keyCol: String,
       dataFiles: Seq[String], delKeyFiles: Seq[String],
       branch: Option[String] = None): Long = {
-    requireKeyName(keyCol)
+    Manifest.requireKeyName(keyCol)
     if (dataFiles.isEmpty && delKeyFiles.isEmpty)
       return branch.map(branchHead(root, _)).getOrElse(maxCommitted(root))
-    publishManifest(root, "staged-delta", branch = branch) { v =>
-      val parent =
-        if (v > 1L) Some(resolveLogAt(root, branch, v - 1)) else None
-      require(parent.isDefined || delKeyFiles.isEmpty,
+    publishManifest(root, "staged-delta", branch = branch) { (v, props) =>
+      require(v > 1L || delKeyFiles.isEmpty,
         s"a merge-on-read delta needs a committed table under $root")
-      val files = parent.map(_.files).getOrElse(Nil) ++ dataFiles.sorted
-      val dels = parent.map(_.deletes).getOrElse(Nil) ++
-        delKeyFiles.sorted.map(DeleteFile(keyCol, _, v))
-      val header = dels.map(delLine) ++
-        parent.map(p => seqLines(p.fileSeq, files)).getOrElse(Nil) ++
-        dataFiles.sorted.map(seqLine(_, v)) ++
-        parent.map(p => statsLines(p.statsRaw, files)).getOrElse(Nil) ++
-        newStatsLines(dataFiles) ++
-        parent.map(p => bloomLines(p.blooms, files)).getOrElse(Nil) ++
-        newBloomLines(root, dataFiles.sorted) ++
-        parent.map(p => posLines(p.posDeletes, files)).getOrElse(Nil)
-      (Nil, header, files)
+      val base = carried(root, branch, v)
+      withStaged(base, dataFiles.sorted, props, pinAt = Some(v)).copy(deletes =
+        base.deletes ++ delKeyFiles.sorted.map(DeleteFile(keyCol, _, v)))
     }
   }
 
@@ -2491,7 +2229,7 @@ object Snapshots {
       dataFiles: Seq[String] = Nil, branch: Option[String] = None): Long = {
     if ((affected.isEmpty || affected.forall(_._2.isEmpty)) && dataFiles.isEmpty)
       return branch.map(branchHead(root, _)).getOrElse(maxCommitted(root))
-    publishManifest(root, "staged-posdelete", branch = branch) { v =>
+    publishManifest(root, "staged-posdelete", branch = branch) { (v, props) =>
       // a posdel needs a committed table
       val parent = resolveLogAt(root, branch, v - 1)
       val live = parent.files.toSet
@@ -2502,18 +2240,11 @@ object Snapshots {
           "the statement against the current head")
       // UPDATE's insert half: new data files append beside the posdel
       // lines in the SAME atomic commit, seq-pinned at this version
-      val files = parent.files ++ dataFiles.sorted
       val merged = (parent.posDeletes.toSeq ++ affected.toSeq)
-        .groupBy(_._1).view.mapValues(_.flatMap(_._2).distinct.sorted).toMap
-      val header = parent.deletes.map(delLine) ++
-        seqLines(parent.fileSeq, files) ++
-        dataFiles.sorted.map(seqLine(_, v)) ++
-        statsLines(parent.statsRaw, files) ++
-        newStatsLines(dataFiles) ++
-        bloomLines(parent.blooms, files) ++
-        newBloomLines(root, dataFiles.sorted) ++
-        posLines(merged, files)
-      (Nil, header, files)
+        .groupBy(_._1).view.mapValues(_.flatMap(_._2).distinct.sorted)
+        .filter(_._2.nonEmpty).toMap
+      withStaged(Manifest.retain(parent, parent.files), dataFiles.sorted, props,
+        pinAt = Some(v)).copy(posDeletes = merged)
     }
   }
 
@@ -2536,18 +2267,9 @@ object Snapshots {
       // idempotence gate, re-checked every attempt: a replayed epoch
       // (crash-restart, or a zombie losing the race to its twin) finds
       // its txn tag already committed and no-ops
-      gate = _ => lastTxn(root, appId) < epoch) { v =>
-      val parent = if (v > 1L) Some(resolveAt(root, v - 1)) else None
-      val all = parent.map(_.files).getOrElse(Nil) ++ files.sorted
-      val header = parent.map(_.deletes).getOrElse(Nil).map(delLine) ++
-        parent.map(p => seqLines(p.fileSeq, all)).getOrElse(Nil) ++
-        files.sorted.map(seqLine(_, v)) ++
-        parent.map(p => statsLines(p.statsRaw, all)).getOrElse(Nil) ++
-        newStatsLines(files) ++
-        parent.map(p => bloomLines(p.blooms, all)).getOrElse(Nil) ++
-        newBloomLines(root, files.sorted) ++
-        parent.map(p => posLines(p.posDeletes, all)).getOrElse(Nil)
-      (Seq(s"#txn:$appId:$epoch"), header, all)
+      gate = _ => lastTxn(root, appId) < epoch) { (v, props) =>
+      withStaged(carried(root, None, v), files.sorted, props, pinAt = Some(v))
+        .copy(txn = Some((appId, epoch)))
     }
   }
 
@@ -2616,7 +2338,7 @@ object Snapshots {
         else { planned = classes; snapAtPlan = snap; true }
       },
       onLost = () =>
-        if (stage != null) deleteRecursively(Paths.get(stage))) { v =>
+        if (stage != null) deleteRecursively(Paths.get(stage))) { (v, _) =>
       stage = newDataDir(root, v)
       Files.createDirectories(Paths.get(stage))
       val newDels = planned.zipWithIndex.map { case ((keyCol, ds), i) =>
@@ -2684,12 +2406,8 @@ object Snapshots {
         }
       // delete-file merge relocates key bytes only — the logical row
       // set is untouched, so change feeds may pass over this commit
-      (Nil, rowsUnchangedLine +: (newDels.map(delLine) ++
-        seqLines(snapAtPlan.fileSeq, snapAtPlan.files) ++
-        statsLines(snapAtPlan.statsRaw, snapAtPlan.files) ++
-        bloomLines(snapAtPlan.blooms, snapAtPlan.files) ++
-        posLines(posOut, snapAtPlan.files)),
-        snapAtPlan.files)
+      Manifest.retain(snapAtPlan.copy(deletes = newDels, posDeletes = posOut),
+        snapAtPlan.files).copy(rowsUnchanged = true)
     }
   }
 
@@ -2700,25 +2418,20 @@ object Snapshots {
     if (!Files.isDirectory(cd)) -1L
     else {
       val ls = Files.list(cd)
-      val heads =
-        try ls.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".manifest"))
-          .flatMap { m =>
-            val r = Files.newBufferedReader(m, UTF_8)
-            try Option(r.readLine()) finally r.close()
-          }.toSeq
-        finally ls.close()
-      val tag = s"#txn:$appId:"
-      heads.collect { case h if h.startsWith(tag) =>
-        h.stripPrefix(tag).toLong }
+      try ls.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".manifest"))
+        .flatMap(Manifest.readTxn)
+        .collect { case (`appId`, epoch) => epoch }
         .foldLeft(-1L)(math.max)
+      finally ls.close()
     }
   }
 
   private def commitImpl(root: String, carryForward: Boolean,
       txn: Option[(String, Long)],
       stagedAsDeletes: Option[String] = None,
-      rowsUnchanged: Boolean = false)(write: String => Unit): Long = {
+      rowsUnchanged: Boolean = false,
+      branch: Option[String] = None)(write: String => Unit): Long = {
     // the attempt's own staging dir, discarded (and only it) on a lost
     // race before the retry re-stages
     var dataDir: String = null
@@ -2728,7 +2441,8 @@ object Snapshots {
       // twin) finds its txn tag already committed and no-ops
       gate = _ => txn.forall { case (appId, epoch) =>
         lastTxn(root, appId) < epoch },
-      onLost = () => deleteRecursively(Paths.get(dataDir))) { v =>
+      onLost = () => deleteRecursively(Paths.get(dataDir)),
+      branch = branch) { (v, props) =>
       // writer-unique staging dir: a racing writer at the same version
       // stages elsewhere, so no cross-writer list/append/delete is
       // possible; a crashed writer's dir is an orphan no manifest ever
@@ -2737,34 +2451,24 @@ object Snapshots {
       write(dataDir)
       val staged = listParquet(dataDir)
       require(staged.nonEmpty, s"commit produced no data files in $dataDir")
-      // carried files re-resolved INSIDE the retry loop: after a lost
-      // race the parent is the winner's head, not the one we started from
-      val parent =
-        if (v > 1L && (carryForward || stagedAsDeletes.isDefined))
-          Some(resolveAt(root, v - 1))
-        else None
-      val files = stagedAsDeletes match {
-        case Some(_) => parent.getOrElse(throw new IllegalStateException(
-          s"merge-on-read delete needs a committed table under $root")).files
-        case None => parent.map(_.files).getOrElse(Nil) ++ staged
+      // pending deletes (and seq pins of carried cross-root files)
+      // carry forward on append/delete commits; a full rewrite
+      // (carryForward = false) clears them with the files — the rewrite
+      // materializes the surviving rows
+      val snap = stagedAsDeletes match {
+        case Some(keyCol) =>
+          if (v == 1L) throw new IllegalStateException(
+            s"merge-on-read delete needs a committed table under $root")
+          // new delete files are SCOPED to this commit: they cover only
+          // files staged at versions < v, so any later append of a
+          // deleted key stays visible
+          val base = carried(root, branch, v)
+          base.copy(deletes = base.deletes ++ staged.map(DeleteFile(keyCol, _, v)))
+        case None =>
+          val base = if (carryForward) carried(root, branch, v) else Snapshot(v, Nil)
+          withStaged(base, staged, props)
       }
-      // pending deletes carry forward on append/delete commits; a full
-      // rewrite (carryForward = false) clears them — the rewrite
-      // materializes the surviving rows. New delete lines are SCOPED to
-      // this commit: they cover only files staged at versions < v, so
-      // any later append of a deleted key stays visible.
-      val newDelFiles = stagedAsDeletes.toSeq.flatMap(k => staged.map(DeleteFile(k, _, v)))
-      // seq pins for carried cross-root (published) files survive every
-      // carry-forward commit; a full rewrite drops them with the files
-      val header = (if (rowsUnchanged) Seq(rowsUnchangedLine) else Nil) ++
-        (parent.map(_.deletes).getOrElse(Nil) ++ newDelFiles).map(delLine) ++
-        parent.map(p => seqLines(p.fileSeq, files)).getOrElse(Nil) ++
-        parent.map(p => statsLines(p.statsRaw, files)).getOrElse(Nil) ++
-        (if (stagedAsDeletes.isDefined) Nil else newStatsLines(staged)) ++
-        parent.map(p => bloomLines(p.blooms, files)).getOrElse(Nil) ++
-        (if (stagedAsDeletes.isDefined) Nil else newBloomLines(root, staged)) ++
-        parent.map(p => posLines(p.posDeletes, files)).getOrElse(Nil)
-      (txn.map { case (a, e) => s"#txn:$a:$e" }.toSeq, header, files)
+      snap.copy(txn = txn, rowsUnchanged = rowsUnchanged)
     }
   }
 

@@ -559,7 +559,7 @@ class Round16OpsSpec extends SparkSpec {
     assert(sqlDf("SELECT k FROM snap.default.r16proc").as[Long].collect().sorted
       .toSeq == expect, "compaction must be lossless")
     // the compaction commit is rows-unchanged-marked
-    assert(Snapshots.rowsUnchangedAt(root, post.version))
+    assert(Snapshots.resolveAt(root, post.version).rowsUnchanged)
     // vacuum through SQL: retention floor rises, head still reads
     val vc = sqlDf("CALL snap.system.vacuum('default.r16proc', 2)").collect().head
     assert(vc.getAs[Long]("oldest_retained") > 1L, s"vacuum report: $vc")

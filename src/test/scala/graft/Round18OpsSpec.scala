@@ -68,6 +68,40 @@ class Round18OpsSpec extends SparkSpec {
     assert(one.count() == 1)
   }
 
+  test("restore and publishFrom carry the parent's bloom index") {
+    sqlDf("DROP TABLE IF EXISTS snap.default.r18rbl")
+    sqlDf("""CREATE TABLE snap.default.r18rbl (k BIGINT, v DOUBLE)
+            |TBLPROPERTIES ('graft.bloom.cols'='k')""".stripMargin)
+    // EVEN keys hashed over 4 files: every file's [min, max] spans the
+    // domain, so only the sketches can refute an odd key inside it
+    sqlDf("""INSERT INTO snap.default.r18rbl
+            |SELECT /*+ REPARTITION(4, id) */ id * 2, id * 1.0
+            |FROM range(0, 4000)""".stripMargin)
+    val root = s"$wh/default/r18rbl"
+    val v1 = Snapshots.maxCommitted(root)
+    val sketched = Snapshots.resolveAt(root, v1).blooms
+    assert(sketched.nonEmpty, "fixture must sketch k")
+    // a by-reference publish into the bloom-enabled main keeps main's
+    // carried entries
+    val staging = Qx.tmpOut("r18rblstg", sf())
+    Snapshots.commit(staging)(out =>
+      spark.range(0, 10).selectExpr("id * 2 AS k", "id * 1.0 AS v")
+        .write.mode("append").parquet(out))
+    Snapshots.publishFrom(root, staging)
+    val published = Snapshots.resolve(root).get.blooms
+    assert(sketched.forall { case (f, cols) => published.get(f).contains(cols) },
+      s"publishFrom dropped main's bloom entries: ${sketched.keySet -- published.keySet}")
+    // a restore republishes the restored version's entries
+    sqlDf("INSERT INTO snap.default.r18rbl VALUES (1001, 1.0)")
+    def absent = sqlDf("SELECT * FROM snap.default.r18rbl WHERE k = 2001")
+    assert(plannedFiles(absent).isEmpty, "sketches must refute before the restore")
+    Snapshots.restore(root, v1)
+    assert(Snapshots.resolve(root).get.blooms == sketched,
+      "a restore must carry the restored version's bloom entries")
+    assert(plannedFiles(absent).isEmpty, "an absent key must plan no files after a restore")
+    assert(sqlDf("SELECT count(*) FROM snap.default.r18rbl").as[Long].head() == 4000L)
+  }
+
   test("SnapTransform ordinals match the calendar on known values") {
     import graft.catalog.SnapTransform
     import org.apache.spark.sql.types._

@@ -121,7 +121,7 @@ class Round20OpsSpec extends SparkSpec {
   test("crashed rewrite-squash publish with an empty diff finishes idempotently") {
     // r21 (r20 ADVICE, medium): on a graft.changes.rewriteDiff table a
     // row-PRESERVING branch rewrite links a squash manifest carrying
-    // '#rowsunchanged:1', which the recomputed squashBody never
+    // '#rowsunchanged:1', which the recomputed squash never
     // contains — the crash-recovery probe must strip that marker too,
     // or the re-run mis-reads its own published manifest as a lost
     // race and tells the operator to re-apply the batch.
@@ -141,7 +141,7 @@ class Round20OpsSpec extends SparkSpec {
       .forEachRemaining(p =>
         savedManifests(p.getFileName.toString) = Files.readAllBytes(p))
     assert(Snapshots.fastForward(root, "audit") == 2L)
-    assert(Snapshots.rowsUnchangedAt(root, 2L),
+    assert(Snapshots.resolveAt(root, 2L).rowsUnchanged,
       "the empty-diff squash must carry the rows-unchanged marker")
     // reconstruct the publisher that died between the link and the
     // ref/cleanup bookkeeping
