@@ -741,12 +741,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             "precision growth at fixed scale); narrowing or re-typing needs " +
             "a full rewrite")
         // widening composes with PENDING merge-on-read delete files:
-        // both loaders upcast staged narrow key values to the declared
-        // type at load time (driver inline loader casts on read, the
-        // executor loader dispatches on each file's footer physical
-        // type), so key sets and row values always compare at the
-        // declared width regardless of when each delete committed
-        // relative to the ALTER
+        // the delete-key loader upcasts staged narrow key values to the
+        // declared type at load time (dispatching on each file's footer
+        // physical type, inline and lazy sets alike), so key sets and
+        // row values always compare at the declared width regardless
+        // of when each delete committed relative to the ALTER
         (StructType(sc.fields.map(f =>
           if (f.name == name) f.copy(dataType = to) else f)), pr)
       case ((sc, pr), set: TableChange.SetProperty) =>

@@ -4,7 +4,6 @@ import graft.sources.Snapshots
 import graft.sources.Snapshots.{DeleteFile, Snapshot}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.read._
@@ -1046,14 +1045,16 @@ private[catalog] class GraftStreamingWrite(root: String,
   *     so correctness never depends on the forwarded subset.
   *
   * The delete-key sets are in-memory hash sets — the per-JVM-memory
-  * shape Iceberg uses for equality deletes. Small sets (on-disk bytes
-  * ≤ `spark.graft.mor.inlineDeleteBytes`) load once on the driver and
-  * ship inline with the plan; larger sets stay as file paths and each
-  * EXECUTOR loads them lazily through a soft cache
-  * ([[DeleteKeyCache]]) — the read always proceeds and the memory
-  * lands on the executors doing the filtering, O(keys) per JVM. The
-  * store-level [[Snapshots.read]] path applies the same deletes as
-  * size-gated anti joins for DataFrame-level access.
+  * shape Iceberg uses for equality deletes — loaded by ONE session-free
+  * parquet reader ([[DeleteKeyCache]], memoized per immutable delete
+  * file), so planning a MOR scan schedules no Spark job. Small sets
+  * (on-disk bytes ≤ `spark.graft.mor.inlineDeleteBytes`) load on the
+  * driver and ship inline with the plan; larger sets stay as file
+  * paths and each EXECUTOR loads them lazily through the same reader —
+  * the read always proceeds and the memory lands on the executors
+  * doing the filtering, O(keys) per JVM. The store-level
+  * [[Snapshots.read]] path applies the same deletes as size-gated anti
+  * joins for DataFrame-level access.
   */
 private[catalog] object GraftScans {
 
@@ -1106,11 +1107,10 @@ private[catalog] object GraftScans {
     * the exact-file fast path is ever short-circuited. Stateless:
     * nothing is stored, so no invalidation surface. */
   private[catalog] object ManifestStatusCache extends FileStatusCache {
-    private val conf = new org.apache.hadoop.conf.Configuration()
     override def getLeafFiles(path: org.apache.hadoop.fs.Path)
         : Option[Array[org.apache.hadoop.fs.FileStatus]] =
       try {
-        val st = path.getFileSystem(conf).getFileStatus(path)
+        val st = path.getFileSystem(Snapshots.hadoopConf).getFileStatus(path)
         if (st.isFile) Some(Array(st)) else None
       } catch { case _: java.io.IOException => None }
     override def putLeafFiles(path: org.apache.hadoop.fs.Path,
@@ -1185,10 +1185,9 @@ private[catalog] object GraftScans {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
     // qualify like the index qualifies its leaf dirs, or the
     // PartitionPath→children lookup misses on the scheme
-    val hadoopConf = new org.apache.hadoop.conf.Configuration()
     def qualified(dir: String): org.apache.hadoop.fs.Path = {
       val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(hadoopConf).makeQualified(p)
+      p.getFileSystem(Snapshots.hadoopConf).makeQualified(p)
     }
     val partitions = files
       .groupBy(f => Paths.get(f).getParent.toString).toSeq.sortBy(_._1)
@@ -1872,12 +1871,14 @@ private[catalog] final class CoalescingColumnVector(dt: DataType,
 
 /** One delete group ready for executor-side application: the key
   * columns' ordinals/types in the era's read schema plus the key set
-  * in CATALYST form (UTF8String/Long/…), so row values compare
-  * directly. Composite keys store `List(v1, v2, …)` elements. The set
-  * is either INLINE (small deletes, loaded on the driver at plan time)
-  * or LAZY (`paths` non-empty): each executor loads it on first use
-  * through [[DeleteKeyCache]] — memory lands on the executors, O(keys)
-  * per JVM, never on the driver. */
+  * in CATALYST form (UTF8String/Long/Decimal/…), so row values compare
+  * directly. Composite keys store `List(v1, v2, …)` elements; BINARY
+  * components are content-equal [[scala.collection.immutable.ArraySeq]]
+  * wrappers (a bare `Array[Byte]` compares by reference). The set is
+  * either INLINE (delete bytes under the gate: loaded on the driver at
+  * plan time, shipped with the plan) or LAZY (`paths` non-empty: each
+  * executor loads it on first use). Both sides load through
+  * [[DeleteKeyCache]], so the two modes hold the same values. */
 private[catalog] final case class MorDeleteSet(keyOrdinals: Seq[Int],
     keyTypes: Seq[DataType], inline: Option[scala.collection.immutable.Set[Any]],
     paths: Seq[String], keyNames: Seq[String]) {
@@ -1891,131 +1892,169 @@ private[catalog] final case class MorDeleteSet(keyOrdinals: Seq[Int],
   def keyOf(row: InternalRow): Any =
     if (keyOrdinals.length == 1) {
       if (row.isNullAt(keyOrdinals.head)) null
-      else row.get(keyOrdinals.head, keyTypes.head)
+      else DeleteKeyCache.setForm(row.get(keyOrdinals.head, keyTypes.head))
     } else {
       var i = 0
       val b = List.newBuilder[Any]
       while (i < keyOrdinals.length) {
         if (row.isNullAt(keyOrdinals(i))) return null
-        b += row.get(keyOrdinals(i), keyTypes(i))
+        b += DeleteKeyCache.setForm(row.get(keyOrdinals(i), keyTypes(i)))
         i += 1
       }
       b.result()
     }
 }
 
-/** Executor-side loader for oversized delete-key sets: reads the
-  * delete parquet with parquet-hadoop's example Group API (no Spark
-  * session on executors) into catalyst-form values matching what the
-  * driver's inline loader produces, soft-cached per JVM so a table's
-  * many tasks load each delete file once. Unsupported key types fail
-  * with a compact-first message — the set of supported types matches
-  * what [[graft.sources.Snapshots]]' own writers stage as keys. */
+/** The one loader of equality-delete key sets, serving both sides of
+  * the inline gate: the driver builds INLINE sets at scan-build time
+  * and executors build LAZY sets on first use, through parquet-hadoop's
+  * example Group API — no Spark session, no job, no nested SQL
+  * execution. A delete file is immutable once staged, so its set is
+  * memoized per JVM (soft, so memory pressure evicts it) under its
+  * identity: path, size and mtime (a reused path misses), plus the key
+  * spellings and the DECLARED key types the values decode to (after an
+  * ALTER COLUMN widening the file decodes again at the new width, never
+  * answering with narrow values the rows no longer equal). A group's
+  * union is memoized the same way, so a table's many tasks union once.
+  * Values decode per the file's footer type into catalyst form,
+  * upcasting keys staged before a widening; a key type or physical
+  * encoding outside that table fails loudly with a compact-first
+  * message — never a silently empty match. */
 private[catalog] object DeleteKeyCache {
+  import org.apache.parquet.example.data.Group
+  import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation}
+  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
   import org.apache.spark.sql.types._
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    String, java.lang.ref.SoftReference[scala.collection.immutable.Set[Any]]]()
+  private type KeySet = scala.collection.immutable.Set[Any]
 
-  def load(paths: Seq[String], cols: Seq[String],
-      types: Seq[DataType]): scala.collection.immutable.Set[Any] = {
-    val key = paths.sorted.mkString("|") + "#" + cols.mkString(",")
-    val hit = Option(cache.get(key)).flatMap(r => Option(r.get()))
-    hit.getOrElse {
-      val s: scala.collection.immutable.Set[Any] =
-        paths.iterator.flatMap(p => readFile(p, cols, types)).toSet
-      cache.put(key, new java.lang.ref.SoftReference(s))
+  private final case class FileKey(path: String, size: Long, mtime: Long,
+      cols: Seq[String], types: Seq[DataType])
+
+  /** One file's set under `Seq(file)`; a group's union under its files. */
+  private val cache = new java.util.concurrent.ConcurrentHashMap[
+    Seq[FileKey], java.lang.ref.SoftReference[KeySet]]()
+
+  private def memo(ks: Seq[FileKey]): KeySet =
+    Option(cache.get(ks)).flatMap(r => Option(r.get())).getOrElse {
+      val s = ks match {
+        case Seq(k) => readFile(k)
+        case _ => ks.map(k => memo(Seq(k))).foldLeft(Set.empty[Any])(_ ++ _)
+      }
+      cache.put(ks, new java.lang.ref.SoftReference(s))
       s
     }
+
+  def load(paths: Seq[String], cols: Seq[String], types: Seq[DataType]): KeySet =
+    memo(paths.distinct.sorted.map { p =>
+      val path = new org.apache.hadoop.fs.Path(p)
+      val st = path.getFileSystem(Snapshots.hadoopConf).getFileStatus(path)
+      FileKey(p, st.getLen, st.getModificationTime, cols, types)
+    })
+
+  /** Set form of a catalyst key component: binary wraps content-equal. */
+  def setForm(v: Any): Any = v match {
+    case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
+    case _ => v
   }
 
-  private def readFile(path: String, cols: Seq[String],
-      types: Seq[DataType]): Seq[Any] = {
+  private def readFile(k: FileKey): KeySet = {
     val reader = org.apache.parquet.hadoop.ParquetReader
       .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(path))
-      .withConf(new org.apache.hadoop.conf.Configuration())
+        new org.apache.hadoop.fs.Path(k.path))
+      .withConf(Snapshots.hadoopConf)
       .build()
     // materialize eagerly under try/finally: a lazy iterator would leak
-    // the open file handle when convert throws mid-stream (unsupported
-    // type, corrupt file)
+    // the open file handle when a decoder throws mid-stream
+    // (unsupported type, corrupt file)
     try {
-      val out = Vector.newBuilder[Any]
+      val out = Set.newBuilder[Any]
       var g = reader.read()
-      while (g != null) {
-        val vals = cols.indices.map(i => convert(g, cols(i), types(i)))
-        out += (if (vals.size == 1) vals.head else vals.toList)
-        g = reader.read()
+      if (g != null) {
+        val decs = k.cols.lazyZip(k.types).map(decoder(g.getType, _, _))
+        while (g != null) {
+          val row = g
+          out += (if (decs.size == 1) decs.head(row) else decs.map(_(row)).toList)
+          g = reader.read()
+        }
       }
       out.result()
     } finally reader.close()
   }
 
-  private def convert(g: org.apache.parquet.example.data.Group,
-      col: String, dt: DataType): Any = {
-    val idx = g.getType.getFieldIndex(col)
-    if (g.getFieldRepetitionCount(idx) == 0) null
-    else dt match {
-      case LongType =>
-        // a delete file staged BEFORE an int→bigint widening carries
-        // INT32 physically — upcast by the footer type, mirroring the
-        // native upcast the data scan applies to narrow base files
-        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-        g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-          case PrimitiveTypeName.INT32 => g.getInteger(idx, 0).toLong
-          case _ => g.getLong(idx, 0)
-        }
-      case TimestampType | TimestampNTZType =>
-        // catalyst form is epoch MICROS; the file may carry INT96
-        // (Spark's default parquet timestamp physical type) or
-        // annotated INT64 in any unit — decode per the footer type
-        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-        val pt = g.getType.getType(idx).asPrimitiveType()
-        pt.getPrimitiveTypeName match {
-          case PrimitiveTypeName.INT96 =>
-            val buf = java.nio.ByteBuffer.wrap(g.getInt96(idx, 0).getBytes)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            val nanosOfDay = buf.getLong
-            val julianDay = buf.getInt
-            (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-          case PrimitiveTypeName.INT64 =>
-            val v = g.getLong(idx, 0)
-            pt.getLogicalTypeAnnotation match {
-              case t: org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                t.getUnit match {
-                  case org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.MILLIS => v * 1000L
-                  case org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.MICROS => v
-                  case org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.NANOS => v / 1000L
-                }
-              case _ => v
+  /** Group → catalyst value (null when absent) for one key column,
+    * resolved once per file from its footer type. */
+  private def decoder(schema: GroupType, col: String,
+      dt: DataType): Group => Any = {
+    val idx = schema.getFieldIndex(col)
+    val ft = schema.getType(idx)
+    def refuse = throw new UnsupportedOperationException(
+      s"delete-key column '$col' of type ${dt.simpleString} stored as " +
+        s"'$ft' is not supported by the delete-key loader; compact the " +
+        "table (full rewrite) to absorb the deletes")
+    if (!ft.isPrimitive) refuse
+    val pt = ft.asPrimitiveType()
+    val read: Group => Any = (dt, pt.getPrimitiveTypeName) match {
+      // a delete file staged BEFORE an int→bigint widening carries
+      // INT32 physically — upcast by the footer type, mirroring the
+      // native upcast the data scan applies to narrow base files
+      case (LongType, INT32) => g => g.getInteger(idx, 0).toLong
+      case (LongType, INT64) => g => g.getLong(idx, 0)
+      case (IntegerType | DateType, INT32) => g => g.getInteger(idx, 0)
+      case (ShortType, INT32) => g => g.getInteger(idx, 0).toShort
+      case (ByteType, INT32) => g => g.getInteger(idx, 0).toByte
+      // catalyst form is epoch MICROS; the file may carry INT96
+      // (Spark's legacy parquet timestamp physical type) or annotated
+      // INT64 in any unit
+      case (TimestampType | TimestampNTZType, INT96) => g =>
+        val buf = java.nio.ByteBuffer.wrap(g.getInt96(idx, 0).getBytes)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        val nanosOfDay = buf.getLong
+        val julianDay = buf.getInt
+        (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
+      case (TimestampType | TimestampNTZType, INT64) =>
+        val scale: Long => Long = pt.getLogicalTypeAnnotation match {
+          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+            t.getUnit match {
+              case LogicalTypeAnnotation.TimeUnit.MILLIS => _ * 1000L
+              case LogicalTypeAnnotation.TimeUnit.MICROS => identity
+              case LogicalTypeAnnotation.TimeUnit.NANOS => _ / 1000L
             }
-          // a delete file staged BEFORE a date→timestamp_ntz widening
-          // carries INT32 epoch DAYS — upcast to midnight micros, the
-          // same promotion the data scan applies to narrow base files
-          case PrimitiveTypeName.INT32 =>
-            g.getInteger(idx, 0).toLong * 86400000000L
-          case other => throw new UnsupportedOperationException(
-            s"timestamp delete key stored as $other is not supported; " +
-              "compact the table (full rewrite) to absorb the deletes")
+          case _ => identity
         }
-      case IntegerType | DateType => g.getInteger(idx, 0)
-      case StringType =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(g.getString(idx, 0))
-      case DoubleType =>
-        // float→double widening: pre-widening delete files carry FLOAT
-        import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-        g.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-          case PrimitiveTypeName.FLOAT => g.getFloat(idx, 0).toDouble
-          case _ => g.getDouble(idx, 0)
-        }
-      case FloatType => g.getFloat(idx, 0)
-      case BooleanType => g.getBoolean(idx, 0)
-      case ShortType => g.getInteger(idx, 0).toShort
-      case ByteType => g.getInteger(idx, 0).toByte
-      case other => throw new UnsupportedOperationException(
-        s"delete-key type $other is not supported by the executor-side " +
-          "loader; compact the table (full rewrite) to absorb the deletes")
+        g => scale(g.getLong(idx, 0))
+      // a delete file staged BEFORE a date→timestamp_ntz widening
+      // carries INT32 epoch DAYS — upcast to midnight micros, the same
+      // promotion the data scan applies to narrow base files
+      case (TimestampNTZType, INT32) => g => g.getInteger(idx, 0).toLong * 86400000000L
+      case (StringType, BINARY) => g =>
+        org.apache.spark.unsafe.types.UTF8String.fromBytes(g.getBinary(idx, 0).getBytes)
+      // float→double widening: pre-widening delete files carry FLOAT
+      case (DoubleType, FLOAT) => g => g.getFloat(idx, 0).toDouble
+      case (DoubleType, DOUBLE) => g => g.getDouble(idx, 0)
+      case (FloatType, FLOAT) => g => g.getFloat(idx, 0)
+      case (BooleanType, BOOLEAN) => g => g.getBoolean(idx, 0)
+      case (BinaryType, BINARY | FIXED_LEN_BYTE_ARRAY) => g =>
+        setForm(g.getBinary(idx, 0).getBytes)
+      // decimal precision growth keeps the scale, so a pre-widening
+      // file's unscaled value (INT32/INT64 for narrow precisions, big-
+      // endian bytes past 18 digits) reads at the declared precision
+      case (d: DecimalType, phys) if (pt.getLogicalTypeAnnotation match {
+          case a: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
+            a.getScale == d.scale
+          case _ => false
+        }) => phys match {
+        case INT32 => g => Decimal(g.getInteger(idx, 0).toLong, d.precision, d.scale)
+        case INT64 => g => Decimal(g.getLong(idx, 0), d.precision, d.scale)
+        case BINARY | FIXED_LEN_BYTE_ARRAY => g =>
+          Decimal(new java.math.BigDecimal(
+            new java.math.BigInteger(g.getBinary(idx, 0).getBytes), d.scale),
+            d.precision, d.scale)
+        case _ => refuse
+      }
+      case _ => refuse
     }
+    g => if (g.getFieldRepetitionCount(idx) == 0) null else read(g)
   }
 }
 
@@ -2026,8 +2065,8 @@ private[catalog] object DeleteKeyCache {
   * before the delete filter runs, and each `#del` line's commit-time
   * spelling resolves to its current name through the same ledger, so
   * key ordinals always bind to the presented schema. ALTER COLUMN
-  * widening composes too: both key loaders upcast narrow staged key
-  * values to the declared type. */
+  * widening composes too: [[DeleteKeyCache]] decodes narrow staged key
+  * values at the declared type. */
 private[catalog] class MorScanBuilder(spark: SparkSession,
     tableSchema: StructType, snap: Snapshot, options: CaseInsensitiveStringMap,
     priors: Map[String, Seq[String]] = Map.empty,
@@ -2132,13 +2171,15 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
 
   override def build(): Scan = {
     // Inline-vs-lazy gate (dedicated conf, NOT the broadcast
-    // threshold): small delete sets load once on the driver and ship
-    // inside the plan (zero per-task I/O); past the gate the sets stay
-    // as paths and each EXECUTOR loads them lazily via
-    // [[DeleteKeyCache]] — the read always proceeds, memory lands
-    // where the work is, per-JVM not per-row (the Iceberg
-    // equality-delete shape). On-disk parquet bytes understate the
-    // in-memory set, so the default is deliberately modest.
+    // threshold): small delete sets load on the driver and ship inside
+    // the plan (zero per-task I/O); past the gate the sets stay as
+    // paths and each EXECUTOR loads them lazily — the read always
+    // proceeds, memory lands where the work is, per-JVM not per-row
+    // (the Iceberg equality-delete shape). Both sides load through
+    // [[DeleteKeyCache]]'s memoized parquet reader, so building this
+    // scan schedules no job and a delete file is read once per JVM.
+    // On-disk parquet bytes understate the in-memory set, so the
+    // default is deliberately modest.
     val delBytes = snap.deletes.map { d =>
       try Files.size(Paths.get(d.path)) catch { case _: Exception => 0L }
     }.sum
@@ -2167,59 +2208,6 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
     val readSchema = StructType(tableRequested.fields ++
       keyCols.filterNot(k => tableRequested.fieldNames.contains(k))
         .map(declaredField))
-
-    // inline mode: load each distinct (path, keyCols) once, catalyst
-    // form — keyed by the SAME tuple the distinct uses: a manifest that
-    // ever carried two #del lines for one parquet path under different
-    // key-column sets must resolve each group's own column projection,
-    // not whichever loaded last. All pair files load in ONE Spark job:
-    // each file's read keeps its own footer schema and per-column cast
-    // (the delete parquet carries the spelling of ITS commit time, kcs;
-    // the value type comes from the CURRENT column — the explicit cast
-    // upcasts keys staged BEFORE an ALTER COLUMN widening to the
-    // declared width, so set and row values always compare at the same
-    // type), branches align on the post-cast columns, and a literal
-    // source ordinal routes each collected row back to its (path, kcs)
-    // group — a stacked-delete table (N pair files) pays one
-    // plan+collect round trip instead of N.
-    val loaded: Map[(String, Seq[String]), Set[Any]] =
-      if (!inlineMode) Map.empty
-      else {
-        val groups = snap.deletes.map(d => (d.path, d.keyCols)).distinct
-        // union ONLY groups whose post-cast column shape is IDENTICAL
-        // (same declared type vector) — zero union coercion, so every
-        // branch's collected values are byte-identical to what its own
-        // single read would have produced. One collect per shape class
-        // (almost always exactly one for a real table).
-        groups.groupBy(g => g._2.map(k =>
-            declaredField(currentName(k)).dataType)).toSeq
-          .flatMap { case (types, cls) =>
-            val parts = cls.zipWithIndex.map { case ((p, kcs), gi) =>
-              val cols = kcs.zipWithIndex.map { case (k, i) =>
-                org.apache.spark.sql.functions.col(k)
-                  .cast(types(i)).as(s"__gk$i")
-              } :+ org.apache.spark.sql.functions.lit(gi).as("__gsrc")
-              // footer schema read driver-side: skips the scheduled
-              // schema-inference pass per pair file (guide §7.3)
-              graft.sources.Snapshots.footerSparkSchema(p) match {
-                case Some(sc) => spark.read.schema(sc).parquet(p).select(cols: _*)
-                case None => spark.read.parquet(p).select(cols: _*)
-              }
-            }
-            val rows = parts.reduce(_.unionByName(_)).collect()
-            val bySrc = rows.groupBy(_.getInt(types.size))
-            val convs = types.map(
-              CatalystTypeConverters.createToCatalystConverter)
-            cls.zipWithIndex.map { case ((p, kcs), gi) =>
-              val vals = bySrc.getOrElse(gi, Array.empty[org.apache.spark.sql.Row])
-                .map { r =>
-                  val cv = kcs.indices.map(i => convs(i)(r.get(i)))
-                  if (cv.size == 1) cv.head else cv.toList
-                }.toSet
-              (p, kcs) -> (vals: Set[Any])
-            }
-          }.toMap
-      }
 
     // rename composition: the files are read under the PHYSICAL union
     // schema (each readSchema column followed by its prior spellings)
@@ -2250,14 +2238,16 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
         // file-physical spellings load the staged parquet; CURRENT
         // names bind the row-side ordinals/types — the two sides of
         // the rename indirection
+        // (the value TYPES come from the current declared column, so
+        // keys staged before an ALTER COLUMN widening decode at the
+        // declared width and compare equal to the rows)
         val kcs = ds.head.keyCols
         val curs = kcs.map(currentName)
-        MorDeleteSet(
-          curs.map(readSchema.fieldIndex),
-          curs.map(declaredField(_).dataType),
-          if (inlineMode) Some(ds.flatMap(d => loaded((d.path, d.keyCols))).toSet) else None,
-          if (inlineMode) Nil else ds.map(_.path),
-          kcs)
+        val types = curs.map(declaredField(_).dataType)
+        val paths = ds.map(_.path)
+        MorDeleteSet(curs.map(readSchema.fieldIndex), types,
+          if (inlineMode) Some(DeleteKeyCache.load(paths, kcs, types)) else None,
+          if (inlineMode) Nil else paths, kcs)
       }
       val plainScan = pb.map { b =>
         b.pruneColumns(if (coalesceExprs.isDefined) physSchema else readSchema)
@@ -2272,7 +2262,8 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
       MorEra(plainScan, posScan, delSets)
     }
     new MorScan(eraScans, requested, readSchema, coalesceExprs, posExprs,
-      snap.posDeletes, emitRowId)
+      snap.posDeletes, emitRowId, snap.deletes.map(_.path).distinct.size,
+      inlineMode)
   }
 }
 
@@ -2318,13 +2309,17 @@ private[catalog] class MorScan(eras: Seq[MorEra],
     coalesceExprs: Option[Array[org.apache.spark.sql.catalyst.expressions.Expression]] = None,
     posCoalesceExprs: Option[Array[org.apache.spark.sql.catalyst.expressions.Expression]] = None,
     posDeletes: Map[String, Seq[String]] = Map.empty,
-    emitRowId: Boolean = false)
+    emitRowId: Boolean = false, deleteFiles: Int = 0,
+    inlineKeys: Boolean = true)
   extends Scan with Batch {
 
   override def readSchema(): StructType = requested
   override def toBatch: Batch = this
+  /** Names the MOR path taken: the equality-delete file count and
+    * whether their key sets ship inline or load lazily on executors. */
   override def description(): String =
-    s"graft-snapshot MOR scan (${eras.size} era(s), delete-applying" +
+    s"graft-snapshot MOR scan (${eras.size} era(s), $deleteFiles delete " +
+      s"file(s), ${if (inlineKeys) "inline" else "lazy"} keys, delete-applying" +
       (if (posDeletes.nonEmpty) ", positional" else "") +
       (if (emitRowId) ", row-id-emitting" else "") + ") over (" +
       eras.flatMap(e => e.plain.orElse(e.pos)).headOption

@@ -115,7 +115,7 @@ private[graft] object DeleteVectors {
           val reader = org.apache.parquet.hadoop.ParquetReader
             .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
               new org.apache.hadoop.fs.Path(p))
-            .withConf(new org.apache.hadoop.conf.Configuration())
+            .withConf(Snapshots.hadoopConf)
             .build()
           try {
             var g = reader.read()

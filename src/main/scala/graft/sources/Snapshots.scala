@@ -386,10 +386,12 @@ object Snapshots {
     * costs pruning opportunity). Returns None (no entry, file never
     * pruned) on any read/shape trouble — stats are an optimization and
     * must never fail a commit. */
-  /** One Hadoop conf for all footer reads: `new Configuration()` costs
-    * milliseconds (classpath resource scan) and statsBody runs once per
-    * staged file per commit — read-only here, so sharing is safe. */
-  private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
+  /** One Hadoop conf for every parquet-hadoop read outside Spark's own
+    * scans — footers here, delete-key files and position sidecars in the
+    * MOR loaders, driver- or executor-side: `new Configuration()` costs
+    * milliseconds (classpath resource scan) and those reads run per file
+    * on commit and planning paths — read-only, so sharing is safe. */
+  private[graft] lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
 
   /** Spark schema of a SPARK-WRITTEN parquet file, read from the
     * footer's `org.apache.spark.sql.parquet.row.metadata` key on the
@@ -436,7 +438,7 @@ object Snapshots {
     Option(footerSchemaMemo.get(path)).orElse {
       val read = try {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(path), footerConf)
+          new org.apache.hadoop.fs.Path(path), hadoopConf)
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try {
           val kv = reader.getFooter.getFileMetaData.getKeyValueMetaData
@@ -459,7 +461,7 @@ object Snapshots {
     else {
       val r = try {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(path), footerConf)
+          new org.apache.hadoop.fs.Path(path), hadoopConf)
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
         finally reader.close()
@@ -475,7 +477,7 @@ object Snapshots {
       import org.json4s._
       import org.json4s.JsonDSL._
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path), footerConf)
+        new org.apache.hadoop.fs.Path(path), hadoopConf)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try {
         val footer = reader.getFooter

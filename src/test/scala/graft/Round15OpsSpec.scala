@@ -200,6 +200,8 @@ class Round15OpsSpec extends SparkSpec {
     val q3 = sqlDf("SELECT k, v FROM snap.default.r15evm WHERE v >= 5.0")
     val p3 = q3.queryExecution.executedPlan.toString
     assert(p3.contains("MOR scan"), p3)
+    assert(p3.contains("1 delete file(s), inline keys"),
+      s"the MOR scan must name its key-set mode and delete-file count:\n$p3")
     assert(p3.contains("GreaterThanOrEqual(v,5.0)"),
       s"era-invariant predicate must push into the MOR era scans:\n$p3")
     assert(q3.as[(Long, Double)].collect().toSet ==
