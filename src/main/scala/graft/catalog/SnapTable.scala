@@ -1915,7 +1915,7 @@ private[catalog] final case class MorDeleteSet(keyOrdinals: Seq[Int],
   * spellings and the DECLARED key types the values decode to (after an
   * ALTER COLUMN widening the file decodes again at the new width, never
   * answering with narrow values the rows no longer equal). A group's
-  * union is memoized the same way, so a table's many tasks union once.
+  * union is memoized while in use, so a table's many tasks union once.
   * Values decode per the file's footer type into catalyst form,
   * upcasting keys staged before a widening; a key type or physical
   * encoding outside that table fails loudly with a compact-first
@@ -1931,9 +1931,12 @@ private[catalog] object DeleteKeyCache {
   private final case class FileKey(path: String, size: Long, mtime: Long,
       cols: Seq[String], types: Seq[DataType])
 
-  /** One file's set under `Seq(file)`; a group's union under its files. */
+  /** One file's set under `Seq(file)`, softly held; a group's union
+    * under its files, weakly held — shared while tasks or a plan use
+    * it, never retained for a file combination no read will see again
+    * (each new delete era forms new combinations). */
   private val cache = new java.util.concurrent.ConcurrentHashMap[
-    Seq[FileKey], java.lang.ref.SoftReference[KeySet]]()
+    Seq[FileKey], java.lang.ref.Reference[KeySet]]()
 
   private def memo(ks: Seq[FileKey]): KeySet =
     Option(cache.get(ks)).flatMap(r => Option(r.get())).getOrElse {
@@ -1941,7 +1944,8 @@ private[catalog] object DeleteKeyCache {
         case Seq(k) => readFile(k)
         case _ => ks.map(k => memo(Seq(k))).foldLeft(Set.empty[Any])(_ ++ _)
       }
-      cache.put(ks, new java.lang.ref.SoftReference(s))
+      cache.put(ks, if (ks.size == 1) new java.lang.ref.SoftReference(s)
+        else new java.lang.ref.WeakReference(s))
       s
     }
 
