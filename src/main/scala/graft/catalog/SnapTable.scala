@@ -1045,16 +1045,13 @@ private[catalog] class GraftStreamingWrite(root: String,
   *     so correctness never depends on the forwarded subset.
   *
   * The delete-key sets are in-memory hash sets — the per-JVM-memory
-  * shape Iceberg uses for equality deletes — loaded by ONE session-free
-  * parquet reader ([[DeleteKeyCache]], memoized per immutable delete
-  * file), so planning a MOR scan schedules no Spark job. Small sets
+  * shape Iceberg uses for equality deletes — all loaded by
+  * [[DeleteKeyCache]], so planning schedules no Spark job. Small sets
   * (on-disk bytes ≤ `spark.graft.mor.inlineDeleteBytes`) load on the
   * driver and ship inline with the plan; larger sets stay as file
-  * paths and each EXECUTOR loads them lazily through the same reader —
-  * the read always proceeds and the memory lands on the executors
-  * doing the filtering, O(keys) per JVM. The store-level
-  * [[Snapshots.read]] path applies the same deletes as size-gated anti
-  * joins for DataFrame-level access.
+  * paths and each EXECUTOR loads them lazily, O(keys) per JVM. The
+  * store-level [[Snapshots.read]] path applies the same deletes as
+  * size-gated anti joins for DataFrame-level access.
   */
 private[catalog] object GraftScans {
 
@@ -1871,14 +1868,12 @@ private[catalog] final class CoalescingColumnVector(dt: DataType,
 
 /** One delete group ready for executor-side application: the key
   * columns' ordinals/types in the era's read schema plus the key set
-  * in CATALYST form (UTF8String/Long/Decimal/…), so row values compare
-  * directly. Composite keys store `List(v1, v2, …)` elements; BINARY
-  * components are content-equal [[scala.collection.immutable.ArraySeq]]
-  * wrappers (a bare `Array[Byte]` compares by reference). The set is
-  * either INLINE (delete bytes under the gate: loaded on the driver at
-  * plan time, shipped with the plan) or LAZY (`paths` non-empty: each
-  * executor loads it on first use). Both sides load through
-  * [[DeleteKeyCache]], so the two modes hold the same values. */
+  * in CATALYST form (UTF8String/Long/…, binary via
+  * [[DeleteKeyCache.setForm]]), so row values compare directly.
+  * Composite keys store `List(v1, v2, …)` elements. The set is either
+  * INLINE (loaded on the driver at plan time) or LAZY (`paths`
+  * non-empty: each executor loads it on first use), both through
+  * [[DeleteKeyCache]]. */
 private[catalog] final case class MorDeleteSet(keyOrdinals: Seq[Int],
     keyTypes: Seq[DataType], inline: Option[scala.collection.immutable.Set[Any]],
     paths: Seq[String], keyNames: Seq[String]) {
@@ -1905,21 +1900,15 @@ private[catalog] final case class MorDeleteSet(keyOrdinals: Seq[Int],
     }
 }
 
-/** The one loader of equality-delete key sets, serving both sides of
-  * the inline gate: the driver builds INLINE sets at scan-build time
-  * and executors build LAZY sets on first use, through parquet-hadoop's
-  * example Group API — no Spark session, no job, no nested SQL
-  * execution. A delete file is immutable once staged, so its set is
-  * memoized per JVM (soft, so memory pressure evicts it) under its
-  * identity: path, size and mtime (a reused path misses), plus the key
-  * spellings and the DECLARED key types the values decode to (after an
-  * ALTER COLUMN widening the file decodes again at the new width, never
-  * answering with narrow values the rows no longer equal). A group's
-  * union is memoized while in use, so a table's many tasks union once.
-  * Values decode per the file's footer type into catalyst form,
-  * upcasting keys staged before a widening; a key type or physical
-  * encoding outside that table fails loudly with a compact-first
-  * message — never a silently empty match. */
+/** The loader of delete-key sets for both sides of the inline gate
+  * (driver at plan time, executors lazily): parquet-hadoop's example
+  * Group API, so no Spark session, job or nested SQL execution. A
+  * delete file is immutable once staged, so its set is memoized per
+  * JVM under its identity (path, size, mtime: a reused path misses)
+  * plus the key spellings and DECLARED types it decodes to (after an
+  * ALTER COLUMN widening it decodes again at the new width). Values
+  * decode per the footer type into catalyst form; any other key type
+  * fails loudly with a compact-first message. */
 private[catalog] object DeleteKeyCache {
   import org.apache.parquet.example.data.Group
   import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation}
@@ -1932,9 +1921,8 @@ private[catalog] object DeleteKeyCache {
       cols: Seq[String], types: Seq[DataType])
 
   /** One file's set under `Seq(file)`, softly held; a group's union
-    * under its files, weakly held — shared while tasks or a plan use
-    * it, never retained for a file combination no read will see again
-    * (each new delete era forms new combinations). */
+    * under its files, weakly held: shared while tasks use it, not kept
+    * for file combinations later eras never form again. */
   private val cache = new java.util.concurrent.ConcurrentHashMap[
     Seq[FileKey], java.lang.ref.Reference[KeySet]]()
 
@@ -1970,7 +1958,6 @@ private[catalog] object DeleteKeyCache {
       .build()
     // materialize eagerly under try/finally: a lazy iterator would leak
     // the open file handle when a decoder throws mid-stream
-    // (unsupported type, corrupt file)
     try {
       val out = Set.newBuilder[Any]
       var g = reader.read()
@@ -2175,15 +2162,11 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
 
   override def build(): Scan = {
     // Inline-vs-lazy gate (dedicated conf, NOT the broadcast
-    // threshold): small delete sets load on the driver and ship inside
-    // the plan (zero per-task I/O); past the gate the sets stay as
-    // paths and each EXECUTOR loads them lazily — the read always
-    // proceeds, memory lands where the work is, per-JVM not per-row
-    // (the Iceberg equality-delete shape). Both sides load through
-    // [[DeleteKeyCache]]'s memoized parquet reader, so building this
-    // scan schedules no job and a delete file is read once per JVM.
-    // On-disk parquet bytes understate the in-memory set, so the
-    // default is deliberately modest.
+    // threshold): small delete sets load on the driver (memoized, no
+    // job) and ship inside the plan; past the gate the sets stay as
+    // paths and each EXECUTOR loads them lazily — memory lands where
+    // the work is (the Iceberg equality-delete shape). On-disk parquet
+    // bytes understate the in-memory set, so the default is modest.
     val delBytes = snap.deletes.map { d =>
       try Files.size(Paths.get(d.path)) catch { case _: Exception => 0L }
     }.sum
@@ -2242,9 +2225,6 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
         // file-physical spellings load the staged parquet; CURRENT
         // names bind the row-side ordinals/types — the two sides of
         // the rename indirection
-        // (the value TYPES come from the current declared column, so
-        // keys staged before an ALTER COLUMN widening decode at the
-        // declared width and compare equal to the rows)
         val kcs = ds.head.keyCols
         val curs = kcs.map(currentName)
         val types = curs.map(declaredField(_).dataType)
