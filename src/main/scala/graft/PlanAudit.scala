@@ -115,7 +115,7 @@ object PlanAudit {
         |halves under _gbucket= via the dynamic-partition task writer.
         |Expect the head read to be the MOR era scan (flat over
         |derived-layout files — value-exact, segment pruning paused)
-        |with broadcast anti joins per delete era.""".stripMargin,
+        |probing each era's delete-key set per row, no join.""".stripMargin,
     "dedup_embedding_cosine" ->
       """Banded near-dup (r4): pair generation keyed on (label, integer
         |LSH bucket), never label alone — expect the self-join's equi
@@ -442,7 +442,7 @@ object PlanAudit {
         |(vFrom, vTo] resolves to an explicit delta file list by
         |manifest set difference — pure metadata, two small file reads
         |and a subtraction. Expect the scan node's file list to contain
-        |ONLY post-base version dirs (spec-asserted via inputFiles):
+        |ONLY post-base version dirs (spec-asserted on the planned files):
         |the base is never re-listed, never re-scanned, so incremental
         |catch-up costs O(delta) not O(table). Above the scan: a plain
         |two-phase hash agg per range, union of the two tagged frames.
@@ -452,7 +452,8 @@ object PlanAudit {
     "snapshot_schema_evolution" ->
       """Schema evolution across snapshot commits (r9): v1 lacks the
         |o_band column, the append commit adds it, and the head is read
-        |with mergeSchema — expect ONE scan over both eras' files whose
+        |pinned (readMerged: the footer-merged schema VERSION AS OF
+        |presents) — expect ONE BatchScan over both eras' files whose
         |ReadSchema already carries the union schema (pre-evolution rows
         |null-fill at the reader, no rewrite of history, zero data
         |movement to add the column), feeding one map-side-combined hash
@@ -509,7 +510,7 @@ object PlanAudit {
         |root, the audit gate runs there (main untouched), and
         |publishFrom appends the audited files into main BY REFERENCE —
         |expect the post-publish head scan to list BOTH roots' files in
-        |one FileScan with zero copy jobs between them; the failed
+        |one BatchScan with zero copy jobs between them; the failed
         |second batch appears in no main scan. Publish cost is one
         |manifest write at any batch size.""".stripMargin,
     "sql_time_travel_ts" ->
@@ -528,9 +529,10 @@ object PlanAudit {
         |.partitionBy(o_orderpriority) across two eras, read back for 2
         |of 5 priorities. The pruning happens BEFORE Spark — the
         |manifest's file list is filtered on the partition path segment,
-        |so expect one scan per era whose file set carries ONLY the two
-        |wanted priorities (spec asserts inputFiles), unioned, feeding a
-        |map-side-combined hash agg on the recovered partition column.
+        |so expect ONE BatchScan over both eras whose file set carries
+        |ONLY the two wanted priorities (spec asserts the planned files),
+        |its file index re-attaching the partition column from the paths,
+        |feeding a map-side-combined hash agg on that column.
         |At 100 TB: planning touches exactly the matching partitions'
         |files with zero LIST of the base — the manifest is the listing,
         |and filtering it is a metadata-only string match, the same move
@@ -612,8 +614,8 @@ object PlanAudit {
         |stacked delete files — expect the compaction commit to move
         |O(deleted keys) (the distinct-union of the mergeable delete
         |parquets, coalesced to one file) and ZERO table data; the
-        |post-compaction read plans the SAME era structure with fewer
-        |anti-join inputs. Era-straddling deletes (a re-insert between
+        |post-compaction read plans the SAME era structure in one MOR
+        |scan with fewer delete files. Era-straddling deletes (a re-insert between
         |them) must stay apart — merging across the boundary would
         |re-hide re-inserted keys (Round14OpsSpec pins it, now for
         |composite keys too).""".stripMargin,
@@ -624,9 +626,10 @@ object PlanAudit {
         |priority prunes both eras, band prunes only era-B files, era-A
         |files are kept (band unprovable from their spec) and the
         |residual predicate re-derives band from the price column —
-        |Iceberg's transform-on-read. Expect per-era scans unioned, the
-        |band filter above the union, and file counts pinned via
-        |inputFiles in Round14OpsSpec.""".stripMargin,
+        |Iceberg's transform-on-read. Expect ONE BatchScan over both
+        |eras' kept files (era-A rows read band as NULL — their paths
+        |carry no band segment), the band filter above it, and the
+        |planned files pinned in Round14OpsSpec.""".stripMargin,
     "sql_schema_evolution" ->
       """ALTER TABLE ADD COLUMN through the v2 catalog (r13): the
         |declared schema grows by one properties-file write; expect ONE
@@ -649,8 +652,8 @@ object PlanAudit {
     "snapshot_delete_composite" ->
       """Composite-key merge-on-read delete (r14): the delete file
         |carries (l_orderkey, l_linenumber) PAIRS — the natural key of a
-        |table with no single-column key. Expect the head read to apply
-        |ONE LeftAnti join on BOTH key columns (a single-column
+        |table with no single-column key. Expect the head read to be ONE
+        |MOR scan whose delete set keys on BOTH columns (a single-column
         |collapse would also hide order-6k's lines 4+, which must
         |survive — the oracle pins it), version scoping unchanged (the
         |post-delete re-insert of deleted pairs stays visible). Cost
@@ -666,8 +669,9 @@ object PlanAudit {
     "snapshot_prune_mor" ->
       """Partition pruning COMPOSED with pending MOR deletes (r13):
         |manifest-level partition pruning first (metadata string match),
-        |then the delete anti joins over only the surviving files'
-        |eras. Expect pruned per-era scans and broadcast anti joins —
+        |then the deletes applied inside ONE MOR scan over only the
+        |surviving files' eras. Expect one BatchScan naming its eras and
+        |delete files, and no join —
         |the delete never un-prunes a partition, and the pruned read
         |applies exactly the deletes whose scope covers it.""".stripMargin,
     "cdc_merge_sql" ->
@@ -689,8 +693,8 @@ object PlanAudit {
         |readStatsPruned keeps only files whose recorded [min,max] for
         |l_partkey intersects the window — metadata-only, decided before
         |any listing or footer read — so expect a plain vectorized
-        |FileScan over the KEPT files (Round15OpsSpec pins the
-        |inputFiles shrink), the residual partkey filter re-applied
+        |BatchScan over the KEPT files (Round15OpsSpec pins the
+        |planned-file shrink), the residual partkey filter re-applied
         |above (pushed to the scan too), then the standard two-phase
         |HashAggregate. At 100 TB with 1M files the prune is manifest
         |arithmetic on the driver; a 0.1% window opens ~0.1% of the

@@ -438,44 +438,20 @@ private[graft] object RewriteDiff {
         "physical-name remap")
   }
 
-  /** One side of the diff projected to the DECLARED schema: identity
-    * partition values re-attach from paths by INFERENCE on the store
-    * reads, and the diff's two sides (and the sidecar files the feed
-    * later reads under the declared schema) must agree on types — the
-    * explicit cast pins every column. */
+  /** One side of the diff projected to the DECLARED schema, so the
+    * diff's two sides (and the sidecar files the feed later reads under
+    * the declared schema) agree on types — the explicit cast pins every
+    * column; a column the side's files predate reads NULL. Committed
+    * states come from the store's read API, whose relation parses
+    * identity-partition path values at their declared types
+    * (inference would re-type '007'-style strings — lossy even through
+    * a cast). */
   private def declared(df: org.apache.spark.sql.DataFrame,
       schema: StructType): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit}
     df.select(schema.fields.map(f =>
-      col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-  }
-
-  private val eraDirRe = """(.*/v\d{8}_[^/]+)/.*""".r
-
-  /** A committed state read under the DECLARED schema: per-era
-    * basePath reads with the explicit schema, so identity-partition
-    * path values parse at their declared types (inference would
-    * re-type '007'-style strings — lossy even through a cast). Falls
-    * back to the delete-applying store read (+ cast — type-exact,
-    * value-lossy only for inference-unstable strings) when the state
-    * carries pending MOR/positional deletes, which a COW-mode
-    * rewriteDiff table never does. */
-  private def typedState(spark: SparkSession, root: String,
-      snap: Snapshots.Snapshot, schema: StructType,
-      fallback: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    if (snap.deletes.nonEmpty || snap.posDeletes.nonEmpty)
-      declared(fallback, schema)
-    else if (snap.files.isEmpty) declared(fallback, schema)
-    else snap.files
-      .groupBy { f => f match { case eraDirRe(b) => b; case _ => "" } }
-      .toSeq.sortBy(_._1)
-      .map { case (base, fs) =>
-        val r = spark.read.schema(schema)
-        declared(
-          (if (base.isEmpty) r else r.option("basePath", base)).parquet(fs: _*),
-          schema)
-      }
-      .reduce(_.unionAll(_))
+      (if (df.columns.contains(f.name)) col(f.name) else lit(null))
+        .cast(f.dataType).as(f.name)).toSeq: _*)
   }
 
   def stage(root: String, schema: StructType, basedOn: Long,
@@ -494,8 +470,7 @@ private[graft] object RewriteDiff {
         .option("basePath", newStagingDir).parquet(newFiles: _*), schema)
     val oldState =
       if (basedOn == 0L) newState.limit(0)
-      else typedState(spark, root, Snapshots.resolveAt(root, basedOn), schema,
-        Snapshots.readAt(spark, root, basedOn))
+      else declared(Snapshots.readAt(spark, root, basedOn), schema)
     write(root, oldState, newState)
   }
 
@@ -509,11 +484,8 @@ private[graft] object RewriteDiff {
     val schema = GraftTable.readMeta(root).map(_._1).getOrElse(
       Snapshots.readAt(spark, root, fork).schema)
     requireDiffable(root, schema)
-    write(root,
-      typedState(spark, root, Snapshots.resolveAt(root, fork), schema,
-        Snapshots.readAt(spark, root, fork)),
-      typedState(spark, root, Snapshots.resolveBranch(root, branch), schema,
-        Snapshots.readBranch(spark, root, branch)))
+    write(root, declared(Snapshots.readAt(spark, root, fork), schema),
+      declared(Snapshots.readBranch(spark, root, branch), schema))
   }
 
   private def write(root: String, oldState: org.apache.spark.sql.DataFrame,

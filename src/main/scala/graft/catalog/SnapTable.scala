@@ -45,8 +45,10 @@ import scala.jdk.CollectionConverters._
   * and this table supplies the scan and the commit point.
   *
   * Schema: the CREATE-time schema is pinned in `_table.properties`;
-  * a root built through the direct [[Snapshots]] API (no CREATE) infers
-  * from the head parquet footers instead.
+  * a root built through the direct [[Snapshots]] API (no CREATE) reads
+  * its schema from the head parquet footers instead, with any
+  * `.partitionBy` columns recovered from the file paths. The direct
+  * API's own reads ([[Snapshots.read]] and friends) are this table.
   */
 class GraftTable(tableName: String, val root: String,
     val pinned: Option[Snapshot])
@@ -85,6 +87,31 @@ class GraftTable(tableName: String, val root: String,
 
   private lazy val meta: Option[(StructType, Map[String, String])] =
     GraftTable.readMeta(root)
+
+  /** Identity partition columns of a root with NO declared schema (one
+    * built through the direct [[Snapshots]] API with `.partitionBy`):
+    * the `col=value` segments below each era dir, typed by Spark's own
+    * partition inference ([[GraftScans.inferPartSchema]]). Empty for a
+    * declared root — its `PARTITIONED BY` governs. */
+  private lazy val pathPartSchema: StructType =
+    if (meta.isDefined) new StructType()
+    else GraftScans.inferPartSchema(spark, snap.map(_.files).getOrElse(Nil))
+
+  /** Head schema of a root with no declared schema: the first footer's
+    * serialized Spark schema, read on the driver (the schema a plain
+    * multi-file parquet read infers, without its scheduled job), every
+    * column nullable as that read presents it — later files need not
+    * share the first one's NOT NULL; Spark's inference only when no
+    * footer carries a schema (foreign files). */
+  private lazy val footerHeadSchema: StructType = {
+    val files = snap.map(_.files).getOrElse(Nil)
+    require(files.nonEmpty,
+      s"table $tableName has no declared schema and no committed data")
+    val first = files.iterator.map(Snapshots.footerSparkSchema)
+      .collectFirst { case Some(s) => s }
+      .getOrElse(spark.read.parquet(files: _*).schema)
+    StructType(first.fields.map(_.copy(nullable = true)))
+  }
 
   override def name(): String = tableName
 
@@ -210,14 +237,11 @@ class GraftTable(tableName: String, val root: String,
             val extras = sc.fields.filterNot(f =>
               ms.fieldNames.contains(f.name))
             StructType(declaredOrdered ++ extras)
-          case None => StructType(sc.fields)
+          case None => StructType(sc.fields ++
+            pathPartSchema.fields.filter(f => missing.contains(f.name)))
         }
-      case None => meta.map(_._1).getOrElse {
-        val files = snap.map(_.files).getOrElse(Nil)
-        require(files.nonEmpty,
-          s"table $tableName has no declared schema and no committed data")
-        spark.read.parquet(files: _*).schema
-      }
+      case None => meta.map(_._1).getOrElse(StructType(footerHeadSchema.fields ++
+        pathPartSchema.fields.filterNot(f => footerHeadSchema.fieldNames.contains(f.name))))
     }
     // a merge-on-read key is a primary key: Spark's delta rewrites
     // require the row-id attribute non-nullable (same contract as
@@ -262,9 +286,11 @@ class GraftTable(tableName: String, val root: String,
     meta.map(m => GraftTable.physOf(m._2)).getOrElse(Map.empty)
 
   /** Identity partition columns of a `PARTITIONED BY` table
-    * ([[GraftTable.partColsProp]]); empty for unpartitioned. */
+    * ([[GraftTable.partColsProp]]), or of an undeclared `.partitionBy`
+    * root ([[pathPartSchema]]); empty for unpartitioned. */
   def partCols: Seq[String] =
-    meta.map(m => GraftTable.partColsOf(m._2)).getOrElse(Nil)
+    meta.map(m => GraftTable.partColsOf(m._2))
+      .getOrElse(pathPartSchema.fieldNames.toSeq)
 
   /** True iff an INT-keyed bucket spec lacks the CREATE-time
     * hash-discipline stamp ([[SnapBucket.hashVerProp]]): int keys hash
@@ -1050,8 +1076,7 @@ private[catalog] class GraftStreamingWrite(root: String,
   * (on-disk bytes ≤ `spark.graft.mor.inlineDeleteBytes`) load on the
   * driver and ship inline with the plan; larger sets stay as file
   * paths and each EXECUTOR loads them lazily, O(keys) per JVM. The
-  * store-level [[Snapshots.read]] path applies the same deletes as
-  * size-gated anti joins for DataFrame-level access.
+  * DataFrame-level [[Snapshots]] read API plans through this same scan.
   */
 private[catalog] object GraftScans {
 
@@ -1085,9 +1110,13 @@ private[catalog] object GraftScans {
         // spellings, and a DROPPED delete-key column is still read as
         // a hidden filter-only shadow field (dropchain + droptype).
         // Pending POSITION deletes and row-id emission (the positional
-        // row-level operation's scan) route here too.
+        // row-level operation's scan) route here too. Identity partition
+        // columns re-attach from paths; derived bucket/transform segments
+        // stay unparsed (their source column is a data column)
         new MorScanBuilder(spark, tableSchema, snap.get, options, priors,
-          dropChains, dropTypes, emitRowId = emitRowId, remapped = remapped)
+          dropChains, dropTypes, emitRowId = emitRowId, remapped = remapped,
+          partSchema = StructType(partSchema.fields.filter(f =>
+            tableSchema.fieldNames.contains(f.name))))
       }
     }
   }
@@ -1122,12 +1151,13 @@ private[catalog] object GraftScans {
       partSchema: StructType = new StructType(),
       bucketSpec: Option[(String, Int)] = None,
       transformSpec: Option[(SnapTransform.Spec, DataType)] = None): ParquetScanBuilder = {
-    // a direct-API root staged with .partitionBy carries col=value path
-    // segments whose columns exist ONLY in the path — unless the table
-    // DECLARED them (partSchema, `PARTITIONED BY`), this flat scan
-    // (PartitionSpec.emptySpec, schema from footers) would silently
-    // return the table minus its partition columns, so refuse loudly;
-    // Snapshots.read recovers them via per-era basePath grouping.
+    // .partitionBy-staged files carry col=value path segments whose
+    // columns exist ONLY in the path — without a partition schema
+    // (declared `PARTITIONED BY`, or inferred from the paths of an
+    // undeclared root) this flat scan (PartitionSpec.emptySpec, schema
+    // from footers) would silently return the table minus its partition
+    // columns, so refuse loudly (a declared unpartitioned table over
+    // such files, or a position-identity scan of them).
     // DERIVED segments (`_gbucket=`/`_gtpart=`, bucket/transform
     // layouts) are exempt: their source column STAYS in the data
     // files, so a flat scan is value-exact — it merely skips the
@@ -1136,9 +1166,9 @@ private[catalog] object GraftScans {
     if (partSchema.isEmpty) files.find(identityPartitionedLayout).foreach { f =>
       throw new UnsupportedOperationException(
         s"this snapshot root contains .partitionBy-staged files (e.g. $f) " +
-          "whose partition columns live in the path, not the footers; the " +
-          "catalog's flat scan would silently drop them — read this root " +
-          "through Snapshots.read / Snapshots.readPartitionPruned instead")
+          "whose partition columns live in the path, not the footers, and " +
+          "the table declares no partition columns; a flat scan would " +
+          "silently drop them")
     }
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val spec =
@@ -1208,16 +1238,12 @@ private[catalog] object GraftScans {
     }.toMap
     partSchema.fields.map { f =>
       segs.get(f.name) match {
-        // the synthetic transform ordinal is nullable BY DESIGN: a
-        // pre-evolution file has no segment (the layout was adopted
-        // later) and reads as NULL — pruning keeps it conservatively.
-        // The synthetic bucket id is nullable the mirrored way: a
-        // post-RETIREMENT file stages flat and reads as NULL.
-        case None if f.name == graft.sources.Snapshots.transformPathCol ||
-          f.name == graft.sources.Snapshots.bucketPathCol =>
-          null
-        case None => throw new IllegalStateException(
-          s"partitioned table file dir $dir lacks a ${f.name}=<value> segment")
+        // a dir without the segment reads NULL — the evolved layout: an
+        // era staged before the column joined the layout (an undeclared
+        // root's later `.partitionBy(a, b)`, a transform adopted later)
+        // or after it left (a RETIRED bucket stages flat); transform
+        // pruning keeps such files conservatively
+        case None => null
         case Some(raw) if raw ==
           org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME =>
           null
@@ -1242,8 +1268,41 @@ private[catalog] object GraftScans {
       .map(dir => InternalRow.fromSeq(
         partitionValuesOf(dir, partSchema).toIndexedSeq))
 
-  /** The version (staging) dir of a path — same rule as
-    * [[partitionedLayout]]'s base resolution. */
+  /** Identity partition schema of an UNDECLARED root, from its files'
+    * `col=value` segments: each era (version) dir is inferred by
+    * Spark's own partition discovery with that dir as `basePath` — the
+    * typing a per-era `spark.read.option("basePath", era)` read applies —
+    * and the eras merge by name in first-appearance order, a conflicting
+    * type widened as a union of those per-era reads would widen it. An
+    * era lacking a column reads NULL for it ([[partitionValuesOf]]).
+    * The listing answers from [[ManifestStatusCache]]: driver-only, no
+    * job. Bucket/transform segments are layout details, never columns. */
+  private[catalog] def inferPartSchema(spark: SparkSession,
+      files: Seq[String]): StructType = {
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val perEra = files.filter(f => f.drop(eraDirOf(f).length).contains("="))
+      .groupBy(eraDirOf).toSeq.sortBy(_._1).flatMap { case (era, fs) =>
+        new InMemoryFileIndex(classic, fs.map(new org.apache.hadoop.fs.Path(_)),
+          Map("basePath" -> era), None, ManifestStatusCache).partitionSchema.fields
+      }
+    StructType(perEra.foldLeft(Vector.empty[org.apache.spark.sql.types.StructField]) {
+      (acc, f) => acc.indexWhere(_.name == f.name) match {
+        case -1 => acc :+ f
+        case i => acc.updated(i, acc(i).copy(dataType =
+          org.apache.spark.sql.catalyst.analysis.TypeCoercion
+            .findWiderTypeForTwo(acc(i).dataType, f.dataType)
+            .getOrElse(org.apache.spark.sql.types.StringType)))
+      }
+    }.filterNot(f => f.name == Snapshots.bucketPathCol ||
+      f.name == Snapshots.transformPathCol))
+  }
+
+  /** The era (version) dir a committed file was staged under. */
+  private def eraDirOf(f: String): String =
+    baseDirOfPath(Paths.get(f).getParent.toString)
+
+  /** The version (staging) dir of a path; a path outside any version
+    * dir is its own base. */
   private def baseDirOfPath(dir: String): String = (dir + "/x") match {
     case baseDirRe(b) => b
     case _ => dir
@@ -1529,32 +1588,16 @@ private[catalog] object GraftScans {
 
   private val baseDirRe = """(.*?/v\d{8}_[^/]*)/.*""".r
 
-  /** True when `f` sits below `col=value` partition segments inside its
-    * version (staging) dir — the layout [[graft.sources.Snapshots]]'
-    * own read path resolves with per-era basePath. */
-  private def partitionedLayout(f: String): Boolean = {
-    val base = f match {
-      case baseDirRe(b) => b
-      case _ => Option(Paths.get(f).getParent).map(_.toString).getOrElse("")
-    }
-    f.drop(base.length).contains("=")
-  }
-
-  /** Like [[partitionedLayout]], but counting only IDENTITY `col=value`
-    * segments — the ones whose column exists solely in the path. The
-    * synthetic derived segments (`_gbucket=`, `_gtpart=`) don't make a
-    * flat scan lossy: their source column is a data column. */
-  private def identityPartitionedLayout(f: String): Boolean = {
-    val base = f match {
-      case baseDirRe(b) => b
-      case _ => Option(Paths.get(f).getParent).map(_.toString).getOrElse("")
-    }
-    f.drop(base.length).split('/').filter(_.contains('=')).exists { s =>
+  /** True when `f` sits below IDENTITY `col=value` segments inside its
+    * version (staging) dir — the ones whose column exists solely in the
+    * path. The synthetic derived segments (`_gbucket=`, `_gtpart=`)
+    * don't make a flat scan lossy: their source column is a data column. */
+  private def identityPartitionedLayout(f: String): Boolean =
+    f.drop(eraDirOf(f).length).split('/').filter(_.contains('=')).exists { s =>
       val name = s.substring(0, s.indexOf('='))
       name != graft.sources.Snapshots.bucketPathCol &&
         name != graft.sources.Snapshots.transformPathCol
     }
-  }
 
   /** THE rename-resolution rule, shared by the head scan
     * ([[RenameAwareScanBuilder]]) and the MOR scan ([[MorScanBuilder]])
@@ -1882,8 +1925,7 @@ private[catalog] final case class MorDeleteSet(keyOrdinals: Seq[Int],
     inline.getOrElse(DeleteKeyCache.load(paths, keyNames, keyTypes))
 
   /** The row's key value in set form — null when ANY component is null
-    * (SQL equality: a null key never matches a delete, same as the
-    * anti-join path). */
+    * (SQL equality: a null key never matches a delete). */
   def keyOf(row: InternalRow): Any =
     if (keyOrdinals.length == 1) {
       if (row.isNullAt(keyOrdinals.head)) null
@@ -2064,7 +2106,8 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
     dropChains: Map[String, Seq[String]] = Map.empty,
     dropTypes: Map[String, DataType] = Map.empty,
     emitRowId: Boolean = false,
-    remapped: Map[String, String] = Map.empty)
+    remapped: Map[String, String] = Map.empty,
+    partSchema: StructType = new StructType())
   extends ScanBuilder with SupportsPushDownRequiredColumns
   with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
 
@@ -2102,8 +2145,8 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
           "declared nor recorded in the droptype ledger")), nullable = true)
 
   // group files into eras by applicable delete set (version scoping,
-  // identical to Snapshots.readWithDeletes) — eager, so the per-era
-  // parquet builders exist when filter pushdown arrives
+  // [[DeleteFile.coversBelow]]) — eager, so the per-era parquet
+  // builders exist when filter pushdown arrives
   private val eras: Seq[(Seq[String], Seq[DeleteFile])] = snap.files
     .groupBy(f => snap.deletes.filter(d => effVersion(f) < d.coversBelow))
     .toSeq.sortBy(_._2.min).map { case (dels, fs) => (fs, dels) }
@@ -2117,10 +2160,12 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
     eras.map { case (fs, dels) =>
       (fs.filterNot(needsPos), fs.filter(needsPos), dels) }
 
+  // identity partition columns re-attach from the plain files' paths;
+  // pos-identity scans stay flat (positional MOR excludes PARTITIONED BY)
   private val eraBuilders = eraSplit.map { case (plain, _, _) =>
     if (plain.isEmpty) None
     else Some(GraftScans.parquetBuilder(spark, plain, tableSchema, options,
-      snap.statsRaw, snap.blooms))
+      snap.statsRaw, snap.blooms, partSchema))
   }
 
   private val rowIdxField = org.apache.spark.sql.types.StructField(
@@ -2192,9 +2237,14 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
     // Iceberg's field-id indirection), so a key column renamed or
     // dropped AFTER the delete still scopes exactly
     val keyCols = snap.deletes.flatMap(_.keyCols).map(currentName).distinct
-    val readSchema = StructType(tableRequested.fields ++
+    val wanted = tableRequested.fields ++
       keyCols.filterNot(k => tableRequested.fieldNames.contains(k))
-        .map(declaredField))
+        .map(declaredField)
+    // a file scan emits data columns first, then partition columns in
+    // partition-schema order — the read schema follows that shape
+    val readSchema = StructType(
+      wanted.filterNot(f => partSchema.fieldNames.contains(f.name)) ++
+        partSchema.fields.flatMap(p => wanted.find(_.name == p.name)))
 
     // rename composition: the files are read under the PHYSICAL union
     // schema (each readSchema column followed by its prior spellings)
@@ -2362,7 +2412,7 @@ private[catalog] final case class PosEraPartition(
 // NOTE: position-delete sidecar loading (deletion vectors and legacy
 // pair parquet) lives in [[graft.sources.DeleteVectors]] — one
 // soft-cached, Spark-session-free loader shared by the executor-side
-// partition readers here and the direct-API read path.
+// partition readers here and delete-file compaction.
 
 private[catalog] class MorReaderFactory(
     eraFactories: Array[Option[PartitionReaderFactory]],

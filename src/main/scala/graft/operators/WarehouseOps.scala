@@ -682,8 +682,9 @@ object WarehouseOps {
     *
     * Scale shape: pruning filters the manifest file list before any
     * I/O (2-of-5 priorities plan over ~2/5 of the files); the delete
-    * application stays O(deleted keys) broadcast anti joins grouped by
-    * era — the delete-key files are small and NOT partition-aligned,
+    * application stays O(deleted keys) key sets probed per row by one
+    * MOR scan, grouped by era — the delete-key files are small and NOT
+    * partition-aligned,
     * exactly Iceberg v2's equality-delete shape. */
   val snapshotPruneMor: Q = (s, dir) => {
     import s.implicits._
@@ -1161,7 +1162,7 @@ object WarehouseOps {
     *
     * Scale: nothing here rewrites data — two metadata ALTERs and two
     * O(deleted keys) delete files on a table that stays scan-pruned;
-    * the read-side rent is the documented MOR anti-join/filter until
+    * the read-side rent is the documented MOR scan's key filter until
     * the next compaction absorbs the deletes. */
   val sqlEvolutionMor: Q = (s, dir) => {
     val (t, _) = SnapCat.table(s, "evmor_orders", dir)
@@ -1737,7 +1738,7 @@ object WarehouseOps {
     * source column (Iceberg's transform-on-read) and re-applies the
     * residual predicate — pruning is an I/O optimization, never the
     * correctness carrier. File-level pruning per era is spec-pinned
-    * via inputFiles (Round14OpsSpec); the oracle recomputes the
+    * via the planned scan files (Round14OpsSpec); the oracle recomputes the
     * (priority, band) slice from the ORIGINAL table, so a pruned-away
     * matching file, a leaked band=lo file, or a broken band
     * re-derivation hash-mismatches. */
@@ -2490,7 +2491,7 @@ object WarehouseOps {
     // wrongly pruned (bounds computed or compared wrong) loses rows;
     // a leaked file is caught by the residual filter, so the hash
     // pins the PRUNE-side mistakes — the skip itself is spec-pinned
-    // via inputFiles in Round15OpsSpec.
+    // via the planned scan files in Round15OpsSpec.
     "snapshot_stats_prune" -> s"""
       SELECT l_suppkey, COUNT(*) AS n, ${Qx.dsumSql("l_quantity")} AS qty
       FROM lineitem

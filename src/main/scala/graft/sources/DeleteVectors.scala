@@ -18,9 +18,8 @@ import java.nio.file.{Files, Paths}
   *    >10 MB of (path STRING, pos BIGINT) pairs — at GDPR delete rates
   *    on a 100 TB table, the pending-delete rent drops >10×.
   *  - READ: membership is an O(1) bitmap probe per row, applied INSIDE
-  *    the partition reader (catalog path) or as a broadcast-free
-  *    filter over the scan (direct path) — no pair-frame anti join, no
-  *    exchange in the read plan.
+  *    the catalog scan's partition reader (the one read path) — no
+  *    pair-frame anti join, no exchange in the read plan.
   *  - SCOPE: one DV covers exactly one data file (the path is embedded
   *    and verified at load), so compaction emits ONE DV per affected
   *    file and a rewrite absorbs it the moment the file leaves.

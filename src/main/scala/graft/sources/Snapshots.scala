@@ -299,7 +299,7 @@ object Snapshots {
         // scheme and a pre-widening sketch would wrongly refute
         // present keys. The read side mirrors this: only
         // canonicalizable types ever refute (see the catalog scan's
-        // `bloomHas` and [[readPointPruned]]).
+        // `bloomHas`).
         val canon = df.schema.fields.find(_.name == c).map(_.dataType) match {
           case Some(ByteType | ShortType | IntegerType | LongType) =>
             Some(col(c).cast(LongType))
@@ -692,82 +692,15 @@ object Snapshots {
     * METADATA-ONLY (manifest header lines; zero file I/O), one level
     * above parquet's row-group zone maps: at 100 TB a selective
     * non-partition predicate skips whole files before anything is
-    * listed, opened, or footer-read. Pending merge-on-read deletes
-    * compose on the kept files as in every other read path. */
+    * listed, opened, or footer-read. The kept files read as one pinned
+    * relation ([[prunedFrame]]); pending merge-on-read deletes compose
+    * on them as in every other read path. */
   def readStatsPruned(spark: SparkSession, root: String, col: String,
       lower: Option[Any], upper: Option[Any]): DataFrame = {
     val snap = resolve(root).getOrElse(throw new IllegalStateException(
       s"no committed snapshot under $root"))
-    val kept = snap.files.filter(f =>
-      snap.statsRaw.get(f).forall(statsAdmitsRange(_, col, lower, upper)))
-    if (kept.isEmpty)
-      // schema-shaped empty result; a legitimately zero-file head (a
-      // DELETE-all table) can't go through readWithDeletes — a zero-
-      // path parquet read throws rather than returning an empty frame
-      if (snap.files.isEmpty) emptyFrame(spark, root)
-      else readWithDeletes(spark, snap.files, Nil, fileSeq = snap.fileSeq,
-        root = root).limit(0)
-    else readWithDeletes(spark, kept, snap.deletes, fileSeq = snap.fileSeq,
-      root = root, posDeletes = snap.posDeletes)
-  }
-
-  /** POINT-LOOKUP head read: keep only the manifest files that might
-    * contain one of `values` for `col`, refuted by BOTH the recorded
-    * `[min, max]` bounds and — when the table opted into
-    * `graft.bloom.cols` — the per-file Bloom sidecars. The direct-API
-    * twin of the catalog scan's equality pruning: metadata + sidecar
-    * sketches only, no data I/O for refuted files; files without
-    * stats or sketch are always kept and the caller re-applies the
-    * real predicate (pruning is never the correctness carrier).
-    * Values must be integral or string (the sketched types). */
-  def readPointPruned(spark: SparkSession, root: String, col: String,
-      values: Seq[Any]): DataFrame = {
-    require(values.nonEmpty, "readPointPruned needs at least one value")
-    val snap = resolve(root).getOrElse(throw new IllegalStateException(
-      s"no committed snapshot under $root"))
-    def hashOf(v: Any): Option[Long] = try {
-      import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-      // canonical width, mirroring the sketch writer; values of types
-      // the writer does not sketch (decimal/binary/bool/…) hash to
-      // None → the sketch never refutes them (the writer skipped the
-      // column, but a stale/foreign sidecar must not lose rows either)
-      val cv: Option[Any] = v match {
-        case b: Byte => Some(b.toLong)
-        case s: Short => Some(s.toLong)
-        case i: Int => Some(i.toLong)
-        case l: Long => Some(l)
-        case f: Float => Some(f.toDouble)
-        case d: Double => Some(d)
-        case s: String => Some(s)
-        case u: org.apache.spark.unsafe.types.UTF8String => Some(u.toString)
-        case _ => None
-      }
-      cv.map(c => XxHash64(Seq(Literal(c)), 42L).eval().asInstanceOf[Long])
-    } catch { case _: Exception => None }
-    val hashes = values.map(hashOf)
-    def keep(f: String): Boolean = {
-      val rangeAdmits = snap.statsRaw.get(f).forall(body =>
-        values.exists(v => statsAdmitsRange(body, col, Some(v), Some(v))))
-      def bloomAdmits = {
-        val hasSketch = snap.blooms.get(f).exists(_.contains(col))
-        !hasSketch || {
-          val bf = try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(
-            Files.readAllBytes(Paths.get(bloomSidecar(f, col)))))
-          catch { case _: Exception => None }
-          bf.forall(b => hashes.exists(_.forall(b.mightContainLong)))
-        }
-      }
-      rangeAdmits && bloomAdmits
-    }
-    val kept = snap.files.filter(keep)
-    if (kept.isEmpty)
-      // see readStatsPruned: zero-file heads are legitimate and need
-      // the declared-schema empty frame, not a zero-path parquet read
-      if (snap.files.isEmpty) emptyFrame(spark, root)
-      else readWithDeletes(spark, snap.files, Nil, fileSeq = snap.fileSeq,
-        root = root).limit(0)
-    else readWithDeletes(spark, kept, snap.deletes, fileSeq = snap.fileSeq,
-      root = root, posDeletes = snap.posDeletes)
+    prunedFrame(spark, root, snap, snap.files.filter(f =>
+      snap.statsRaw.get(f).forall(statsAdmitsRange(_, col, lower, upper))))
   }
 
   /** Commit timestamp (µs since epoch, UTC) of a committed version, read
@@ -988,11 +921,8 @@ object Snapshots {
   /** Read the branch head — the audit view: main's rows plus every
     * batch committed to the branch, deletes applied with the same
     * version scoping as a main read. */
-  def readBranch(spark: SparkSession, root: String, name: String): DataFrame = {
-    val snap = resolveBranch(root, name)
-    readWithDeletes(spark, snap.files, snap.deletes, fileSeq = snap.fileSeq,
-      root = root, posDeletes = snap.posDeletes)
-  }
+  def readBranch(spark: SparkSession, root: String, name: String): DataFrame =
+    frame(spark, root, Some(resolveBranch(root, name)))
 
   /** APPEND commit targeting the branch: stage files via `write` into
     * a writer-unique data dir (under the shared root, at the branch's
@@ -1362,24 +1292,12 @@ object Snapshots {
     case _                => 0L
   }
 
-  /** One LEFT ANTI join per delete key column against the union of
-    * that column's delete-key files. The broadcast hint is SIZE-GATED:
-    * delete files are usually O(deleted keys) — tiny next to the base —
-    * so the common case broadcasts and the base never shuffles. But a
-    * GDPR-scale purge or a bulk upsert touching 1% of a 100 TB table is
-    * billions of keys, and a forced hint would bypass
-    * `autoBroadcastJoinThreshold` entirely (driver OOM, no degrade
-    * path). The gate sums the delete files' on-disk bytes — already
-    * known without opening them — and above the session threshold
-    * leaves the join un-hinted so AQE picks shuffle vs broadcast from
-    * runtime stats. */
-  /** Load a delete group's DISTINCT key set. Per-file reads +
+  /** Load a delete group's DISTINCT key set — the row-level change
+    * feed's key diff ([[readChangesRows]]). Per-file reads +
     * unionByName, NOT one multi-path read: delete files staged on
     * either side of an ALTER COLUMN widening carry different physical
     * widths, which a multi-path read would mis-bind; the union resolves
-    * them with Spark's own type coercion. This is the ONE copy of that
-    * rule — both the MOR anti-join and the row-level CDF key diff
-    * ([[readChangesRows]]) load through it. */
+    * them with Spark's own type coercion. */
   private def deleteKeys(spark: SparkSession, ds: Seq[DeleteFile],
       cols: Seq[String]): DataFrame =
     ds.map(_.path).sorted.map { p =>
@@ -1391,125 +1309,6 @@ object Snapshots {
       }
       rd.select(cols.map(org.apache.spark.sql.functions.col): _*)
     }.reduce(_.unionByName(_)).distinct()
-
-  private def antiJoinDeletes(spark: SparkSession, base: DataFrame,
-      dels: Seq[DeleteFile]): DataFrame =
-    dels.groupBy(_.keyCol).toSeq.sortBy(_._1).foldLeft(base) {
-      case (df, (keyCol, ds)) =>
-        val cols = ds.head.keyCols
-        val keys = deleteKeys(spark, ds, cols)
-        val delBytes = ds.map { d =>
-          try Files.size(Paths.get(d.path)) catch { case _: Exception => Long.MaxValue / 4096 }
-        }.sum
-        val hinted =
-          if (delBytes <= broadcastThresholdBytes(spark))
-            org.apache.spark.sql.functions.broadcast(keys)
-          else keys
-        df.join(hinted, cols, "left_anti")
-    }
-
-  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes
-    * (-1 = broadcast disabled → gate everything to un-hinted). Parses
-    * both plain-number and "10MB"-suffix forms. */
-  private def broadcastThresholdBytes(spark: SparkSession): Long = {
-    val s = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB").trim
-    if (s.startsWith("-")) -1L
-    else try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
-    catch { case _: Exception => 10L * 1024 * 1024 }
-  }
-
-  /** Read a pinned file set with its pending merge-on-read deletes
-    * applied, SCOPED by version: a delete covers only files staged
-    * before it committed ([[DeleteFile.coversBelow]]), so rows
-    * appended after the delete — including an upsert's rewritten rows
-    * and a re-inserted key — stay visible. Fast paths: no deletes →
-    * one plain scan; every delete covers every file (no post-delete
-    * appends) → one scan + the anti joins. Otherwise files group by
-    * their applicable delete set (one group per era between deletes —
-    * a handful, never per-file) and the groups union. */
-  private val baseDirRe = """(.*?/v\d{8}_[^/]*)/.*""".r
-
-  /** The version (staging) dir a committed file lives under — the
-    * `basePath` that lets Spark re-derive `col=value` partition
-    * columns from the path segments below it. */
-  private def baseDirOf(f: String): String = f match {
-    case baseDirRe(b) => b
-    case _            => Paths.get(f).getParent.toString
-  }
-
-  /** Declared schema of a catalog-CREATEd root (the `graft.schema.json`
-    * key [[graft.catalog.GraftTable.writeMeta]] pins in
-    * `_table.properties`) — what lets a ZERO-FILE snapshot read as an
-    * empty frame instead of failing schema inference. */
-  private def declaredSchema(root: String): Option[org.apache.spark.sql.types.StructType] =
-    tableProps(root).get("graft.schema.json").flatMap(j =>
-      try Some(org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      catch { case _: Exception => None })
-
-  /** Empty frame for a zero-file snapshot — a LEGITIMATE state (a
-    * catalog DELETE matching every row publishes an empty rewrite). */
-  private def emptyFrame(spark: SparkSession, root: String): DataFrame =
-    declaredSchema(root) match {
-      case Some(sc) =>
-        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), sc)
-      case None => throw new IllegalStateException(
-        s"snapshot under $root has zero data files and no declared schema " +
-          "(_table.properties) to shape an empty result")
-    }
-
-  /** Read exactly `files`, recovering partition columns: files staged
-    * through `.partitionBy` carry `col=value` path segments under
-    * their version dir, so reading per era with that era's `basePath`
-    * re-derives them (a flat layout takes the single-scan path
-    * untouched). Shared by every manifest-pinned read, including the
-    * change feeds — all paths emit the same schema. */
-  private def scanFiles(spark: SparkSession, fs: Seq[String],
-      mergeSchema: Boolean = false, withMeta: Boolean = false): DataFrame = {
-    def rd = {
-      val r = spark.read
-      if (mergeSchema) r.option("mergeSchema", "true") else r
-    }
-    // position-delete application needs each row's (file, ordinal)
-    // identity: parquet's generated _metadata columns, attached
-    // DIRECTLY above each relation (the hidden struct resolves only
-    // there, not through a union), path normalized to the manifest's
-    // plain form (the local binding's file: scheme stripped)
-    def meta(df: DataFrame): DataFrame =
-      if (!withMeta) df
-      else {
-        import org.apache.spark.sql.functions.{col, regexp_replace}
-        df.withColumn("__gfile",
-            regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))
-          .withColumn("__gpos", col("_metadata.row_index"))
-      }
-    val partitioned = fs.exists(f => f.drop(baseDirOf(f).length).contains("="))
-    // flat layouts: answer the read schema from the footers' serialized
-    // Spark schema on the driver instead of a scheduled inference job.
-    // mergeSchema=false needs one footer; mergeSchema=true short-circuits
-    // only when every footer AGREES (the merge is then the identity) —
-    // genuinely straddling files keep Spark's own merged inference, so
-    // evolution semantics are untouched. Partitioned layouts keep the
-    // inference path: their partition columns live in col=value path
-    // segments, not footers.
-    def flatSchema: Option[org.apache.spark.sql.types.StructType] =
-      if (!mergeSchema) footerSparkSchema(fs.head)
-      else footerSparkSchema(fs.head).filter(h =>
-        fs.tail.forall(f => footerSparkSchema(f).contains(h)))
-    if (!partitioned) meta(flatSchema match {
-      case Some(sc) => spark.read.schema(sc).parquet(fs: _*)
-      case None => rd.parquet(fs: _*)
-    })
-    else fs.groupBy(baseDirOf).toSeq.sortBy(_._1).map { case (b, bfs) =>
-      // the SYNTHETIC bucket/transform segments (bucket and
-      // time/truncate layouts, graft.catalog.SnapBucket/SnapTransform)
-      // are layout details, not columns — path recovery must never
-      // surface them ('_gbucket'/'_gtpart' are reserved; no-op drops
-      // on every other layout)
-      meta(rd.option("basePath", b).parquet(bfs: _*))
-        .drop(bucketPathCol, transformPathCol)
-    }.reduce(_.unionByName(_, allowMissingColumns = mergeSchema))
-  }
 
   /** Reserved path-segment name for hash-bucket layouts
     * ([[graft.catalog.SnapBucket]]): files of a `PARTITIONED BY
@@ -1526,99 +1325,58 @@ object Snapshots {
     * data files), so every path-recovering read drops it. */
   val transformPathCol = "_gtpart"
 
-  private def readWithDeletes(spark: SparkSession, files: Seq[String],
-      deletes: Seq[DeleteFile], mergeSchema: Boolean = false,
-      fileSeq: Map[String, Long] = Map.empty,
-      root: String = "",
-      posDeletes: Map[String, Seq[String]] = Map.empty): DataFrame = {
-    // a zero-file snapshot (e.g. a DELETE-all rewrite) reads as an
-    // empty frame — schema inference has no footers and deletes have
-    // nothing to hide
-    if (files.isEmpty) return emptyFrame(spark, root)
-    // a cross-root published file's delete scoping uses its
-    // manifest-pinned effective seq, not the foreign path's counter
-    def effVersion(f: String): Long = fileSeq.getOrElse(f, fileVersion(f))
-    def scan(fs: Seq[String]): DataFrame =
-      scanPosDeleted(spark, fs, mergeSchema, posDeletes)
-    if (deletes.isEmpty) scan(files)
-    else {
-      val maxV = files.map(effVersion).max
-      if (deletes.forall(_.coversBelow > maxV)) antiJoinDeletes(spark, scan(files), deletes)
-      else files
-        .groupBy(f => deletes.filter(d => effVersion(f) < d.coversBelow))
-        .toSeq.sortBy(_._2.min)
-        .map { case (applicable, fs) => antiJoinDeletes(spark, scan(fs), applicable) }
-        .reduce(_.unionByName(_, allowMissingColumns = mergeSchema))
-    }
+  /** THE read primitive: every `read*` function below is this one
+    * relation — [[graft.catalog.GraftTable]] at `root`, planned through
+    * DataSource V2 exactly like a `snap.` statement, so merge-on-read
+    * application (version-scoped equality deletes, position deletes),
+    * partition-column recovery and pushdown exist once, in the catalog
+    * scan ([[graft.catalog.MorScan]] when deletes are pending).
+    * `pinned = None` is the catalog's head table (declared schema, the
+    * RENAME ledger), resolved NOW: the frame reads the head of this
+    * call, never a later one. A pinned snapshot is `VERSION AS OF`: the
+    * footer-merged schema of its own files, any subset of a resolved
+    * snapshot included (a zero-file one reads empty under the declared
+    * schema). */
+  private def frame(spark: SparkSession, root: String,
+      pinned: Option[Snapshot]): DataFrame = {
+    val table = new graft.catalog.GraftTable(root, root, pinned)
+    if (table.snap.isEmpty) throw new IllegalStateException(
+      s"no committed snapshot under $root")
+    org.apache.spark.sql.classic.GraftSqlBridge.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(table, None, None))
   }
 
-  /** [[scanFiles]] + POSITION-delete application: files named by a
-    * `#posdel:` line read with their per-row (file, ordinal) identity
-    * attached — parquet's own `_metadata.file_path` / `row_index`
-    * columns, GENERATED by the readers (exact under file splits,
-    * row-group skipping, and predicate pushdown — never parsed from
-    * data) — and filtered by DELETION-VECTOR membership: the affected
-    * files' `.dv` sidecars ([[DeleteVectors]]) broadcast as per-file
-    * roaring bitmaps (O(deleted rows / 8) bytes) and each row pays one
-    * O(1) probe — NO anti join, no exchange of any kind in the read
-    * plan. Legacy pair-parquet sidecars (pre-DV manifests, time-travel
-    * reads) still anti-join their O(deleted rows) pair frame;
-    * unaffected files take the plain path untouched. */
-  private def scanPosDeleted(spark: SparkSession, fs: Seq[String],
-      mergeSchema: Boolean,
-      posDeletes: Map[String, Seq[String]]): DataFrame = {
-    val affected = fs.filter(posDeletes.contains)
-    if (affected.isEmpty) return scanFiles(spark, fs, mergeSchema)
-    import org.apache.spark.sql.functions.{col, udf}
-    val rest = fs.filterNot(posDeletes.contains)
-    val posFiles = affected.flatMap(posDeletes(_)).distinct.sorted
-    val (dvFiles, pairFiles) = posFiles.partition(DeleteVectors.isDv)
-    var aff = scanFiles(spark, affected, mergeSchema, withMeta = true)
-    if (dvFiles.nonEmpty) {
-      val bc = spark.sparkContext.broadcast(DeleteVectors.load(dvFiles))
-      val live = udf((f: String, p: Long) =>
-        !bc.value.getOrElse(f, DeleteVectors.Ordinals.empty).contains(p))
-      aff = aff.filter(live(col("__gfile"), col("__gpos")))
-    }
-    if (pairFiles.nonEmpty) {
-      // all (file, pos) pair parquets share one graft-written shape —
-      // the first footer's schema serves the whole multi-path read,
-      // skipping the scheduled inference job
-      val pairRd = footerSparkSchema(pairFiles.head) match {
-        case Some(sc) => spark.read.schema(sc).parquet(pairFiles: _*)
-        case None => spark.read.parquet(pairFiles: _*)
-      }
-      val pairs = pairRd
-        .select(col("file").as("__pd_file"), col("pos").as("__pd_pos"))
-        .distinct()
-      aff = aff.join(pairs,
-        col("__gfile") === col("__pd_file") && col("__gpos") === col("__pd_pos"),
-        "left_anti")
-    }
-    aff = aff.drop("__gfile", "__gpos")
-    if (rest.isEmpty) aff
-    else scanFiles(spark, rest, mergeSchema)
-      .unionByName(aff, allowMissingColumns = mergeSchema)
+  /** `snap` narrowed to `files` (a subset of its own): the pending
+    * deletes stay, scoped per file as in the full snapshot. */
+  private def narrowed(snap: Snapshot, files: Seq[String]): Snapshot = {
+    val keep = files.toSet
+    snap.copy(files = files,
+      posDeletes = snap.posDeletes.filter { case (f, _) => keep(f) },
+      blooms = snap.blooms.filter { case (f, _) => keep(f) })
   }
+
+  /** A pruned read of `snap`: the kept files as a pinned relation. Rows
+    * are not filtered — the caller re-applies its predicate; zero kept
+    * files is a VALID empty result shaped from the unpruned snapshot
+    * (limit 0 folds to an empty relation before any data I/O). */
+  private def prunedFrame(spark: SparkSession, root: String, snap: Snapshot,
+      kept: Seq[String]): DataFrame =
+    if (kept.isEmpty) frame(spark, root, Some(snap)).limit(0)
+    else frame(spark, root, Some(narrowed(snap, kept)))
 
   /** Read the current head through its manifest (merge-on-read deletes
-    * applied with version scoping — see [[commitDelete]]). */
-  def read(spark: SparkSession, root: String): DataFrame = {
-    val snap = resolve(root).getOrElse(throw new IllegalStateException(
-      s"no committed snapshot under $root"))
-    readWithDeletes(spark, snap.files, snap.deletes, fileSeq = snap.fileSeq,
-      root = root, posDeletes = snap.posDeletes)
-  }
+    * applied with version scoping — see [[commitDelete]]): the catalog
+    * head table's read. */
+  def read(spark: SparkSession, root: String): DataFrame =
+    frame(spark, root, None)
 
-  /** Time travel: read version `v` through ITS manifest — the same
-    * pinned-file-list isolation as [[read]], just not at the head. That
-    * version's own pending deletes (if any) apply; deletes committed
-    * AFTER it do not, exactly like any other later commit. */
-  def readAt(spark: SparkSession, root: String, version: Long): DataFrame = {
-    val snap = resolveAt(root, version)
-    readWithDeletes(spark, snap.files, snap.deletes, fileSeq = snap.fileSeq,
-      root = root, posDeletes = snap.posDeletes)
-  }
+  /** Time travel: read version `v` through ITS manifest — `VERSION AS
+    * OF v`. That version's own pending deletes (if any) apply; deletes
+    * committed AFTER it do not, exactly like any other later commit. */
+  def readAt(spark: SparkSession, root: String, version: Long): DataFrame =
+    frame(spark, root, Some(resolveAt(root, version)))
 
   /** PARTITION-PRUNED head read: keep only the manifest files whose
     * path carries `partCol=<one of values>` as a directory segment —
@@ -1627,23 +1385,21 @@ object Snapshots {
     * ONLY: the manifest file list is filtered before Spark ever lists,
     * opens, or footer-reads anything, so at 100 TB a 2-of-N-partition
     * query plans over exactly the matching files — the store never
-    * relists the table, and non-matching partitions cost zero I/O.
-    * Reads group by version dir so Spark re-derives the partition
-    * column from each era's own `basePath` (append commits may span
-    * several version dirs).
+    * relists the table, and non-matching partitions cost zero I/O. The
+    * partition column re-attaches from each kept file's path.
     *
     * Pending MERGE-ON-READ deletes COMPOSE with pruning: the kept
     * files go through the same version-scoped delete application as a
-    * full [[read]] ([[DeleteFile.coversBelow]] era grouping + broadcast
-    * anti joins), so a pruned read over a table with stacked pending
-    * deletes returns exactly the delete-applied rows of the requested
-    * partitions. The delete-key scans stay O(deleted keys) — they are
-    * not pruned, because equality-delete files are not partition-
-    * aligned (Iceberg v2 has the same shape: partition-scoped delete
-    * files are an optimization, not a correctness requirement). At
-    * 100 TB this matters: MOR deletes are near-permanently pending,
-    * and pruned reads are the default read path — refusing the
-    * combination would force a table rewrite before every pruned read.
+    * full [[read]] ([[DeleteFile.coversBelow]] eras in one MOR scan),
+    * so a pruned read over a table with stacked pending deletes returns
+    * exactly the delete-applied rows of the requested partitions. The
+    * delete-key sets are not pruned, because equality-delete files are
+    * not partition-aligned (Iceberg v2 has the same shape: partition-
+    * scoped delete files are an optimization, not a correctness
+    * requirement). At 100 TB this matters: MOR deletes are
+    * near-permanently pending, and pruned reads are the default read
+    * path — refusing the combination would force a table rewrite
+    * before every pruned read.
     *
     * Partition values are matched AS SPARK WRITES THEM: `partitionBy`
     * escapes special characters in path segments (space, ':', '%', …
@@ -1657,15 +1413,7 @@ object Snapshots {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
     val wanted = values
       .map(v => s"/${escapePathName(partCol)}=${escapePathName(v)}/").toSet
-    val kept = snap.files.filter(f => wanted.exists(f.contains))
-    // zero matching partitions is a VALID empty result, not an error —
-    // shape it from the unpruned file set (limit 0 folds to an empty
-    // local relation before any data I/O)
-    if (kept.isEmpty)
-      readWithDeletes(spark, snap.files, Nil, fileSeq = snap.fileSeq,
-        root = root).limit(0)
-    else readWithDeletes(spark, kept, snap.deletes, fileSeq = snap.fileSeq,
-      root = root, posDeletes = snap.posDeletes)
+    prunedFrame(spark, root, snap, snap.files.filter(f => wanted.exists(f.contains)))
   }
 
   /** PARTITION-EVOLVED pruned read — the multi-spec generalization of
@@ -1684,11 +1432,10 @@ object Snapshots {
     * The caller re-applies the residual predicate on the rows (for
     * pre-evolution files the partition value is derived from its
     * source column, exactly Iceberg's transform-on-read) — pruning is
-    * an I/O optimization, never the correctness carrier. Reads merge
-    * schemas across eras, so pre-evolution rows surface the new
-    * partition column as null; pending MOR deletes compose as in every
-    * other read path. Cost: metadata-only filtering of the manifest
-    * list, zero I/O for provably-non-matching files. */
+    * an I/O optimization, never the correctness carrier. Pre-evolution
+    * rows surface the new partition column as null; pending MOR deletes
+    * compose as in every other read path. Cost: metadata-only filtering
+    * of the manifest list, zero I/O for provably-non-matching files. */
   def readPartitionPrunedEvolved(spark: SparkSession, root: String,
       filters: Map[String, Seq[String]]): DataFrame = {
     val snap = resolve(root).getOrElse(throw new IllegalStateException(
@@ -1698,18 +1445,11 @@ object Snapshots {
       s"/${escapePathName(c)}=" ->
         vs.map(v => s"/${escapePathName(c)}=${escapePathName(v)}/").toSet
     }
-    val kept = snap.files.filter { f =>
+    prunedFrame(spark, root, snap, snap.files.filter { f =>
       wanted.forall { case (seg, vals) =>
         !f.contains(seg) || vals.exists(f.contains)
       }
-    }
-    // zero matching files is a valid empty result (see
-    // readPartitionPruned)
-    if (kept.isEmpty)
-      readWithDeletes(spark, snap.files, Nil, mergeSchema = true,
-        fileSeq = snap.fileSeq, root = root).limit(0)
-    else readWithDeletes(spark, kept, snap.deletes, mergeSchema = true,
-      fileSeq = snap.fileSeq, root = root, posDeletes = snap.posDeletes)
+    })
   }
 
   /** Read the head with parquet schema MERGING — schema evolution:
@@ -1718,16 +1458,14 @@ object Snapshots {
     * History is never rewritten (files are immutable), and a
     * time-travel [[readAt]] of a pre-evolution version still presents
     * exactly the schema it was committed with — the two halves of the
-    * Delta/Iceberg evolution contract. mergeSchema costs one footer
-    * read per file at planning; at 100 TB scale a production store
-    * would cache the union schema in the manifest, the same few bytes
-    * of metadata this protocol already centralizes. */
-  def readMerged(spark: SparkSession, root: String): DataFrame = {
-    val snap = resolve(root).getOrElse(throw new IllegalStateException(
-      s"no committed snapshot under $root"))
-    readWithDeletes(spark, snap.files, snap.deletes, mergeSchema = true,
-      fileSeq = snap.fileSeq, root = root, posDeletes = snap.posDeletes)
-  }
+    * Delta/Iceberg evolution contract. This is the PINNED head: the
+    * footer-merged schema `VERSION AS OF <head>` presents, one driver
+    * footer read per file at planning; at 100 TB scale a production
+    * store would cache the union schema in the manifest, the same few
+    * bytes of metadata this protocol already centralizes. */
+  def readMerged(spark: SparkSession, root: String): DataFrame =
+    frame(spark, root, Some(resolve(root).getOrElse(throw new IllegalStateException(
+      s"no committed snapshot under $root"))))
 
   /** File-level change feed between two committed versions: the files
     * present in `toVersion`'s manifest but not in `fromVersion`'s
@@ -1756,16 +1494,16 @@ object Snapshots {
     * survives every valid commit kind. */
   def readChanges(spark: SparkSession, root: String,
       fromVersion: Long, toVersion: Long): DataFrame = {
+    val to = resolveAt(root, toVersion)
     val changed = changedFiles(root, fromVersion, toVersion)
-    if (changed.nonEmpty) scanFiles(spark, changed)
-    else {
-      val toFiles = resolveAt(root, toVersion).files
-      // scanFiles, not a flat read: a partitioned table's empty frame
-      // must still carry the partition columns (same-schema contract)
-      if (toFiles.nonEmpty) scanFiles(spark, toFiles).limit(0)
-      else emptyFrame(spark, root)
-    }
+    if (changed.nonEmpty) frame(spark, root, Some(rawFiles(to, changed)))
+    else frame(spark, root, Some(rawFiles(to, to.files))).limit(0)
   }
+
+  /** `snap` narrowed to `files` read RAW — the file-level feed's view:
+    * every row the files hold, no pending delete applied. */
+  private def rawFiles(snap: Snapshot, files: Seq[String]): Snapshot =
+    narrowed(snap, files).copy(deletes = Nil, posDeletes = Map.empty)
 
   /** ROW-LEVEL change feed between two committed versions — the
     * rewrite-spanning completion of [[readChanges]]'s file-level feed
@@ -1837,7 +1575,7 @@ object Snapshots {
         .withColumn("_change_type", lit("insert"))
     else if (attributed.isDefined) {
       val added = attributed.get
-      if (added.nonEmpty) scanFiles(spark, added)
+      if (added.nonEmpty) frame(spark, root, Some(rawFiles(to, added)))
         .withColumn("_change_type", lit("insert"))
       else readAt(spark, root, toVersion).limit(0)
         .withColumn("_change_type", lit("insert"))
@@ -1874,14 +1612,11 @@ object Snapshots {
         s.fileSeq.getOrElse(f, fileVersion(f))
       def touchedSide(files: Seq[String], s: Snapshot): Option[DataFrame] =
         if (files.isEmpty) None
-        else Some(readWithDeletes(spark, files, s.deletes, fileSeq = s.fileSeq,
-          root = root, posDeletes = s.posDeletes))
+        else Some(frame(spark, root, Some(narrowed(s, files))))
       // (c): per shared-file era, compare the applicable delete sets;
       // where they differ, candidate rows are fetched by a semi join
       // against the delta keys and re-checked against the FULL other
       // set (a key can be hidden through a second delete group)
-      def keysOf(ds: Seq[DeleteFile], cols: Seq[String]): DataFrame =
-        deleteKeys(spark, ds, cols) // shared loader — see deleteKeys doc
       val shiftGroups = sharedFiles
         .groupBy(f => (from.deletes.filter(d => effAt(from)(f) < d.coversBelow),
           to.deletes.filter(d => effAt(to)(f) < d.coversBelow)))
@@ -1895,10 +1630,10 @@ object Snapshots {
             if (fromG.map(_.path).toSet == toG.map(_.path).toSet) Nil
             else {
               val kcols = (fromG ++ toG).head.keyCols
-              val empty = scanFiles(spark, fs.take(1))
+              val empty = frame(spark, root, Some(rawFiles(to, fs.take(1))))
                 .select(kcols.map(org.apache.spark.sql.functions.col): _*).limit(0)
-              val kf = if (fromG.isEmpty) empty else keysOf(fromG, kcols)
-              val kt = if (toG.isEmpty) empty else keysOf(toG, kcols)
+              val kf = if (fromG.isEmpty) empty else deleteKeys(spark, fromG, kcols)
+              val kt = if (toG.isEmpty) empty else deleteKeys(spark, toG, kcols)
               val newlyHidden = kt.except(kf) // visible at from, gone at to
               val unHidden = kf.except(kt)    // hidden at from, back at to
               // FILE-prune the candidate scan against the delta keys
@@ -1927,14 +1662,15 @@ object Snapshots {
                     }
                   }
                 }
-              def sideOf(keysDf: DataFrame, visibleUnder: Seq[DeleteFile]): Option[DataFrame] = {
+              // candidate rows as visible in state `s` (its deletes
+              // applied, era-scoped, by the one read path)
+              def sideOf(keysDf: DataFrame, s: Snapshot): Option[DataFrame] = {
                 val cand = pruned(keysDf)
                 if (cand.isEmpty) None // no candidate rows — contribute nothing
-                else Some(antiJoinDeletes(spark,
-                  scanFiles(spark, cand).join(keysDf, kcols, "left_semi"),
-                  visibleUnder))
+                else Some(frame(spark, root, Some(narrowed(s, cand)))
+                  .join(keysDf, kcols, "left_semi"))
               }
-              Seq((sideOf(newlyHidden, df_), sideOf(unHidden, dt_)))
+              Seq((sideOf(newlyHidden, from), sideOf(unHidden, to)))
             }
           }
         }
@@ -2033,8 +1769,8 @@ object Snapshots {
     * parquet of DELETED KEY VALUES (single column `keyCol`), and the
     * published manifest carries the parent's data files UNCHANGED plus
     * a scoped `#del` line per staged file (prior pending
-    * deletes carry forward too). Readers apply the deletes as a
-    * broadcast anti join ([[read]]): the delete costs O(deleted keys)
+    * deletes carry forward too). Readers apply the deletes inside the
+    * catalog's MOR scan ([[read]]): the delete costs O(deleted keys)
     * written — never a rewrite of the 100 TB base (contrast the
     * copy-on-write DELETE, which republishes every surviving row).
     * Any full rewrite [[commit]] (compaction, a COW statement)

@@ -3,14 +3,14 @@ package graft
 import graft.sources.Snapshots
 import org.apache.spark.sql.functions._
 
-/** Round-13 store hardening: the size-gated MOR delete broadcast, the
+/** Round-13 store hardening: the MOR delete-key inline gate, the
   * cross-root `#seq:` pinning (positive cases live in Round12OpsSpec's
   * WAP test), digit-only tag rejection, and the legacy-manifest
   * timestamp fallback. */
 class Round13OpsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("MOR delete anti join drops the broadcast hint above the size threshold") {
+  test("MOR delete keys read identical rows on both sides of the inline gate") {
     val root = s"${Qx.tmpOut("morgate", sf())}/store"
     Snapshots.commit(root)(out =>
       spark.range(200).select($"id", ($"id" % 7).as("v"))
@@ -18,29 +18,35 @@ class Round13OpsSpec extends SparkSpec {
     Snapshots.commitDelete(root, "id")(out =>
       spark.range(150, 180).select($"id").write.mode("append").parquet(out))
     val expected = ((0L until 150L) ++ (180L until 200L)).toSet
+    def morScan(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if b.scan.description().contains("MOR scan") => b.scan.description()
+      }.mkString
 
-    // default threshold: delete keys are tiny → hint present, base
-    // never shuffles
-    val hinted = Snapshots.read(spark, root)
-    assert(hinted.select($"id").as[Long].collect().toSet == expected)
-    assert(hinted.queryExecution.executedPlan.toString
-      .contains("BroadcastExchange"),
-      "small delete sets must broadcast:\n" +
-        hinted.queryExecution.executedPlan)
+    // default gate: the delete keys are tiny → the set ships inline
+    // with the plan
+    val inline = Snapshots.read(spark, root)
+    assert(inline.select($"id").as[Long].collect().toSet == expected)
+    assert(morScan(inline).contains("inline keys"),
+      "small delete sets must ship inline:\n" + inline.queryExecution.executedPlan)
 
-    // 1-byte threshold: the delete files' on-disk bytes exceed it →
-    // hint dropped, AQE free to pick shuffle; results identical
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    // a 0-byte gate: every delete file is over it → executors load the
+    // set lazily; results identical
+    val key = "spark.graft.mor.inlineDeleteBytes"
+    val saved = spark.conf.getOption(key)
     try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1b")
-      val gated = Snapshots.read(spark, root)
-      assert(gated.select($"id").as[Long].collect().toSet == expected,
-        "gated read returns identical rows")
-      assert(!gated.queryExecution.executedPlan.toString
-        .contains("BroadcastExchange"),
-        "over-threshold delete set must not force a broadcast:\n" +
-          gated.queryExecution.executedPlan)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+      spark.conf.set(key, "0")
+      val lazyRead = Snapshots.read(spark, root)
+      assert(lazyRead.select($"id").as[Long].collect().toSet == expected,
+        "the lazy read returns identical rows")
+      assert(morScan(lazyRead).contains("lazy keys"),
+        "an over-gate delete set must load lazily:\n" +
+          lazyRead.queryExecution.executedPlan)
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("all-digit tag names are rejected at creation (unreachable via VERSION AS OF)") {

@@ -78,8 +78,8 @@ class Round15OpsSpec extends SparkSpec {
       == Seq("insert"))
     assert(fast.select($"k").as[Long].collect().sorted.toSeq == (5L until 8L))
     val added = Snapshots.changedFiles(root, 1L, v2).toSet
-    assert(fast.inputFiles.forall(f => added.contains(f.stripPrefix("file://"))),
-      s"append-only feed must read only the added files: ${fast.inputFiles.toSeq} vs $added")
+    assert(plannedFiles(fast).forall(f => added.contains(f.stripPrefix("file://"))),
+      s"append-only feed must read only the added files: ${plannedFiles(fast)} vs $added")
     // rewrite: delete k<2, update v for k>=6
     val post = Snapshots.read(spark, root).filter($"k" >= 2)
       .withColumn("v", when($"k" >= 6, $"v" + 1).otherwise($"v"))
@@ -124,18 +124,18 @@ class Round15OpsSpec extends SparkSpec {
         .write.mode("append").parquet(out))
     val full = Snapshots.read(spark, root)
     val pruned = Snapshots.readStatsPruned(spark, root, "k", Some(110L), Some(180L))
-    assert(pruned.inputFiles.length < full.inputFiles.length,
-      s"selective range must skip files: ${pruned.inputFiles.length} of ${full.inputFiles.length}")
+    assert(plannedFiles(pruned).length < plannedFiles(full).length,
+      s"selective range must skip files: ${plannedFiles(pruned).length} of ${plannedFiles(full).length}")
     assert(pruned.filter($"k".between(110, 180)).select($"k").as[Long].collect().sorted.toSeq
       == (110L to 180L),
       "pruning must never lose a matching row")
     // string bounds prune in UTF8 order too
     val sp = Snapshots.readStatsPruned(spark, root, "s", Some("s0110"), Some("s0180"))
-    assert(sp.inputFiles.length < full.inputFiles.length)
+    assert(plannedFiles(sp).length < plannedFiles(full).length)
     assert(sp.filter($"s" >= "s0110" && $"s" <= "s0180").count() == 71)
     // a column with no recorded stats never prunes
-    assert(Snapshots.readStatsPruned(spark, root, "nope", Some(1L), Some(2L))
-      .inputFiles.length == full.inputFiles.length)
+    assert(plannedFiles(Snapshots.readStatsPruned(spark, root, "nope", Some(1L), Some(2L)))
+      .length == plannedFiles(full).length)
     // stats survive an append (carried lines) and compose with the new
     // commit's own stats
     Snapshots.commitAppend(root)(out =>
@@ -145,7 +145,7 @@ class Round15OpsSpec extends SparkSpec {
         .repartitionByRange(2, $"k").sortWithinPartitions($"k")
         .write.mode("append").parquet(out))
     val pruned2 = Snapshots.readStatsPruned(spark, root, "k", Some(850L), None)
-    assert(pruned2.inputFiles.length < Snapshots.read(spark, root).inputFiles.length)
+    assert(plannedFiles(pruned2).length < plannedFiles(Snapshots.read(spark, root)).length)
     assert(pruned2.filter($"k" >= 850).count() == 150)
     // MOR deletes compose on the kept files
     Snapshots.commitDelete(root, "k")(out =>

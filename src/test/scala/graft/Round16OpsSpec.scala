@@ -41,18 +41,6 @@ class Round16OpsSpec extends SparkSpec {
       Seq(0L, 1L, 2L, 3L, 4L, 1000L))
   }
 
-  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    import org.apache.spark.sql.execution.datasources.FilePartition
-    def unwrap(p: Any): Seq[String] = p match {
-      case fp: FilePartition => fp.files.map(_.filePath.toString).toSeq
-      case prod: Product => prod.productIterator.flatMap(unwrap).toSeq // EraPartition etc.
-      case _ => Nil
-    }
-    df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
-      .flatMap(_.inputPartitions).flatMap(unwrap)
-  }
-
   test("catalog scans skip files on manifest column bounds (stats pruning)") {
     sqlDf("DROP TABLE IF EXISTS snap.default.r16sp")
     sqlDf("CREATE TABLE snap.default.r16sp (k BIGINT, v DOUBLE)")

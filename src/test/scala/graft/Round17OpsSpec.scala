@@ -103,7 +103,8 @@ class Round17OpsSpec extends SparkSpec {
     val statsPruned = Snapshots.readStatsPruned(spark, root, "k",
       Some(10L), Some(20L))
     assert(statsPruned.columns.toSeq == Seq("k", "v") && statsPruned.count() == 0L)
-    val pointPruned = Snapshots.readPointPruned(spark, root, "k", Seq(10L))
+    // point lookups prune through the catalog scan's equality pruning
+    val pointPruned = sqlDf("SELECT * FROM snap.default.r17gone WHERE k = 10")
     assert(pointPruned.columns.toSeq == Seq("k", "v") && pointPruned.count() == 0L)
   }
 
@@ -277,7 +278,7 @@ class Round17OpsSpec extends SparkSpec {
     // delta keys), the v6 file, and the delete-key parquet enter the
     // plan — blocks 0/2/3 are never referenced, so the former
     // O(table) full-outer state join is gone
-    val planned = feed.inputFiles.map(_.stripPrefix("file:").stripPrefix("//"))
+    val planned = plannedFiles(feed).map(_.stripPrefix("file:").stripPrefix("//"))
       .map(f => if (f.startsWith("/")) f else s"/$f").toSet
     val leaked = untouched.filter(u => planned.exists(_.endsWith(u)))
     assert(leaked.isEmpty,

@@ -23,18 +23,6 @@ class Round18OpsSpec extends SparkSpec {
 
   private def sqlDf(q: String) = { wh; spark.sql(q) }
 
-  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    import org.apache.spark.sql.execution.datasources.FilePartition
-    def unwrap(p: Any): Seq[String] = p match {
-      case fp: FilePartition => fp.files.map(_.filePath.toString).toSeq
-      case prod: Product => prod.productIterator.flatMap(unwrap).toSeq
-      case _ => Nil
-    }
-    df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
-      .flatMap(_.inputPartitions).flatMap(unwrap)
-  }
-
   test("a 64-file bloom commit writes every sidecar executor-side and still prunes") {
     sqlDf("DROP TABLE IF EXISTS snap.default.r18blm")
     sqlDf("""CREATE TABLE snap.default.r18blm (k BIGINT, v DOUBLE)

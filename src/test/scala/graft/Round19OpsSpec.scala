@@ -25,18 +25,6 @@ class Round19OpsSpec extends SparkSpec {
 
   private def sqlDf(q: String) = { wh; spark.sql(q) }
 
-  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    import org.apache.spark.sql.execution.datasources.FilePartition
-    def unwrap(p: Any): Seq[String] = p match {
-      case fp: FilePartition => fp.files.map(_.filePath.toString).toSeq
-      case prod: Product => prod.productIterator.flatMap(unwrap).toSeq
-      case _ => Nil
-    }
-    df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
-      .flatMap(_.inputPartitions).flatMap(unwrap)
-  }
-
   test("int bucket keys hash as longs: every committed dir is the long-hash dir") {
     sqlDf("DROP TABLE IF EXISTS snap.default.r19bwh")
     sqlDf("""CREATE TABLE snap.default.r19bwh (k INT, v STRING)

@@ -153,8 +153,8 @@ class Round9OpsSpec extends SparkSpec {
     // the delta read plans over ONLY post-v1 files — the base is
     // neither re-listed nor re-scanned
     val v1pfx = Snapshots.versionPrefix(v1)
-    assert(delta.inputFiles.forall(!_.contains(v1pfx)),
-      s"delta read touched base files: ${delta.inputFiles.toSeq}")
+    assert(plannedFiles(delta).forall(!_.contains(v1pfx)),
+      s"delta read touched base files: ${plannedFiles(delta)}")
     // fromVersion = 0 means "since the beginning" = the whole head
     assert(Snapshots.readChanges(spark, root, 0L, v3).count() == 17)
     // empty range is a degenerate but valid feed
@@ -302,7 +302,7 @@ class Round9OpsSpec extends SparkSpec {
     val all = Snapshots.resolve(root).get.files
     assert(all.forall(_.contains("/p=")), "partitioned staging must pin leaf files")
     val pruned = Snapshots.readPartitionPruned(spark, root, "p", Seq("1"))
-    val scanned = pruned.inputFiles.toSeq
+    val scanned = plannedFiles(pruned)
     assert(scanned.nonEmpty && scanned.forall(_.contains("/p=1/")),
       s"pruned plan leaked non-matching files: $scanned")
     assert(scanned.size < all.size, "pruning must drop the other partitions' files")
@@ -326,11 +326,17 @@ class Round9OpsSpec extends SparkSpec {
     assert(Snapshots.read(spark, root).count() == 8)
     assert(Snapshots.readAt(spark, root, v1).count() == 10,
       "time travel to the pre-delete version must see every row")
-    // the read-side apply is a BROADCAST anti join — the base never shuffles
-    val plan = Snapshots.read(spark, root).queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"deletes must apply as a broadcast anti join:\n$plan")
+    // the read-side apply is ONE MOR scan with the keys inline — no
+    // join and no exchange of any kind: the base never shuffles
+    val plan = Snapshots.read(spark, root).queryExecution.executedPlan
+    val morScans = plan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+        if b.scan.description().contains("MOR scan") => b.scan.description()
+    }
+    assert(morScans.size == 1 &&
+      morScans.head.contains(s"${snap2.deletes.size} delete file(s), inline keys") &&
+      !plan.toString.contains("Exchange"),
+      s"deletes must apply inside one MOR scan with no exchange:\n$plan")
     // stacked deletes compose
     deleteIds(root, 0L, 1L)
     assert(Snapshots.read(spark, root).count() == 6)
@@ -394,12 +400,11 @@ class Round9OpsSpec extends SparkSpec {
     // pruned read with the delete pending: delete-applied rows of ONLY
     // the requested partition — no rewrite-first required
     val pruned = Snapshots.readPartitionPruned(spark, root, "p", Seq("1"))
-    // inputFiles spans the base scan AND the delete-key scans (the
-    // anti-join side carries no partition segment) — the pin is that
-    // no OTHER partition's data file leaks into the plan
-    assert(!pruned.inputFiles.toSeq.exists(_.contains("/p=0/")),
+    // the pin is that no OTHER partition's data file leaks into the
+    // plan (the delete keys ride inside the MOR scan, not as files)
+    assert(!plannedFiles(pruned).exists(_.contains("/p=0/")),
       "pruning must still drop non-matching partitions with deletes pending")
-    assert(pruned.inputFiles.toSeq.exists(_.contains("/p=1/")))
+    assert(plannedFiles(pruned).exists(_.contains("/p=1/")))
     assert(pruned.select($"id").as[Long].collect().toSet ==
       Set(1L, 5L, 7L, 9L), "the pending delete must apply to the pruned read")
     // version scoping survives pruning: re-append id=3 AFTER the delete
