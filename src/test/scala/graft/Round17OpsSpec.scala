@@ -275,9 +275,9 @@ class Round17OpsSpec extends SparkSpec {
       ("delete", 160L, 1600L)),
       s"feed must be the exact keyed diff: $got")
     // THE plan shape: only the touched block (whose stats admit the
-    // delta keys), the v6 file, and the delete-key parquet enter the
-    // plan — blocks 0/2/3 are never referenced, so the former
-    // O(table) full-outer state join is gone
+    // delta keys) and the v6 file enter the table scans — blocks 0/2/3
+    // are never referenced, so the former O(table) full-outer state
+    // join is gone
     val planned = plannedFiles(feed).map(_.stripPrefix("file:").stripPrefix("//"))
       .map(f => if (f.startsWith("/")) f else s"/$f").toSet
     val leaked = untouched.filter(u => planned.exists(_.endsWith(u)))
