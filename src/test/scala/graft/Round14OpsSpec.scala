@@ -203,7 +203,7 @@ class Round14OpsSpec extends SparkSpec {
     assert(spark.sql(s"SELECT sum(id) FROM $cat.$db.big").as[Long].head() == expect)
   }
 
-  test("catalog read of a partitionBy-staged direct-API root recovers the partition column") {
+  test("catalog read of a partitionBy-staged direct-API root recovers the column") {
     val wh = Qx.tmpOut("r14partwh", sf())
     val root = s"$wh/default/pdirect"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
