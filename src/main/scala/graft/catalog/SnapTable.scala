@@ -405,7 +405,7 @@ class GraftTable(tableName: String, val root: String,
     require(names.forall(ps.fieldNames.contains),
       s"unknown partition column(s): ${names.mkString(",")}")
     val rows = GraftScans.partitionValuesFor(
-      snap.map(_.files).getOrElse(Nil), ps)
+      snap.map(_.files).getOrElse(Nil), ps, absentReadsNull = meta.isEmpty)
     val nameOrds = names.map(ps.fieldIndex)
     rows.filter(r => nameOrds.indices.forall { i =>
       val dt = ps.fields(nameOrds(i)).dataType
@@ -500,7 +500,8 @@ class GraftTable(tableName: String, val root: String,
       retiredBucketSpec.filterNot(s => phys.contains(s._1)))
     new GraftStreamableScanBuilder(
       GraftScans.builder(spark, sc, snap, options, priors, partSchema,
-        dropChains, dropTypes, bucketForPrune, transSpec, remapped = phys),
+        dropChains, dropTypes, bucketForPrune, transSpec, remapped = phys,
+        absentReadsNull = meta.isEmpty),
       root, sc, priors, pinned.isDefined, snap, options, partCols, bucketSpec)
   }
 
@@ -1089,7 +1090,8 @@ private[catalog] object GraftScans {
       bucketSpec: Option[(String, Int)] = None,
       transformSpec: Option[(SnapTransform.Spec, DataType)] = None,
       emitRowId: Boolean = false,
-      remapped: Map[String, String] = Map.empty): ScanBuilder = {
+      remapped: Map[String, String] = Map.empty,
+      absentReadsNull: Boolean = false): ScanBuilder = {
     val files = snap.map(_.files).getOrElse(Nil)
     if (files.isEmpty) new EmptyScanBuilder(tableSchema)
     else {
@@ -1100,7 +1102,7 @@ private[catalog] object GraftScans {
       if (deletes.isEmpty && posDels.isEmpty && !emitRowId) {
         if (priors.isEmpty && remapped.isEmpty)
           parquetBuilder(spark, files, tableSchema, options,
-            statsRaw, blooms, partSchema, bucketSpec, transformSpec)
+            statsRaw, blooms, partSchema, bucketSpec, transformSpec, absentReadsNull)
         else new RenameAwareScanBuilder(spark, tableSchema, priors,
           files, options, statsRaw, blooms, partSchema, bucketSpec,
           transformSpec, remapped)
@@ -1116,7 +1118,8 @@ private[catalog] object GraftScans {
         new MorScanBuilder(spark, tableSchema, snap.get, options, priors,
           dropChains, dropTypes, emitRowId = emitRowId, remapped = remapped,
           partSchema = StructType(partSchema.fields.filter(f =>
-            tableSchema.fieldNames.contains(f.name))))
+            tableSchema.fieldNames.contains(f.name))),
+          absentReadsNull = absentReadsNull)
       }
     }
   }
@@ -1150,7 +1153,8 @@ private[catalog] object GraftScans {
       blooms: Map[String, Seq[String]] = Map.empty,
       partSchema: StructType = new StructType(),
       bucketSpec: Option[(String, Int)] = None,
-      transformSpec: Option[(SnapTransform.Spec, DataType)] = None): ParquetScanBuilder = {
+      transformSpec: Option[(SnapTransform.Spec, DataType)] = None,
+      absentReadsNull: Boolean = false): ParquetScanBuilder = {
     // .partitionBy-staged files carry col=value path segments whose
     // columns exist ONLY in the path — without a partition schema
     // (declared `PARTITIONED BY`, or inferred from the paths of an
@@ -1173,7 +1177,7 @@ private[catalog] object GraftScans {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val spec =
       if (partSchema.isEmpty) PartitionSpec.emptySpec
-      else partitionSpecFor(files, partSchema)
+      else partitionSpecFor(files, partSchema, absentReadsNull)
     val index =
       if (statsRaw.isEmpty && blooms.isEmpty && partSchema.isEmpty &&
           bucketSpec.isEmpty && transformSpec.isEmpty)
@@ -1208,7 +1212,7 @@ private[catalog] object GraftScans {
     * the declared partition types. Metadata-only — the manifest IS the
     * listing, exactly like the flat index. */
   private def partitionSpecFor(files: Seq[String],
-      partSchema: StructType): PartitionSpec = {
+      partSchema: StructType, absentReadsNull: Boolean): PartitionSpec = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
     // qualify like the index qualifies its leaf dirs, or the
     // PartitionPath→children lookup misses on the scheme
@@ -1221,29 +1225,43 @@ private[catalog] object GraftScans {
       .map { case (dir, _) =>
         org.apache.spark.sql.execution.datasources.PartitionPath(
           InternalRow.fromSeq(
-            partitionValuesOf(dir, partSchema).toIndexedSeq), qualified(dir))
+            partitionValuesOf(dir, partSchema, absentReadsNull).toIndexedSeq),
+          qualified(dir))
       }
     PartitionSpec(partSchema, partitions)
   }
 
-  /** Parse one partition directory's `col=value` segments into typed
-    * catalyst values (declared order). */
-  private[catalog] def partitionValuesOf(dir: String,
-      partSchema: StructType): Array[Any] = {
+  /** One partition directory's `col=value` segments below its version
+    * dir, unescaped. */
+  private def segmentsOf(dir: String): Map[String, String] = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
-    val rel = dir.drop(baseDirOfPath(dir).length)
-    val segs = rel.split('/').filter(_.contains('=')).map { s =>
+    dir.drop(baseDirOfPath(dir).length).split('/').filter(_.contains('=')).map { s =>
       val i = s.indexOf('=')
       unescapePathName(s.substring(0, i)) -> unescapePathName(s.substring(i + 1))
     }.toMap
+  }
+
+  /** Parse one partition directory's `col=value` segments into typed
+    * catalyst values (declared order). A declared identity column must
+    * carry its segment in every dir; `absentReadsNull` (an undeclared
+    * root's path-inferred schema, [[inferPartSchema]]) lets an era lack
+    * one — the evolved layout. */
+  private[catalog] def partitionValuesOf(dir: String,
+      partSchema: StructType, absentReadsNull: Boolean = false): Array[Any] = {
+    val segs = segmentsOf(dir)
     partSchema.fields.map { f =>
       segs.get(f.name) match {
-        // a dir without the segment reads NULL — the evolved layout: an
-        // era staged before the column joined the layout (an undeclared
-        // root's later `.partitionBy(a, b)`, a transform adopted later)
-        // or after it left (a RETIRED bucket stages flat); transform
-        // pruning keeps such files conservatively
-        case None => null
+        // the synthetic transform ordinal is nullable BY DESIGN: a
+        // pre-evolution file has no segment (the layout was adopted
+        // later) and reads as NULL — pruning keeps it conservatively.
+        // The synthetic bucket id is nullable the mirrored way: a
+        // post-RETIREMENT file stages flat and reads as NULL.
+        case None if absentReadsNull ||
+          f.name == graft.sources.Snapshots.transformPathCol ||
+          f.name == graft.sources.Snapshots.bucketPathCol =>
+          null
+        case None => throw new IllegalStateException(
+          s"partitioned table file dir $dir lacks a ${f.name}=<value> segment")
         case Some(raw) if raw ==
           org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME =>
           null
@@ -1261,12 +1279,12 @@ private[catalog] object GraftScans {
     * Distinctness by the escaped fragment string (stable across eras);
     * metadata-only, like every other manifest-derived listing. */
   private[catalog] def partitionValuesFor(files: Seq[String],
-      partSchema: StructType): Seq[InternalRow] =
+      partSchema: StructType, absentReadsNull: Boolean = false): Seq[InternalRow] =
     files.groupBy(f => Paths.get(f).getParent.toString).keys.toSeq
       .map(dir => dir.drop(baseDirOfPath(dir).length) -> dir).toMap
       .values.toSeq.sorted
       .map(dir => InternalRow.fromSeq(
-        partitionValuesOf(dir, partSchema).toIndexedSeq))
+        partitionValuesOf(dir, partSchema, absentReadsNull).toIndexedSeq))
 
   /** Identity partition schema of an UNDECLARED root, from its files'
     * `col=value` segments: each era (version) dir is inferred by
@@ -1274,9 +1292,13 @@ private[catalog] object GraftScans {
     * typing a per-era `spark.read.option("basePath", era)` read applies —
     * and the eras merge by name in first-appearance order, a conflicting
     * type widened as a union of those per-era reads would widen it. An
-    * era lacking a column reads NULL for it ([[partitionValuesOf]]).
-    * The listing answers from [[ManifestStatusCache]]: driver-only, no
-    * job. Bucket/transform segments are layout details, never columns. */
+    * era lacking a column reads NULL for it ([[partitionValuesOf]]) —
+    * right only while its files lack the column too, so a file that
+    * stores it as data (a flat era, then a later `.partitionBy` on that
+    * column) refuses rather than reading NULL. The listing answers from
+    * [[ManifestStatusCache]] and the check from memoized footers:
+    * driver-only, no job. Bucket/transform segments are layout
+    * details, never columns. */
   private[catalog] def inferPartSchema(spark: SparkSession,
       files: Seq[String]): StructType = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -1285,7 +1307,7 @@ private[catalog] object GraftScans {
         new InMemoryFileIndex(classic, fs.map(new org.apache.hadoop.fs.Path(_)),
           Map("basePath" -> era), None, ManifestStatusCache).partitionSchema.fields
       }
-    StructType(perEra.foldLeft(Vector.empty[org.apache.spark.sql.types.StructField]) {
+    val inferred = StructType(perEra.foldLeft(Vector.empty[org.apache.spark.sql.types.StructField]) {
       (acc, f) => acc.indexWhere(_.name == f.name) match {
         case -1 => acc :+ f
         case i => acc.updated(i, acc(i).copy(dataType =
@@ -1295,6 +1317,21 @@ private[catalog] object GraftScans {
       }
     }.filterNot(f => f.name == Snapshots.bucketPathCol ||
       f.name == Snapshots.transformPathCol))
+    files.foreach { f =>
+      val lacking = inferred.fieldNames.filterNot(
+        segmentsOf(Paths.get(f).getParent.toString).contains)
+      if (lacking.nonEmpty) {
+        val stored = Snapshots.footerSparkSchema(f)
+          .getOrElse(spark.read.parquet(f).schema)
+        lacking.find(stored.fieldNames.contains).foreach { c =>
+          throw new IllegalStateException(
+            s"column $c is a $c=<value> path segment in some eras of this " +
+              s"root but a data column of $f, whose dir lacks the segment; " +
+              "a path-partitioned read would return NULL for its stored values")
+        }
+      }
+    }
+    inferred
   }
 
   /** The era (version) dir a committed file was staged under. */
@@ -2107,7 +2144,8 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
     dropTypes: Map[String, DataType] = Map.empty,
     emitRowId: Boolean = false,
     remapped: Map[String, String] = Map.empty,
-    partSchema: StructType = new StructType())
+    partSchema: StructType = new StructType(),
+    absentReadsNull: Boolean = false)
   extends ScanBuilder with SupportsPushDownRequiredColumns
   with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
 
@@ -2165,7 +2203,7 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
   private val eraBuilders = eraSplit.map { case (plain, _, _) =>
     if (plain.isEmpty) None
     else Some(GraftScans.parquetBuilder(spark, plain, tableSchema, options,
-      snap.statsRaw, snap.blooms, partSchema))
+      snap.statsRaw, snap.blooms, partSchema, absentReadsNull = absentReadsNull))
   }
 
   private val rowIdxField = org.apache.spark.sql.types.StructField(

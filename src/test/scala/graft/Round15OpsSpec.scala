@@ -78,6 +78,7 @@ class Round15OpsSpec extends SparkSpec {
       == Seq("insert"))
     assert(fast.select($"k").as[Long].collect().sorted.toSeq == (5L until 8L))
     val added = Snapshots.changedFiles(root, 1L, v2).toSet
+    assert(plannedFiles(fast).nonEmpty, "the append-only feed must plan its files")
     assert(plannedFiles(fast).forall(f => added.contains(f.stripPrefix("file://"))),
       s"append-only feed must read only the added files: ${plannedFiles(fast)} vs $added")
     // rewrite: delete k<2, update v for k>=6

@@ -280,6 +280,7 @@ class Round17OpsSpec extends SparkSpec {
     // join is gone
     val planned = plannedFiles(feed).map(_.stripPrefix("file:").stripPrefix("//"))
       .map(f => if (f.startsWith("/")) f else s"/$f").toSet
+    assert(planned.nonEmpty, "the feed must plan its files")
     val leaked = untouched.filter(u => planned.exists(_.endsWith(u)))
     assert(leaked.isEmpty,
       s"untouched files must not enter a rewrite-crossing feed plan: $leaked")

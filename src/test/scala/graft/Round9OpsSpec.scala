@@ -153,6 +153,7 @@ class Round9OpsSpec extends SparkSpec {
     // the delta read plans over ONLY post-v1 files — the base is
     // neither re-listed nor re-scanned
     val v1pfx = Snapshots.versionPrefix(v1)
+    assert(plannedFiles(delta).nonEmpty, "the delta read must plan its files")
     assert(plannedFiles(delta).forall(!_.contains(v1pfx)),
       s"delta read touched base files: ${plannedFiles(delta)}")
     // fromVersion = 0 means "since the beginning" = the whole head

@@ -64,6 +64,59 @@ class SnapshotReadPathSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(sl)
   }
 
+  /** Messages along a failure's cause chain. */
+  private def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+
+  private def catalogOver(name: String): String = {
+    val cat = s"snap_readpath_$name"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", Qx.tmpOut(s"readpath_$name", sf()))
+    cat
+  }
+
+  test("a column stored as data in one era and as a partitionBy path in another refuses") {
+    val root = freshRoot("flatthenparted")
+    def rows(r: Seq[Long]) =
+      r.toDF("id").select($"id", ($"id" % 3).cast("string").as("p"))
+    // era 1 stores p in its data files; era 2 moves p into the path
+    val v1 = Snapshots.commit(root)(out => rows(0L until 10L).write.mode("append").parquet(out))
+    Snapshots.commitAppend(root)(out =>
+      rows(10L until 20L).write.partitionBy("p").mode("append").parquet(out))
+    val e = intercept[Exception](Snapshots.read(spark, root).collect())
+    assert(messages(e).exists(_.contains("p=<value> path segment in some eras")),
+      s"expected the mixed-layout refusal, got: ${messages(e)}")
+    // the flat era alone still reads its stored values
+    assert(Snapshots.readAt(spark, root, v1).as[(Long, String)].collect().toSet ==
+      (0L until 10L).map(i => (i, (i % 3).toString)).toSet)
+  }
+
+  test("a declared PARTITIONED BY table refuses a flat direct-API commit") {
+    val cat = catalogOver("declpart")
+    spark.sql(s"DROP TABLE IF EXISTS $cat.default.dp")
+    spark.sql(s"CREATE TABLE $cat.default.dp (id BIGINT, side INT) PARTITIONED BY (side)")
+    spark.sql(s"INSERT INTO $cat.default.dp SELECT id, CAST(id % 2 AS INT) FROM range(10)")
+    Snapshots.commitAppend(s"${Qx.tmpOut("readpath_declpart", sf())}/default/dp")(out =>
+      spark.range(10, 20).select($"id", ($"id" % 2).cast("int").as("side"))
+        .write.mode("append").parquet(out))
+    val e = intercept[Exception](spark.sql(s"SELECT * FROM $cat.default.dp").collect())
+    assert(messages(e).exists(_.contains("lacks a side=<value> segment")),
+      s"expected the missing-segment refusal, got: ${messages(e)}")
+  }
+
+  test("a declared unpartitioned table refuses partitionBy-staged files") {
+    val cat = catalogOver("declflat")
+    spark.sql(s"DROP TABLE IF EXISTS $cat.default.df")
+    spark.sql(s"CREATE TABLE $cat.default.df (id BIGINT, side INT)")
+    spark.sql(s"INSERT INTO $cat.default.df SELECT id, CAST(id % 2 AS INT) FROM range(10)")
+    Snapshots.commitAppend(s"${Qx.tmpOut("readpath_declflat", sf())}/default/df")(out =>
+      spark.range(10, 20).select($"id", ($"id" % 2).cast("int").as("side"))
+        .write.partitionBy("side").mode("append").parquet(out))
+    val e = intercept[Exception](spark.sql(s"SELECT * FROM $cat.default.df").collect())
+    assert(messages(e).exists(_.contains("declares no partition columns")),
+      s"expected the identity-layout refusal, got: ${messages(e)}")
+  }
+
   test("pruned reads of a partitionBy root with stacked deletes plan one MOR scan, inline or lazy") {
     val root = freshRoot("prunemor")
     def rows(r: Seq[Long]) =
