@@ -113,9 +113,10 @@ object PlanAudit {
       """Keyed MOR on a bucket layout (r20): DELETE commits key files
         |only (no data movement); UPDATE's delta write stages insert
         |halves under _gbucket= via the dynamic-partition task writer.
-        |Expect the head read to be the MOR era scan (flat over
+        |Expect the head read to be one MOR scan (flat over
         |derived-layout files — value-exact, segment pruning paused)
-        |probing each era's delete-key set per row, no join.""".stripMargin,
+        |probing the delete-key covers per row under each file's
+        |sequence number, no join.""".stripMargin,
     "dedup_embedding_cosine" ->
       """Banded near-dup (r4): pair generation keyed on (label, integer
         |LSH bucket), never label alone — expect the self-join's equi
@@ -467,11 +468,11 @@ object PlanAudit {
         |commit stages the rewritten rows plus a delete file SCOPED to
         |pre-existing files (DeleteFile.coversBelow, Iceberg v2's
         |equality-delete sequence rule), then a MOR DELETE stacks on
-        |the post-update values. Expect the head read to group files by
-        |era — the base files anti-join BOTH delete sets while the
-        |upsert's own rows anti-join only the later delete — unioned,
-        |then the agg; every anti join is a broadcast of O(touched
-        |keys). Update cost is O(matching rows) written at any table
+        |the post-update values. Expect the head read to be ONE MOR scan
+        |over every file — the base files' rows meet BOTH deletes while
+        |the upsert's own rows meet only the later one, by each file's
+        |sequence number against each key's newest delete version —
+        |then the agg, no join. Update cost is O(matching rows) written at any table
         |size; the COW twin (sql_update_delete) pays a full table pass
         |instead and the oracle pins both to the same answer.""".stripMargin,
     "sql_time_travel" ->
@@ -541,12 +542,12 @@ object PlanAudit {
       """Merge-on-read DELETE (r9): two DELETE statements commit tiny
         |delete-key files (#del manifest lines) — base files never move
         |(spec-pinned identical file list). Expect the head read to be
-        |the base scan + ONE BroadcastHashJoin LeftAnti against the
-        |union of delete keys (broadcast = O(deleted keys), the base
-        |side never shuffles), then the usual agg. Statement cost is
+        |ONE MOR scan probing the in-memory delete keys per row (shipped
+        |inline = O(deleted keys), the base side never shuffles), then
+        |the usual agg. Statement cost is
         |O(matching rows) written; at 100 TB deleting a key costs
         |kilobytes vs copy-on-write's full rewrite (sql_update_delete
-        |is the COW contrast) — the read-side anti join is the rent
+        |is the COW contrast) — the read-side key probe is the rent
         |until a rewrite commit absorbs the deletes (also spec-pinned,
         |as is vacuum keeping referenced delete files).""".stripMargin,
     "sql_update_delete" ->
@@ -614,8 +615,8 @@ object PlanAudit {
         |stacked delete files — expect the compaction commit to move
         |O(deleted keys) (the distinct-union of the mergeable delete
         |parquets, coalesced to one file) and ZERO table data; the
-        |post-compaction read plans the SAME era structure in one MOR
-        |scan with fewer delete files. Era-straddling deletes (a re-insert between
+        |post-compaction read plans the same one MOR scan with fewer
+        |delete files. Era-straddling deletes (a re-insert between
         |them) must stay apart — merging across the boundary would
         |re-hide re-inserted keys (Round14OpsSpec pins it, now for
         |composite keys too).""".stripMargin,
@@ -670,8 +671,8 @@ object PlanAudit {
       """Partition pruning COMPOSED with pending MOR deletes (r13):
         |manifest-level partition pruning first (metadata string match),
         |then the deletes applied inside ONE MOR scan over only the
-        |surviving files' eras. Expect one BatchScan naming its eras and
-        |delete files, and no join —
+        |surviving files. Expect one BatchScan naming its delete files,
+        |and no join —
         |the delete never un-prunes a partition, and the pruned read
         |applies exactly the deletes whose scope covers it.""".stripMargin,
     "cdc_merge_sql" ->
@@ -739,8 +740,8 @@ object PlanAudit {
     "sql_evolution_mor" ->
       """Rename + widen of a merge-on-read KEY with deletes pending
         |(r16) — the composition Iceberg needs field-ids for, carried
-        |here by the rename ledger. Expect the MOR scan shape: per-era
-        |parquet scans under the physical union schema, the prior-name
+        |here by the rename ledger. Expect the MOR scan shape: one
+        |parquet scan under the physical union schema, the prior-name
         |coalesce folding `k` into `ok` BEFORE the row-level delete
         |filter, delete keys loaded once (narrow files upcast by footer
         |type) and applied as in-memory sets, then the aggregate. The
@@ -797,7 +798,7 @@ object PlanAudit {
         |metadata work (manifest-line set difference + quiet-dir
         |listing — zero Spark jobs), so the audited plan is the
         |POST-SWEEP read: expect the ordinary MOR catalog scan over the
-        |v2 head (the %5 rewrite's files), delete-era anti joins
+        |v2 head (the %5 rewrite's files), its pending deletes
         |untouched by the sweep, two-phase HashAggregate above. A sweep
         |that ate a referenced file would surface here as a missing
         |input file, not a plan change — the oracle's row recount is
@@ -858,7 +859,7 @@ object PlanAudit {
         |aggregations at any scale.""".stripMargin,
     "sql_evolution_drop" ->
       """DROP of the column keying every pending MOR delete (r17 — the
-        |lifted refusal). Expect the same per-era MOR row-filter scan
+        |lifted refusal). Expect the same one MOR row-filter scan
         |shape as sql_evolution_mor: the dropped key is read as a
         |hidden shadow field (dropchain-coalesced across its rename
         |eras, droptype-width), consumed by the delete filter, never

@@ -279,8 +279,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       s"'${Snapshots.transformPathCol}' is a reserved column name (the " +
         "synthetic transform-layout path segment)")
     // identity PARTITIONED BY still excludes merge-on-read: identity
-    // columns live ONLY in file paths, and the MOR read path scans
-    // delete-era files flat. DERIVED layouts (bucket/transform) DO
+    // columns live ONLY in file paths, a layout the MOR paths do not
+    // serve. DERIVED layouts (bucket/transform) DO
     // compose with KEYED MOR (r20): the delta writer stages insert
     // halves under the synthetic segment and the source column stays a
     // data column, so flat MOR reads are value-exact (segment pruning
@@ -389,6 +389,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     *    upcast narrow files natively; anything lossy is rejected with
     *    a compact-first message. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
+    // the bucket-hash stamp records how committed `_gbucket` dirs were
+    // hashed; stamping or clearing it by hand makes pruning misread them
+    val bucketHashFixed = s"${SnapBucket.hashVerProp} is stamped at CREATE " +
+      "TABLE and names the hash the committed bucket directories were " +
+      "written under; it cannot be set or unset"
     val root = rootOf(ident)
     if (!exists(root)) throw new NoSuchTableException(ident)
     // the whole read→fold→write cycle holds the per-root meta lock:
@@ -761,6 +766,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           set.property() != SnapTransform.retiredProp,
           "the retired-layout ledger is maintained by UNSET TBLPROPERTIES " +
             "of the live layout, never set directly")
+        require(set.property() != SnapBucket.hashVerProp, bucketHashFixed)
         // PARTITION EVOLUTION entry point: a time/truncate transform
         // may be ADOPTED by a live table (unpartitioned or identity-
         // partitioned) because the segment is DERIVED — the source
@@ -801,7 +807,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         }
         // keyed MOR composes with DERIVED layouts (bucket/transform,
         // live or retired — the source column is a data column, so the
-        // MOR scan's flat delete-era reads are value-exact, r20) but
+        // MOR scan's flat reads are value-exact, r20) but
         // never with IDENTITY partitioning (those columns live only in
         // file paths) or positional MOR
         require(set.property() != GraftTable.morKeyProp ||
@@ -839,6 +845,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         require(rm.property() != GraftTable.partColsProp,
           "identity partition columns are fixed at CREATE TABLE " +
             "(committed files carry their values in the paths)")
+        require(rm.property() != SnapBucket.hashVerProp, bucketHashFixed)
         if (rm.property() == SnapBucket.prop)
           (sc, SnapBucket.of(pr).fold(pr - rm.property()) { case (c, n) =>
             pr - rm.property() + (SnapBucket.retiredProp -> SnapBucket.render(c, n)) })

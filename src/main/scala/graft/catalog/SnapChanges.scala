@@ -135,11 +135,13 @@ private[catalog] class ChangesTable(fullName: String, root: String)
   *    this kind never carries a bitmap.
   *
   * Delete sets ride as [[MorDeleteSet]] (lazy path form — each
-  * executor loads a set once through the shared soft cache). */
+  * executor loads a set once through the shared soft cache), applied
+  * under `newSeq`/`prevSeq`, the file group's sequence number in the
+  * version and in its parent. */
 private[catalog] final case class ChangePartition(inner: InputPartition,
   version: Long, changeType: String, dvBytes: Array[Byte],
-  kind: Int, newDels: Seq[MorDeleteSet] = Nil,
-  prevDels: Seq[MorDeleteSet] = Nil,
+  kind: Int, newDels: Seq[MorDeleteSet] = Nil, newSeq: Long = 0L,
+  prevDels: Seq[MorDeleteSet] = Nil, prevSeq: Long = 0L,
   // commit wall-clock micros from the version's #ts header (-1 = none)
   commitTs: Long = -1L) extends InputPartition
 
@@ -340,17 +342,17 @@ private[catalog] class ChangesMicroBatchStream(root: String,
     bos.toByteArray
   }
 
-  /** The keyed delete sets in `dels` applicable to file `f` under the
-    * MOR scoping rule (a delete covers files staged strictly before
-    * its cover version), as plan-serializable lazy [[MorDeleteSet]]s
-    * grouped by key-column tuple. Key columns must resolve in the
+  /** The keyed delete groups of `dels` covering file `f` at `snap`
+    * ([[MorDeleteSet.applies]] under the file's sequence number), as
+    * plan-serializable lazy [[MorDeleteSet]]s grouped by key-column
+    * tuple. Every delete in the sets covers every file sharing them,
+    * so any such file's number applies them. Key columns must resolve in the
     * CURRENT data schema (a renamed-away key spelling refuses toward
     * the batch row-CDF, which owns the ledger indirection). */
   private def applicableSets(snap: Snapshot, f: String,
       dels: Seq[Snapshots.DeleteFile]): Seq[MorDeleteSet] = {
-    def effVersion(p: String): Long =
-      snap.fileSeq.getOrElse(p, MorScanBuilder.fileVersion(p))
-    val applicable = dels.filter(d => effVersion(f) < d.coversBelow)
+    val applicable = dels.filter(d =>
+      MorDeleteSet.applies(d.coversBelow, snap.seqOf(f)))
     applicable.groupBy(_.keyCols).toSeq.sortBy(_._1.mkString(","))
       .map { case (kcs, group) =>
         kcs.foreach(k => require(dataSchema.fieldNames.contains(k),
@@ -360,8 +362,8 @@ private[catalog] class ChangesMicroBatchStream(root: String,
         // key ordinals index the SCAN's output row (partition-aware
         // scans re-order path-served columns last) — resolved by name
         MorDeleteSet(kcs.map(scanOutSchema.fieldIndex),
-          kcs.map(k => dataSchema(k).dataType),
-          inline = None, paths = group.map(_.path).sorted, keyNames = kcs)
+          kcs.map(k => dataSchema(k).dataType), inline = None,
+          files = group.map(d => d.path -> d.coversBelow).sorted, keyNames = kcs)
       }
   }
 
@@ -383,17 +385,20 @@ private[catalog] class ChangesMicroBatchStream(root: String,
       val ts = snap.ts.getOrElse(-1L)
       val byDels = files.groupBy(f => applicableSets(snap, f, snap.deletes))
       byDels.toSeq.sortBy(_._2.head).foreach { case (dels, fs) =>
+        val seq = snap.seqOf(fs.head)
         val (withDv, plain) = fs.partition(snap.posDeletes.contains)
         if (plain.nonEmpty)
           scanOver(plain).toBatch.planInputPartitions().foreach(p =>
             out += ChangePartition(p, v, "insert", Array.empty,
-              ChangePartition.Insert, prevDels = dels, commitTs = ts))
+              ChangePartition.Insert, prevDels = dels, prevSeq = seq,
+              commitTs = ts))
         // a DV-covered file plans ALONE so its partitions bind to one bitmap
         withDv.foreach { f =>
           val bm = bitmapsOf(snap, f).getOrElse(new org.roaringbitmap.RoaringBitmap)
           scanOver(Seq(f)).toBatch.planInputPartitions().foreach(p =>
             out += ChangePartition(p, v, "insert", serialize(bm),
-              ChangePartition.Insert, prevDels = dels, commitTs = ts))
+              ChangePartition.Insert, prevDels = dels, prevSeq = seq,
+              commitTs = ts))
         }
       }
     }
@@ -445,7 +450,9 @@ private[catalog] class ChangesMicroBatchStream(root: String,
               scanOver(fs).toBatch.planInputPartitions().foreach(p =>
                 out += ChangePartition(p, v, "delete", Array.empty,
                   ChangePartition.KeyDelta, newDels = newSets,
-                  prevDels = prevSets, commitTs = ts))
+                  newSeq = cur.seqOf(fs.head),
+                  prevDels = prevSets, prevSeq = prev.seqOf(fs.head),
+                  commitTs = ts))
             }
         }
         // POSITION-delete delta: newly hidden ordinals per file
@@ -545,15 +552,14 @@ private[catalog] class ChangesReaderFactory(inner: PartitionReaderFactory,
           new java.io.ByteArrayInputStream(cp.dvBytes)))
         Some(b)
       }
-    // resolve each group's key set ONCE per task (executor soft cache)
-    val newKeySets = cp.newDels.map(_.keys)
-    val prevKeySets = cp.prevDels.map(_.keys)
+    // resolve each group's covers ONCE per task (executor-wide cache)
+    val newCovers = cp.newDels.map(_.covers)
+    val prevCovers = cp.prevDels.map(_.covers)
     def keyHit(row: InternalRow, dels: Seq[MorDeleteSet],
-        sets: Seq[scala.collection.immutable.Set[Any]]): Boolean = {
+        covers: Seq[MorDeleteSet.Covers], seq: Long): Boolean = {
       var i = 0
       while (i < dels.length) {
-        val k = dels(i).keyOf(row)
-        if (k != null && sets(i).contains(k)) return true
+        if (dels(i).hides(row, covers(i), seq)) return true
         i += 1
       }
       false
@@ -570,13 +576,13 @@ private[catalog] class ChangesReaderFactory(inner: PartitionReaderFactory,
           val emit = cp.kind match {
             // the version's visible rows: not DV-hidden, not key-hidden
             case ChangePartition.Insert =>
-              !dvHit && !keyHit(row, cp.prevDels, prevKeySets)
+              !dvHit && !keyHit(row, cp.prevDels, prevCovers, cp.prevSeq)
             // exactly the newly-hidden ordinals
             case ChangePartition.PosDelta => dvHit
             // newly key-hidden rows that were previously visible
             case ChangePartition.KeyDelta =>
-              keyHit(row, cp.newDels, newKeySets) &&
-                !keyHit(row, cp.prevDels, prevKeySets)
+              keyHit(row, cp.newDels, newCovers, cp.newSeq) &&
+                !keyHit(row, cp.prevDels, prevCovers, cp.prevSeq)
             case other => throw new IllegalStateException(
               s"unknown change-partition kind $other")
           }

@@ -98,7 +98,7 @@ private[catalog] object SnapMetaTables {
       s.files.map { f =>
         val size = try Long.box(Files.size(Paths.get(f))) catch { case _: Exception => null }
         InternalRow(UTF8String.fromString(f),
-          s.fileSeq.getOrElse(f, MorScanBuilder.fileVersion(f)), size)
+          s.seqOf(f), size)
       }.toArray
     case "deletes" =>
       headOf(root).deletes.map(d => InternalRow(UTF8String.fromString(d.keyCol),

@@ -27,11 +27,12 @@ import scala.jdk.CollectionConverters._
   * pruning, planned over EXACTLY the manifest's files (no directory
   * listing, the store's metadata-only contract). When the snapshot
   * carries pending merge-on-read deletes, the scan switches to the
-  * delete-applying wrapper ([[MorScan]]): per-era parquet scans with
-  * the delete-key sets applied row-level in the readers — column
-  * pruning forwards, and era-invariant predicates forward to the
-  * per-era parquet builders for scan-level skipping (every predicate
-  * is still re-applied above the scan); only the batches come back
+  * delete-applying wrapper ([[MorScan]]): one parquet scan whose
+  * readers apply the delete-key covers row-level under each file's
+  * sequence number — column pruning forwards, and rename-invariant
+  * predicates forward to its parquet builder for scan-level skipping
+  * (every predicate is still re-applied above the scan); only the
+  * batches come back
   * row-based until the next rewrite absorbs the deletes (the same
   * transient degrade Iceberg v2 accepts for equality deletes).
   *
@@ -1062,16 +1063,17 @@ private[catalog] class GraftStreamingWrite(root: String,
   *  2. no pending deletes (the common case) → the raw
   *     [[ParquetScanBuilder]], i.e. Spark's own vectorized parquet
   *     scan with full pushdown over the manifest's file list;
-  *  3. pending merge-on-read deletes → [[MorScanBuilder]]: files group
-  *     by their applicable delete set (version-scoped, same eras as
-  *     [[Snapshots]]' own read path), one parquet scan per era, and
-  *     the delete-key sets apply ROW-LEVEL in wrapped readers. Column
-  *     pruning forwards (plus the forced key columns); era-invariant
-  *     predicates forward to each era's parquet builder for scan-level
-  *     skipping, while Spark re-applies all predicates above the scan,
-  *     so correctness never depends on the forwarded subset.
+  *  3. pending merge-on-read deletes → [[MorScanBuilder]]: one parquet
+  *     scan over every live file, each tagged with its sequence number,
+  *     and each key group's covers (key → newest delete version) apply
+  *     ROW-LEVEL in wrapped readers ([[DeleteFile.coversBelow]], the
+  *     sequence-number rule of Iceberg v2). Column pruning forwards
+  *     (plus the forced key columns); rename-invariant predicates
+  *     forward to the parquet builder for scan-level skipping, while
+  *     Spark re-applies all predicates above the scan, so correctness
+  *     never depends on the forwarded subset.
   *
-  * The delete-key sets are in-memory hash sets — the per-JVM-memory
+  * The delete-key covers are in-memory hash maps — the per-JVM-memory
   * shape Iceberg uses for equality deletes — all loaded by
   * [[DeleteKeyCache]], so planning schedules no Spark job. Small sets
   * (on-disk bytes ≤ `spark.graft.mor.inlineDeleteBytes`) load on the
@@ -1351,7 +1353,7 @@ private[catalog] object GraftScans {
     * predicates — the same keep-rule as `Snapshots.readStatsPruned`,
     * wired into [[InMemoryFileIndex.listFiles]] so it composes with
     * every scan shape built on [[parquetBuilder]] (plain, rename-aware,
-    * per-era MOR) and with all of [[ParquetScanBuilder]]'s pushdown
+    * MOR) and with all of [[ParquetScanBuilder]]'s pushdown
     * interfaces untouched. The decision is metadata-only (manifest
     * header lines already in memory; zero file I/O) and one level above
     * parquet's row-group zone maps: at 100 TB a selective non-partition
@@ -1946,20 +1948,24 @@ private[catalog] final class CoalescingColumnVector(dt: DataType,
       "struct coalescing runs on the row-based path")
 }
 
-/** One delete group ready for executor-side application: the key
-  * columns' ordinals/types in the era's read schema plus the key set
-  * in CATALYST form (UTF8String/Long/…, binary via
-  * [[DeleteKeyCache.setForm]]), so row values compare directly.
-  * Composite keys store `List(v1, v2, …)` elements. The set is either
-  * INLINE (loaded on the driver at plan time) or LAZY (`paths`
-  * non-empty: each executor loads it on first use), both through
-  * [[DeleteKeyCache]]. */
+/** One key group's pending equality deletes, ready for executor-side
+  * application: the key columns' ordinals/types in the scan's read
+  * schema plus the group's COVERS, a map from each deleted key to the
+  * newest [[DeleteFile.coversBelow]] among the group's delete files
+  * holding it. Keys are in CATALYST form (UTF8String/Long/…, binary via
+  * [[DeleteKeyCache.setForm]]), so row values compare directly;
+  * composite keys are `List(v1, v2, …)`. A row of a file with effective
+  * sequence number `seq` is deleted iff its key's cover is above `seq`
+  * ([[hides]]), so one map serves every file whatever its delete
+  * history. The covers are either INLINE (loaded on the driver at plan
+  * time) or LAZY (`files` non-empty: each executor loads them on first
+  * use), both through [[DeleteKeyCache]]. */
 private[catalog] final case class MorDeleteSet(keyOrdinals: Seq[Int],
-    keyTypes: Seq[DataType], inline: Option[scala.collection.immutable.Set[Any]],
-    paths: Seq[String], keyNames: Seq[String]) {
+    keyTypes: Seq[DataType], inline: Option[MorDeleteSet.Covers],
+    files: Seq[(String, Long)], keyNames: Seq[String]) {
 
-  def keys: scala.collection.immutable.Set[Any] =
-    inline.getOrElse(DeleteKeyCache.load(paths, keyNames, keyTypes))
+  def covers: MorDeleteSet.Covers =
+    inline.getOrElse(DeleteKeyCache.load(files, keyNames, keyTypes))
 
   /** The row's key value in set form — null when ANY component is null
     * (SQL equality: a null key never matches a delete). */
@@ -1977,12 +1983,31 @@ private[catalog] final case class MorDeleteSet(keyOrdinals: Seq[Int],
       }
       b.result()
     }
+
+  /** Whether this group deletes `row` of a file with sequence `seq`;
+    * `covers` is this set's [[covers]], resolved once by the caller. */
+  def hides(row: InternalRow, covers: MorDeleteSet.Covers, seq: Long): Boolean = {
+    val k = keyOf(row)
+    k != null && (covers.get(k) match {
+      case Some(cover) => MorDeleteSet.applies(cover, seq)
+      case None => false
+    })
+  }
 }
 
-/** The loader of delete-key sets for both sides of the inline gate
+private[catalog] object MorDeleteSet {
+  type Covers = scala.collection.immutable.Map[Any, Long]
+
+  /** The one delete-scoping rule: a delete committed with cover
+    * version `cover` applies to a file of effective sequence `seq`
+    * iff the file was staged before it. */
+  def applies(cover: Long, seq: Long): Boolean = seq < cover
+}
+
+/** The loader of delete-key covers for both sides of the inline gate
   * (driver at plan time, executors lazily): parquet-hadoop's example
   * Group API, so no Spark session, job or nested SQL execution. A
-  * delete file is immutable once staged, so its set is memoized per
+  * delete file is immutable once staged, so its key set is memoized per
   * JVM under its identity (path, size, mtime: a reused path misses)
   * plus the key spellings and DECLARED types it decodes to (after an
   * ALTER COLUMN widening it decodes again at the new width). Values
@@ -1999,29 +2024,40 @@ private[catalog] object DeleteKeyCache {
   private final case class FileKey(path: String, size: Long, mtime: Long,
       cols: Seq[String], types: Seq[DataType])
 
-  /** One file's set under `Seq(file)`, softly held; a group's union
-    * under its files, weakly held: shared while tasks use it, not kept
-    * for file combinations later eras never form again. */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    Seq[FileKey], java.lang.ref.Reference[KeySet]]()
+  /** Each file's key set, softly held. */
+  private val fileSets = new java.util.concurrent.ConcurrentHashMap[
+    FileKey, java.lang.ref.SoftReference[KeySet]]()
 
-  private def memo(ks: Seq[FileKey]): KeySet =
-    Option(cache.get(ks)).flatMap(r => Option(r.get())).getOrElse {
-      val s = ks match {
-        case Seq(k) => readFile(k)
-        case _ => ks.map(k => memo(Seq(k))).foldLeft(Set.empty[Any])(_ ++ _)
-      }
-      cache.put(ks, if (ks.size == 1) new java.lang.ref.SoftReference(s)
-        else new java.lang.ref.WeakReference(s))
+  /** A group's covers under its (file, cover) list, weakly held:
+    * shared while tasks use them, not kept for delete lists later
+    * snapshots never form again. */
+  private val groupCovers = new java.util.concurrent.ConcurrentHashMap[
+    Seq[(FileKey, Long)], java.lang.ref.WeakReference[MorDeleteSet.Covers]]()
+
+  private def keySet(k: FileKey): KeySet =
+    Option(fileSets.get(k)).flatMap(r => Option(r.get())).getOrElse {
+      val s = readFile(k)
+      fileSets.put(k, new java.lang.ref.SoftReference(s))
       s
     }
 
-  def load(paths: Seq[String], cols: Seq[String], types: Seq[DataType]): KeySet =
-    memo(paths.distinct.sorted.map { p =>
+  /** The covers of delete files given as (path, coversBelow) pairs. */
+  def load(files: Seq[(String, Long)], cols: Seq[String],
+      types: Seq[DataType]): MorDeleteSet.Covers = {
+    val ks = files.distinct.sortBy(_.swap).map { case (p, cover) =>
       val path = new org.apache.hadoop.fs.Path(p)
       val st = path.getFileSystem(Snapshots.hadoopConf).getFileStatus(path)
-      FileKey(p, st.getLen, st.getModificationTime, cols, types)
-    })
+      FileKey(p, st.getLen, st.getModificationTime, cols, types) -> cover
+    }
+    Option(groupCovers.get(ks)).flatMap(r => Option(r.get())).getOrElse {
+      // ascending covers: a key in several files keeps the newest
+      val b = Map.newBuilder[Any, Long]
+      ks.foreach { case (k, cover) => keySet(k).foreach(key => b += key -> cover) }
+      val covers = b.result()
+      groupCovers.put(ks, new java.lang.ref.WeakReference(covers))
+      covers
+    }
+  }
 
   /** Set form of a catalyst key component: binary wraps content-equal. */
   def setForm(v: Any): Any = v match {
@@ -2030,26 +2066,15 @@ private[catalog] object DeleteKeyCache {
   }
 
   private def readFile(k: FileKey): KeySet = {
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(k.path))
-      .withConf(Snapshots.hadoopConf)
-      .build()
-    // materialize eagerly under try/finally: a lazy iterator would leak
-    // the open file handle when a decoder throws mid-stream
-    try {
-      val out = Set.newBuilder[Any]
-      var g = reader.read()
-      if (g != null) {
-        val decs = k.cols.lazyZip(k.types).map(decoder(g.getType, _, _))
-        while (g != null) {
-          val row = g
-          out += (if (decs.size == 1) decs.head(row) else decs.map(_(row)).toList)
-          g = reader.read()
-        }
-      }
-      out.result()
-    } finally reader.close()
+    // materialized eagerly inside readGroups, which closes the file
+    // even when a decoder throws mid-stream
+    val out = Set.newBuilder[Any]
+    Snapshots.readGroups(k.path) { schema =>
+      val decs = k.cols.lazyZip(k.types).map(decoder(schema, _, _))
+      if (decs.size == 1) g => out += decs.head(g)
+      else g => out += decs.map(_(g)).toList
+    }
+    out.result()
   }
 
   /** Group → catalyst value (null when absent) for one key column,
@@ -2128,15 +2153,21 @@ private[catalog] object DeleteKeyCache {
   }
 }
 
-/** Merge-on-read catalog scan (shape 3 in [[GraftScans]]). `priors`
-  * composes RENAME COLUMN evolution into the same scan: renamed
-  * columns — INCLUDING delete-key columns — resolve across file eras
-  * by the prior-name coalesce ([[RenameAwareScanBuilder]]'s rule)
-  * before the delete filter runs, and each `#del` line's commit-time
-  * spelling resolves to its current name through the same ledger, so
-  * key ordinals always bind to the presented schema. ALTER COLUMN
-  * widening composes too: [[DeleteKeyCache]] decodes narrow staged key
-  * values at the declared type. */
+/** Merge-on-read catalog scan (shape 3 in [[GraftScans]]): ONE parquet
+  * scan over the snapshot's plain files, plus at most one over the
+  * files that need per-row (file, ordinal) identity, whatever the
+  * delete history. Each file carries its effective sequence number and
+  * each key group one cover map ([[MorDeleteSet]]), so the readers
+  * scope deletes per file with no grouping of files by delete set.
+  * `priors` composes RENAME COLUMN evolution into the same scan:
+  * renamed columns — INCLUDING delete-key columns — resolve across
+  * their spelling eras by the prior-name coalesce
+  * ([[RenameAwareScanBuilder]]'s rule) before the delete filter runs,
+  * and each `#del` line's commit-time spelling resolves to its current
+  * name through the same ledger, so key ordinals always bind to the
+  * presented schema. ALTER COLUMN widening composes too:
+  * [[DeleteKeyCache]] decodes narrow staged key values at the declared
+  * type. */
 private[catalog] class MorScanBuilder(spark: SparkSession,
     tableSchema: StructType, snap: Snapshot, options: CaseInsensitiveStringMap,
     priors: Map[String, Seq[String]] = Map.empty,
@@ -2150,9 +2181,6 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
   with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
 
   private var requested: StructType = tableSchema
-
-  private def effVersion(f: String): Long =
-    snap.fileSeq.getOrElse(f, MorScanBuilder.fileVersion(f))
 
   /** Files needing per-row (file, ordinal) identity: position-delete-
     * affected files, or EVERY file when this scan is the positional
@@ -2182,49 +2210,39 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
         s"pending delete files key column '$cur', which is neither " +
           "declared nor recorded in the droptype ledger")), nullable = true)
 
-  // group files into eras by applicable delete set (version scoping,
-  // [[DeleteFile.coversBelow]]) — eager, so the per-era parquet
-  // builders exist when filter pushdown arrives
-  private val eras: Seq[(Seq[String], Seq[DeleteFile])] = snap.files
-    .groupBy(f => snap.deletes.filter(d => effVersion(f) < d.coversBelow))
-    .toSeq.sortBy(_._2.min).map { case (dels, fs) => (fs, dels) }
+  private val (posFiles, plainFiles) = snap.files.partition(needsPos)
 
-  /** Per era: (plain files, pos files) — pos files read through a
-    * schema carrying the parquet readers' reserved row-index column
-    * (GENERATED with the true ordinal of each row in its file — exact
-    * under splits and row-group skipping; the machinery behind
-    * Spark's own _metadata.row_index). */
-  private val eraSplit: Seq[(Seq[String], Seq[String], Seq[DeleteFile])] =
-    eras.map { case (fs, dels) =>
-      (fs.filterNot(needsPos), fs.filter(needsPos), dels) }
-
-  // identity partition columns re-attach from the plain files' paths;
-  // pos-identity scans stay flat (positional MOR excludes PARTITIONED BY)
-  private val eraBuilders = eraSplit.map { case (plain, _, _) =>
-    if (plain.isEmpty) None
-    else Some(GraftScans.parquetBuilder(spark, plain, tableSchema, options,
+  // eager, so the builders exist when filter pushdown arrives; identity
+  // partition columns re-attach from the plain files' paths
+  private val plainBuilder =
+    if (plainFiles.isEmpty) None
+    else Some(GraftScans.parquetBuilder(spark, plainFiles, tableSchema, options,
       snap.statsRaw, snap.blooms, partSchema, absentReadsNull = absentReadsNull))
-  }
 
   private val rowIdxField = org.apache.spark.sql.types.StructField(
     GraftRowId.RowIdxTmp, org.apache.spark.sql.types.LongType, nullable = true)
 
-  private val posBuilders = eraSplit.map { case (_, pos, _) =>
-    if (pos.isEmpty) None
-    else Some(GraftScans.parquetBuilder(spark, pos,
+  /** The pos files read through a schema carrying the parquet readers'
+    * reserved row-index column (GENERATED with the true ordinal of each
+    * row in its file — exact under splits and row-group skipping; the
+    * machinery behind Spark's own _metadata.row_index). Flat: positional
+    * MOR excludes PARTITIONED BY. */
+  private val posBuilder =
+    if (posFiles.isEmpty) None
+    else Some(GraftScans.parquetBuilder(spark, posFiles,
       StructType(tableSchema.fields :+ rowIdxField), options,
       snap.statsRaw, snap.blooms))
-  }
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     requested = requiredSchema
 
-  /** Era-invariant predicates (deterministic, touching no renamed
-    * column) forward to EVERY era's parquet builder for scan-level
-    * skipping — the delete filter above only removes MORE rows, so a
-    * pushed skip can never surface a row the un-pushed scan would
-    * hide. All predicates stay residual; Spark re-applies them above
-    * the scan, so correctness never rides on the forwarded subset. */
+  /** Predicates that touch no renamed column (deterministic ones) read
+    * the same under every spelling era, so they forward to the plain
+    * parquet builder for scan-level skipping — the delete filter above
+    * only removes MORE rows, so a pushed skip can never surface a row
+    * the un-pushed scan would hide. All predicates stay residual; Spark
+    * re-applies them above the scan, so correctness never rides on the
+    * forwarded subset. */
   override def pushFilters(
       filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
@@ -2232,16 +2250,16 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
       remapped.keySet.map(_.toLowerCase)
     val eraInvariant = filters.filter(f => f.deterministic &&
       f.references.forall(a => !renamed.contains(a.name.toLowerCase)))
-    // pos-era scans take NO pushed predicates: the row-index generator
+    // the pos scan takes NO pushed predicates: the row-index generator
     // is pushdown-exact, but ordinal-hiding is correctness-bearing, so
     // the conservative choice costs only pushdown on affected files
     // until compaction absorbs their posdels
-    eraBuilders.flatten.foreach(_.pushFilters(eraInvariant))
+    plainBuilder.foreach(_.pushFilters(eraInvariant))
     filters
   }
 
   override def pushedFilters: Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
-    eraBuilders.flatten.headOption.map(_.pushedFilters).getOrElse(Array.empty)
+    plainBuilder.map(_.pushedFilters).getOrElse(Array.empty)
 
   override def build(): Scan = {
     // Inline-vs-lazy gate (dedicated conf, NOT the broadcast
@@ -2301,63 +2319,51 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
       if (physSchema.length == readSchema.length && remapped.isEmpty) None
       else Some(exprs)
 
-    // pos-era variants: the physical schema gains the row-index field
+    // pos variants: the physical schema gains the row-index field
     // LAST, and the coalesce projection (when present) carries it
     // through unchanged
     val posExprs = coalesceExprs.map(es => es :+
       (BoundReference(physSchema.length, org.apache.spark.sql.types.LongType,
         true): org.apache.spark.sql.catalyst.expressions.Expression))
-    val eraScans = eraSplit.lazyZip(eraBuilders).lazyZip(posBuilders)
-      .map { case ((_, _, dels), pb, ppb) =>
-      val delSets = dels.groupBy(_.keyCol).toSeq.sortBy(_._1).map { case (_, ds) =>
-        // file-physical spellings load the staged parquet; CURRENT
-        // names bind the row-side ordinals/types — the two sides of
-        // the rename indirection
-        val kcs = ds.head.keyCols
-        val curs = kcs.map(currentName)
-        val types = curs.map(declaredField(_).dataType)
-        val paths = ds.map(_.path)
-        MorDeleteSet(curs.map(readSchema.fieldIndex), types,
-          if (inlineMode) Some(DeleteKeyCache.load(paths, kcs, types)) else None,
-          if (inlineMode) Nil else paths, kcs)
-      }
-      val plainScan = pb.map { b =>
-        b.pruneColumns(if (coalesceExprs.isDefined) physSchema else readSchema)
-        b.build()
-      }
-      val posScan = ppb.map { b =>
-        b.pruneColumns(StructType(
-          (if (coalesceExprs.isDefined) physSchema else readSchema)
-            .fields :+ rowIdxField))
-        b.build()
-      }
-      MorEra(plainScan, posScan, delSets)
+    val delSets = snap.deletes.groupBy(_.keyCol).toSeq.sortBy(_._1).map { case (_, ds) =>
+      // file-physical spellings load the staged parquet; CURRENT
+      // names bind the row-side ordinals/types — the two sides of
+      // the rename indirection
+      val kcs = ds.head.keyCols
+      val curs = kcs.map(currentName)
+      val types = curs.map(declaredField(_).dataType)
+      val files = ds.map(d => d.path -> d.coversBelow)
+      MorDeleteSet(curs.map(readSchema.fieldIndex), types,
+        if (inlineMode) Some(DeleteKeyCache.load(files, kcs, types)) else None,
+        if (inlineMode) Nil else files, kcs)
     }
-    new MorScan(eraScans, requested, readSchema, coalesceExprs, posExprs,
+    val plainScan = plainBuilder.map { b =>
+      b.pruneColumns(if (coalesceExprs.isDefined) physSchema else readSchema)
+      b.build()
+    }
+    val posScan = posBuilder.map { b =>
+      b.pruneColumns(StructType(
+        (if (coalesceExprs.isDefined) physSchema else readSchema)
+          .fields :+ rowIdxField))
+      b.build()
+    }
+    new MorScan(plainScan, posScan, delSets,
+      snap.files.map(f =>
+        new org.apache.hadoop.fs.Path(f).toUri.getPath -> snap.seqOf(f)).toMap,
+      snap.deletes.map(_.coversBelow).maxOption.getOrElse(Long.MinValue),
+      requested, readSchema, coalesceExprs, posExprs,
       snap.posDeletes, emitRowId, snap.deletes.map(_.path).distinct.size,
       inlineMode)
   }
 }
 
 private[catalog] object MorScanBuilder {
-  private val fileVersionRe = """.*/v(\d{8})_[^/]*/.*""".r
-  def fileVersion(path: String): Long = path match {
-    case fileVersionRe(v) => v.toLong
-    case _                => 0L
-  }
-
   /** On-disk delete-file bytes up to which the key sets are loaded
     * driver-side and shipped inline with the plan; above, executors
     * load them lazily ([[DeleteKeyCache]]). */
   val InlineDeleteBytesKey = "spark.graft.mor.inlineDeleteBytes"
   val InlineDeleteBytesDefault = "8m"
 }
-
-/** One delete-era's scans: the plain files' delegate scan and the
-  * position-identity scan of its posdel-affected (or row-id-emitting)
-  * files, plus the era's equality-delete sets. */
-private[catalog] final case class MorEra(plain: Option[Scan],
-  pos: Option[Scan], delSets: Seq[MorDeleteSet])
 
 /** Row-id metadata column names and the parquet readers' reserved
   * row-index temp column (populated by the readers with each row's
@@ -2369,14 +2375,24 @@ private[catalog] object GraftRowId {
   val RowIdxTmp = "_tmp_metadata_row_index"
 }
 
-/** The delete-applying scan: per-era delegate parquet scans, rows
-  * filtered against the era's delete-key sets (and, for
-  * position-delete-affected files, against their (file, ordinal) pair
-  * sets), projected back to the requested schema — optionally with the
+/** The delete-applying scan: the plain files' delegate parquet scan
+  * and the position-identity scan of the posdel-affected (or
+  * row-id-emitting) files. Rows are filtered against every key group's
+  * covers under their file's sequence number (and, for position-
+  * delete-affected files, against their (file, ordinal) pair sets),
+  * then projected back to the requested schema — optionally with the
   * synthesized _gfile/_gpos row-id columns (the positional row-level
   * operation's source). Row-based (no columnar batches) — the
-  * documented transient degrade while deletes are pending. */
-private[catalog] class MorScan(eras: Seq[MorEra],
+  * documented transient degrade while deletes are pending; reporting
+  * that up front means planning never asks for a reader factory, and
+  * the one factory (one Hadoop-conf broadcast per delegate scan) is
+  * built at execution. */
+private[catalog] class MorScan(plain: Option[Scan], pos: Option[Scan],
+    delSets: Seq[MorDeleteSet],
+    // URI path → effective sequence number of every snapshot file
+    seqOf: Map[String, Long],
+    // the highest delete cover: a file at or above it skips the lookups
+    coverCeiling: Long,
     requested: StructType, readSchema: StructType,
     coalesceExprs: Option[Array[org.apache.spark.sql.catalyst.expressions.Expression]] = None,
     posCoalesceExprs: Option[Array[org.apache.spark.sql.catalyst.expressions.Expression]] = None,
@@ -2387,42 +2403,67 @@ private[catalog] class MorScan(eras: Seq[MorEra],
 
   override def readSchema(): StructType = requested
   override def toBatch: Batch = this
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.UNSUPPORTED
+
   /** Names the MOR path taken: the equality-delete file count and
     * whether their key sets ship inline or load lazily on executors. */
   override def description(): String =
-    s"graft-snapshot MOR scan (${eras.size} era(s), $deleteFiles delete " +
-      s"file(s), ${if (inlineKeys) "inline" else "lazy"} keys, delete-applying" +
+    s"graft-snapshot MOR scan ($deleteFiles delete file(s), " +
+      s"${if (inlineKeys) "inline" else "lazy"} keys, delete-applying" +
       (if (posDeletes.nonEmpty) ", positional" else "") +
       (if (emitRowId) ", row-id-emitting" else "") + ") over (" +
-      eras.flatMap(e => e.plain.orElse(e.pos)).headOption
-        .map(_.description()).getOrElse("empty") + ")"
+      plain.orElse(pos).map(_.description()).getOrElse("empty") + ")"
 
-  override def planInputPartitions(): Array[InputPartition] =
-    eras.zipWithIndex.flatMap { case (e, i) =>
-      e.plain.toSeq.flatMap(_.toBatch.planInputPartitions()
-        .map(p => EraPartition(p, i): InputPartition)) ++
-      // pos partitions REPACK to one file (or file split) each, so a
-      // reader always knows which single file its ordinals index —
-      // same parallelism, partition-count inflation bounded by the
-      // affected-file count
-      e.pos.toSeq.flatMap(_.toBatch.planInputPartitions().toSeq.flatMap {
-        case fp: org.apache.spark.sql.execution.datasources.FilePartition =>
-          fp.files.toSeq.map { pf =>
-            val path = new org.apache.hadoop.fs.Path(pf.filePath.toString)
-              .toUri.getPath
-            PosEraPartition(
-              org.apache.spark.sql.execution.datasources.FilePartition(0, Array(pf)),
-              i, path, posDeletes.getOrElse(path, Nil)): InputPartition
-          }
-        case other => throw new IllegalStateException(
-          s"pos-era scan planned a non-file partition: $other")
-      })
-    }.toArray
+  private def seqOfFile(pf: org.apache.spark.sql.execution.datasources.PartitionedFile): Long = {
+    val path = pf.toPath.toUri.getPath
+    seqOf.getOrElse(path, throw new IllegalStateException(
+      s"MOR scan planned $path, which is not a file of its snapshot"))
+  }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val eraFactories = eras.map(_.plain.map(_.toBatch.createReaderFactory())).toArray
-    val posFactories = eras.map(_.pos.map(_.toBatch.createReaderFactory())).toArray
-    val eraDeletes = eras.map(_.delSets.toArray).toArray
+  private lazy val partitions: Array[InputPartition] =
+    plain.toSeq.flatMap(_.toBatch.planInputPartitions().toSeq.map {
+      case fp: org.apache.spark.sql.execution.datasources.FilePartition =>
+        MorPartition(fp, fp.files.map(seqOfFile)): InputPartition
+      case other => throw new IllegalStateException(
+        s"MOR scan planned a non-file partition: $other")
+    }).toArray ++
+    // pos partitions REPACK to one file (or file split) each, so a
+    // reader always knows which single file its ordinals index —
+    // same parallelism, partition-count inflation bounded by the
+    // affected-file count
+    pos.toSeq.flatMap(_.toBatch.planInputPartitions().toSeq.flatMap {
+      case fp: org.apache.spark.sql.execution.datasources.FilePartition =>
+        fp.files.toSeq.map { pf =>
+          val path = pf.toPath.toUri.getPath
+          PosMorPartition(
+            org.apache.spark.sql.execution.datasources.FilePartition(0, Array(pf)),
+            seqOfFile(pf), path, posDeletes.getOrElse(path, Nil)): InputPartition
+        }
+      case other => throw new IllegalStateException(
+        s"pos scan planned a non-file partition: $other")
+    })
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  /** Files planned after partition and stats pruning. */
+  private def numFiles: Long = partitions.flatMap {
+    case MorPartition(fp, _) => fp.files.map(_.toPath.toUri.getPath).toSeq
+    case p: PosMorPartition => Seq(p.file)
+  }.distinct.length.toLong
+
+  override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    Array(new MorNumFilesMetric)
+
+  override def reportDriverMetrics(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
+    val n = numFiles
+    Array(new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+      override def name(): String = "numFiles"
+      override def value(): Long = n
+    })
+  }
+
+  private lazy val factory: PartitionReaderFactory = {
     // ordinals of the requested TABLE columns inside the (wider) read
     // schema; the row-id metadata columns are synthesized (-1 / -2)
     val outOrdinals = requested.fields.map {
@@ -2431,31 +2472,48 @@ private[catalog] class MorScan(eras: Seq[MorEra],
       case f => readSchema.fieldIndex(f.name)
     }
     val readFields = readSchema.fields
-    new MorReaderFactory(eraFactories, posFactories, eraDeletes, outOrdinals,
-      readFields.map(_.dataType), readFields.map(_.nullable), coalesceExprs,
-      posCoalesceExprs, readSchema.length)
+    new MorReaderFactory(plain.map(_.toBatch.createReaderFactory()),
+      pos.map(_.toBatch.createReaderFactory()), delSets.toArray, coverCeiling,
+      outOrdinals, readFields.map(_.dataType), readFields.map(_.nullable),
+      coalesceExprs, posCoalesceExprs, readSchema.length)
   }
+
+  override def createReaderFactory(): PartitionReaderFactory = factory
 }
 
-/** A delegate parquet input partition tagged with its delete-era. */
-private[catalog] final case class EraPartition(inner: InputPartition, era: Int)
-  extends InputPartition
+/** `numFiles` of a MOR scan node: the files it reads after pruning. */
+private[catalog] class MorNumFilesMetric
+  extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = "numFiles"
+  override def description(): String = "number of files read"
+}
 
-/** A single-file (or single-split) pos-era partition: the file every
-  * row's ordinal indexes, and the pair files hiding its rows. */
-private[catalog] final case class PosEraPartition(
+/** A delegate parquet file partition plus the effective sequence
+  * number of each of its files, in order. */
+private[catalog] final case class MorPartition(
   inner: org.apache.spark.sql.execution.datasources.FilePartition,
-  era: Int, file: String, posFiles: Seq[String]) extends InputPartition
+  seqs: Array[Long]) extends InputPartition
+
+/** A single-file (or single-split) pos partition: the file every row's
+  * ordinal indexes, its sequence number, and the pair files hiding its
+  * rows. */
+private[catalog] final case class PosMorPartition(
+  inner: org.apache.spark.sql.execution.datasources.FilePartition,
+  seq: Long, file: String, posFiles: Seq[String]) extends InputPartition
 
 // NOTE: position-delete sidecar loading (deletion vectors and legacy
 // pair parquet) lives in [[graft.sources.DeleteVectors]] — one
 // soft-cached, Spark-session-free loader shared by the executor-side
 // partition readers here and delete-file compaction.
 
+/** Reads a [[MorPartition]] one delegate per file, so each row is
+  * checked against the key groups' covers under its own file's
+  * sequence number; a file at or above every cover skips the lookups,
+  * and a partition of only such files never resolves the covers. */
 private[catalog] class MorReaderFactory(
-    eraFactories: Array[Option[PartitionReaderFactory]],
-    posFactories: Array[Option[PartitionReaderFactory]],
-    eraDeletes: Array[Array[MorDeleteSet]],
+    plainFactory: Option[PartitionReaderFactory],
+    posFactory: Option[PartitionReaderFactory],
+    dels: Array[MorDeleteSet], coverCeiling: Long,
     outOrdinals: Array[Int], readTypes: Array[DataType],
     readNullable: Array[Boolean],
     coalesceExprs: Option[Array[org.apache.spark.sql.catalyst.expressions.Expression]] = None,
@@ -2465,52 +2523,55 @@ private[catalog] class MorReaderFactory(
 
   override def supportColumnarReads(partition: InputPartition): Boolean = false
 
-  /** The shared delete-filter + project loop. `rowIdxSlot` >= 0 marks
-    * a pos-era row (the generated per-file ordinal rides in that
-    * slot); `posSet` holds the ordinals hidden for this partition's
-    * single file; `fileUtf8` synthesizes the _gfile row-id column. */
-  private def wrap(delegate: PartitionReader[InternalRow],
-      dels: Array[MorDeleteSet], rowIdxSlot: Int,
-      posSet: graft.sources.DeleteVectors.Ordinals,
-      fileUtf8: org.apache.spark.unsafe.types.UTF8String): PartitionReader[InternalRow] = {
+  /** Read row → output row. `rowIdxSlot` >= 0 marks a pos row (the
+    * generated per-file ordinal rides in that slot); `fileUtf8`
+    * synthesizes the _gfile row-id column. */
+  private def projector(rowIdxSlot: Int,
+      fileUtf8: org.apache.spark.unsafe.types.UTF8String): InternalRow => InternalRow = {
     val identity = rowIdxSlot < 0 && outOrdinals.length == readTypes.length &&
       outOrdinals.zipWithIndex.forall { case (o, i) => o == i }
     val synthesize = outOrdinals.exists(_ < 0)
     // the row-id metadata columns are an operation-plumbing surface:
-    // only pos-era readers (which carry the generated ordinal and the
-    // partition's file) can fill them — a plain-era partition asked
-    // for them means a direct SELECT of _gfile/_gpos outside a
-    // row-level operation, which this scan shape does not serve
+    // only pos readers (which carry the generated ordinal and the
+    // partition's file) can fill them — a plain partition asked for
+    // them means a direct SELECT of _gfile/_gpos outside a row-level
+    // operation, which this scan shape does not serve
     if (synthesize && rowIdxSlot < 0) throw new IllegalStateException(
       s"${GraftRowId.FileCol}/${GraftRowId.PosCol} are row-id plumbing " +
         "for row-level operations and are not served on this scan shape")
-    val project: InternalRow => InternalRow =
-      if (identity) r => r
-      else if (!synthesize) {
-        val proj = UnsafeProjection.create(outOrdinals.map(o =>
-          BoundReference(o, readTypes(o), readNullable(o))
-            .asInstanceOf[org.apache.spark.sql.catalyst.expressions.Expression]))
-        r => proj(r)
-      } else { r =>
-        // row-id emission: fill _gfile from the partition's file and
-        // _gpos from the generated ordinal; table columns copy through
-        val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          outOrdinals.length)
-        var i = 0
-        while (i < outOrdinals.length) {
-          outOrdinals(i) match {
-            case -1 => out.update(i, fileUtf8)
-            case -2 => out.update(i, r.getLong(rowIdxSlot))
-            case o => out.update(i,
-              if (r.isNullAt(o)) null else r.get(o, readTypes(o)))
-          }
-          i += 1
+    if (identity) r => r
+    else if (!synthesize) {
+      val proj = UnsafeProjection.create(outOrdinals.map(o =>
+        BoundReference(o, readTypes(o), readNullable(o))
+          .asInstanceOf[org.apache.spark.sql.catalyst.expressions.Expression]))
+      r => proj(r)
+    } else { r =>
+      // row-id emission: fill _gfile from the partition's file and
+      // _gpos from the generated ordinal; table columns copy through
+      val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        outOrdinals.length)
+      var i = 0
+      while (i < outOrdinals.length) {
+        outOrdinals(i) match {
+          case -1 => out.update(i, fileUtf8)
+          case -2 => out.update(i, r.getLong(rowIdxSlot))
+          case o => out.update(i,
+            if (r.isNullAt(o)) null else r.get(o, readTypes(o)))
         }
-        out
+        i += 1
       }
-    // resolve each group's key set ONCE per task — inline sets are
-    // already in hand; lazy sets load through the executor-wide cache
-    val keySets = dels.map(_.keys)
+      out
+    }
+  }
+
+  /** The delete filter + project loop over one file's rows. `covers`
+    * is forced only for a file older than some delete; `posSet` holds
+    * the ordinals hidden in a pos file. */
+  private def wrap(delegate: PartitionReader[InternalRow], seq: Long,
+      covers: => Array[MorDeleteSet.Covers], rowIdxSlot: Int,
+      posSet: graft.sources.DeleteVectors.Ordinals,
+      project: InternalRow => InternalRow): PartitionReader[InternalRow] = {
+    val sets = if (seq >= coverCeiling) null else covers
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
       override def next(): Boolean = {
@@ -2518,11 +2579,12 @@ private[catalog] class MorReaderFactory(
           val row = delegate.get()
           var deleted = rowIdxSlot >= 0 && !posSet.isEmpty &&
             posSet.contains(row.getLong(rowIdxSlot))
-          var i = 0
-          while (!deleted && i < dels.length) {
-            val k = dels(i).keyOf(row)
-            deleted = k != null && keySets(i).contains(k)
-            i += 1
+          if (sets != null) {
+            var i = 0
+            while (!deleted && i < dels.length) {
+              deleted = dels(i).hides(row, sets(i), seq)
+              i += 1
+            }
           }
           if (!deleted) { current = project(row); return true }
         }
@@ -2534,32 +2596,56 @@ private[catalog] class MorReaderFactory(
   }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    // resolved at most ONCE per task — inline covers are already in
+    // hand; lazy ones load through the executor-wide cache
+    lazy val covers = dels.map(_.covers)
     partition match {
-      case EraPartition(p, e) =>
-        val rawDelegate = eraFactories(e).getOrElse(throw new IllegalStateException(
-          s"plain partition for an era with no plain scan")).createReader(p)
+      case MorPartition(fp, seqs) =>
+        val factory = plainFactory.getOrElse(throw new IllegalStateException(
+          "plain partition for a MOR scan with no plain files"))
+        val project = projector(-1, null)
         // rename composition: fold the physical row to the readSchema
         // shape (per-column coalesce over current + prior spellings)
         // BEFORE the delete filter — key ordinals bind to readSchema
-        val delegate = coalesceExprs match {
-          case None => rawDelegate
-          case Some(exprs) => GraftScans.projectingReader(rawDelegate, exprs)
+        def open(i: Int): PartitionReader[InternalRow] = {
+          val raw = factory.createReader(
+            org.apache.spark.sql.execution.datasources.FilePartition(fp.index,
+              Array(fp.files(i))))
+          val delegate = coalesceExprs match {
+            case None => raw
+            case Some(exprs) => GraftScans.projectingReader(raw, exprs)
+          }
+          wrap(delegate, seqs(i), covers, rowIdxSlot = -1,
+            graft.sources.DeleteVectors.Ordinals.empty, project)
         }
-        wrap(delegate, eraDeletes(e), rowIdxSlot = -1,
-          graft.sources.DeleteVectors.Ordinals.empty, null)
-      case PosEraPartition(p, e, file, posFiles) =>
-        val rawDelegate = posFactories(e).getOrElse(throw new IllegalStateException(
-          s"pos partition for an era with no pos scan")).createReader(p)
+        new PartitionReader[InternalRow] {
+          private var i = -1
+          private var cur: PartitionReader[InternalRow] = _
+          override def next(): Boolean = {
+            while (cur == null || !cur.next()) {
+              if (cur != null) { cur.close(); cur = null }
+              i += 1
+              if (i >= fp.files.length) return false
+              cur = open(i)
+            }
+            true
+          }
+          override def get(): InternalRow = cur.get()
+          override def close(): Unit = if (cur != null) cur.close()
+        }
+      case PosMorPartition(p, seq, file, posFiles) =>
+        val raw = posFactory.getOrElse(throw new IllegalStateException(
+          "pos partition for a MOR scan with no pos files")).createReader(p)
         val delegate = posCoalesceExprs match {
-          case None => rawDelegate
-          case Some(exprs) => GraftScans.projectingReader(rawDelegate, exprs)
+          case None => raw
+          case Some(exprs) => GraftScans.projectingReader(raw, exprs)
         }
         val posSet: graft.sources.DeleteVectors.Ordinals =
           if (posFiles.isEmpty) graft.sources.DeleteVectors.Ordinals.empty
           else graft.sources.DeleteVectors.load(posFiles)
             .getOrElse(file, graft.sources.DeleteVectors.Ordinals.empty)
-        wrap(delegate, eraDeletes(e), rowIdxSlot = readLen, posSet,
-          org.apache.spark.unsafe.types.UTF8String.fromString(file))
+        wrap(delegate, seq, covers, rowIdxSlot = readLen, posSet,
+          projector(readLen, org.apache.spark.unsafe.types.UTF8String.fromString(file)))
       case other => throw new IllegalStateException(s"unexpected partition $other")
     }
   }

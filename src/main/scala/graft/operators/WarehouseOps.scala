@@ -682,9 +682,9 @@ object WarehouseOps {
     *
     * Scale shape: pruning filters the manifest file list before any
     * I/O (2-of-5 priorities plan over ~2/5 of the files); the delete
-    * application stays O(deleted keys) key sets probed per row by one
-    * MOR scan, grouped by era — the delete-key files are small and NOT
-    * partition-aligned,
+    * application stays O(deleted keys) key covers probed per row by
+    * one MOR scan under each file's sequence number — the delete-key
+    * files are small and NOT partition-aligned,
     * exactly Iceberg v2's equality-delete shape. */
   val snapshotPruneMor: Q = (s, dir) => {
     import s.implicits._

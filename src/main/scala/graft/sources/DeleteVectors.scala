@@ -111,22 +111,13 @@ private[graft] object DeleteVectors {
           val (dataFile, bm) = read(p)
           bitmapOf(dataFile).or(bm)
         } else {
-          val reader = org.apache.parquet.hadoop.ParquetReader
-            .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-              new org.apache.hadoop.fs.Path(p))
-            .withConf(Snapshots.hadoopConf)
-            .build()
-          try {
-            var g = reader.read()
-            while (g != null) {
-              val f = g.getString("file", 0)
-              val pos = g.getLong("pos", 0)
-              require(pos >= 0L && pos <= Int.MaxValue,
-                s"pair ordinal $pos of $f exceeds the deletion-vector range")
-              bitmapOf(f).add(pos.toInt)
-              g = reader.read()
-            }
-          } finally reader.close()
+          Snapshots.readGroups(p)(_ => { g =>
+            val f = g.getString("file", 0)
+            val pos = g.getLong("pos", 0)
+            require(pos >= 0L && pos <= Int.MaxValue,
+              s"pair ordinal $pos of $f exceeds the deletion-vector range")
+            bitmapOf(f).add(pos.toInt)
+          })
         }
       }
       val m: Map[String, RoaringBitmap] = perFile.toMap

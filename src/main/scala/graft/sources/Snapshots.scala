@@ -110,7 +110,13 @@ object Snapshots {
       // changing the logical row set (compaction, z-order, delete-file
       // merge), so change feeds pass over it. Trusted, like Delta —
       // stamping it on a row-changing commit is a writer bug
-      rowsUnchanged: Boolean = false)
+      rowsUnchanged: Boolean = false) {
+
+    /** A file's effective sequence number: its `fileSeq` pin, else the
+      * version its dir was staged at — what [[DeleteFile.coversBelow]]
+      * is compared against. */
+    def seqOf(file: String): Long = fileSeq.getOrElse(file, fileVersion(file))
+  }
 
   private def commitsDir(root: String): Path = Paths.get(root, "_commits")
 
@@ -393,6 +399,40 @@ object Snapshots {
     * on commit and planning paths — read-only, so sharing is safe. */
   private[graft] lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
 
+  /** Opens a parquet file under [[hadoopConf]]. parquet-hadoop's
+    * conf-less entry points (`ParquetFileReader.open(InputFile)`,
+    * `ParquetReader.builder(readSupport, path)`) build a fresh
+    * `Configuration` per open, which parses core-default.xml again on
+    * its first read. */
+  private[graft] def openParquet(path: String): org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), hadoopConf),
+      org.apache.parquet.HadoopReadOptions.builder(hadoopConf).build())
+
+  /** Every record of a parquet file as a parquet-hadoop example Group,
+    * read through [[openParquet]]. `consumer` sees the file schema once
+    * and returns the per-record callback; the file closes even when a
+    * callback throws. */
+  private[graft] def readGroups(path: String)(
+      consumer: org.apache.parquet.schema.MessageType =>
+        org.apache.parquet.example.data.Group => Unit): Unit = {
+    val reader = openParquet(path)
+    try {
+      val schema = reader.getFooter.getFileMetaData.getSchema
+      val each = consumer(schema)
+      val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
+      var pages = reader.readNextRowGroup()
+      while (pages != null) {
+        val records = io.getRecordReader(pages,
+          new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(schema))
+        var i = 0L
+        while (i < pages.getRowCount) { each(records.read()); i += 1 }
+        pages = reader.readNextRowGroup()
+      }
+    } finally reader.close()
+  }
+
   /** Spark schema of a SPARK-WRITTEN parquet file, read from the
     * footer's `org.apache.spark.sql.parquet.row.metadata` key on the
     * DRIVER — no scheduled inference job, no listing. Every data /
@@ -437,9 +477,7 @@ object Snapshots {
       : Option[org.apache.spark.sql.types.StructType] = {
     Option(footerSchemaMemo.get(path)).orElse {
       val read = try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(path), hadoopConf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val reader = openParquet(path)
         try {
           val kv = reader.getFooter.getFileMetaData.getKeyValueMetaData
           Option(kv.get("org.apache.spark.sql.parquet.row.metadata")).map(j =>
@@ -460,9 +498,7 @@ object Snapshots {
     if (hit != null) hit.longValue()
     else {
       val r = try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(path), hadoopConf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val reader = openParquet(path)
         try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
         finally reader.close()
       } catch { case _: Exception => -1L }
@@ -476,9 +512,7 @@ object Snapshots {
       import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
       import org.json4s._
       import org.json4s.JsonDSL._
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path), hadoopConf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val reader = openParquet(path)
       try {
         val footer = reader.getFooter
         val schema = footer.getFileMetaData.getSchema
@@ -1020,8 +1054,7 @@ object Snapshots {
     * crash-recovery path recomputes it. */
   private def squash(root: String, name: String, fork: Long, bh: Long): Snapshot = {
     val snap = resolveBranchAt(root, name, bh)
-    def effSeq(f: String): Long = snap.fileSeq.getOrElse(f, fileVersion(f))
-    val branchFiles = snap.files.filter(effSeq(_) > fork).toSet
+    val branchFiles = snap.files.filter(snap.seqOf(_) > fork).toSet
     // within-branch row-level deletes (legacy cover-everything deletes
     // parse to MaxValue and keep their semantics verbatim)
     val branchDels = snap.deletes
@@ -1037,7 +1070,7 @@ object Snapshots {
     // the second era (those files would need a slot a future delete
     // misses). More interleaving → publish between rounds instead.
     val eras = branchDels.map(_.coversBelow).distinct.sorted
-      .groupBy(cb => branchFiles.filter(f => effSeq(f) < cb))
+      .groupBy(cb => branchFiles.filter(f => snap.seqOf(f) < cb))
       .toSeq.sortBy(_._2.min)
     require(eras.size <= 2,
       s"branch '$name' interleaves row-level deletes with later appends " +
@@ -1045,7 +1078,7 @@ object Snapshots {
         "that many delete eras into one commit — fast-forward between rounds")
     if (eras.size == 2) {
       val lastCb = eras.last._2.max
-      val after = branchFiles.filter(f => effSeq(f) >= lastCb)
+      val after = branchFiles.filter(f => snap.seqOf(f) >= lastCb)
       require(after.isEmpty,
         s"branch '$name' appended files after its second round of row-level " +
           "deletes; a squash publish cannot renumber a third era into one " +
@@ -1390,7 +1423,7 @@ object Snapshots {
     *
     * Pending MERGE-ON-READ deletes COMPOSE with pruning: the kept
     * files go through the same version-scoped delete application as a
-    * full [[read]] ([[DeleteFile.coversBelow]] eras in one MOR scan),
+    * full [[read]] ([[DeleteFile.coversBelow]] per file, in one MOR scan),
     * so a pruned read over a table with stacked pending deletes returns
     * exactly the delete-applied rows of the requested partitions. The
     * delete-key sets are not pruned, because equality-delete files are
@@ -1608,8 +1641,6 @@ object Snapshots {
       // never O(table): a posdel names exactly the files it hides in.
       val posShifted = sharedFiles.filter(f =>
         from.posDeletes.getOrElse(f, Nil) != to.posDeletes.getOrElse(f, Nil))
-      def effAt(s: Snapshot)(f: String): Long =
-        s.fileSeq.getOrElse(f, fileVersion(f))
       def touchedSide(files: Seq[String], s: Snapshot): Option[DataFrame] =
         if (files.isEmpty) None
         else Some(frame(spark, root, Some(narrowed(s, files))))
@@ -1618,8 +1649,8 @@ object Snapshots {
       // against the delta keys and re-checked against the FULL other
       // set (a key can be hidden through a second delete group)
       val shiftGroups = sharedFiles
-        .groupBy(f => (from.deletes.filter(d => effAt(from)(f) < d.coversBelow),
-          to.deletes.filter(d => effAt(to)(f) < d.coversBelow)))
+        .groupBy(f => (from.deletes.filter(d => from.seqOf(f) < d.coversBelow),
+          to.deletes.filter(d => to.seqOf(f) < d.coversBelow)))
         .toSeq.sortBy(_._2.min)
         .flatMap { case ((df_, dt_), fs) =>
           if (df_.map(d => (d.keyCol, d.path)).toSet ==
@@ -2050,9 +2081,7 @@ object Snapshots {
       gate = { _ =>
         val snap = resolve(root).getOrElse(throw new IllegalStateException(
           s"no committed snapshot under $root"))
-        def effVersion(f: String): Long =
-          snap.fileSeq.getOrElse(f, fileVersion(f))
-        val fileVersions = snap.files.map(effVersion).toSet
+        val fileVersions = snap.files.map(snap.seqOf).toSet
         // scope-equivalence classes per key column: sort by coversBelow,
         // split where a data-file version falls inside the gap
         val classes: Seq[(String, Seq[DeleteFile])] =

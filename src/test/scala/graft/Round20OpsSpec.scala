@@ -406,6 +406,27 @@ class Round20OpsSpec extends SparkSpec {
     assert(Snapshots.tagVersion(troot, "ghost").contains(1L))
   }
 
+  test("SET and UNSET TBLPROPERTIES of the bucket hash stamp refuse") {
+    sqlDf("DROP TABLE IF EXISTS snap.default.r20bhset")
+    sqlDf("CREATE TABLE snap.default.r20bhset (k INT, v STRING) " +
+      "PARTITIONED BY (bucket(4, k))")
+    sqlDf("INSERT INTO snap.default.r20bhset VALUES (1, 'a'), (2, 'b')")
+    val root = s"$wh/default/r20bhset"
+    val before = graft.catalog.GraftTable.readMeta(root).get._2
+    val prop = graft.catalog.SnapBucket.hashVerProp
+    Seq(s"ALTER TABLE snap.default.r20bhset SET TBLPROPERTIES ('$prop'='int')",
+      s"ALTER TABLE snap.default.r20bhset SET TBLPROPERTIES ('$prop'='long')",
+      s"ALTER TABLE snap.default.r20bhset UNSET TBLPROPERTIES ('$prop')").foreach { q =>
+      val e = intercept[Exception](sqlDf(q).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains(s"$prop is stamped at CREATE"))),
+        s"$q: expected the stamp refusal, got $e")
+    }
+    assert(graft.catalog.GraftTable.readMeta(root).get._2 == before,
+      "a refused ALTER must leave the properties untouched")
+    assert(sqlDf("SELECT count(*) FROM snap.default.r20bhset WHERE k = 2")
+      .as[Long].head() == 1L)
+  }
   test("date->timestamp_ntz widening of a MOR key survives the executor key loader") {
     // force the EXECUTOR-side delete-key loader (inline gate 0): the
     // staged date keys are INT32 epoch days and must upcast to

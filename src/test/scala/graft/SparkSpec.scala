@@ -12,7 +12,7 @@ trait SparkSpec extends AnyFunSuite {
 
   /** The data files a DataFrame's executed plan scans, as plain local
     * paths (the manifest's form): every DSv2 batch scan's input
-    * partitions, unwrapped through the MOR era partitions, adaptive
+    * partitions, unwrapped through the MOR partitions, adaptive
     * plans included. Spark's own `Dataset.inputFiles` sees only V1 file
     * relations, so it reads empty on a snapshot-table relation. */
   def plannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] = {
@@ -21,7 +21,7 @@ trait SparkSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.datasources.FilePartition
     def unwrap(p: Any): Seq[String] = p match {
       case fp: FilePartition => fp.files.map(_.toPath.toUri.getPath).toSeq
-      case prod: Product => prod.productIterator.flatMap(unwrap).toSeq // EraPartition etc.
+      case prod: Product => prod.productIterator.flatMap(unwrap).toSeq // MorPartition etc.
       case _ => Nil
     }
     new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
