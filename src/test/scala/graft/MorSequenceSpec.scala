@@ -60,7 +60,7 @@ class MorSequenceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     1 -> Gen.const(CompactDeletes))
   private val cmdsGen = Gen.listOfN(6, cmdGen)
 
-  test("keyed MOR statements read the model at the head and every version, inline and lazy") {
+  test("keyed MOR sequences match a model at the head and every version, both gates") {
     var run = 0
     val prop = Prop.forAll(cmdsGen) { cmds =>
       run += 1
@@ -78,7 +78,7 @@ class MorSequenceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       model = (0L to 7L).map(k => k -> k).toMap
       sqlDf(s"INSERT INTO $t VALUES ${values(model.toSeq.sorted)}")
       record()
-      cmds.foreach {
+      def run1(cmd: Cmd): Unit = cmd match {
         case Insert(ks) =>
           val fresh = ks.filterNot(model.contains).map(k => k -> (k + 50L))
           if (fresh.nonEmpty) {
@@ -100,7 +100,10 @@ class MorSequenceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         case CompactDeletes =>
           sqlDf(s"CALL snap.system.compact_deletes('default.mseq$run')").collect()
       }
-      record()
+      cmds.foreach { cmd =>
+        run1(cmd)
+        record()
+      }
       def rows(q: String): Map[Long, Long] = {
         val got = sqlDf(q).as[(Long, Long)].collect().toSeq
         assert(got.map(_._1).distinct.size == got.size, s"duplicate keys from $q: $got")

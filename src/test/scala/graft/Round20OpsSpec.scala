@@ -427,6 +427,7 @@ class Round20OpsSpec extends SparkSpec {
     assert(sqlDf("SELECT count(*) FROM snap.default.r20bhset WHERE k = 2")
       .as[Long].head() == 1L)
   }
+
   test("date->timestamp_ntz widening of a MOR key survives the executor key loader") {
     // force the EXECUTOR-side delete-key loader (inline gate 0): the
     // staged date keys are INT32 epoch days and must upcast to
