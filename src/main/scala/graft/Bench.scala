@@ -46,8 +46,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(cpus).getOrCreate()
+    val spark = GraftSession.builder(GraftSession.defaultCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm run at the smallest SF before timing: whole-stage-codegen
     // (janino) compiles each distinct plan shape once per JVM (~0.5-1 s

@@ -8,6 +8,12 @@ import org.apache.spark.sql.SparkSession
   * or the audit checks is therefore a plan the driver really runs. */
 object GraftSession {
 
+  /** The entry points' core count: `SPARK_GRAFT_CPUS`, else every
+    * available processor. The spec session, PlanAudit and ExplainOne
+    * keep a fixed `4`, so the plans they check stay machine-independent. */
+  def defaultCpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
   /** A `local[cpus]` session builder carrying the shared confs. */
   def builder(cpus: String): SparkSession.Builder = SparkSession.builder()
     .master(s"local[$cpus]")

@@ -721,14 +721,18 @@ object PlanAudit {
         |read only the added files.""".stripMargin,
     "stream_snapshot_source" ->
       """Native streaming source (r15): readStream.table over the
-        |snapshot catalog, offsets = committed versions, each
-        |micro-batch planning the manifest set-difference of its
-        |(start, end] range. The audited plan is the sink-side
-        |aggregate over the tailed parquet output — the interesting
-        |property is the SOURCE cost model: per batch O(new files)
-        |planning + O(new rows) I/O, never a re-list or re-scan of the
-        |base; r16 adds startingVersion/startingTimestamp catch-up and
-        |silent pass-over of rows-unchanged maintenance commits.""".stripMargin,
+        |snapshot catalog, offsets = committed versions (exclusive),
+        |each micro-batch planning the added files of the append steps
+        |in its (start, end] range — Snapshots.steps, the one commit
+        |classifier the .changes feed and readChangesRows share. The
+        |audited plan is the sink-side aggregate over the tailed parquet
+        |output — the interesting property is the SOURCE cost model: per
+        |batch O(new files) planning + O(new rows) I/O, never a re-list
+        |or re-scan of the base; r16 adds startingVersion/
+        |startingTimestamp catch-up and silent pass-over of
+        |rows-unchanged maintenance commits; any other non-append step
+        |(including a restore that un-hides deleted rows) refuses, or is
+        |skipped under skipChangeCommits.""".stripMargin,
     "sql_type_widening" ->
       """Metadata-only ALTER COLUMN widening (r15). Expect a UNION of
         |two branches — head (both eras under the widened types, narrow

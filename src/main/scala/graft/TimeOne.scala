@@ -7,10 +7,9 @@ package graft
 object TimeOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_CONF="k=v;k2=v2" — scratch conf A/B without a rebuild,
     // applied over the shared session confs
-    val b0 = GraftSession.builder(cpus)
+    val b0 = GraftSession.builder(GraftSession.defaultCpus)
     val spark = sys.env.get("SPARK_GRAFT_CONF").iterator
       .flatMap(_.split(';')).filter(_.contains('='))
       .foldLeft(b0) { (b, kv) =>

@@ -10,8 +10,7 @@ object Verify {
       case Array(s, o) => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(cpus).getOrCreate()
+    val spark = GraftSession.builder(GraftSession.defaultCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dump concurrently (distinct output dir per query; one SparkSession

@@ -2,11 +2,10 @@ package graft.catalog
 
 import graft.sources.{DeleteVectors, Snapshots}
 import graft.sources.Snapshots.Snapshot
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -27,22 +26,29 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * hid, tagged `delete` — the streaming twin of the batch row-CDF
   * ([[Snapshots.readChangesRows]]).
   *
-  * Per version step the micro-batch plans, metadata-only:
+  * The feed tails the log through [[Snapshots.steps]], the one rule
+  * the plain stream and [[Snapshots.readChangesRows]] classify commits
+  * with; offsets, start options (EXCLUSIVE, like the plain stream) and
+  * pacing are [[VersionTailStream]]'s. Per step the micro-batch plans,
+  * metadata-only:
   *  - the ADDED files → their rows as `insert` (the append path;
   *    initial-snapshot files with pending deletion vectors scan with
   *    the row-ordinal column and SKIP the already-hidden ordinals, so
   *    the feed never resurrects a deleted row);
-  *  - the DV DELTA per affected file (bitmaps(v) andNot bitmaps(v-1),
-  *    a driver-side bitmap subtraction on kilobyte sidecars) → those
-  *    files re-scanned with the generated row-ordinal column, EMITTING
-  *    ONLY the newly-hidden ordinals as `delete` — O(affected files)
-  *    I/O, never O(table);
+  *  - the DV DELTA per affected file, both directions (bitmaps(v)
+  *    andNot bitmaps(v-1) and the reverse, a driver-side bitmap
+  *    subtraction on kilobyte sidecars) → those files re-scanned with
+  *    the generated row-ordinal column, EMITTING ONLY the newly-hidden
+  *    ordinals as `delete` and the un-hidden ones (a restore) as
+  *    `insert` — O(affected files) I/O, never O(table);
   *  - the KEYED-delete delta (a DELETE on a `graft.mor.key` table, or
   *    the delete half of an upsert) → the covered files re-scanned
   *    with the new delete-key sets (lazy [[MorDeleteSet]]s, executor
   *    soft-cached), emitting the previously-VISIBLE rows they hide —
   *    already-hidden rows never re-emit, and an upsert surfaces as
-  *    delete + insert in its one commit;
+  *    delete + insert in its one commit. Delete lines a step DROPS (a
+  *    restore) mirror it: the rows they hid that stay visible emit as
+  *    `insert`;
   *  - writer-marked rows-unchanged commits (compaction, DV folds) pass
   *    silently;
   *  - row-changing REWRITES on a `graft.changes.rewriteDiff` table
@@ -95,8 +101,12 @@ private[catalog] class ChangesTable(fullName: String, root: String)
     * `spark.read.option("startingVersion", s).option("endingVersion",
     * e).table("snap.ns.t.changes")` plans exactly the micro-batch
     * partitions for the version range `(s, e]` — same effects, same
-    * schema, no checkpoint. `startingVersion` defaults to 0 (initial
-    * snapshot + every retained effect), `endingVersion` to the head. */
+    * schema, no checkpoint. The start is EXCLUSIVE, like both streams'
+    * (unlike Delta's inclusive `table_changes`, which would include
+    * version s): `startingVersion` s reads the commits after s, and
+    * `startingTimestamp` resolves to a version exactly as the streams
+    * resolve it. The start defaults to 0 (initial snapshot + every
+    * retained effect), `endingVersion` to the head. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val full = schema()
     () => new Scan with Batch {
@@ -105,11 +115,9 @@ private[catalog] class ChangesTable(fullName: String, root: String)
       private lazy val stream = new ChangesMicroBatchStream(root, dataSchema, options)
       override def toBatch: Batch = this
       override def planInputPartitions(): Array[InputPartition] = {
-        val s0 = Option(options.get(GraftMicroBatchStream.StartingVersionOption))
-          .map(_.trim.toLong).getOrElse(0L)
         val e = Option(options.get("endingVersion")).map(_.trim.toLong)
           .getOrElse(Snapshots.maxCommitted(root))
-        stream.planInputPartitions(VersionOffset(s0), VersionOffset(e))
+        stream.planInputPartitions(stream.initialOffset(), VersionOffset(e))
       }
       override def createReaderFactory(): PartitionReaderFactory =
         stream.createReaderFactory()
@@ -127,17 +135,20 @@ private[catalog] class ChangesTable(fullName: String, root: String)
   *    deletion vectors, per-file) and keys in `prevDels` (the keyed
   *    delete sets applicable to this file group).
   *  - kind [[ChangePartition.PosDelta]]: emit ONLY ordinals in
-  *    `dvBytes` (the newly-hidden DV delta) — the posdel effects.
+  *    `dvBytes` (a DV delta) — the posdel effects, `delete` for
+  *    newly-hidden ordinals, `insert` for un-hidden ones.
   *  - kind [[ChangePartition.KeyDelta]]: emit rows whose key is in
   *    `newDels` but NOT in `prevDels` — the keyed-delete effects
-  *    (rows already hidden by an earlier delete never re-emit).
-  *    Keyed and positional MOR are mutually exclusive per table, so
-  *    this kind never carries a bitmap.
+  *    (rows already hidden by an earlier delete never re-emit). For an
+  *    `insert` (un-hide) partition the inputs are mirrored: `newDels`
+  *    are the dropped sets at the parent's sequence, `prevDels` the
+  *    current sets. Keyed and positional MOR are mutually exclusive
+  *    per table, so this kind never carries a bitmap.
   *
   * Delete sets ride as [[MorDeleteSet]] (lazy path form — each
   * executor loads a set once through the shared soft cache), applied
   * under `newSeq`/`prevSeq`, the file group's sequence number in the
-  * version and in its parent. */
+  * state each set belongs to. */
 private[catalog] final case class ChangePartition(inner: InputPartition,
   version: Long, changeType: String, dvBytes: Array[Byte],
   kind: Int, newDels: Seq[MorDeleteSet] = Nil, newSeq: Long = 0L,
@@ -155,132 +166,124 @@ private[catalog] object ChangePartition {
   val Materialized = 3
 }
 
+/** One scan of a change-feed step's plan: the files it reads, whether
+  * they are `#changes:` sidecars, and how each planned partition is
+  * tagged. */
+private[catalog] final case class ChangeSlice(files: Seq[String], sidecars: Boolean,
+    tag: InputPartition => ChangePartition)
+
 private[catalog] class ChangesMicroBatchStream(root: String,
     dataSchema: StructType, options: CaseInsensitiveStringMap)
-  extends MicroBatchStream
-  with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
-  with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+  extends VersionTailStream(root, options) {
 
-  private def spark = SparkSession.active
-
-  private val startingVersion: Long =
-    Option(options.get(GraftMicroBatchStream.StartingVersionOption))
-      .map(_.trim.toLong).getOrElse(0L)
-
-  private val maxFilesPerTrigger: Option[Int] =
-    Option(options.get(GraftMicroBatchStream.MaxFilesOption)).map { s =>
-      val n = s.trim.toInt
-      require(n > 0, s"${GraftMicroBatchStream.MaxFilesOption} must be positive: $n")
-      n
-    }
-
-  /** Byte-rate cap, composing with the file cap like the plain source:
-    * whole versions admitted until the summed on-disk size of the
-    * step's scan set crosses the cap. */
-  private val maxBytesPerTrigger: Option[Long] =
-    Option(options.get(GraftMicroBatchStream.MaxBytesOption)).map { s =>
-      val n = try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s.trim)
-      catch { case _: Exception => throw new IllegalArgumentException(
-        s"${GraftMicroBatchStream.MaxBytesOption} does not parse as a byte size: $s") }
-      require(n > 0, s"${GraftMicroBatchStream.MaxBytesOption} must be positive: $s")
-      n
-    }
-
-  @volatile private var availableNowEnd: Option[Long] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = Some(Snapshots.maxCommitted(root))
-
-  override def initialOffset(): Offset = VersionOffset(startingVersion)
-
-  override def deserializeOffset(json: String): Offset =
-    VersionOffset(json.trim.toLong)
-
-  override def getDefaultReadLimit: org.apache.spark.sql.connector.read.streaming.ReadLimit =
-    if (maxFilesPerTrigger.isEmpty && maxBytesPerTrigger.isEmpty)
-      org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()
-    else GraftMicroBatchStream.GraftReadLimit(maxFilesPerTrigger, maxBytesPerTrigger)
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) is the admission-controlled entry point")
-
-  override def reportLatestOffset(): Offset =
-    VersionOffset(Snapshots.maxCommitted(root))
-
-  /** Files the feed would SCAN for one version step — the pacing unit
-    * (added files, DV-delta files, keyed-delta covered files; the
-    * initial chunk counts its full state). Metadata-only. */
-  private def stepFiles(s0: Long, v: Long, oldest: Long): Seq[String] =
-    if (s0 == 0 && v == oldest) Snapshots.resolveAt(root, oldest).files
-    else {
-      val cur = Snapshots.resolveAt(root, v)
-      if (cur.rowsUnchanged) Nil
-      // a rewrite with materialized effects scans ONLY its sidecars
-      else if (cur.changeFiles.nonEmpty) cur.changeFiles
-      else {
-        val prev = if (v == 1) Snapshot(0, Nil) else Snapshots.resolveAt(root, v - 1)
-        val prevF = prev.files.toSet
-        val added = cur.files.filterNot(prevF)
-        val dvTouched = (cur.posDeletes.keySet ++ prev.posDeletes.keySet)
-          .filter(f => cur.posDeletes.getOrElse(f, Nil) != prev.posDeletes.getOrElse(f, Nil))
-          .toSeq
-        val newDels = cur.deletes.filterNot(prev.deletes.toSet)
-        val covered = if (newDels.isEmpty) Nil else prev.files
-        added ++ dvTouched ++ covered
-      }
-    }
-
-  /** Admit whole versions until a cap is crossed — at least one
-    * version per batch, so an oversized commit slows the feed instead
-    * of stalling it (same rules as the plain streaming source,
-    * including the mean-of-siblings estimate for unsizeable files). */
-  override def latestOffset(start: Offset,
-      limit: org.apache.spark.sql.connector.read.streaming.ReadLimit): Offset = {
-    val s0 = start.asInstanceOf[VersionOffset].version
-    val head = availableNowEnd.getOrElse(Snapshots.maxCommitted(root))
-    if (head <= s0) return VersionOffset(s0)
-    val (fileCap: Option[Int], byteCap: Option[Long]) = limit match {
-      case g: GraftMicroBatchStream.GraftReadLimit => (g.maxFiles, g.maxBytes)
-      case f: org.apache.spark.sql.connector.read.streaming.ReadMaxFiles =>
-        (Some(f.maxFiles()), None)
-      case _ => (None, None)
-    }
-    if (fileCap.isEmpty && byteCap.isEmpty) VersionOffset(head)
-    else {
-      val oldest = Snapshots.minCommitted(root)
-      var end = s0
-      var count = 0
-      var bytes = 0L
-      var full = false
-      var v = if (s0 == 0) oldest else s0 + 1
-      while (!full && v <= head) {
-        val fs = stepFiles(s0, v, oldest)
-        val emitBytes =
-          if (byteCap.isEmpty) 0L
-          else {
-            val sized = fs.map { f =>
-              try Some(java.nio.file.Files.size(java.nio.file.Paths.get(f)))
-              catch { case _: Exception => None }
-            }
-            val known = sized.flatten
-            val est =
-              if (known.nonEmpty) math.max(1L, known.sum / known.size)
-              else byteCap.get
-            sized.map(_.getOrElse(est)).sum
-          }
-        val over = fileCap.exists(c => count + fs.size > c) ||
-          byteCap.exists(b => bytes + emitBytes > b)
-        if (end > s0 && over) full = true
-        else { end = v; count += fs.size; bytes += emitBytes; v += 1 }
-      }
-      VersionOffset(end)
+  /** A step's plan, per its [[Snapshots.StepKind]]:
+    *  - rows-unchanged: nothing;
+    *  - materialized: the `#changes:` sidecars, verbatim (the diff
+    *    already IS insert+delete rows; planning the rewrite's own
+    *    files would re-emit every survivor). O(touched rows);
+    *  - append or change: a change must not remove files (a rewrite on
+    *    a table without the rewrite-diff property refuses); the ADDED
+    *    files' visible rows as `insert`, then the delete-set and
+    *    position-delete deltas over the parent's files, both
+    *    directions — rows newly hidden as `delete`, rows un-hidden (a
+    *    restore dropping delete lines) as `insert`. */
+  private def slices(st: Snapshots.Step): Seq[ChangeSlice] = {
+    val v = st.version
+    val ts = st.current.ts.getOrElse(-1L)
+    st.kind match {
+      case Snapshots.StepKind.RowsUnchanged => Nil
+      case Snapshots.StepKind.Materialized =>
+        Seq(ChangeSlice(st.current.changeFiles, sidecars = true, p =>
+          ChangePartition(p, v, "", Array.empty, ChangePartition.Materialized,
+            commitTs = ts)))
+      case _ =>
+        require(st.removed.isEmpty,
+          s"version $v of $root is a rewrite commit (files replaced) on a " +
+            s"table without '${GraftTable.rewriteDiffProp}'; set the " +
+            "property to materialize rewrite diffs, or consume batch " +
+            "readChangesRows")
+        insertSlices(st, ts) ++
+          keyDelta(st, "delete", st.current, st.addedDels, st.parent, ts) ++
+          keyDelta(st, "insert", st.parent, st.droppedDels, st.current, ts) ++
+          posDeltas(st, ts)
     }
   }
 
-  override def commit(end: Offset): Unit = ()
+  /** The ADDED files' visible rows as `insert` — ordinals the
+    * version's own DVs hide and keys its applicable delete sets hide
+    * are skipped, so the feed never resurrects a hidden row (the
+    * initial chunk is the oldest retained state with its pending
+    * deletes applied). */
+  private def insertSlices(st: Snapshots.Step, ts: Long): Seq[ChangeSlice] = {
+    val snap = st.current
+    st.added.groupBy(f => applicableSets(snap, f, snap.deletes)).toSeq
+      .sortBy(_._2.head).flatMap { case (dels, fs) =>
+        val seq = snap.seqOf(fs.head)
+        val (withDv, plain) = fs.partition(snap.posDeletes.contains)
+        def insert(files: Seq[String], dv: Array[Byte]) =
+          ChangeSlice(files, sidecars = false, p => ChangePartition(p, st.version, "insert", dv,
+            ChangePartition.Insert, prevDels = dels, prevSeq = seq, commitTs = ts))
+        (if (plain.isEmpty) Nil else Seq(insert(plain, Array.empty))) ++
+          // a DV-covered file plans ALONE so its partitions bind to one bitmap
+          withDv.map { f =>
+            val bm = bitmapsOf(snap, f).getOrElse(new org.roaringbitmap.RoaringBitmap)
+            insert(Seq(f), serialize(bm))
+          }
+      }
+  }
 
-  override def stop(): Unit = ()
+  /** The KEYED-delete delta in one direction: rows of the parent's
+    * files that `dels` hide in state `hiding` and that state `other`'s
+    * full delete sets do not, tagged `changeType`. `delete`: the added
+    * sets (a DELETE on a `graft.mor.key` table, or the delete half of
+    * an upsert) against the parent — already-hidden rows never
+    * re-emit. `insert`: the dropped sets at the parent's sequence
+    * against the current sets — the rows a restore un-hides. Only files
+    * a set covers are scanned; each group shares one delete scoping. */
+  private def keyDelta(st: Snapshots.Step, changeType: String, hiding: Snapshot,
+      dels: Seq[Snapshots.DeleteFile], other: Snapshot, ts: Long): Seq[ChangeSlice] =
+    if (dels.isEmpty) Nil
+    else st.parent.files.sorted
+      .map(f => f -> (applicableSets(hiding, f, dels),
+        applicableSets(other, f, other.deletes)))
+      .filter(_._2._1.nonEmpty)
+      .groupBy(_._2).toSeq.sortBy(_._2.head._1)
+      .map { case ((hidingSets, otherSets), pairs) =>
+        val fs = pairs.map(_._1)
+        ChangeSlice(fs, sidecars = false, p => ChangePartition(p, st.version, changeType,
+          Array.empty, ChangePartition.KeyDelta, newDels = hidingSets,
+          newSeq = hiding.seqOf(fs.head), prevDels = otherSets,
+          prevSeq = other.seqOf(fs.head), commitTs = ts))
+      }
+
+  /** The POSITION-delete delta of each parent file whose deletes
+    * changed: ordinals newly hidden (`andNot(curBm, prevBm)`) as
+    * `delete`, ordinals un-hidden (`andNot(prevBm, curBm)`) as
+    * `insert` — a driver-side bitmap subtraction on kilobyte sidecars;
+    * each file plans alone so its partitions bind to one bitmap. */
+  private def posDeltas(st: Snapshots.Step, ts: Long): Seq[ChangeSlice] = {
+    val shared = st.parent.files.toSet
+    st.posTouched.filter(shared).flatMap { f =>
+      val curBm = bitmapsOf(st.current, f).getOrElse(new org.roaringbitmap.RoaringBitmap)
+      val prevBm = bitmapsOf(st.parent, f).getOrElse(new org.roaringbitmap.RoaringBitmap)
+      Seq("delete" -> org.roaringbitmap.RoaringBitmap.andNot(curBm, prevBm),
+          "insert" -> org.roaringbitmap.RoaringBitmap.andNot(prevBm, curBm))
+        .filterNot(_._2.isEmpty).map { case (changeType, delta) =>
+          val dv = serialize(delta)
+          ChangeSlice(Seq(f), sidecars = false, p => ChangePartition(p, st.version,
+            changeType, dv, ChangePartition.PosDelta, commitTs = ts))
+        }
+    }
+  }
+
+  override protected def stepFiles(st: Snapshots.Step): Seq[String] =
+    slices(st).flatMap(_.files)
+
+  override protected def planSteps(steps: Seq[Snapshots.Step]): Array[InputPartition] =
+    steps.flatMap(slices).flatMap { sl =>
+      val scan = if (sl.sidecars) scanEffects(sl.files) else scanOver(sl.files)
+      scan.toBatch.planInputPartitions().map(sl.tag)
+    }.toArray
 
   private val rowIdxField = StructField(GraftRowId.RowIdxTmp, LongType, nullable = true)
 
@@ -365,114 +368,6 @@ private[catalog] class ChangesMicroBatchStream(root: String,
           kcs.map(k => dataSchema(k).dataType), inline = None,
           files = group.map(d => d.path -> d.coversBelow).sorted, keyNames = kcs)
       }
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s0 = start.asInstanceOf[VersionOffset].version
-    val e = end.asInstanceOf[VersionOffset].version
-    if (e <= s0) return Array.empty
-    val oldest = Snapshots.minCommitted(root)
-    require(oldest > 0, s"no committed snapshot under $root")
-    require(s0 == 0 || s0 >= oldest,
-      s"change-feed offset $s0 of $root is beyond retention (oldest " +
-        s"retained version is $oldest) — restart from a fresh checkpoint")
-    val from = if (s0 == 0) oldest else s0
-    val out = Seq.newBuilder[InputPartition]
-    // inserts of one version: the version's VISIBLE rows of `files` —
-    // ordinals its own DVs hide and keys its applicable delete sets
-    // hide are skipped, so the feed never resurrects a hidden row
-    def insertsOf(v: Long, snap: Snapshot, files: Seq[String]): Unit = {
-      val ts = snap.ts.getOrElse(-1L)
-      val byDels = files.groupBy(f => applicableSets(snap, f, snap.deletes))
-      byDels.toSeq.sortBy(_._2.head).foreach { case (dels, fs) =>
-        val seq = snap.seqOf(fs.head)
-        val (withDv, plain) = fs.partition(snap.posDeletes.contains)
-        if (plain.nonEmpty)
-          scanOver(plain).toBatch.planInputPartitions().foreach(p =>
-            out += ChangePartition(p, v, "insert", Array.empty,
-              ChangePartition.Insert, prevDels = dels, prevSeq = seq,
-              commitTs = ts))
-        // a DV-covered file plans ALONE so its partitions bind to one bitmap
-        withDv.foreach { f =>
-          val bm = bitmapsOf(snap, f).getOrElse(new org.roaringbitmap.RoaringBitmap)
-          scanOver(Seq(f)).toBatch.planInputPartitions().foreach(p =>
-            out += ChangePartition(p, v, "insert", serialize(bm),
-              ChangePartition.Insert, prevDels = dels, prevSeq = seq,
-              commitTs = ts))
-        }
-      }
-    }
-    // initial chunk: the oldest retained state, all insert, pending
-    // deletes (vectors AND keyed sets) applied
-    if (s0 == 0) {
-      val snap0 = Snapshots.resolveAt(root, oldest)
-      insertsOf(oldest, snap0, snap0.files)
-    }
-    ((from + 1) to e).foreach { v =>
-      // one manifest read per version: the marker and the commit
-      // wall-clock come with the resolved state
-      val cur = Snapshots.resolveAt(root, v)
-      if (!cur.rowsUnchanged) {
-        val prev = if (v == 1) Snapshot(0, Nil) else Snapshots.resolveAt(root, v - 1)
-        val ts = cur.ts.getOrElse(-1L)
-        val prevF = prev.files.toSet
-        val curF = cur.files.toSet
-        val added = cur.files.filterNot(prevF)
-        val removed = prev.files.exists(!curF(_))
-        if (cur.changeFiles.nonEmpty) {
-          // a rewrite on a `graft.changes.rewriteDiff` table: the
-          // commit's row-level effects are PRE-MATERIALIZED sidecars —
-          // scan them verbatim (the diff already IS insert+delete
-          // rows; planning the rewrite's own files would re-emit every
-          // survivor). O(touched rows), never O(table).
-          scanEffects(cur.changeFiles).toBatch.planInputPartitions().foreach(p =>
-            out += ChangePartition(p, v, "", Array.empty,
-              ChangePartition.Materialized, commitTs = ts))
-        } else {
-        require(!removed,
-          s"version $v of $root is a rewrite commit (files replaced) on a " +
-            s"table without '${GraftTable.rewriteDiffProp}'; set the " +
-            "property to materialize rewrite diffs, or consume batch " +
-            "readChangesRows")
-        insertsOf(v, cur, added)
-        // KEYED-delete delta (DELETE on a graft.mor.key table, or the
-        // delete half of an upsert): emit the previously-VISIBLE rows
-        // of covered files whose key the new sets hide — scoped per
-        // file group, already-hidden rows never re-emit
-        val newDels = cur.deletes.filterNot(prev.deletes.toSet)
-        if (newDels.nonEmpty) {
-          prevF.toSeq.sorted
-            .map(f => f -> (applicableSets(cur, f, newDels),
-              applicableSets(prev, f, prev.deletes)))
-            .filter(_._2._1.nonEmpty)
-            .groupBy(_._2).foreach { case ((newSets, prevSets), pairs) =>
-              val fs = pairs.map(_._1)
-              scanOver(fs).toBatch.planInputPartitions().foreach(p =>
-                out += ChangePartition(p, v, "delete", Array.empty,
-                  ChangePartition.KeyDelta, newDels = newSets,
-                  newSeq = cur.seqOf(fs.head),
-                  prevDels = prevSets, prevSeq = prev.seqOf(fs.head),
-                  commitTs = ts))
-            }
-        }
-        // POSITION-delete delta: newly hidden ordinals per file
-        val dvTouched = (cur.posDeletes.keySet ++ prev.posDeletes.keySet)
-          .filter(f => curF(f) && prevF(f))
-          .filter(f => cur.posDeletes.getOrElse(f, Nil) != prev.posDeletes.getOrElse(f, Nil))
-          .toSeq.sorted
-        dvTouched.foreach { f =>
-          val curBm = bitmapsOf(cur, f).getOrElse(new org.roaringbitmap.RoaringBitmap)
-          val prevBm = bitmapsOf(prev, f).getOrElse(new org.roaringbitmap.RoaringBitmap)
-          val delta = org.roaringbitmap.RoaringBitmap.andNot(curBm, prevBm)
-          if (!delta.isEmpty)
-            scanOver(Seq(f)).toBatch.planInputPartitions().foreach(p =>
-              out += ChangePartition(p, v, "delete", serialize(delta),
-                ChangePartition.PosDelta, commitTs = ts))
-        }
-        }
-      }
-    }
-    out.result().toArray
   }
 
   /** One parquet reader factory (schema + conf only, file-list

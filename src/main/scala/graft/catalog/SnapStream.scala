@@ -19,85 +19,61 @@ final case class VersionOffset(version: Long) extends Offset {
   override def json(): String = version.toString
 }
 
-/** NATIVE STREAMING SOURCE over a snapshot-catalog table — the read
-  * half of the exactly-once pair whose write half is
-  * [[GraftStreamingWrite]]: `spark.readStream.table("snap.ns.t")` tails
-  * the store's commits the way Delta/Iceberg sources tail their logs.
+/** The shared half of both micro-batch readers of a snapshot table —
+  * the plain stream ([[GraftMicroBatchStream]]) and the row change
+  * feed ([[ChangesMicroBatchStream]]): option parsing, offsets,
+  * `Trigger.AvailableNow` and the file/byte pacing loop. Both read the
+  * log through [[Snapshots.steps]], the one rule for what a commit did
+  * to the rows; a subclass supplies only its per-step plan and the
+  * files that plan scans ([[stepFiles]], the pacing unit).
   *
-  *  - OFFSETS are committed versions ([[VersionOffset]]). A micro-batch
-  *    (start, end] reads, per version step, the manifest SET-DIFFERENCE
-  *    `files(v) -- files(v-1)` — the same metadata-only delta
-  *    [[Snapshots.changedFiles]] hands batch consumers; nothing ever
-  *    re-lists or re-scans the base data, so a micro-batch over a
-  *    100 TB table costs O(new files) planning + O(new rows) I/O.
-  *  - The INITIAL batch (offset 0) is the full snapshot at the oldest
-  *    retained version, then per-version tailing — Delta's
-  *    initial-snapshot-then-tail shape. `startingVersion` skips the
-  *    initial snapshot ("only changes after v").
-  *  - RATE LIMIT: `maxFilesPerTrigger` caps the files admitted per
-  *    batch through [[SupportsAdmissionControl]]. Offsets are version-
-  *    granular, so a single version's files are admitted atomically —
-  *    the cap rounds UP to the next version boundary (at least one
-  *    version per batch, so the stream always progresses).
-  *  - CHANGE COMMITS (a rewrite/DELETE/UPDATE/upsert: files removed or
-  *    delete lines added) are NOT appends: by default the stream FAILS
-  *    on one with a clear error; `skipChangeCommits=true` skips them
-  *    entirely (Delta's option of the same name). Append-only commits
-  *    — INSERT INTO, the streaming sink's epochs, WAP publishes — flow
-  *    through exactly once.
+  *  - OFFSETS are committed versions ([[VersionOffset]]), EXCLUSIVE: a
+  *    micro-batch (start, end] plans the steps after `start`. Offset 0
+  *    opens with the initial chunk at the oldest retained version.
+  *    `startingVersion` v = only commits after v (unlike Delta's
+  *    inclusive `table_changes`); `startingTimestamp` resolves to the
+  *    newest version committed at or before the literal
+  *    ([[Snapshots.versionAtTimestamp]] — the `TIMESTAMP AS OF` rule),
+  *    so the read delivers exactly the commits after that instant. A
+  *    timestamp predating retained history starts from the initial
+  *    chunk (everything qualifies, Delta's startingTimestamp rule).
+  *  - RATE LIMIT: `maxFilesPerTrigger` and `maxBytesPerTrigger` cap
+  *    the files (and their summed on-disk size, from local file
+  *    metadata — no footer or data I/O) admitted per batch through
+  *    [[SupportsAdmissionControl]]; whichever trips first bounds the
+  *    batch. Offsets are version-granular, so a version's files are
+  *    admitted atomically — a cap rounds UP to the next version
+  *    boundary and at least one version is admitted per batch, so an
+  *    oversized commit slows the stream down instead of stalling it.
   *  - REPLAY SAFETY: offsets live in the query checkpoint; versions are
   *    immutable; a restarted query re-plans its last range
   *    deterministically. Retention contract: vacuum must keep at least
   *    the versions an active consumer still has to read — a stream
   *    whose checkpointed offset fell below retention fails with the
-  *    same clear error as any expired time travel.
-  */
-private[catalog] class GraftMicroBatchStream(root: String,
-    tableSchema: StructType, readSchema: StructType,
+  *    steps' retention error. */
+private[catalog] abstract class VersionTailStream(root: String,
     options: CaseInsensitiveStringMap)
   extends MicroBatchStream with SupportsAdmissionControl
   with SupportsTriggerAvailableNow {
 
-  private def spark = SparkSession.active
+  protected def spark: SparkSession = SparkSession.active
 
-  private val maxFilesPerTrigger: Option[Int] = {
-    val v = Option(options.get(GraftMicroBatchStream.MaxFilesOption))
-    v.map(_.trim.toInt).map { n =>
+  private val maxFilesPerTrigger: Option[Int] =
+    Option(options.get(GraftMicroBatchStream.MaxFilesOption)).map { s =>
+      val n = s.trim.toInt
       require(n > 0, s"${GraftMicroBatchStream.MaxFilesOption} must be positive: $n")
       n
     }
-  }
 
-  /** Byte-rate cap: admit whole versions until the summed ON-DISK size
-    * of the admitted files crosses the cap (sizes come from the local
-    * file metadata — no footer or data I/O). Composes with
-    * `maxFilesPerTrigger`; whichever cap trips first bounds the batch.
-    * Like the file cap, it rounds UP to a version boundary and always
-    * admits at least one version, so a single oversized commit slows
-    * the stream down instead of stalling it. */
-  private val maxBytesPerTrigger: Option[Long] = {
-    val v = Option(options.get(GraftMicroBatchStream.MaxBytesOption))
-    v.map(_.trim).map { s =>
+  private val maxBytesPerTrigger: Option[Long] =
+    Option(options.get(GraftMicroBatchStream.MaxBytesOption)).map(_.trim).map { s =>
       val n = try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
       catch { case _: Exception => throw new IllegalArgumentException(
         s"${GraftMicroBatchStream.MaxBytesOption} does not parse as a byte size: $s") }
       require(n > 0, s"${GraftMicroBatchStream.MaxBytesOption} must be positive: $s")
       n
     }
-  }
 
-  private val skipChangeCommits: Boolean =
-    options.getBoolean(GraftMicroBatchStream.SkipChangesOption, false)
-
-  /** The stream's initial offset (EXCLUSIVE): 0 = full initial
-    * snapshot then tail; `startingVersion` v = only changes after v;
-    * `startingTimestamp` resolves to the newest version committed at
-    * or before the literal ([[Snapshots.versionAtTimestamp]] — the
-    * `TIMESTAMP AS OF` rule), so the stream delivers exactly the
-    * commits after that instant. A timestamp predating retained
-    * history starts from the initial snapshot (everything qualifies,
-    * Delta's startingTimestamp rule). Catch-up ingest never replays
-    * commits at or before the start point. */
   private val startingVersion: Long = {
     val sv = Option(options.get(GraftMicroBatchStream.StartingVersionOption))
       .map(_.trim.toLong)
@@ -178,16 +154,15 @@ private[catalog] class GraftMicroBatchStream(root: String,
       var end = s0
       var count = 0
       var bytes = 0L
-      val it = steps(s0, head).iterator
+      val it = Snapshots.steps(root, s0, head)
       var full = false
       while (!full && it.hasNext) {
         val st = it.next()
-        val skipped = st.isChange && skipChangeCommits
-        val emit = if (skipped) 0 else st.added.size
-        val emitBytes =
-          if (skipped || byteCap.isEmpty) 0L
+        val fs = stepFiles(st)
+        val fsBytes =
+          if (byteCap.isEmpty) 0L
           else {
-            val sized = st.added.map { f =>
+            val sized = fs.map { f =>
               try Some(java.nio.file.Files.size(java.nio.file.Paths.get(f)))
               catch { case _: Exception => None }
             }
@@ -204,90 +179,83 @@ private[catalog] class GraftMicroBatchStream(root: String,
               else byteCap.get
             sized.map(_.getOrElse(est)).sum
           }
-        val over = fileCap.exists(c => count + emit > c) ||
-          byteCap.exists(b => bytes + emitBytes > b)
+        val over = fileCap.exists(c => count + fs.size > c) ||
+          byteCap.exists(b => bytes + fsBytes > b)
         if (end > s0 && over) full = true
-        else { end = st.version; count += emit; bytes += emitBytes }
+        else { end = st.version; count += fs.size; bytes += fsBytes }
       }
       VersionOffset(end)
     }
   }
 
-  /** One version's worth of tailed change: the data files it ADDED
-    * (manifest set-difference against its parent) and whether it
-    * changed pre-existing data (removed files or new delete lines). */
-  private case class Step(version: Long, added: Seq[String], isChange: Boolean)
+  /** The files the plan of one step scans — the pacing unit.
+    * Metadata-only. */
+  protected def stepFiles(st: Snapshots.Step): Seq[String]
 
-  /** The per-version additions in (s0, e], initial-load aware. Vacuum
-    * expires manifests as a prefix, so inside the retained suffix every
-    * parent manifest exists; the only special cases are the two ends:
-    * offset 0 against a partially-vacuumed history reads the oldest
-    * retained version as one full initial chunk, and an offset that
-    * fell BELOW retention (the consumer lagged past vacuum) fails with
-    * the retention contract's error. */
-  private def steps(s0: Long, e: Long): Seq[Step] = {
-    if (e <= s0) return Nil
-    val oldest = Snapshots.minCommitted(root)
-    require(oldest > 0, s"no committed snapshot under $root")
-    val (init, from) =
-      if (s0 >= oldest || (s0 == 0 && oldest == 1)) (Nil, s0)
-      else if (s0 == 0) {
-        // initial load over vacuumed history: the oldest retained
-        // manifest IS the accumulated state of everything before it
-        val snap0 = Snapshots.resolveAt(root, oldest)
-        requireNoPendingDeletes(snap0, "the initial snapshot")
-        (Seq(Step(oldest, snap0.files, isChange = false)), oldest)
-      } else throw new IllegalStateException(
-        s"stream offset $s0 of $root is beyond retention (oldest retained " +
-          s"version is $oldest): the consumer lagged past vacuum — restart " +
-          "from a fresh checkpoint")
-    val tail = ((from + 1) to e).map { v =>
-      // a writer-marked rows-unchanged commit (compaction, z-order,
-      // delete-file merge — Snapshots.commitCompaction) relocated
-      // bytes without changing the row set: the stream passes over it
-      // silently instead of refusing, the same way Delta treats
-      // dataChange=false actions
-      val cur = Snapshots.resolveAt(root, v)
-      if (cur.rowsUnchanged) Step(v, Nil, isChange = false)
-      else {
-        val prev = if (v == 1) Snapshot(0, Nil) else Snapshots.resolveAt(root, v - 1)
-        val prevF = prev.files.toSet
-        val curF = cur.files.toSet
-        val added = cur.files.filterNot(prevF)
-        val removed = prev.files.exists(!curF(_))
-        val prevDel = prev.deletes.toSet
-        val newDel = cur.deletes.exists(!prevDel(_))
-        val posChanged = cur.posDeletes != prev.posDeletes
-        Step(v, added, removed || newDel || posChanged)
-      }
-    }
-    init ++ tail
+  /** The input partitions of a micro-batch's steps. */
+  protected def planSteps(steps: Seq[Snapshots.Step]): Array[InputPartition]
+
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    planSteps(Snapshots.steps(root, start.asInstanceOf[VersionOffset].version,
+      end.asInstanceOf[VersionOffset].version).toSeq)
+}
+
+/** NATIVE STREAMING SOURCE over a snapshot-catalog table — the read
+  * half of the exactly-once pair whose write half is
+  * [[GraftStreamingWrite]]: `spark.readStream.table("snap.ns.t")` tails
+  * the store's commits the way Delta/Iceberg sources tail their logs.
+  * Offsets, start options (EXCLUSIVE: `startingVersion` v = only the
+  * commits after v, unlike Delta's inclusive `table_changes`) and
+  * pacing are [[VersionTailStream]]'s.
+  *
+  *  - Per [[Snapshots.steps]] step the micro-batch reads the step's
+  *    ADDED files — a metadata-only manifest set-difference; nothing
+  *    ever re-lists or re-scans the base data, so a micro-batch over a
+  *    100 TB table costs O(new files) planning + O(new rows) I/O.
+  *  - The INITIAL chunk (offset 0) is the full snapshot at the oldest
+  *    retained version, then per-version tailing — Delta's
+  *    initial-snapshot-then-tail shape. A snapshot with pending
+  *    merge-on-read deletes cannot be tailed as raw files and refuses.
+  *  - Writer-marked rows-unchanged commits (compaction, z-order,
+  *    delete-file merge) pass over silently, the way Delta treats
+  *    `dataChange=false` actions.
+  *  - Every other non-append step — a rewrite (materialized or not), a
+  *    DELETE/UPDATE/upsert, a restore that drops delete lines and so
+  *    un-hides rows — is a CHANGE commit: by default the stream FAILS
+  *    on one with a clear error; `skipChangeCommits=true` skips it
+  *    entirely (Delta's option of the same name). Append-only commits
+  *    — INSERT INTO, the streaming sink's epochs, WAP publishes — flow
+  *    through exactly once.
+  */
+private[catalog] class GraftMicroBatchStream(root: String,
+    tableSchema: StructType, readSchema: StructType,
+    options: CaseInsensitiveStringMap)
+  extends VersionTailStream(root, options) {
+
+  private val skipChangeCommits: Boolean =
+    options.getBoolean(GraftMicroBatchStream.SkipChangesOption, false)
+
+  override protected def stepFiles(st: Snapshots.Step): Seq[String] = st.kind match {
+    case Snapshots.StepKind.Append => st.added
+    case Snapshots.StepKind.RowsUnchanged => Nil
+    case _ if st.initial => throw new IllegalArgumentException(
+      s"the initial snapshot of $root carries pending merge-on-read deletes; " +
+        "compact the table (full rewrite) before streaming from it, or use " +
+        s"${GraftMicroBatchStream.StartingVersionOption} to start after a rewrite")
+    case _ if skipChangeCommits => Nil
+    case _ => throw new IllegalStateException(
+      s"version ${st.version} of $root is a data-changing commit (rewrite, " +
+        "DELETE/UPDATE, upsert, or a restore that un-hides rows) — a " +
+        "streaming read tails appends only. " +
+        s"Set ${GraftMicroBatchStream.SkipChangesOption}=true to skip change " +
+        "commits, or restart from a fresh checkpoint to re-read the " +
+        "rewritten state as a new initial snapshot")
   }
 
-  /** A snapshot with PENDING merge-on-read deletes cannot be tailed as
-    * raw files — the emitted rows would include deleted ones. Appends
-    * after the stream started are delete-free by construction (a new
-    * delete is a change commit); only the initial chunk needs this
-    * guard. */
-  private def requireNoPendingDeletes(snap: Snapshot, what: String): Unit =
-    require(snap.deletes.isEmpty && snap.posDeletes.isEmpty,
-      s"$what of $root carries pending merge-on-read deletes; compact the " +
-        "table (full rewrite) before streaming from it, or use " +
-        s"${GraftMicroBatchStream.StartingVersionOption} to start after a rewrite")
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s0 = start.asInstanceOf[VersionOffset].version
-    val e = end.asInstanceOf[VersionOffset].version
-    val files = steps(s0, e).flatMap { st =>
-      if (!st.isChange) st.added
-      else if (skipChangeCommits) Nil
-      else throw new IllegalStateException(
-        s"version ${st.version} of $root is a data-changing commit (rewrite, " +
-          "DELETE/UPDATE, or upsert) — a streaming read tails appends only. " +
-          s"Set ${GraftMicroBatchStream.SkipChangesOption}=true to skip change " +
-          "commits, or restart from a fresh checkpoint to re-read the " +
-          "rewritten state as a new initial snapshot")
-    }
+  /** One scan over every step's files, so small appends pack into
+    * shared partitions. */
+  override protected def planSteps(steps: Seq[Snapshots.Step]): Array[InputPartition] = {
+    val files = steps.flatMap(stepFiles)
     if (files.isEmpty) Array.empty
     else scanOver(files).toBatch.planInputPartitions()
   }

@@ -1500,6 +1500,83 @@ object Snapshots {
     frame(spark, root, Some(resolve(root).getOrElse(throw new IllegalStateException(
       s"no committed snapshot under $root"))))
 
+  /** What one commit did to the table's rows, as every reader of the
+    * log classifies it ([[Step.kind]]). */
+  sealed trait StepKind
+  object StepKind {
+    /** The writer's `#rowsunchanged` marker (compaction, z-order,
+      * delete-file merge): bytes moved, the row set did not. */
+    case object RowsUnchanged extends StepKind
+    /** A rewrite whose row effects are materialized `#changes:`
+      * sidecars ([[Snapshot.changeFiles]]). */
+    case object Materialized extends StepKind
+    /** Files added and nothing else: no file removed, delete lines and
+      * position deletes unchanged. Its rows are exactly the added
+      * files read raw. */
+    case object Append extends StepKind
+    /** Anything else: a file removed, a delete line added or dropped,
+      * or a file's position deletes changed. */
+    case object Change extends StepKind
+  }
+
+  /** One version step of the log: `current` against its `parent`. The
+    * INITIAL chunk — the oldest retained state, read as one step
+    * against the empty table — has a version-0 parent; it is never
+    * rows-unchanged or materialized, since its rows are the whole
+    * state. */
+  final case class Step(parent: Snapshot, current: Snapshot) {
+    def version: Long = current.version
+    def initial: Boolean = parent.version == 0L
+    lazy val added: Seq[String] = {
+      val p = parent.files.toSet
+      current.files.filterNot(p)
+    }
+    lazy val removed: Seq[String] = {
+      val c = current.files.toSet
+      parent.files.filterNot(c)
+    }
+    lazy val addedDels: Seq[DeleteFile] = current.deletes.filterNot(parent.deletes.toSet)
+    lazy val droppedDels: Seq[DeleteFile] = parent.deletes.filterNot(current.deletes.toSet)
+    /** Files whose position deletes differ between the two states. */
+    lazy val posTouched: Seq[String] =
+      (parent.posDeletes.keySet ++ current.posDeletes.keySet).toSeq.sorted.filter(f =>
+        parent.posDeletes.getOrElse(f, Nil) != current.posDeletes.getOrElse(f, Nil))
+    lazy val kind: StepKind =
+      if (!initial && current.rowsUnchanged) StepKind.RowsUnchanged
+      else if (!initial && current.changeFiles.nonEmpty) StepKind.Materialized
+      else if (removed.isEmpty && addedDels.isEmpty && droppedDels.isEmpty &&
+          posTouched.isEmpty) StepKind.Append
+      else StepKind.Change
+  }
+
+  /** The version steps of `(s0, e]` — the one tailer both micro-batch
+    * streams, the batch `.changes` scan and [[readChangesRows]] read
+    * the log through. The start is EXCLUSIVE (`s0` = "after version
+    * s0"); `s0 = 0` starts with the initial chunk at the oldest
+    * retained version, so a partially vacuumed history still reads
+    * whole. [[vacuum]] expires manifests as a prefix, so every parent
+    * inside the retained suffix resolves; a start that fell below it
+    * fails with the retention error. Lazy: each manifest is read once,
+    * when its step is reached. */
+  def steps(root: String, s0: Long, e: Long): Iterator[Step] = {
+    if (e <= s0) return Iterator.empty
+    val oldest = minCommitted(root)
+    require(oldest > 0, s"no committed snapshot under $root")
+    if ((s0 > 0 && s0 < oldest) || e < oldest) throw new IllegalStateException(
+      s"start version $s0 of $root is beyond retention (oldest retained " +
+        s"version is $oldest). Starts are exclusive — a read from version v " +
+        "covers the commits after v, unlike Delta's inclusive table_changes " +
+        "— so a start must be 0 (the initial snapshot) or a retained version; " +
+        "a stream that lagged past vacuum restarts from a fresh checkpoint")
+    var parent = if (s0 == 0L) Snapshot(0, Nil) else resolveAt(root, s0)
+    (math.max(s0 + 1, oldest) to e).iterator.map { v =>
+      val cur = resolveAt(root, v)
+      val st = Step(parent, cur)
+      parent = cur
+      st
+    }
+  }
+
   /** File-level change feed between two committed versions: the files
     * present in `toVersion`'s manifest but not in `fromVersion`'s
     * (`fromVersion = 0` means "since the beginning"). For append
@@ -1546,21 +1623,20 @@ object Snapshots {
     * against the STATE at `toVersion`, keyed by `keyCols` (a primary
     * key — null keys never match, the MOR delete contract).
     *
-    * Fast paths: (1) a range that removed no files and changed no
-    * pending delete set (append-only) is exactly the added files read
-    * once, all `insert` — O(delta) I/O, never O(table); (2) a range
-    * whose every rewriting commit carries the writer's
-    * `#rowsunchanged` marker ([[commitCompaction]] — Delta's
-    * `dataChange=false`) attributes zero row changes to those commits
-    * and stays O(delta) EVEN ACROSS the rewrite: the feed is the
-    * unmarked commits' added files. An UNMARKED rewrite or a
-    * MOR-delete commit in the range breaks per-file attribution (the
-    * rewrite republished every surviving row), and the feed compares
-    * the two states ROW-LEVEL — but scoped by the manifest file diff,
-    * O(TOUCHED) not O(table): only removed files, added files, and
-    * delta-key candidates from shared files whose delete scope
-    * changed enter the full-outer key join; untouched rows cancel by
-    * construction and are never scanned. (Delta needs materialized
+    * The range is classified step by step through [[steps]], the same
+    * rule the streaming source and the `.changes` feed tail the log
+    * with. Fast path: a range whose every step is an append or carries
+    * the writer's `#rowsunchanged` marker ([[commitCompaction]] —
+    * Delta's `dataChange=false`) is exactly the appends' added files
+    * read once, all `insert` — O(delta) I/O, never O(table), EVEN
+    * ACROSS a marked rewrite. Any other step — an UNMARKED rewrite, a
+    * MOR delete, a restore that drops delete lines — breaks per-file
+    * attribution (a rewrite republished every surviving row), and the
+    * feed compares the two states ROW-LEVEL — but scoped by the
+    * manifest file diff, O(TOUCHED) not O(table): only removed files,
+    * added files, and delta-key candidates from shared files whose
+    * delete scope changed enter the full-outer key join; untouched
+    * rows cancel by construction and are never scanned. (Delta needs materialized
     * row tracking for this; here the manifests' explicit file lists
     * plus the feed's key contract carry the same information.) All
     * paths emit the same schema, so a consumer tails mixed histories
@@ -1571,43 +1647,13 @@ object Snapshots {
     require(keyCols.nonEmpty, "readChangesRows needs at least one key column")
     require(fromVersion >= 0 && fromVersion <= toVersion,
       s"bad change range ($fromVersion, $toVersion]")
+    val rangeSteps = steps(root, fromVersion, toVersion).toSeq
     val to = resolveAt(root, toVersion)
     val from =
       if (fromVersion == 0L) Snapshot(0, Nil) else resolveAt(root, fromVersion)
     val toFiles = to.files.toSet
-    val removed = from.files.exists(!toFiles(_))
-    val delsChanged = from.deletes.toSet != to.deletes.toSet ||
-      from.posDeletes != to.posDeletes
-    // Commit-attributed fast path: when every commit in the range that
-    // removed files or touched the delete set carries the writer's
-    // `#rowsunchanged` marker (compaction, z-order, delete-file merge —
-    // Delta's dataChange=false), those commits contribute zero row
-    // changes by contract, and the logical delta is exactly the files
-    // added by the UNMARKED (append-only) commits — O(delta) I/O, no
-    // state join, even though the range crosses a rewrite. O(range)
-    // manifest reads to classify, all metadata-only.
-    lazy val attributed: Option[Seq[String]] =
-      if (fromVersion == 0L) None
-      else {
-        val perVersion = ((fromVersion + 1) to toVersion).map { v =>
-          val prev = resolveAt(root, v - 1)
-          val cur = resolveAt(root, v)
-          val curFiles = cur.files.toSet
-          if (cur.rowsUnchanged) Some(Nil)
-          else if (prev.files.forall(curFiles) &&
-            prev.deletes.toSet == cur.deletes.toSet &&
-            prev.posDeletes == cur.posDeletes)
-            Some(cur.files.filterNot(prev.files.toSet))
-          else None
-        }
-        if (perVersion.forall(_.isDefined)) Some(perVersion.flatMap(_.get))
-        else None
-      }
-    if (!removed && !delsChanged)
-      readChanges(spark, root, fromVersion, toVersion)
-        .withColumn("_change_type", lit("insert"))
-    else if (attributed.isDefined) {
-      val added = attributed.get
+    if (rangeSteps.forall(s => s.kind == StepKind.Append || s.kind == StepKind.RowsUnchanged)) {
+      val added = rangeSteps.filter(_.kind == StepKind.Append).flatMap(_.added)
       if (added.nonEmpty) frame(spark, root, Some(rawFiles(to, added)))
         .withColumn("_change_type", lit("insert"))
       else readAt(spark, root, toVersion).limit(0)
