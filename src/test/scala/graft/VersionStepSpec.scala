@@ -41,10 +41,10 @@ class VersionStepSpec extends SparkSpec {
 
   /** v1 inserts ids 0..4, v2 deletes id 2, v3 restores v1 — the
     * restore drops v2's delete and un-hides id 2. Returns the root. */
-  private def restoredTable(name: String, morProp: String): String = {
+  private def restoredTable(name: String, mor: (String, String)): String = {
     sqlDf(s"DROP TABLE IF EXISTS snap.default.$name")
     sqlDf(s"CREATE TABLE snap.default.$name (id BIGINT, v BIGINT) " +
-      s"TBLPROPERTIES ('$morProp')")
+      s"TBLPROPERTIES ('${mor._1}'='${mor._2}')")
     sqlDf(s"INSERT INTO snap.default.$name SELECT id, id * 10 FROM range(0, 5)")
     sqlDf(s"DELETE FROM snap.default.$name WHERE id = 2")
     val root = s"$wh/default/$name"
@@ -52,8 +52,8 @@ class VersionStepSpec extends SparkSpec {
     root
   }
 
-  private def unHideMatchesRowFeed(name: String, morProp: String): Unit = {
-    val root = restoredTable(name, morProp)
+  private def unHideMatchesRowFeed(name: String, mor: (String, String)): Unit = {
+    val root = restoredTable(name, mor)
     val want = Set((2L, 20L, "insert"))
     val rows = Snapshots.readChangesRows(spark, root, 2L, 3L, Seq("id"))
       .select($"id", $"v", $"_change_type").as[(Long, Long, String)].collect().toSet
@@ -70,15 +70,15 @@ class VersionStepSpec extends SparkSpec {
   }
 
   test("keyed restore un-hide: batch and streaming .changes emit the row as insert") {
-    unHideMatchesRowFeed("vstepkey", "graft.mor.key'='id")
+    unHideMatchesRowFeed("vstepkey", "graft.mor.key" -> "id")
   }
 
   test("positional restore un-hide: batch and streaming .changes emit the row as insert") {
-    unHideMatchesRowFeed("vsteppos", "graft.mor.positional'='true")
+    unHideMatchesRowFeed("vsteppos", "graft.mor.positional" -> "true")
   }
 
   test("the plain stream refuses a keyed un-hide step, skips it under skipChangeCommits") {
-    val root = restoredTable("vstepplain", "graft.mor.key'='id")
+    val root = restoredTable("vstepplain", "graft.mor.key" -> "id")
     val ex = intercept[Exception](drain("snap.default.vstepplain",
       Map("startingVersion" -> "2")))
     assert(messages(ex).exists(_.contains("version 3 of")) &&
