@@ -47,11 +47,11 @@ private[graft] object SnapBucket {
     * rule that makes int->bigint widening metadata-only). A bucket
     * table with an INT key and NO stamp predates the rule — its
     * committed `_gbucket` directories are int-hash keyed, and serving
-    * them under long-hash readers would silently prune wrong; the
-    * catalog refuses such tables toward a rewrite
-    * ([[GraftTable.bucketSpec]]). Long/string keys hash identically
-    * under both rules, so unstamped tables with those keys stay
-    * servable. */
+    * them under long-hash readers would silently prune wrong, so
+    * [[GraftTable.readMeta]] refuses such a table (no writer produces
+    * one: CREATE stamps every bucket table, and SET/UNSET of the stamp
+    * are refused). Long/string keys hash identically under both rules,
+    * so unstamped tables with those keys stay servable. */
   val hashVerProp = "graft.partition.bucket.hash"
   val hashVer = "long"
 

@@ -73,7 +73,7 @@ private[catalog] object SnapChanges {
   /** Commit wall-clock (micros, from the manifest's `#ts:` header) —
     * the Delta-CDF/Iceberg-changelog parity column downstream CDC
     * consumers key on. Populated at planning time, one metadata read
-    * per version step; null only for pre-`#ts` legacy manifests. */
+    * per version step; never null. */
   val CommitTimestampCol = "_commit_timestamp"
 
   def table(fullName: String, root: String): Table =
@@ -153,8 +153,8 @@ private[catalog] final case class ChangePartition(inner: InputPartition,
   version: Long, changeType: String, dvBytes: Array[Byte],
   kind: Int, newDels: Seq[MorDeleteSet] = Nil, newSeq: Long = 0L,
   prevDels: Seq[MorDeleteSet] = Nil, prevSeq: Long = 0L,
-  // commit wall-clock micros from the version's #ts header (-1 = none)
-  commitTs: Long = -1L) extends InputPartition
+  // commit wall-clock micros from the version's #ts header
+  commitTs: Long) extends InputPartition
 
 private[catalog] object ChangePartition {
   val Insert = 0
@@ -189,7 +189,7 @@ private[catalog] class ChangesMicroBatchStream(root: String,
     *    restore dropping delete lines) as `insert`. */
   private def slices(st: Snapshots.Step): Seq[ChangeSlice] = {
     val v = st.version
-    val ts = st.current.ts.getOrElse(-1L)
+    val ts = st.current.ts
     st.kind match {
       case Snapshots.StepKind.RowsUnchanged => Nil
       case Snapshots.StepKind.Materialized =>
@@ -430,7 +430,7 @@ private[catalog] class ChangesReaderFactory(inner: PartitionReaderFactory,
           }
           out.update(n, row.getUTF8String(matTypeIdx).copy())
           out.update(n + 1, cp.version)
-          out.update(n + 2, if (cp.commitTs < 0L) null else cp.commitTs)
+          out.update(n + 2, cp.commitTs)
           current = out
           true
         }
@@ -491,7 +491,7 @@ private[catalog] class ChangesReaderFactory(inner: PartitionReaderFactory,
             }
             out.update(n, typeUtf8)
             out.update(n + 1, cp.version)
-            out.update(n + 2, if (cp.commitTs < 0L) null else cp.commitTs)
+            out.update(n + 2, cp.commitTs)
             current = out
             return true
           }

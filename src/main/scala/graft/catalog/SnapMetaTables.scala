@@ -86,12 +86,9 @@ private[catalog] object SnapMetaTables {
 
   private def buildRows(root: String, kind: String): Array[InternalRow] = kind match {
     case "history" =>
-      (1L to Snapshots.maxCommitted(root)).flatMap { v =>
-        try {
-          val s = Snapshots.resolveAt(root, v)
-          Some(InternalRow(v, s.ts.map(Long.box).orNull,
-            s.files.size, s.deletes.size))
-        } catch { case _: IllegalStateException => None } // vacuumed version
+      Snapshots.retainedVersions(root).map { v =>
+        val s = Snapshots.resolveAt(root, v)
+        InternalRow(v, s.ts, s.files.size, s.deletes.size)
       }.toArray
     case "files" =>
       val s = headOf(root)

@@ -138,8 +138,8 @@ private[catalog] class GraftDeltaOperation(cmd: RowLevelOperation.Command,
 /** POSITIONAL merge-on-read row-level operation — the delete form that
   * needs NO key column: rows are identified by (file, ordinal) row ids
   * the scan synthesizes (`_gfile`/`_gpos` metadata columns, ordinals
-  * generated by the parquet readers), and DELETE commits O(matched
-  * rows) pair bytes while the table's data files never move — the
+  * generated by the parquet readers), and DELETE commits one deletion
+  * vector per touched file while the table's data files never move — the
   * Iceberg-v2 position-delete shape, safe for tables whose rows have
   * no unique key at all (equality deletes by a non-unique key would
   * over-hide). UPDATE arrives as delete+insert. Enabled per table via

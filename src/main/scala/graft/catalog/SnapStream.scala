@@ -94,10 +94,8 @@ private[catalog] abstract class VersionTailStream(root: String,
     require(sv.isEmpty || st.isEmpty,
       s"set at most one of ${GraftMicroBatchStream.StartingVersionOption} / " +
         GraftMicroBatchStream.StartingTimestampOption)
-    sv.orElse(st.map { ts =>
-      try Snapshots.versionAtTimestamp(root, ts)
-      catch { case _: IllegalStateException => 0L } // predates history
-    }).getOrElse(0L)
+    // a timestamp that predates retained history starts at the beginning
+    sv.orElse(st.flatMap(Snapshots.versionAtOrBefore(root, _))).getOrElse(0L)
   }
 
   /** Trigger.AvailableNow pins the end of available data at prepare

@@ -11,7 +11,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex, NoopCache, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.sources.InsertableRelation
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.nio.charset.StandardCharsets.UTF_8
@@ -293,40 +293,10 @@ class GraftTable(tableName: String, val root: String,
     meta.map(m => GraftTable.partColsOf(m._2))
       .getOrElse(pathPartSchema.fieldNames.toSeq)
 
-  /** True iff an INT-keyed bucket spec lacks the CREATE-time
-    * hash-discipline stamp ([[SnapBucket.hashVerProp]]): int keys hash
-    * AS LONGS since r19, which re-keyed every committed int-hash
-    * directory — a legacy (unstamped) table's dirs would prune and
-    * co-partition WRONGLY under the long-hash readers. Long/string
-    * keys hash identically under both rules, so only int needs the
-    * stamp. */
-  private def legacyIntBucket(m: (StructType, Map[String, String]),
-      spec: Option[(String, Int)]): Boolean =
-    spec.exists { case (c, _) =>
-      m._1.fields.find(_.name == c)
-        .exists(_.dataType == org.apache.spark.sql.types.IntegerType) &&
-        !m._2.get(SnapBucket.hashVerProp).contains(SnapBucket.hashVer)
-    }
-
   /** Hash-bucket layout of a `PARTITIONED BY (bucket(n, col))` table
-    * ([[SnapBucket]]); mutually exclusive with [[partCols]]. A LEGACY
-    * int-keyed layout (pre-long-hash dirs, no stamp —
-    * [[legacyIntBucket]]) DEGRADES to None rather than refusing or
-    * serving wrongly: the synthetic segment is derived (the key column
-    * stays in the data files), so scans without the spec read every
-    * row value-exactly — the table merely loses bucket pruning and SPJ.
-    * The loss is permanent for that table: only CREATE TABLE writes the
-    * stamp (no rewrite or compaction re-stamps it, and SET TBLPROPERTIES
-    * of the bucket prop is refused), so regaining pruning and SPJ means
-    * recreating the table (`CREATE TABLE … PARTITIONED BY (bucket(n,
-    * col)) AS SELECT` from it, under a new name). Refusing instead
-    * would dead-end even the remediation read; pruning with the
-    * wrong hash would be silent corruption. */
+    * ([[SnapBucket]]); mutually exclusive with [[partCols]]. */
   def bucketSpec: Option[(String, Int)] =
-    meta.flatMap { m =>
-      val spec = SnapBucket.of(m._2)
-      if (legacyIntBucket(m, spec)) None else spec
-    }
+    meta.flatMap(m => SnapBucket.of(m._2))
 
   /** Time/truncate transform layout ([[SnapTransform]]); composes with
     * [[partCols]], mutually exclusive with [[bucketSpec]]. */
@@ -339,13 +309,7 @@ class GraftTable(tableName: String, val root: String,
     * the source column lives) — but writes stage flat and the table
     * reports no derived partitioning. */
   def retiredBucketSpec: Option[(String, Int)] =
-    // the legacy-int degrade applies to RETIRED layouts too: their
-    // committed dirs would prune just as wrongly (retiring is also the
-    // natural escape a user of a legacy table reaches for first)
-    meta.flatMap { m =>
-      val spec = SnapBucket.ofRetired(m._2)
-      if (legacyIntBucket(m, spec)) None else spec
-    }
+    meta.flatMap(m => SnapBucket.ofRetired(m._2))
 
   def retiredTransformSpec: Option[SnapTransform.Spec] =
     meta.flatMap(m => SnapTransform.ofRetired(m._2))
@@ -777,6 +741,15 @@ object GraftTable {
       val schema = DataType.fromJson(p.getProperty(schemaKey)).asInstanceOf[StructType]
       val props = p.stringPropertyNames().asScala
         .filterNot(_ == schemaKey).map(k => k -> p.getProperty(k)).toMap
+      // an INT-keyed bucket layout (live or retired) without the
+      // CREATE-time hash stamp has int-hash directories, which the
+      // long-hash readers would prune wrongly — refused, never guessed
+      val intBucket = SnapBucket.of(props).orElse(SnapBucket.ofRetired(props))
+        .exists(b => schema.find(_.name == b._1).exists(_.dataType == IntegerType))
+      if (intBucket && !props.get(SnapBucket.hashVerProp).contains(SnapBucket.hashVer))
+        throw new IllegalStateException(s"$f: retired form: an INT-keyed bucket " +
+          s"layout without the '${SnapBucket.hashVerProp}' stamp (int-hash " +
+          "directories); recreate the table")
       Some((schema, props))
     }
   }
@@ -2501,8 +2474,8 @@ private[catalog] final case class PosMorPartition(
   inner: org.apache.spark.sql.execution.datasources.FilePartition,
   seq: Long, file: String, posFiles: Seq[String]) extends InputPartition
 
-// NOTE: position-delete sidecar loading (deletion vectors and legacy
-// pair parquet) lives in [[graft.sources.DeleteVectors]] — one
+// NOTE: position-delete sidecar loading (deletion vectors) lives in
+// [[graft.sources.DeleteVectors]] — one
 // soft-cached, Spark-session-free loader shared by the executor-side
 // partition readers here and delete-file compaction.
 

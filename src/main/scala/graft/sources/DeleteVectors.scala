@@ -10,9 +10,8 @@ import java.nio.file.{Files, Paths}
   * encoding of "which ordinals of ONE immutable data file are
   * deleted": a roaring bitmap per data file, serialized to a tiny
   * `.dv` sidecar, replacing the row-per-pair parquet a positional
-  * DELETE used to stage. Same manifest protocol
-  * (`#posdel:<datafile>:<posfile>` — the posfile is now a `.dv`), same
-  * commit/conflict semantics; what changes is the physics:
+  * DELETE used to stage. Manifest protocol:
+  * `#posdel:<datafile>:<dvfile>`; what changes is the physics:
   *
   *  - SIZE: a 10%-delete of a million-row file is ~125 KB of bitmap vs
   *    >10 MB of (path STRING, pos BIGINT) pairs — at GDPR delete rates
@@ -28,9 +27,8 @@ import java.nio.file.{Files, Paths}
   * (UTF-8, length-prefixed — self-describing and mix-up-proof), the
   * bitmap's portable serialization. Ordinals are file-local row
   * indexes; parquet files top out far below 2³¹ rows, enforced at
-  * write. Legacy pair parquets remain readable everywhere a `.dv` is
-  * ([[isDv]] dispatches), so pre-upgrade manifests and time-travel
-  * reads are untouched. */
+  * write. A `#posdel:` line naming anything but a `.dv` ([[isDv]]) is
+  * refused by [[Manifest.parse]]. */
 private[graft] object DeleteVectors {
 
   val extension = ".dv"
@@ -92,33 +90,20 @@ private[graft] object DeleteVectors {
       }
   }
 
-  /** Load a mixed set of posfiles (`.dv` and legacy pair parquet,
-    * read with parquet-hadoop's Group API — no Spark session needed,
-    * works driver- or executor-side) into ONE merged bitmap per data
+  /** Load a set of `.dv` sidecars into ONE merged bitmap per data
     * file (ORing the sidecars that cover it), soft-cached per JVM so a
-    * table's many tasks load each sidecar once. Compaction consumes
-    * the bitmaps directly (re-serializing one DV per file); the read
+    * table's many tasks load each sidecar once — no Spark session
+    * needed, works driver- or executor-side. Compaction consumes the
+    * bitmaps directly (re-serializing one DV per file); the read
     * filters probe them through [[load]]'s [[Ordinals]] view. */
   def loadBitmaps(paths: Seq[String]): Map[String, RoaringBitmap] = {
     val key = paths.sorted.mkString("|")
     val hit = Option(cache.get(key)).flatMap(r => Option(r.get()))
     hit.getOrElse {
       val perFile = scala.collection.mutable.Map.empty[String, RoaringBitmap]
-      def bitmapOf(f: String): RoaringBitmap =
-        perFile.getOrElseUpdate(f, new RoaringBitmap)
       paths.distinct.foreach { p =>
-        if (isDv(p)) {
-          val (dataFile, bm) = read(p)
-          bitmapOf(dataFile).or(bm)
-        } else {
-          Snapshots.readGroups(p)(_ => { g =>
-            val f = g.getString("file", 0)
-            val pos = g.getLong("pos", 0)
-            require(pos >= 0L && pos <= Int.MaxValue,
-              s"pair ordinal $pos of $f exceeds the deletion-vector range")
-            bitmapOf(f).add(pos.toInt)
-          })
-        }
+        val (dataFile, bm) = read(p)
+        perFile.getOrElseUpdate(dataFile, new RoaringBitmap).or(bm)
       }
       val m: Map[String, RoaringBitmap] = perFile.toMap
       cache.put(key, new java.lang.ref.SoftReference(m))

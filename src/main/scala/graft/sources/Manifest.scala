@@ -19,26 +19,33 @@ import scala.jdk.CollectionConverters._
   *   line                              Snapshot field  rule
   *   #txn:<appId>:<epoch>              txn             FIRST line when present
   *                                                     ([[readTxn]] reads line 1 only)
-  *   #ts:<micros>                      ts              before every file line
+  *   #ts:<micros>                      ts              REQUIRED, before every file line
   *                                                     ([[readTs]] stops at the first)
   *   #rowsunchanged:1                  rowsUnchanged   writer's dataChange=false
   *   #changes:<path>                   changeFiles     this commit's row-effect sidecars
   *   #del:@<coversBelow>:<key>:<path>  deletes         key ':'-free (composite keys
   *                                                     comma-joined), path free
-  *   #del:<key>:<path>                 deletes         LEGACY form: coversBelow =
-  *                                                     Long.MaxValue (covers all)
   *   #seq:<v>:<path>                   fileSeq         effective sequence number
   *   #stats:<json>                     statsRaw        keyed by the JSON's "p" path
   *   #bloom:v2:<col>:<file>            blooms          col ':'-free; other sketch
   *                                                     versions ignored, never carried
-  *   #posdel:<file>:<posfile>          posDeletes      both paths ':'-free
+  *   #posdel:<file>:<posfile>          posDeletes      both paths ':'-free; the posfile
+  *                                                     is a `.dv` deletion vector
   *   <path>                            files
   * }}}
   * Unknown `#` lines are ignored. [[render]] is deterministic: header
   * kinds in the table's order, map-valued kinds sorted by file, seq
   * kinds (files, deletes, change files) in value order — so
   * `parse(render(s)) == s` for every normalized value (map values
-  * non-empty, distinct and sorted; stats bodies whose "p" is their key). */
+  * non-empty, distinct and sorted; stats bodies whose "p" is their key).
+  *
+  * This is the ONE format the reader accepts. A manifest without
+  * `#ts:`, a version-less `#del:<key>:<path>` line, a `#posdel:` line
+  * naming a (file, pos) pair parquet, or a line a known kind cannot
+  * split is refused with an [[IllegalStateException]] naming the
+  * manifest and the line — never guessed at: no writer produces those
+  * forms (Delta's protocol takes the same stance on table features a
+  * reader does not support). */
 private[graft] object Manifest {
 
   private val txnPrefix = "#txn:"
@@ -59,8 +66,10 @@ private[graft] object Manifest {
     * old sidecar wrongly refute a present key. */
   private val bloomLinePrefix = s"${bloomPrefix}v2:"
 
-  /** One pass over a manifest's lines. */
-  def parse(lines: IterableOnce[String], version: Long): Snapshot = {
+  /** One pass over a manifest's lines; `source` names the manifest in
+    * a refusal. */
+  def parse(lines: IterableOnce[String], version: Long,
+      source: String = "manifest"): Snapshot = {
     val files = Vector.newBuilder[String]
     val dels = Vector.newBuilder[DeleteFile]
     val seqs = Map.newBuilder[String, Long]
@@ -71,54 +80,66 @@ private[graft] object Manifest {
     var ts = Option.empty[Long]
     var txn = Option.empty[(String, Long)]
     var rowsUnchanged = false
+    var n = 0
     lines.iterator.foreach { l =>
+      n += 1
+      def refuse(why: String): Nothing = throw refusal(source, n, why, l)
+      def num(s: String): Long = s.toLongOption.getOrElse(refuse("not a number"))
       if (l.isEmpty) ()
       else if (!l.startsWith("#")) files += l
       else if (l.startsWith(delPrefix)) {
         val body = l.stripPrefix(delPrefix)
-        if (body.startsWith("@")) {
-          val Array(v, k, p) = body.stripPrefix("@").split(":", 3)
-          dels += DeleteFile(k, p, v.toLong)
-        } else {
-          val sep = body.indexOf(':')
-          dels += DeleteFile(body.substring(0, sep), body.substring(sep + 1), Long.MaxValue)
+        if (!body.startsWith("@")) refuse("retired form: a version-less delete line")
+        body.substring(1).split(":", 3) match {
+          case Array(v, k, p) => dels += DeleteFile(k, p, num(v))
+          case _ => refuse("truncated delete line")
         }
       } else if (l.startsWith(seqPrefix)) {
-        val Array(v, p) = l.stripPrefix(seqPrefix).split(":", 2)
-        seqs += p -> v.toLong
+        l.stripPrefix(seqPrefix).split(":", 2) match {
+          case Array(v, p) => seqs += p -> num(v)
+          case _ => refuse("truncated sequence line")
+        }
       } else if (l.startsWith(statsPrefix)) {
         val body = l.stripPrefix(statsPrefix)
         statsPathOf(body).foreach(p => stats += p -> body)
       } else if (l.startsWith(bloomLinePrefix)) {
         val body = l.stripPrefix(bloomLinePrefix)
         val sep = body.indexOf(':')
+        if (sep < 0) refuse("truncated bloom line")
         blooms += body.substring(sep + 1) -> body.substring(0, sep) // file -> col
       } else if (l.startsWith(posDelPrefix)) {
         // both paths are ':'-free by the render guard, so the first ':'
         // splits unambiguously
         val body = l.stripPrefix(posDelPrefix)
         val sep = body.indexOf(':')
-        posDels += body.substring(0, sep) -> body.substring(sep + 1)
+        if (sep < 0) refuse("truncated position-delete line")
+        val posFile = body.substring(sep + 1)
+        if (!DeleteVectors.isDv(posFile))
+          refuse("retired form: a position-delete pair parquet, not a deletion vector")
+        posDels += body.substring(0, sep) -> posFile
       } else if (l.startsWith(changesPrefix)) changes += l.stripPrefix(changesPrefix)
-      else if (l.startsWith(tsPrefix)) ts = Some(l.stripPrefix(tsPrefix).toLong)
-      else if (l.startsWith(txnPrefix)) txn = txnOf(l)
+      else if (l.startsWith(tsPrefix)) ts = Some(num(l.stripPrefix(tsPrefix)))
+      else if (l.startsWith(txnPrefix))
+        txn = Some(txnOf(l).getOrElse(refuse("malformed transaction tag")))
       else if (l == rowsUnchangedLine) rowsUnchanged = true
     }
     def grouped(pairs: Vector[(String, String)]): Map[String, Seq[String]] =
       pairs.groupMap(_._1)(_._2).view.mapValues(_.distinct.sorted: Seq[String]).toMap
     Snapshot(version, files.result(), dels.result(), seqs.result(), stats.result(),
       grouped(blooms.result()), grouped(posDels.result()), changes.result(),
-      ts = ts, txn = txn, rowsUnchanged = rowsUnchanged)
+      ts = ts.getOrElse(throw missingTs(source)), txn = txn,
+      rowsUnchanged = rowsUnchanged)
   }
 
   /** The manifest text of `s` (its `version` is the file name, not a
     * line). Refuses values the grammar cannot split back: ':' in a
-    * delete key, bloom column or position-delete path. */
+    * delete key, bloom column or position-delete path, or a posfile
+    * that is not a `.dv`. */
   def render(s: Snapshot): String = {
     val b = new StringBuilder
     def line(l: String): Unit = b.append(l).append('\n')
     s.txn.foreach { case (app, epoch) => line(s"$txnPrefix$app:$epoch") }
-    s.ts.foreach(t => line(s"$tsPrefix$t"))
+    line(s"$tsPrefix${s.ts}")
     if (s.rowsUnchanged) line(rowsUnchangedLine)
     s.changeFiles.foreach(f => line(changesPrefix + f))
     s.deletes.foreach { d =>
@@ -136,8 +157,8 @@ private[graft] object Manifest {
     s.posDeletes.toSeq.sortBy(_._1).foreach { case (f, pfs) =>
       pfs.foreach { p =>
         // ':' is the line delimiter; staging paths never carry one
-        require(!f.contains(':') && !p.contains(':'),
-          s"posdel paths must not contain ':': $f / $p")
+        require(!f.contains(':') && !p.contains(':') && DeleteVectors.isDv(p),
+          s"posdel paths must be ':'-free and name a deletion vector: $f / $p")
         line(s"$posDelPrefix$f:$p")
       }
     }
@@ -167,7 +188,7 @@ private[graft] object Manifest {
       s"delete key column name must not contain ',' or ':' (manifest syntax): $c")
 
   def read(m: Path, version: Long): Snapshot =
-    parse(Files.readAllLines(m, UTF_8).asScala, version)
+    parse(Files.readAllLines(m, UTF_8).asScala, version, m.toString)
 
   /** The `#txn` tag of a manifest: LINE 1 only — render puts it first,
     * so an idempotence probe over every retained manifest stays one
@@ -177,18 +198,27 @@ private[graft] object Manifest {
     try Option(r.readLine()).flatMap(txnOf) finally r.close()
   }
 
-  /** The `#ts:` header (None for pre-header manifests or a missing
-    * file): reads header lines only, stopping at the first file line. */
+  /** The `#ts:` header (None only for a missing file): reads header
+    * lines only, stopping at the first file line. A manifest without
+    * the header is refused, as [[parse]] refuses it. */
   def readTs(m: Path): Option[Long] =
     if (!Files.exists(m)) None
     else {
       val r = Files.newBufferedReader(m, UTF_8)
-      try Iterator.continually(r.readLine())
-        .takeWhile(l => l != null && l.startsWith("#"))
-        .collectFirst { case l if l.startsWith(tsPrefix) =>
-          l.stripPrefix(tsPrefix).toLong }
+      try Iterator.continually(r.readLine()).zipWithIndex
+        .takeWhile { case (l, _) => l != null && l.startsWith("#") }
+        .collectFirst { case (l, i) if l.startsWith(tsPrefix) =>
+          l.stripPrefix(tsPrefix).toLongOption
+            .getOrElse(throw refusal(m.toString, i + 1, "not a number", l)) }
+        .orElse(throw missingTs(m.toString))
       finally r.close()
     }
+
+  private def refusal(source: String, lineNo: Int, why: String, line: String) =
+    new IllegalStateException(s"$source line $lineNo: $why: '$line'")
+
+  private def missingTs(source: String) = new IllegalStateException(
+    s"$source: retired form: no #ts: commit-timestamp header")
 
   // appId may itself hold ':' — the epoch is after the LAST one
   private def txnOf(l: String): Option[(String, Long)] =

@@ -86,8 +86,8 @@ object Snapshots {
       fileSeq: Map[String, Long] = Map.empty,
       statsRaw: Map[String, String] = Map.empty,
       blooms: Map[String, Seq[String]] = Map.empty,
-      // pending POSITION deletes: data file -> the (file, pos) parquet
-      // files whose pairs hide rows of it (`#posdel:` lines). Scope is
+      // pending POSITION deletes: data file -> the `.dv` deletion
+      // vectors hiding rows of it (`#posdel:` lines). Scope is
       // FILE IDENTITY, not a version number: a position names a row of
       // one immutable file, so rewrites absorb posdels naturally (the
       // file leaves the table) and re-inserts can never collide
@@ -100,9 +100,9 @@ object Snapshots {
       // instead of refusing. Not part of the table's data; referenced
       // for retention like delete sidecars
       changeFiles: Seq[String] = Nil,
-      // commit timestamp, µs since epoch UTC (`#ts:`; None on
-      // pre-header manifests) — strictly monotonic per log
-      ts: Option[Long] = None,
+      // commit timestamp, µs since epoch UTC (`#ts:`) — strictly
+      // monotonic per log; 0 until the commit funnel stamps it
+      ts: Long = 0L,
       // (appId, epoch) of an idempotent append ([[commitAppendTxn]])
       txn: Option[(String, Long)] = None,
       // the writer's ROWS-UNCHANGED declaration (Delta's
@@ -197,6 +197,11 @@ object Snapshots {
       if (min == Long.MaxValue) 0L else min
     }
   }
+
+  /** The retained versions [[minCommitted]] to [[maxCommitted]], oldest
+    * first; empty when nothing is committed. */
+  def retainedVersions(root: String): Seq[Long] =
+    math.max(minCommitted(root), 1L) to maxCommitted(root)
 
   /** Resolve the current head to its pinned file list, or None if no
     * commit has ever succeeded. The returned snapshot stays readable
@@ -738,8 +743,8 @@ object Snapshots {
   }
 
   /** Commit timestamp (µs since epoch, UTC) of a committed version, read
-    * from its manifest's `#ts:` header; None for pre-header manifests.
-    * One small metadata read — no data I/O. */
+    * from its manifest's `#ts:` header; None when the manifest is not
+    * retained. One small metadata read — no data I/O. */
   def commitTimestamp(root: String, version: Long): Option[Long] =
     Manifest.readTs(manifestPath(root, version))
 
@@ -1035,7 +1040,7 @@ object Snapshots {
     val commitTs = stampTs(Manifest.readTs(manifestPath(root, fork)))
     // idempotent only against OUR squash (a concurrent re-run);
     // anything else is a lost race and nothing of ours landed
-    if (!link(root, manifestPath(root, target), published.copy(ts = Some(commitTs))) &&
+    if (!link(root, manifestPath(root, target), published.copy(ts = commitTs)) &&
         !sameSquash(root, target, published))
       throw new java.util.ConcurrentModificationException(
         s"cannot fast-forward '$name' into $root: a concurrent commit " +
@@ -1055,10 +1060,8 @@ object Snapshots {
   private def squash(root: String, name: String, fork: Long, bh: Long): Snapshot = {
     val snap = resolveBranchAt(root, name, bh)
     val branchFiles = snap.files.filter(snap.seqOf(_) > fork).toSet
-    // within-branch row-level deletes (legacy cover-everything deletes
-    // parse to MaxValue and keep their semantics verbatim)
-    val branchDels = snap.deletes
-      .filter(d => d.coversBelow > fork && d.coversBelow != Long.MaxValue)
+    // within-branch row-level deletes
+    val branchDels = snap.deletes.filter(_.coversBelow > fork)
     // representability: the squash has TWO file-sequence slots below
     // the next main version ({fork, fork+1} — every published file must
     // sit ≤ fork+1 so a future delete at fork+2 covers it, and ≥ fork
@@ -1093,7 +1096,7 @@ object Snapshots {
     val covered = eras.headOption.map(_._1).getOrElse(Set.empty[String])
     val secondEraCbs = if (eras.size == 2) eras.last._2.toSet else Set.empty[Long]
     val deletes = snap.deletes.map { d =>
-      if (d.coversBelow <= fork || d.coversBelow == Long.MaxValue) d
+      if (d.coversBelow <= fork) d
       else d.copy(coversBelow = if (secondEraCbs(d.coversBelow)) fork + 2 else fork + 1)
     }
     val pins = snap.files.filter(branchFiles)
@@ -1111,7 +1114,7 @@ object Snapshots {
     * marker the recomputed squash never carries (spec: "crashed
     * rewrite-squash publish with an empty diff finishes idempotently"). */
   private def sameSquash(root: String, target: Long, squash: Snapshot): Boolean = {
-    def core(s: Snapshot) = s.copy(ts = None, changeFiles = Nil, rowsUnchanged = false)
+    def core(s: Snapshot) = s.copy(ts = 0L, changeFiles = Nil, rowsUnchanged = false)
     val m = manifestPath(root, target)
     try Files.exists(m) && core(Manifest.read(m, target)) == core(squash)
     catch { case _: Exception => false }
@@ -1174,37 +1177,24 @@ object Snapshots {
       }
     }.toSet
 
-  /** `TIMESTAMP AS OF` resolution: the newest committed version whose
-    * commit timestamp is <= `tsMicros` (Delta's rule). Commit timestamps
-    * are strictly monotonic per table ([[commitImpl]] clamps), so the
-    * answer is unique. Fails clearly when the timestamp predates every
-    * retained commit — same contract as a vacuumed `VERSION AS OF`.
-    * Cost: one header line per retained manifest, metadata-only.
-    *
-    * Legacy manifests (committed before the `#ts:` header existed)
-    * fall back to the manifest FILE's modification time — Delta's own
-    * rule for header-less log entries — so a literal between two
-    * legacy commits still resolves instead of throwing "predates
-    * retained history" past readable versions. Monotonicity across the
-    * legacy/stamped boundary holds because stamped commits clamp
-    * strictly above their parent, and a manifest's mtime can't exceed
-    * its successor's creation. */
-  def versionAtTimestamp(root: String, tsMicros: Long): Long = {
-    val head = maxCommitted(root)
-    def tsOf(v: Long): Option[Long] =
-      commitTimestamp(root, v).orElse {
-        val m = manifestPath(root, v)
-        if (Files.exists(m))
-          Some(Files.getLastModifiedTime(m).toMillis * 1000L)
-        else None
-      }
-    val hit = (1L to head)
-      .flatMap(v => tsOf(v).filter(_ <= tsMicros).map(_ => v))
-      .lastOption
-    hit.getOrElse(throw new IllegalStateException(
+  /** `TIMESTAMP AS OF` resolution: the newest retained version whose
+    * commit timestamp is <= `tsMicros` (Delta's rule). Fails clearly
+    * when the timestamp predates every retained commit — same contract
+    * as a vacuumed `VERSION AS OF`. */
+  def versionAtTimestamp(root: String, tsMicros: Long): Long =
+    versionAtOrBefore(root, tsMicros).getOrElse(throw new IllegalStateException(
       s"no commit at or before timestamp $tsMicros under $root " +
         "(predates retained history)"))
-  }
+
+  /** [[versionAtTimestamp]], None when `tsMicros` predates retained
+    * history. Commit timestamps are strictly monotonic per log
+    * ([[stampTs]]), so the walk stops at the first retained commit
+    * stamped after the literal. Cost: one header per manifest walked,
+    * metadata-only. */
+  def versionAtOrBefore(root: String, tsMicros: Long): Option[Long] =
+    retainedVersions(root).iterator
+      .takeWhile(v => commitTimestamp(root, v).exists(_ <= tsMicros))
+      .reduceOption((_, v) => v)
 
   /** THE commit point, shared by every manifest publisher (plain/append
     * commits, branch commits, staged rewrites and deltas, txn-tagged
@@ -1283,7 +1273,7 @@ object Snapshots {
             s"'${graft.catalog.SnapTransform.prop}' property must not " +
             "stage files under it. Rename the partition column.")
       val ts = stampTs(parentTsOf(v))
-      if (link(root, targetPath(v), snap.copy(version = v, ts = Some(ts))))
+      if (link(root, targetPath(v), snap.copy(version = v, ts = ts)))
         return v
       onLost()
       attempt += 1
@@ -2026,12 +2016,12 @@ object Snapshots {
     * no key column at all): the manifest carries the parent's data
     * files UNCHANGED plus one `#posdel:<datafile>:<posfile>` line per
     * affected data file; `affected` maps each touched data file to the
-    * staged (file STRING, pos BIGINT) pair parquet(s) hiding its rows.
-    * Unlike equality deletes there is NO version scoping: a pair names
-    * a row of ONE immutable file, so later appends can never be
+    * staged `.dv` deletion vector(s) hiding its rows ([[DeleteVectors]]).
+    * Unlike equality deletes there is NO version scoping: an ordinal
+    * names a row of ONE immutable file, so later appends can never be
     * covered by accident and a rewrite absorbs the delete the moment
-    * the file leaves the table. Cost: O(deleted rows) pair bytes + one
-    * manifest — kilobytes on a 100 TB table.
+    * the file leaves the table. Cost: O(deleted rows/8) bitmap bytes +
+    * one manifest — kilobytes on a 100 TB table.
     *
     * Conflict rule: the pairs were computed against a scanned state,
     * so publishing REFUSES (ConcurrentModificationException) if any
@@ -2142,10 +2132,8 @@ object Snapshots {
               }
               grouped.map(g => keyCol -> (g: Seq[DeleteFile]))
           }
-        // pos sidecars need work when a file carries several, or any
-        // is a legacy pair parquet (normalized to one DV per file)
-        val posMergeable = snap.posDeletes.exists { case (_, pfs) =>
-          pfs.size > 1 || pfs.exists(p => !DeleteVectors.isDv(p)) }
+        // pos sidecars need work when a file carries several
+        val posMergeable = snap.posDeletes.exists(_._2.size > 1)
         if (classes.lengthCompare(snap.deletes.size) == 0 && !posMergeable)
           false
         else { planned = classes; snapAtPlan = snap; true }
@@ -2195,20 +2183,16 @@ object Snapshots {
       }
       // POSITION deletes compact to ONE DELETION VECTOR per affected
       // data file, scope-free (an ordinal names a row of one immutable
-      // file): each file's sidecars — stacked `.dv`s from several
-      // statements, or legacy pair parquets — OR into a single bitmap
-      // re-serialized beside the staged delete keys. O(deleted rows/8)
-      // bytes moved, zero table data; a read of one affected file then
-      // loads exactly one small bitmap. Files already carrying a
-      // single DV keep it in place.
-      val needsDv = snapAtPlan.posDeletes.filter { case (_, pfs) =>
-        pfs.size > 1 || pfs.exists(p => !DeleteVectors.isDv(p)) }
+      // file): each file's stacked `.dv`s from several statements OR
+      // into a single bitmap re-serialized beside the staged delete
+      // keys. O(deleted rows/8) bytes moved, zero table data; a read of
+      // one affected file then loads exactly one small bitmap. Files
+      // already carrying a single DV keep it in place.
       val posOut: Map[String, Seq[String]] =
-        if (needsDv.isEmpty) snapAtPlan.posDeletes
+        if (!snapAtPlan.posDeletes.exists(_._2.size > 1)) snapAtPlan.posDeletes
         else {
           snapAtPlan.posDeletes.toSeq.sortBy(_._1).zipWithIndex.map {
-            case ((f, pfs), _) if pfs.size == 1 && DeleteVectors.isDv(pfs.head) =>
-              f -> pfs
+            case ((f, pfs), _) if pfs.size == 1 => f -> pfs
             case ((f, pfs), i) =>
               val bm = DeleteVectors.loadBitmaps(pfs)
                 .getOrElse(f, new org.roaringbitmap.RoaringBitmap)

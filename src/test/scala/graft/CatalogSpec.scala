@@ -287,6 +287,36 @@ class CatalogSpec extends SparkSpec {
     assert(messages(exExpr).exists(_.contains("INVALID_TIME_TRAVEL_TIMESTAMP_EXPR")), exExpr)
   }
 
+  test(".history and TIMESTAMP AS OF walk retained versions; a refused manifest fails") {
+    sqlDf("DROP TABLE IF EXISTS snap.default.hret")
+    sqlDf("CREATE TABLE snap.default.hret AS SELECT id FROM range(5)")
+    (1 to 3).foreach(i => sqlDf(s"INSERT INTO snap.default.hret SELECT $i"))
+    val root = rootOf("hret")
+    val Seq(t2, t3, t4) = (2L to 4L).map(Snapshots.commitTimestamp(root, _).get)
+    Snapshots.vacuum(root, keepLast = 2)
+    def history: Seq[Long] =
+      sqlDf("SELECT version FROM snap.default.hret.history ORDER BY version")
+        .as[Long].collect().toSeq
+    assert(history == Seq(3L, 4L))
+    def countAsOf(us: Long): Long = sqlDf(
+      s"SELECT COUNT(*) FROM snap.default.hret TIMESTAMP AS OF timestamp_micros($us)")
+      .as[Long].head()
+    assert(countAsOf(t4 - 1) == 7L, "between retained commits resolves backward")
+    assert(countAsOf(t4) == 8L)
+    Seq(t3 - 1, t2).foreach { us =>
+      val ex = intercept[Exception](countAsOf(us))
+      assert(messages(ex).exists(_.contains("predates retained history")), ex)
+    }
+    // a retained manifest in a retired form is refused, not dropped
+    // from the history as if it had been vacuumed
+    val m3 = java.nio.file.Paths.get(root, "_commits", "00000003.manifest")
+    java.nio.file.Files.write(m3, "\n#del:id:/nowhere.parquet".getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.APPEND)
+    val ex = intercept[Exception](history)
+    assert(messages(ex).exists(m => m.contains(m3.toString) &&
+      m.contains("version-less delete")), ex)
+  }
+
   test("VERSION AS OF 'tag': a retag re-points, a missing tag raises") {
     sqlDf("DROP TABLE IF EXISTS snap.default.tttag")
     sqlDf("CREATE TABLE snap.default.tttag AS SELECT id FROM range(5)")

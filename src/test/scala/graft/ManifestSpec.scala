@@ -10,9 +10,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 /** The manifest codec on its own — no Spark session: the round-trip
-  * law over generated snapshots, a golden parent-format manifest
-  * (legacy forms included), the line-order rules the header reads
-  * depend on, and the render-side refusals. */
+  * law over generated snapshots, a golden parent-format manifest, the
+  * line-order rules the header reads depend on, the refusals of the
+  * retired forms and of malformed lines, and the render-side refusals. */
 class ManifestSpec extends AnyFunSuite {
 
   private val dataFile: Gen[String] = for {
@@ -46,7 +46,7 @@ class ManifestSpec extends AnyFunSuite {
     posLists <- Gen.listOfN(posFiles.size,
       Gen.choose(1, 3).flatMap(Gen.listOfN(_, sidecar)).map(_.distinct.sorted))
     changes <- Gen.choose(0, 2).flatMap(Gen.listOfN(_, sidecar))
-    ts <- Gen.option(Gen.choose(0L, Long.MaxValue))
+    ts <- Gen.choose(0L, Long.MaxValue)
     txn <- Gen.option(for {
       app <- Gen.oneOf("app", "dsv2-query:7", "")
       epoch <- Gen.choose(0L, 1000000L)
@@ -84,8 +84,8 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   // a manifest in the format the previous line-splicing publishers
-  // wrote, with every line kind plus the legacy forms: a version-less
-  // `#del:` line and a superseded `#bloom:v1:` sketch
+  // wrote, with every line kind plus a superseded `#bloom:v1:` sketch
+  // (the forward-compatibility case: other sketch versions are ignored)
   private val f1 = "/t/v00000001_11_1/part-00000.parquet"
   private val f2 = "/s/v00000001_22_2/part-00000.parquet"
   private val stats1 = s"""{"p":"$f1","rows":10,"cols":{"k":{"min":0,"max":9,"nc":0}}}"""
@@ -95,7 +95,7 @@ class ManifestSpec extends AnyFunSuite {
     "#rowsunchanged:1",
     "#changes:/t/v00000000_dsv2_9/changes-0.parquet",
     "#del:@3:k:/t/v00000003_11_3/part-00000.parquet",
-    "#del:l_orderkey,l_linenumber:/t/v00000002_11_2/part-00000.parquet",
+    "#del:@2:l_orderkey,l_linenumber:/t/v00000002_11_2/part-00000.parquet",
     s"#seq:4:$f2",
     s"#stats:$stats1",
     s"#bloom:v1:k:$f1",
@@ -105,32 +105,26 @@ class ManifestSpec extends AnyFunSuite {
     f1,
     f2)
 
-  test("golden: a parent-format manifest parses to the expected value, legacy forms included") {
+  test("golden: a parent-format manifest parses to the expected value") {
     val expected = Snapshot(5, Seq(f1, f2),
       Seq(DeleteFile("k", "/t/v00000003_11_3/part-00000.parquet", 3),
         DeleteFile("l_orderkey,l_linenumber",
-          "/t/v00000002_11_2/part-00000.parquet", Long.MaxValue)),
+          "/t/v00000002_11_2/part-00000.parquet", 2)),
       fileSeq = Map(f2 -> 4L),
       statsRaw = Map(f1 -> stats1),
       blooms = Map(f1 -> Seq("k", "name")), // v1 sketch ignored
       posDeletes = Map(f1 -> Seq("/t/v00000000_dsv2_3/dv-0.dv")),
       changeFiles = Seq("/t/v00000000_dsv2_9/changes-0.parquet"),
-      ts = Some(1760000000000000L), txn = Some(("app-1", 7L)),
+      ts = 1760000000000000L, txn = Some(("app-1", 7L)),
       rowsUnchanged = true)
     val parsed = Manifest.parse(golden, 5)
     assert(parsed == expected)
-    // re-rendered, the SET of lines is the parent's except the two
-    // legacy forms: the v1 sketch is gone, the legacy delete is
-    // written in its scoped form with the same cover-everything value
+    // re-rendered, the SET of lines is the parent's minus the v1 sketch
     val rendered = linesOf(Manifest.render(parsed)).toSet
-    assert(rendered == golden.toSet - s"#bloom:v1:k:$f1" -
-      "#del:l_orderkey,l_linenumber:/t/v00000002_11_2/part-00000.parquet" +
-      s"#del:@${Long.MaxValue}:l_orderkey,l_linenumber:/t/v00000002_11_2/part-00000.parquet")
-    // a carry drops the v1 sketch for good and keeps the legacy delete's scope
+    assert(rendered == golden.toSet - s"#bloom:v1:k:$f1")
+    // a carry drops the v1 sketch for good
     val carried = Manifest.render(Manifest.retain(parsed, parsed.files))
     assert(!carried.contains("#bloom:v1"))
-    assert(Manifest.parse(linesOf(carried), 6).deletes.map(_.coversBelow) ==
-      Seq(3L, Long.MaxValue))
     // the prefix-only header reads agree with the full parse
     val m = Files.createTempFile("golden", ".manifest")
     try {
@@ -141,17 +135,47 @@ class ManifestSpec extends AnyFunSuite {
     } finally Files.deleteIfExists(m)
   }
 
-  test("golden: a pre-header manifest reads with ts = None and no txn") {
-    val legacy = Seq(s"#del:k:$f2", f1, f2)
-    val parsed = Manifest.parse(legacy, 2)
-    assert(parsed == Snapshot(2, Seq(f1, f2),
-      Seq(DeleteFile("k", f2, Long.MaxValue))))
-    assert(parsed.ts.isEmpty && parsed.txn.isEmpty && !parsed.rowsUnchanged)
-    val m = Files.createTempFile("legacy", ".manifest")
+  /** `lines` written to a temp manifest: the message `Manifest.read`
+    * refuses it with (and, when `readTsToo`, `Manifest.readTs`'s). */
+  private def refusals(lines: Seq[String], readTsToo: Boolean = false): (String, Seq[String]) = {
+    val m = Files.createTempFile("refused", ".manifest")
     try {
-      Files.write(m, legacy.mkString("\n").getBytes(UTF_8))
-      assert(Manifest.readTs(m).isEmpty && Manifest.readTxn(m).isEmpty)
+      Files.write(m, lines.mkString("\n").getBytes(UTF_8))
+      val msgs = intercept[IllegalStateException](Manifest.read(m, 2)).getMessage +:
+        (if (readTsToo) Seq(intercept[IllegalStateException](Manifest.readTs(m)).getMessage)
+         else Nil)
+      (m.toString, msgs)
     } finally Files.deleteIfExists(m)
+  }
+
+  test("retired forms refuse by name: version-less #del, no #ts: header, pair posfile") {
+    val ts = "#ts:1760000000000000"
+    // a version-less delete line (once read as covering every version)
+    val (m1, del) = refusals(Seq(ts, s"#del:k:$f2", f1, f2))
+    assert(del.forall(e => e.contains(s"$m1 line 2") && e.contains("version-less delete")),
+      del)
+    // a manifest without the commit-timestamp header: both the full
+    // parse and the header-only read refuse, so TIMESTAMP AS OF can
+    // never pass over it
+    val (m2, noTs) = refusals(Seq(s"#del:@2:k:$f2", f1, f2), readTsToo = true)
+    assert(noTs.size == 2 && noTs.forall(e => e.contains(m2) && e.contains("no #ts:")), noTs)
+    // a position delete naming a (file, pos) pair parquet
+    val (m3, pair) = refusals(Seq(ts, s"#posdel:$f1:/t/v00000002_11_2/pos-0.parquet", f1))
+    assert(pair.forall(e => e.contains(s"$m3 line 2") && e.contains("pair parquet")), pair)
+    // a missing manifest is the only header read that answers None
+    assert(Manifest.readTs(java.nio.file.Paths.get(m3)).isEmpty)
+  }
+
+  test("malformed manifest lines refuse with the manifest path and line number") {
+    val ts = "#ts:1760000000000000"
+    Seq(Seq(ts, f1, "#del:@3:k") -> 3, Seq(ts, s"#seq:four:$f1", f1) -> 2,
+        Seq("#ts:soon", f1) -> 1, Seq(ts, "#txn:app", f1) -> 2,
+        Seq(ts, s"#posdel:$f1") -> 2).foreach { case (lines, at) =>
+      val (m, msgs) = refusals(lines)
+      assert(msgs.forall(_.contains(s"$m line $at: ")), s"$lines: $msgs")
+    }
+    val (m, msgs) = refusals(Seq("#ts:soon", f1), readTsToo = true)
+    assert(msgs.forall(_.contains(s"$m line 1: not a number")), msgs)
   }
 
   test("retain restricts per-file entries to the kept files and drops per-commit fields") {
@@ -177,5 +201,8 @@ class ManifestSpec extends AnyFunSuite {
       Snapshots.commitDelete("/nonexistent-root", Seq("a,b"))(_ => fail("staged")))
     intercept[IllegalArgumentException](Manifest.render(
       Snapshot(1, Seq(f1), blooms = Map(f1 -> Seq("a:b")))))
+    // the writer side of the pair-parquet refusal: a posfile is a `.dv`
+    intercept[IllegalArgumentException](Manifest.render(
+      Snapshot(1, Seq(f1), posDeletes = Map(f1 -> Seq("/t/pos-0.parquet")))))
   }
 }

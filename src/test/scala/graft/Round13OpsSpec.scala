@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Round-13 store hardening: the MOR delete-key inline gate, the
   * cross-root `#seq:` pinning (positive cases live in Round12OpsSpec's
-  * WAP test), digit-only tag rejection, and the legacy-manifest
-  * timestamp fallback. */
+  * WAP test), digit-only tag rejection, and the TIMESTAMP AS OF
+  * refusal of a manifest without the `#ts:` header. */
 class Round13OpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -60,29 +60,27 @@ class Round13OpsSpec extends SparkSpec {
     assert(Snapshots.tagVersion(root, "v2024").contains(1L))
   }
 
-  test("TIMESTAMP AS OF falls back to manifest mtime for pre-#ts legacy commits") {
+  test("TIMESTAMP AS OF refuses a manifest without the #ts: header") {
     import java.nio.charset.StandardCharsets.UTF_8
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val root = s"${Qx.tmpOut("tslegacy", sf())}/store"
+    val root = s"${Qx.tmpOut("tsretired", sf())}/store"
     Snapshots.commit(root)(out =>
       spark.range(3).select($"id").write.mode("append").parquet(out))
-    Thread.sleep(60) // keep v1's mtime clearly below v2's commit stamp
     Snapshots.commitAppend(root)(out =>
       spark.range(10, 12).select($"id").write.mode("append").parquet(out))
-    // simulate a store whose v1 predates the #ts header (restoring the
-    // manifest's original mtime — rewriting it would bump mtime to now)
-    val m1 = Paths.get(root, "_commits", "00000001.manifest")
-    val origMtime = Files.getLastModifiedTime(m1)
-    val kept = Files.readAllLines(m1, UTF_8).asScala
-      .filterNot(_.startsWith("#ts:"))
-    Files.write(m1, kept.mkString("\n").getBytes(UTF_8))
-    Files.setLastModifiedTime(m1, origMtime)
     val ts2 = Snapshots.commitTimestamp(root, 2L).get
-    // a literal just before v2's stamp used to throw "predates retained
-    // history" even though v1 was committed and readable; the mtime
-    // fallback resolves it to v1 (Delta's header-less rule)
-    assert(Snapshots.versionAtTimestamp(root, ts2 - 1L) == 1L)
-    assert(Snapshots.versionAtTimestamp(root, ts2 + 1L) == 2L)
+    // strip v1's header: no writer produces this form, so neither a
+    // literal before v2 nor one after it may pass over v1 (a silent
+    // skip would resolve to a wrong version or to "predates history")
+    val m1 = Paths.get(root, "_commits", "00000001.manifest")
+    Files.write(m1, Files.readAllLines(m1, UTF_8).asScala
+      .filterNot(_.startsWith("#ts:")).mkString("\n").getBytes(UTF_8))
+    Seq(ts2 - 1L, ts2 + 1L).foreach { lit =>
+      val e = intercept[IllegalStateException](Snapshots.versionAtTimestamp(root, lit))
+      assert(e.getMessage.contains(m1.toString) && e.getMessage.contains("no #ts:"),
+        e.getMessage)
+    }
+    intercept[IllegalStateException](Snapshots.resolveAt(root, 1L))
   }
 }
