@@ -452,17 +452,16 @@ object PlanAudit {
         |over its pinned, immutable file set.""".stripMargin,
     "snapshot_schema_evolution" ->
       """Schema evolution across snapshot commits (r9): v1 lacks the
-        |o_band column, the append commit adds it, and the head is read
-        |pinned (readMerged: the footer-merged schema VERSION AS OF
-        |presents) — expect ONE BatchScan over both eras' files whose
-        |ReadSchema already carries the union schema (pre-evolution rows
-        |null-fill at the reader, no rewrite of history, zero data
-        |movement to add the column), feeding one map-side-combined hash
-        |agg over (priority, band). A time-travel readAt of v1 still
-        |plans the pre-evolution schema — spec-pinned. At 100 TB the
-        |footer-per-file planning cost is the argument for caching the
-        |union schema in the manifest, which this protocol's metadata
-        |file already centralizes.""".stripMargin,
+        |o_band column and declares the root's schema; the append commit
+        |adds the column and widens the declaration (ALTER TABLE ADD
+        |COLUMN's effect, checked over the appended files' footers at
+        |commit). The head read presents the declared schema — expect
+        |ONE BatchScan over both eras' files whose ReadSchema carries
+        |o_band (pre-evolution rows null-fill at the reader, no rewrite
+        |of history, zero data movement to add the column), feeding one
+        |map-side-combined hash agg over (priority, band). Planning
+        |reads the declaration, no footer. A time-travel readAt of v1
+        |still plans the pre-evolution schema — spec-pinned.""".stripMargin,
     "sql_update_mor" ->
       """Merge-on-read UPDATE (r9) — the Hudi upsert shape: ONE atomic
         |commit stages the rewritten rows plus a delete file SCOPED to
@@ -622,15 +621,19 @@ object PlanAudit {
         |composite keys too).""".stripMargin,
     "snapshot_partition_evolution" ->
       """Partition-spec evolution (r13): era A partitioned on priority,
-        |era B on (priority, band). Pruning is per-spec and METADATA-
-        |ONLY (manifest path-segment match before Spark lists anything):
-        |priority prunes both eras, band prunes only era-B files, era-A
-        |files are kept (band unprovable from their spec) and the
-        |residual predicate re-derives band from the price column —
-        |Iceberg's transform-on-read. Expect ONE BatchScan over both
-        |eras' kept files (era-A rows read band as NULL — their paths
-        |carry no band segment), the band filter above it, and the
-        |planned files pinned in Round14OpsSpec.""".stripMargin,
+        |era B on (priority, band). The first commit declares priority a
+        |path column; era B's commit adds band as one (partition
+        |evolution widens the declaration at commit, typed by Spark's
+        |partition inference over the staged dirs). Pruning is per-spec
+        |and METADATA-ONLY (manifest path-segment match before Spark
+        |lists anything): priority prunes both eras, band prunes only
+        |era-B files, era-A files are kept (band unprovable from their
+        |spec) and the residual predicate re-derives band from the price
+        |column — Iceberg's transform-on-read. Expect ONE BatchScan over
+        |both eras' kept files (era-A rows read band as NULL — their
+        |paths carry no band segment, as for every table), the band
+        |filter above it, and the planned files pinned in
+        |Round14OpsSpec.""".stripMargin,
     "sql_schema_evolution" ->
       """ALTER TABLE ADD COLUMN through the v2 catalog (r13): the
         |declared schema grows by one properties-file write; expect ONE

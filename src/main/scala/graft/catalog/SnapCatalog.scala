@@ -35,9 +35,9 @@ import scala.jdk.CollectionConverters._
   * same on-disk thing (a table built with `Snapshots.commit` can be
   * read through the catalog and vice versa — the fixtures do both).
   * The declared schema and table properties live in
-  * `<root>/_table.properties`, written once at create; a table that
-  * was never CREATEd (direct-API root) infers its schema from the head
-  * snapshot's parquet footers instead.
+  * `<root>/_table.properties`, written at CREATE — or, for a table
+  * never CREATEd (direct-API root), by its first commit
+  * ([[GraftTable.admit]]).
   *
   * The warehouse path is read LIVE from the session conf
   * (`spark.sql.catalog.<name>.warehouse`) with the initialize-time
@@ -401,11 +401,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // ledger clear) must serialize, or the loser's readMeta-to-
     // writeMeta window silently clobbers the winner's change
     GraftTable.withMetaLock(root) {
-    val (schema, props) = GraftTable.readMeta(root).getOrElse {
-      // a direct-API root never CREATEd: materialize its inferred
-      // schema as the declared baseline, then evolve it
-      (new GraftTable(ident.toString, root, None).schema(), Map.empty[String, String])
-    }
+    val (schema, props) = GraftTable.declaredMeta(root)
     // every physical name that has ever meant something in this table:
     // adding or renaming onto one would make old files' bytes resurface
     // under the wrong meaning

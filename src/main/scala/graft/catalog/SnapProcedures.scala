@@ -145,9 +145,7 @@ private[catalog] object SnapProcedures {
       val rows = r.getLong(0)
       val version = Snapshots.maxCommitted(root)
       GraftTable.withMetaLock(root) {
-        val (sc, props) = GraftTable.readMeta(root).getOrElse(
-          throw new IllegalStateException(
-            s"analyze needs a declared table (no ${GraftTable.metaFile} under $root)"))
+        val (sc, props) = GraftTable.declaredMeta(root)
         val cleared = props.filterNot(_._1.startsWith(GraftTable.ndvPrefix))
         val entries = cols.zipWithIndex.map { case (c, i) =>
           s"${GraftTable.ndvPrefix}$c" -> r.getLong(i + 1).toString

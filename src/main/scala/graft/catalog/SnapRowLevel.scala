@@ -481,8 +481,7 @@ private[graft] object RewriteDiff {
   private[graft] def stageBranchDiff(root: String, fork: Long,
       branch: String): Seq[String] = {
     val spark = SparkSession.active
-    val schema = GraftTable.readMeta(root).map(_._1).getOrElse(
-      Snapshots.readAt(spark, root, fork).schema)
+    val schema = GraftTable.declaredMeta(root)._1
     requireDiffable(root, schema)
     write(root, declared(Snapshots.readAt(spark, root, fork), schema),
       declared(Snapshots.readBranch(spark, root, branch), schema))

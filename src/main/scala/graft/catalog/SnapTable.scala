@@ -11,7 +11,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex, NoopCache, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.sources.InsertableRelation
-import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.nio.charset.StandardCharsets.UTF_8
@@ -45,11 +45,13 @@ import scala.jdk.CollectionConverters._
   * ([[GraftRowLevel]]): Spark's own analyzer rewrites the statement
   * and this table supplies the scan and the commit point.
   *
-  * Schema: the CREATE-time schema is pinned in `_table.properties`;
-  * a root built through the direct [[Snapshots]] API (no CREATE) reads
-  * its schema from the head parquet footers instead, with any
-  * `.partitionBy` columns recovered from the file paths. The direct
-  * API's own reads ([[Snapshots.read]] and friends) are this table.
+  * Schema: every root declares its schema in `_table.properties` —
+  * CREATE TABLE writes it, and a root built through the direct
+  * [[Snapshots]] API is declared by its first commit (footer schema,
+  * `.partitionBy` path columns), widened by later commits that add a
+  * column ([[GraftTable.admit]]). Reads never infer a head schema. The
+  * direct API's own reads ([[Snapshots.read]] and friends) are this
+  * table.
   */
 class GraftTable(tableName: String, val root: String,
     val pinned: Option[Snapshot])
@@ -86,33 +88,12 @@ class GraftTable(tableName: String, val root: String,
     * so a cached instance never goes stale across statements. */
   lazy val snap: Option[Snapshot] = pinned.orElse(Snapshots.resolve(root))
 
-  private lazy val meta: Option[(StructType, Map[String, String])] =
-    GraftTable.readMeta(root)
+  /** The root's declared (schema, table properties) — every committed
+    * root carries them ([[GraftTable.admit]]). */
+  private lazy val meta: (StructType, Map[String, String]) =
+    GraftTable.declaredMeta(root)
 
-  /** Identity partition columns of a root with NO declared schema (one
-    * built through the direct [[Snapshots]] API with `.partitionBy`):
-    * the `col=value` segments below each era dir, typed by Spark's own
-    * partition inference ([[GraftScans.inferPartSchema]]). Empty for a
-    * declared root — its `PARTITIONED BY` governs. */
-  private lazy val pathPartSchema: StructType =
-    if (meta.isDefined) new StructType()
-    else GraftScans.inferPartSchema(spark, snap.map(_.files).getOrElse(Nil))
-
-  /** Head schema of a root with no declared schema: the first footer's
-    * serialized Spark schema, read on the driver (the schema a plain
-    * multi-file parquet read infers, without its scheduled job), every
-    * column nullable as that read presents it — later files need not
-    * share the first one's NOT NULL; Spark's inference only when no
-    * footer carries a schema (foreign files). */
-  private lazy val footerHeadSchema: StructType = {
-    val files = snap.map(_.files).getOrElse(Nil)
-    require(files.nonEmpty,
-      s"table $tableName has no declared schema and no committed data")
-    val first = files.iterator.map(Snapshots.footerSparkSchema)
-      .collectFirst { case Some(s) => s }
-      .getOrElse(spark.read.parquet(files: _*).schema)
-    StructType(first.fields.map(_.copy(nullable = true)))
-  }
+  private def props: Map[String, String] = meta._2
 
   override def name(): String = tableName
 
@@ -156,7 +137,7 @@ class GraftTable(tableName: String, val root: String,
       // (matching the head read). Versions predating the re-add (no
       // physical spelling in any footer) are untouched — their field
       // of that name is the OLD column, alive then.
-      val physAll = meta.map(m => GraftTable.physOf(m._2)).getOrElse(Map.empty)
+      val physAll = GraftTable.physOf(props)
       val remap = physAll.filter { case (_, ph) => merged0.fieldNames.contains(ph) }
       val merged =
         if (remap.isEmpty) merged0
@@ -173,8 +154,7 @@ class GraftTable(tableName: String, val root: String,
       // pinned version predating the drop still owns the column, and
       // if its files straddle the column's earlier rename the same
       // coalesce rule applies — never a union schema.
-      val chains = (meta.map(m => GraftTable.priorsOf(m._2)).getOrElse(Map.empty) ++
-        meta.map(m => GraftTable.droppedChainsOf(m._2)).getOrElse(Map.empty))
+      val chains = (GraftTable.priorsOf(props) ++ GraftTable.droppedChainsOf(props))
         .map { case (cur, ps) => ps :+ cur }
         .map(chain => chain.filter(present))
         .filter(_.length >= 2)
@@ -227,28 +207,25 @@ class GraftTable(tableName: String, val root: String,
         // would silently swap columns under UNION/collect-by-index)
         val missing = partCols.filterNot(sc.fieldNames.contains)
         if (missing.isEmpty) sc
-        else meta.map(_._1) match {
-          case Some(ms) =>
-            val present = sc.fieldNames.toSet ++ missing
-            // declared order for every field the declared schema knows;
-            // footer-only fields (pre-declare history) keep their spot
-            val declaredOrdered = ms.fields.filter(f =>
-              present.contains(f.name)).map(f =>
-              sc.fields.find(_.name == f.name).getOrElse(f))
-            val extras = sc.fields.filterNot(f =>
-              ms.fieldNames.contains(f.name))
-            StructType(declaredOrdered ++ extras)
-          case None => StructType(sc.fields ++
-            pathPartSchema.fields.filter(f => missing.contains(f.name)))
+        else {
+          val ms = meta._1
+          val present = sc.fieldNames.toSet ++ missing
+          // declared order for every field the declared schema knows;
+          // footer-only fields (since dropped) keep their spot
+          val declaredOrdered = ms.fields.filter(f =>
+            present.contains(f.name)).map(f =>
+            sc.fields.find(_.name == f.name).getOrElse(f))
+          val extras = sc.fields.filterNot(f =>
+            ms.fieldNames.contains(f.name))
+          StructType(declaredOrdered ++ extras)
         }
-      case None => meta.map(_._1).getOrElse(StructType(footerHeadSchema.fields ++
-        pathPartSchema.fields.filterNot(f => footerHeadSchema.fieldNames.contains(f.name))))
+      case None => meta._1
     }
     // a merge-on-read key is a primary key: Spark's delta rewrites
     // require the row-id attribute non-nullable (same contract as
     // Iceberg identifier fields), so pin it here regardless of how the
     // CREATE statement spelled it
-    morKeyOf(meta) match {
+    morKey match {
       case Some(k) => StructType(declared.fields.map(f =>
         if (f.name == k) f.copy(nullable = false) else f))
       case None => declared
@@ -256,7 +233,7 @@ class GraftTable(tableName: String, val root: String,
   }
 
   override def properties(): java.util.Map[String, String] =
-    meta.map(_._2.asJava).getOrElse(Collections.emptyMap())
+    props.asJava
 
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(
@@ -271,7 +248,7 @@ class GraftTable(tableName: String, val root: String,
     * delta (Hudi/Iceberg-v2-style) row-level writes:
     * `TBLPROPERTIES ('graft.mor.key' = '<primary key col>')`. Absent →
     * copy-on-write row-level ops. */
-  def morKey: Option[String] = morKeyOf(meta)
+  def morKey: Option[String] = props.get(GraftTable.morKeyProp)
 
   /** POSITIONAL merge-on-read mode
     * (`TBLPROPERTIES ('graft.mor.positional'='true')`): row-level ops
@@ -279,40 +256,33 @@ class GraftTable(tableName: String, val root: String,
     * — the delete form for tables with NO unique key. Mutually
     * exclusive with [[morKey]] and PARTITIONED BY (enforced at DDL). */
   def positionalMor: Boolean =
-    meta.exists(_._2.get(GraftTable.posMorProp).contains("true"))
+    props.get(GraftTable.posMorProp).contains("true")
 
   /** logical → physical file spelling of RE-ADDED columns
     * ([[GraftTable.colPhysPrefix]]); empty for the common case. */
-  private[catalog] def physMap: Map[String, String] =
-    meta.map(m => GraftTable.physOf(m._2)).getOrElse(Map.empty)
+  private[catalog] def physMap: Map[String, String] = GraftTable.physOf(props)
 
-  /** Identity partition columns of a `PARTITIONED BY` table
-    * ([[GraftTable.partColsProp]]), or of an undeclared `.partitionBy`
-    * root ([[pathPartSchema]]); empty for unpartitioned. */
-  def partCols: Seq[String] =
-    meta.map(m => GraftTable.partColsOf(m._2))
-      .getOrElse(pathPartSchema.fieldNames.toSeq)
+  /** Identity partition columns ([[GraftTable.partColsProp]]) — a
+    * `PARTITIONED BY` table's, or the `.partitionBy` path columns a
+    * direct-API commit declared; empty for unpartitioned. */
+  def partCols: Seq[String] = GraftTable.partColsOf(props)
 
   /** Hash-bucket layout of a `PARTITIONED BY (bucket(n, col))` table
     * ([[SnapBucket]]); mutually exclusive with [[partCols]]. */
-  def bucketSpec: Option[(String, Int)] =
-    meta.flatMap(m => SnapBucket.of(m._2))
+  def bucketSpec: Option[(String, Int)] = SnapBucket.of(props)
 
   /** Time/truncate transform layout ([[SnapTransform]]); composes with
     * [[partCols]], mutually exclusive with [[bucketSpec]]. */
-  def transformSpec: Option[SnapTransform.Spec] =
-    meta.flatMap(m => SnapTransform.of(m._2))
+  def transformSpec: Option[SnapTransform.Spec] = SnapTransform.of(props)
 
   /** RETIRED layouts ([[SnapBucket.retiredProp]] /
     * [[SnapTransform.retiredProp]]): committed files still carry the
     * synthetic segments — the scan keeps parsing (and pruning, while
     * the source column lives) — but writes stage flat and the table
     * reports no derived partitioning. */
-  def retiredBucketSpec: Option[(String, Int)] =
-    meta.flatMap(m => SnapBucket.ofRetired(m._2))
+  def retiredBucketSpec: Option[(String, Int)] = SnapBucket.ofRetired(props)
 
-  def retiredTransformSpec: Option[SnapTransform.Spec] =
-    meta.flatMap(m => SnapTransform.ofRetired(m._2))
+  def retiredTransformSpec: Option[SnapTransform.Spec] = SnapTransform.ofRetired(props)
 
   /** Declared type of the transform source column (needed wherever a
     * transform ordinal is computed). */
@@ -327,8 +297,7 @@ class GraftTable(tableName: String, val root: String,
     * fallback (no pruning can reference a dropped name anyway). */
   private def srcTypeOfSpec(t: SnapTransform.Spec): org.apache.spark.sql.types.DataType =
     schema().fields.find(_.name == t.col).map(_.dataType)
-      .orElse(meta.map(m => GraftTable.dropTypesOf(m._2))
-        .getOrElse(Map.empty).get(t.col))
+      .orElse(GraftTable.dropTypesOf(props).get(t.col))
       .getOrElse(
         if (t.kind == "truncate") org.apache.spark.sql.types.StringType
         else org.apache.spark.sql.types.TimestampType)
@@ -369,8 +338,7 @@ class GraftTable(tableName: String, val root: String,
     val ps = partitionSchema()
     require(names.forall(ps.fieldNames.contains),
       s"unknown partition column(s): ${names.mkString(",")}")
-    val rows = GraftScans.partitionValuesFor(
-      snap.map(_.files).getOrElse(Nil), ps, absentReadsNull = meta.isEmpty)
+    val rows = GraftScans.partitionValuesFor(snap.map(_.files).getOrElse(Nil), ps)
     val nameOrds = names.map(ps.fieldIndex)
     rows.filter(r => nameOrds.indices.forall { i =>
       val dt = ps.fields(nameOrds(i)).dataType
@@ -397,9 +365,6 @@ class GraftTable(tableName: String, val root: String,
   override def loadPartitionMetadata(ident: InternalRow): java.util.Map[String, String] =
     Collections.emptyMap()
 
-  private def morKeyOf(m: Option[(StructType, Map[String, String])]): Option[String] =
-    m.flatMap(_._2.get(GraftTable.morKeyProp))
-
   /** Prior physical names per presented column. HEAD reads use the
     * full RENAME ledger; a time-travel-pinned read presents that
     * version's own (historical) names and needs the map only when its
@@ -409,7 +374,7 @@ class GraftTable(tableName: String, val root: String,
     pinnedResolution match {
       case Some((_, pr, _)) => pr
       case None if pinned.isDefined => Map.empty
-      case None => meta.map(m => GraftTable.priorsOf(m._2)).getOrElse(Map.empty)
+      case None => GraftTable.priorsOf(props)
     }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
@@ -443,8 +408,7 @@ class GraftTable(tableName: String, val root: String,
     // physically live — the shadow machinery would duplicate it
     val (dropChains, dropTypes) =
       if (pinned.isDefined) (Map.empty[String, Seq[String]], Map.empty[String, DataType])
-      else (meta.map(m => GraftTable.droppedChainsOf(m._2)).getOrElse(Map.empty),
-        meta.map(m => GraftTable.dropTypesOf(m._2)).getOrElse(Map.empty))
+      else (GraftTable.droppedChainsOf(props), GraftTable.dropTypesOf(props))
     // the streamable wrapper forwards every pushdown interface to the
     // inner builder and adds only toMicroBatchStream on the built scan
     // (plus manifest-size statistics where the inner scan reports none)
@@ -465,8 +429,7 @@ class GraftTable(tableName: String, val root: String,
       retiredBucketSpec.filterNot(s => phys.contains(s._1)))
     new GraftStreamableScanBuilder(
       GraftScans.builder(spark, sc, snap, options, priors, partSchema,
-        dropChains, dropTypes, bucketForPrune, transSpec, remapped = phys,
-        absentReadsNull = meta.isEmpty),
+        dropChains, dropTypes, bucketForPrune, transSpec, remapped = phys),
       root, sc, priors, pinned.isDefined, snap, options, partCols, bucketSpec)
   }
 
@@ -715,17 +678,22 @@ object GraftTable {
       StructType(out.values.toSeq)
     }
 
-  def writeMeta(root: String, schema: StructType, props: Map[String, String]): Unit = {
+  private def renderMeta(schema: StructType, props: Map[String, String]): Array[Byte] = {
     val p = new java.util.Properties()
     props.foreach { case (k, v) => p.setProperty(k, v) }
     p.setProperty(schemaKey, schema.json)
+    val out = new java.io.StringWriter()
+    p.store(out, null)
+    out.toString.getBytes(UTF_8)
+  }
+
+  def writeMeta(root: String, schema: StructType, props: Map[String, String]): Unit = {
     // temp + ATOMIC_MOVE: ALTER TABLE rewrites this file while readers
     // may be loading the table — they must see old or new meta, never
     // a torn write
     val tmp = Paths.get(root,
       s".tmp_meta_${ProcessHandle.current().pid()}_${System.nanoTime()}")
-    val out = Files.newBufferedWriter(tmp, UTF_8)
-    try p.store(out, null) finally out.close()
+    Files.write(tmp, renderMeta(schema, props))
     Files.move(tmp, Paths.get(root, metaFile),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -738,7 +706,11 @@ object GraftTable {
       val p = new java.util.Properties()
       val in = Files.newBufferedReader(f, UTF_8)
       try p.load(in) finally in.close()
-      val schema = DataType.fromJson(p.getProperty(schemaKey)).asInstanceOf[StructType]
+      val schema = Option(p.getProperty(schemaKey)).flatMap(j =>
+          scala.util.Try(DataType.fromJson(j)).toOption)
+        .collect { case st: StructType => st }
+        .getOrElse(throw new IllegalStateException(
+          s"$f: the '$schemaKey' key is missing or does not parse as a schema"))
       val props = p.stringPropertyNames().asScala
         .filterNot(_ == schemaKey).map(k => k -> p.getProperty(k)).toMap
       // an INT-keyed bucket layout (live or retired) without the
@@ -751,6 +723,88 @@ object GraftTable {
           s"layout without the '${SnapBucket.hashVerProp}' stamp (int-hash " +
           "directories); recreate the table")
       Some((schema, props))
+    }
+  }
+
+  /** [[readMeta]] of a root that must be declared — every committed
+    * root is, from its first commit on ([[admit]]). */
+  def declaredMeta(root: String): (StructType, Map[String, String]) =
+    readMeta(root).getOrElse(throw new IllegalStateException(
+      s"${Paths.get(root, metaFile)} is missing: $root has no declared " +
+        "schema (a root is declared by CREATE TABLE or by its first commit)"))
+
+  /** THE schema rule of every commit, run by the commit funnel
+    * ([[Snapshots]]' `publishManifest`) over the data files the commit
+    * adds, against the root's `meta` as the attempt read it
+    * ([[readMeta]]), before its manifest links — footers read on the
+    * driver, no Spark job. An undeclared root is DECLARED from them (Delta's
+    * version-0 `metaData`): the footer schema, every field nullable,
+    * then each identity `col=value` segment as a path column typed by
+    * Spark's partition inference ([[GraftScans.pathTypes]]) — published
+    * create-if-absent, so of two racing first commits one declares and
+    * the other is checked against it. A declared root WIDENS, under
+    * [[withMetaLock]] as ALTER TABLE ADD COLUMN does, by each new data
+    * or path column (a new path column is partition evolution). Names go
+    * through the ledger: a physical spelling or prior name is its
+    * current column, and a tombstoned name never widens. Refused, naming
+    * the column and the file: a type the declared one cannot read
+    * ([[widensTo]]), a declared path column stored as data, and a
+    * declared data column staged as a path segment. */
+  private[graft] def admit(root: String,
+      meta: Option[(StructType, Map[String, String])], files: Seq[String]): Unit =
+    if (files.nonEmpty) meta match {
+      case None =>
+        val (sc, props) = evolved(new StructType(), Map.empty, files)
+        if (!Snapshots.createOnce(Paths.get(root), Paths.get(root, metaFile),
+            renderMeta(sc, props)))
+          admit(root, readMeta(root), files) // a racing first commit declared first
+      case Some((sc, props)) =>
+        if (evolved(sc, props, files)._1 != sc) withMetaLock(root) {
+          val (cur, curProps) = declaredMeta(root)
+          val (wider, widerProps) = evolved(cur, curProps, files)
+          if (wider != cur) writeMeta(root, wider, widerProps)
+        }
+    }
+
+  /** `files` checked against a declaration (schema, props), which is
+    * returned widened by the columns they add. */
+  private def evolved(sc: StructType, props: Map[String, String],
+      files: Seq[String]): (StructType, Map[String, String]) = {
+    def refuse(why: String) = throw new IllegalArgumentException(
+      s"commit refused: $why")
+    val parts = partColsOf(props)
+    val current = physOf(props).map(_.swap) ++
+      priorsOf(props).flatMap { case (c, ps) => ps.map(_ -> c) }
+    val dead = droppedOf(props)
+    val fields = scala.collection.mutable.LinkedHashMap.from(sc.fields.map(f => f.name -> f))
+    for (f <- files; g <- Snapshots.footerSparkSchema(f)
+        .getOrElse(SparkSession.active.read.parquet(f).schema).fields) {
+      val name = current.getOrElse(g.name, g.name)
+      if (current.contains(g.name) || !dead(name)) fields.get(name) match {
+        case _ if parts.contains(name) =>
+          refuse(s"column $name is declared as a path segment but $f stores it as data")
+        case Some(d) if !org.apache.spark.sql.catalyst.types.DataTypeUtils
+            .sameType(g.dataType, d.dataType) && !widensTo(g.dataType, d.dataType) =>
+          refuse(s"column $name is declared ${d.dataType.simpleString} but $f " +
+            s"stores ${g.dataType.simpleString}")
+        case Some(_) => ()
+        case None => fields(name) = g.copy(name = name, nullable = true)
+      }
+    }
+    val segs = files.map(f => f -> GraftScans.segmentsOf(Paths.get(f).getParent.toString)
+      .keySet.diff(Set(Snapshots.bucketPathCol, Snapshots.transformPathCol)))
+    val added = segs.flatMap { case (f, cs) =>
+      cs.filterNot(c => parts.contains(c) || dead(c)).map { c =>
+        if (fields.contains(c))
+          refuse(s"column $c is declared as data but $f stages it as a $c=<value> path segment")
+        c
+      }
+    }.distinct
+    if (added.isEmpty) (StructType(fields.values.toSeq), props)
+    else {
+      val types = GraftScans.pathTypes(files)
+      (StructType(fields.values.toSeq ++ added.map(c => StructField(c, types(c), nullable = true))),
+        props + (partColsProp -> (parts ++ added).mkString(",")))
     }
   }
 }
@@ -1065,8 +1119,7 @@ private[catalog] object GraftScans {
       bucketSpec: Option[(String, Int)] = None,
       transformSpec: Option[(SnapTransform.Spec, DataType)] = None,
       emitRowId: Boolean = false,
-      remapped: Map[String, String] = Map.empty,
-      absentReadsNull: Boolean = false): ScanBuilder = {
+      remapped: Map[String, String] = Map.empty): ScanBuilder = {
     val files = snap.map(_.files).getOrElse(Nil)
     if (files.isEmpty) new EmptyScanBuilder(tableSchema)
     else {
@@ -1077,7 +1130,7 @@ private[catalog] object GraftScans {
       if (deletes.isEmpty && posDels.isEmpty && !emitRowId) {
         if (priors.isEmpty && remapped.isEmpty)
           parquetBuilder(spark, files, tableSchema, options,
-            statsRaw, blooms, partSchema, bucketSpec, transformSpec, absentReadsNull)
+            statsRaw, blooms, partSchema, bucketSpec, transformSpec)
         else new RenameAwareScanBuilder(spark, tableSchema, priors,
           files, options, statsRaw, blooms, partSchema, bucketSpec,
           transformSpec, remapped)
@@ -1093,8 +1146,7 @@ private[catalog] object GraftScans {
         new MorScanBuilder(spark, tableSchema, snap.get, options, priors,
           dropChains, dropTypes, emitRowId = emitRowId, remapped = remapped,
           partSchema = StructType(partSchema.fields.filter(f =>
-            tableSchema.fieldNames.contains(f.name))),
-          absentReadsNull = absentReadsNull)
+            tableSchema.fieldNames.contains(f.name))))
       }
     }
   }
@@ -1128,31 +1180,14 @@ private[catalog] object GraftScans {
       blooms: Map[String, Seq[String]] = Map.empty,
       partSchema: StructType = new StructType(),
       bucketSpec: Option[(String, Int)] = None,
-      transformSpec: Option[(SnapTransform.Spec, DataType)] = None,
-      absentReadsNull: Boolean = false): ParquetScanBuilder = {
-    // .partitionBy-staged files carry col=value path segments whose
-    // columns exist ONLY in the path — without a partition schema
-    // (declared `PARTITIONED BY`, or inferred from the paths of an
-    // undeclared root) this flat scan (PartitionSpec.emptySpec, schema
-    // from footers) would silently return the table minus its partition
-    // columns, so refuse loudly (a declared unpartitioned table over
-    // such files, or a position-identity scan of them).
-    // DERIVED segments (`_gbucket=`/`_gtpart=`, bucket/transform
-    // layouts) are exempt: their source column STAYS in the data
-    // files, so a flat scan is value-exact — it merely skips the
-    // segment-based pruning (the MOR scan of a layout table leans on
-    // this, r20).
-    if (partSchema.isEmpty) files.find(identityPartitionedLayout).foreach { f =>
-      throw new UnsupportedOperationException(
-        s"this snapshot root contains .partitionBy-staged files (e.g. $f) " +
-          "whose partition columns live in the path, not the footers, and " +
-          "the table declares no partition columns; a flat scan would " +
-          "silently drop them")
-    }
+      transformSpec: Option[(SnapTransform.Spec, DataType)] = None): ParquetScanBuilder = {
+    // every identity `col=value` segment a committed file carries is a
+    // declared partition column ([[GraftTable.admit]] refuses or
+    // declares it at commit), so `partSchema` is the whole path layout
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val spec =
       if (partSchema.isEmpty) PartitionSpec.emptySpec
-      else partitionSpecFor(files, partSchema, absentReadsNull)
+      else partitionSpecFor(files, partSchema)
     val index =
       if (statsRaw.isEmpty && blooms.isEmpty && partSchema.isEmpty &&
           bucketSpec.isEmpty && transformSpec.isEmpty)
@@ -1187,8 +1222,7 @@ private[catalog] object GraftScans {
     * the declared partition types. Metadata-only — the manifest IS the
     * listing, exactly like the flat index. */
   private def partitionSpecFor(files: Seq[String],
-      partSchema: StructType, absentReadsNull: Boolean): PartitionSpec = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
+      partSchema: StructType): PartitionSpec = {
     // qualify like the index qualifies its leaf dirs, or the
     // PartitionPath→children lookup misses on the scheme
     def qualified(dir: String): org.apache.hadoop.fs.Path = {
@@ -1200,7 +1234,7 @@ private[catalog] object GraftScans {
       .map { case (dir, _) =>
         org.apache.spark.sql.execution.datasources.PartitionPath(
           InternalRow.fromSeq(
-            partitionValuesOf(dir, partSchema, absentReadsNull).toIndexedSeq),
+            partitionValuesOf(dir, partSchema).toIndexedSeq),
           qualified(dir))
       }
     PartitionSpec(partSchema, partitions)
@@ -1208,7 +1242,7 @@ private[catalog] object GraftScans {
 
   /** One partition directory's `col=value` segments below its version
     * dir, unescaped. */
-  private def segmentsOf(dir: String): Map[String, String] = {
+  private[catalog] def segmentsOf(dir: String): Map[String, String] = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
     dir.drop(baseDirOfPath(dir).length).split('/').filter(_.contains('=')).map { s =>
       val i = s.indexOf('=')
@@ -1217,26 +1251,18 @@ private[catalog] object GraftScans {
   }
 
   /** Parse one partition directory's `col=value` segments into typed
-    * catalyst values (declared order). A declared identity column must
-    * carry its segment in every dir; `absentReadsNull` (an undeclared
-    * root's path-inferred schema, [[inferPartSchema]]) lets an era lack
-    * one — the evolved layout. */
+    * catalyst values (declared order). A dir without a column's segment
+    * reads NULL for it: its files predate the column's adoption as a
+    * path column (partition evolution — the commit check refuses a file
+    * that stores a declared path column as data), as a pre-evolution
+    * file has no synthetic transform ordinal and a post-retirement file
+    * no bucket id; pruning keeps such dirs conservatively. */
   private[catalog] def partitionValuesOf(dir: String,
-      partSchema: StructType, absentReadsNull: Boolean = false): Array[Any] = {
+      partSchema: StructType): Array[Any] = {
     val segs = segmentsOf(dir)
     partSchema.fields.map { f =>
       segs.get(f.name) match {
-        // the synthetic transform ordinal is nullable BY DESIGN: a
-        // pre-evolution file has no segment (the layout was adopted
-        // later) and reads as NULL — pruning keeps it conservatively.
-        // The synthetic bucket id is nullable the mirrored way: a
-        // post-RETIREMENT file stages flat and reads as NULL.
-        case None if absentReadsNull ||
-          f.name == graft.sources.Snapshots.transformPathCol ||
-          f.name == graft.sources.Snapshots.bucketPathCol =>
-          null
-        case None => throw new IllegalStateException(
-          s"partitioned table file dir $dir lacks a ${f.name}=<value> segment")
+        case None => null
         case Some(raw) if raw ==
           org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME =>
           null
@@ -1254,59 +1280,32 @@ private[catalog] object GraftScans {
     * Distinctness by the escaped fragment string (stable across eras);
     * metadata-only, like every other manifest-derived listing. */
   private[catalog] def partitionValuesFor(files: Seq[String],
-      partSchema: StructType, absentReadsNull: Boolean = false): Seq[InternalRow] =
+      partSchema: StructType): Seq[InternalRow] =
     files.groupBy(f => Paths.get(f).getParent.toString).keys.toSeq
       .map(dir => dir.drop(baseDirOfPath(dir).length) -> dir).toMap
       .values.toSeq.sorted
       .map(dir => InternalRow.fromSeq(
-        partitionValuesOf(dir, partSchema, absentReadsNull).toIndexedSeq))
+        partitionValuesOf(dir, partSchema).toIndexedSeq))
 
-  /** Identity partition schema of an UNDECLARED root, from its files'
-    * `col=value` segments: each era (version) dir is inferred by
+  /** Types of the identity `col=value` segments of files a commit
+    * adds ([[GraftTable.admit]]): each era (version) dir is inferred by
     * Spark's own partition discovery with that dir as `basePath` — the
     * typing a per-era `spark.read.option("basePath", era)` read applies —
-    * and the eras merge by name in first-appearance order, a conflicting
-    * type widened as a union of those per-era reads would widen it. An
-    * era lacking a column reads NULL for it ([[partitionValuesOf]]) —
-    * right only while its files lack the column too, so a file that
-    * stores it as data (a flat era, then a later `.partitionBy` on that
-    * column) refuses rather than reading NULL. The listing answers from
-    * [[ManifestStatusCache]] and the check from memoized footers:
-    * driver-only, no job. Bucket/transform segments are layout
-    * details, never columns. */
-  private[catalog] def inferPartSchema(spark: SparkSession,
-      files: Seq[String]): StructType = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val perEra = files.filter(f => f.drop(eraDirOf(f).length).contains("="))
+    * and the eras merge by name, a conflicting type widened as a union
+    * of those reads would widen it. The listing answers from
+    * [[ManifestStatusCache]]: driver-only, no job. */
+  private[catalog] def pathTypes(files: Seq[String]): Map[String, DataType] = {
+    val classic = SparkSession.active.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    files.filter(f => f.drop(eraDirOf(f).length).contains("="))
       .groupBy(eraDirOf).toSeq.sortBy(_._1).flatMap { case (era, fs) =>
         new InMemoryFileIndex(classic, fs.map(new org.apache.hadoop.fs.Path(_)),
           Map("basePath" -> era), None, ManifestStatusCache).partitionSchema.fields
-      }
-    val inferred = StructType(perEra.foldLeft(Vector.empty[org.apache.spark.sql.types.StructField]) {
-      (acc, f) => acc.indexWhere(_.name == f.name) match {
-        case -1 => acc :+ f
-        case i => acc.updated(i, acc(i).copy(dataType =
+      }.foldLeft(Map.empty[String, DataType]) { (acc, f) =>
+        acc.updated(f.name, acc.get(f.name).fold(f.dataType)(t =>
           org.apache.spark.sql.catalyst.analysis.TypeCoercion
-            .findWiderTypeForTwo(acc(i).dataType, f.dataType)
+            .findWiderTypeForTwo(t, f.dataType)
             .getOrElse(org.apache.spark.sql.types.StringType)))
       }
-    }.filterNot(f => f.name == Snapshots.bucketPathCol ||
-      f.name == Snapshots.transformPathCol))
-    files.foreach { f =>
-      val lacking = inferred.fieldNames.filterNot(
-        segmentsOf(Paths.get(f).getParent.toString).contains)
-      if (lacking.nonEmpty) {
-        val stored = Snapshots.footerSparkSchema(f)
-          .getOrElse(spark.read.parquet(f).schema)
-        lacking.find(stored.fieldNames.contains).foreach { c =>
-          throw new IllegalStateException(
-            s"column $c is a $c=<value> path segment in some eras of this " +
-              s"root but a data column of $f, whose dir lacks the segment; " +
-              "a path-partitioned read would return NULL for its stored values")
-        }
-      }
-    }
-    inferred
   }
 
   /** The era (version) dir a committed file was staged under. */
@@ -1604,13 +1603,6 @@ private[catalog] object GraftScans {
     * version (staging) dir — the ones whose column exists solely in the
     * path. The synthetic derived segments (`_gbucket=`, `_gtpart=`)
     * don't make a flat scan lossy: their source column is a data column. */
-  private def identityPartitionedLayout(f: String): Boolean =
-    f.drop(eraDirOf(f).length).split('/').filter(_.contains('=')).exists { s =>
-      val name = s.substring(0, s.indexOf('='))
-      name != graft.sources.Snapshots.bucketPathCol &&
-        name != graft.sources.Snapshots.transformPathCol
-    }
-
   /** THE rename-resolution rule, shared by the head scan
     * ([[RenameAwareScanBuilder]]) and the MOR scan ([[MorScanBuilder]])
     * so they can never diverge: the physical union schema (each output
@@ -2148,8 +2140,7 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
     dropTypes: Map[String, DataType] = Map.empty,
     emitRowId: Boolean = false,
     remapped: Map[String, String] = Map.empty,
-    partSchema: StructType = new StructType(),
-    absentReadsNull: Boolean = false)
+    partSchema: StructType = new StructType())
   extends ScanBuilder with SupportsPushDownRequiredColumns
   with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
 
@@ -2190,7 +2181,7 @@ private[catalog] class MorScanBuilder(spark: SparkSession,
   private val plainBuilder =
     if (plainFiles.isEmpty) None
     else Some(GraftScans.parquetBuilder(spark, plainFiles, tableSchema, options,
-      snap.statsRaw, snap.blooms, partSchema, absentReadsNull = absentReadsNull))
+      snap.statsRaw, snap.blooms, partSchema))
 
   private val rowIdxField = org.apache.spark.sql.types.StructField(
     GraftRowId.RowIdxTmp, org.apache.spark.sql.types.LongType, nullable = true)

@@ -371,20 +371,20 @@ object WarehouseOps {
 
   /** SCHEMA EVOLUTION across snapshot commits: v1 commits `orders`
     * rows WITHOUT the `o_band` column; an append commit adds rows that
-    * CARRY it. The head is read with schema merging — the union schema
-    * resolves and pre-evolution rows surface `o_band = NULL` (folded to
-    * 'none' here so the grouping is total) — while a time-travel read
-    * of v1 still presents exactly the pre-evolution schema
-    * (spec-pinned in Round9OpsSpec). History is never rewritten: the
-    * column "appears" retroactively at read time, the Delta/Iceberg
-    * `mergeSchema`/add-column contract, and what lets a 100 TB table
-    * grow a column with zero data movement.
+    * CARRY it. The first commit declares the root's schema and the
+    * append widens it by `o_band` (ALTER TABLE ADD COLUMN's effect,
+    * at commit), so the head read presents the widened declaration and
+    * pre-evolution rows surface `o_band = NULL` (folded to 'none' here
+    * so the grouping is total) — while a time-travel read of v1 still
+    * presents exactly the pre-evolution schema (spec-pinned in
+    * Round9OpsSpec). History is never rewritten: the column "appears"
+    * retroactively at read time, the Delta/Iceberg add-column
+    * contract, and what lets a 100 TB table grow a column with zero
+    * data movement.
     *
-    * Scale: the evolved read costs one footer read per file at
-    * planning (a production store caches the union schema in the
-    * manifest — the same metadata file this protocol already
-    * centralizes); the aggregate itself is one map-side-combined hash
-    * agg. The oracle recomputes both eras from the ORIGINAL table, so
+    * Scale: the commit check reads one footer per ADDED file on the
+    * driver; the head read reads the declaration, no footer; the
+    * aggregate itself is one map-side-combined hash agg. The oracle recomputes both eras from the ORIGINAL table, so
     * a lost row, a mis-nulled column, or a schema resolution that
     * drops either era hash-mismatches. */
   val snapshotSchemaEvolution: Q = (s, dir) => {
@@ -402,7 +402,7 @@ object WarehouseOps {
           when($"o_totalprice" > 150000, "hi").otherwise("lo").as("o_band"))
         .write.mode("append").parquet(out))
     Snapshots.vacuum(root, keepLast = 2)
-    Snapshots.readMerged(s, root)
+    Snapshots.read(s, root)
       .groupBy($"o_orderpriority",
         coalesce($"o_band", lit("none")).as("band"))
       .agg(count(lit(1)).as("n"), Qx.dsum($"o_totalprice").as("total"))
@@ -811,7 +811,7 @@ object WarehouseOps {
     * the new column, and the head read resolves pre-evolution files
     * by name with the added column surfacing NULL (the Delta/Iceberg
     * add-column contract; `snapshot_schema_evolution` is the
-    * store-level mergeSchema form). Time travel to the pre-evolution
+    * store-level form, widened by the commit that adds the column). Time travel to the pre-evolution
     * version presents exactly the old schema (CatalogSpec pins it).
     * The oracle recomputes both eras from the ORIGINAL table, so a
     * lost row, a mis-nulled column, or an evolution that rewrites

@@ -249,20 +249,6 @@ object Snapshots {
   def bloomSidecar(dataFile: String, col: String): String =
     s"$dataFile.bloom-$col"
 
-  /** The root's `_table.properties` (empty when absent or unreadable)
-    * — the ONE reader inside this object: a commit attempt reads it
-    * once and passes the map down to every rule that needs a key. */
-  private def tableProps(root: String): Map[String, String] = {
-    val f = Paths.get(root, "_table.properties")
-    if (!Files.exists(f)) Map.empty
-    else try {
-      val p = new java.util.Properties()
-      val in = Files.newBufferedReader(f, UTF_8)
-      try p.load(in) finally in.close()
-      p.asScala.toMap
-    } catch { case _: Exception => Map.empty }
-  }
-
   /** The bloom column list a root opted into (empty = feature off). */
   private def bloomColsOf(props: Map[String, String]): Seq[String] =
     // ':' delimits the bloom manifest line's col↔file split
@@ -1028,8 +1014,8 @@ object Snapshots {
     val published = {
       val headFiles = squash0.files.toSet
       val rewrote = resolveAt(root, fork).files.exists(!headFiles(_))
-      if (!rewrote || !tableProps(root).get(
-          graft.catalog.GraftTable.rewriteDiffProp).contains("true")) squash0
+      if (!rewrote || !graft.catalog.GraftTable.readMeta(root).exists(
+          _._2.get(graft.catalog.GraftTable.rewriteDiffProp).contains("true"))) squash0
       else {
         val sidecars =
           graft.catalog.RewriteDiff.stageBranchDiff(root, fork, name).sorted
@@ -1112,12 +1098,12 @@ object Snapshots {
     * (a re-run's re-staged effects are orphans the sweeps reclaim), and
     * a row-preserving rewrite squash on a rewriteDiff table links the
     * marker the recomputed squash never carries (spec: "crashed
-    * rewrite-squash publish with an empty diff finishes idempotently"). */
+    * rewrite-squash publish with an empty diff finishes idempotently").
+    * A target manifest that does not parse raises its refusal. */
   private def sameSquash(root: String, target: Long, squash: Snapshot): Boolean = {
     def core(s: Snapshot) = s.copy(ts = 0L, changeFiles = Nil, rowsUnchanged = false)
     val m = manifestPath(root, target)
-    try Files.exists(m) && core(Manifest.read(m, target)) == core(squash)
-    catch { case _: Exception => false }
+    Files.exists(m) && core(Manifest.read(m, target)) == core(squash)
   }
 
   /** Post-link bookkeeping of a fast-forward: advance the ref to the
@@ -1200,20 +1186,24 @@ object Snapshots {
     * commits, branch commits, staged rewrites and deltas, txn-tagged
     * appends, restore, by-reference publish, delete compaction): per
     * attempt it takes the next version, lets `gate` veto or
-    * short-circuit, reads `_table.properties` once, has `build` produce
-    * that attempt's [[Snapshot]] FRESH (a lost race means the parent
-    * changed — content must re-derive, never replay), applies the
-    * reserved-segment rules, stamps the timestamp clamped strictly
-    * above the parent's (TIMESTAMP AS OF stays monotonic under clock
-    * skew), renders it ([[Manifest.render]]) and publishes it with
-    * [[link]]'s atomic create-if-absent.
+    * short-circuit, resolves the parent and reads the root's
+    * declaration once, has `build` produce that attempt's [[Snapshot]]
+    * FRESH (a lost race means the parent changed — content must
+    * re-derive, never replay), applies the reserved-segment rules,
+    * checks the data files it adds against the declaration — declaring
+    * an undeclared root, widening by added columns, refusing a conflict
+    * ([[graft.catalog.GraftTable.admit]]) — stamps the timestamp
+    * clamped strictly above the parent's (TIMESTAMP AS OF stays
+    * monotonic under clock skew), renders it ([[Manifest.render]]) and
+    * publishes it with [[link]]'s atomic create-if-absent.
     *
     *  - `gate(v)`: runs first each attempt at candidate version `v`;
     *    return false to no-op with the current head (txn idempotence),
     *    throw to abort the statement (write-conflict `basedOn`).
-    *  - `build(v, props)`: the commit at version `v` (its `version`
-    *    and `ts` are the funnel's to set); may stage data as a side
-    *    effect.
+    *  - `build(v, parent, props)`: the commit at version `v` (its
+    *    `version` and `ts` are the funnel's to set) over `parent`, the
+    *    log's version v-1 (an empty version 0 for a first commit), with
+    *    the root's table properties; may stage data as a side effect.
     *  - `onLost()`: cleanup after a lost race, before the retry
     *    (discard the attempt's own staged dir — never anyone else's).
     */
@@ -1224,7 +1214,7 @@ object Snapshots {
       // continuation (manifests under `_commits/branch_<name>/`, head
       // resolved via branchHead — versions continue main's numbering)
       branch: Option[String] = None)(
-      build: (Long, Map[String, String]) => Snapshot): Long = {
+      build: (Long, Snapshot, Map[String, String]) => Snapshot): Long = {
     Files.createDirectories(commitsDir(root))
     branch.foreach { b =>
       require(branchFork(root, b).isDefined, s"no branch '$b' under $root")
@@ -1234,18 +1224,20 @@ object Snapshots {
       branch.map(branchHead(root, _)).getOrElse(maxCommitted(root))
     def targetPath(v: Long): Path =
       branch.map(branchManifestPath(root, _, v)).getOrElse(manifestPath(root, v))
-    def parentTsOf(v: Long): Option[Long] = branch match {
-      case Some(b) if v - 1 > branchFork(root, b).get =>
-        Manifest.readTs(branchManifestPath(root, b, v - 1))
-      case _ => if (v > 1L) commitTimestamp(root, v - 1) else None
-    }
     var attempt = 0
     while (true) {
       val head = headOf
       if (!gate(head + 1)) return head
       val v = head + 1
-      val props = tableProps(root)
-      val snap = build(v, props)
+      val parent = if (head > 0L) resolveLogAt(root, branch, head) else Snapshot(0L, Nil)
+      val meta = graft.catalog.GraftTable.readMeta(root)
+      // the first commit declares the root, so only a root committed
+      // before declarations existed can lack one
+      if (meta.isEmpty && head > 0L) throw new IllegalStateException(
+        s"$root: retired form: committed versions without a declared schema " +
+          s"(${graft.catalog.GraftTable.metaFile}); recreate the table")
+      val props = meta.map(_._2).getOrElse(Map.empty[String, String])
+      val snap = build(v, parent, props)
       // '_gbucket' is a RESERVED path segment (SnapBucket layouts):
       // every path-recovering read drops it, so a direct-API writer
       // staging a GENUINE partition column by that name would silently
@@ -1272,7 +1264,9 @@ object Snapshots {
             s"table under $root without a declared " +
             s"'${graft.catalog.SnapTransform.prop}' property must not " +
             "stage files under it. Rename the partition column.")
-      val ts = stampTs(parentTsOf(v))
+      val known = parent.files.toSet
+      graft.catalog.GraftTable.admit(root, meta, snap.files.filterNot(known))
+      val ts = stampTs(if (head > 0L) Some(parent.ts) else None)
       if (link(root, targetPath(v), snap.copy(version = v, ts = ts)))
         return v
       onLost()
@@ -1296,10 +1290,18 @@ object Snapshots {
     * that atomically fails (EEXIST) when the target exists, and the
     * link appears only fully formed — readers can never see a partial
     * manifest. */
-  private def link(root: String, target: Path, snap: Snapshot): Boolean = {
-    val tmp = commitsDir(root).resolve(
+  private def link(root: String, target: Path, snap: Snapshot): Boolean =
+    createOnce(commitsDir(root), target, Manifest.render(snap).getBytes(UTF_8))
+
+  /** `bytes` written to a writer-unique tmp file in `tmpDir` (same file
+    * system) and published at `target` by an atomic hard-link
+    * create-if-absent; false when `target` already exists. The commit
+    * point of manifests ([[link]]) and of a root's first declaration
+    * ([[graft.catalog.GraftTable.admit]]). */
+  private[graft] def createOnce(tmpDir: Path, target: Path, bytes: Array[Byte]): Boolean = {
+    val tmp = tmpDir.resolve(
       s".tmp_${ProcessHandle.current().pid()}_${stageSeq.incrementAndGet()}")
-    Files.write(tmp, Manifest.render(snap).getBytes(UTF_8))
+    Files.write(tmp, bytes)
     try { Files.createLink(target, tmp); true }
     catch { case _: FileAlreadyExistsException => false }
     finally Files.deleteIfExists(tmp)
@@ -1391,7 +1393,11 @@ object Snapshots {
 
   /** Read the current head through its manifest (merge-on-read deletes
     * applied with version scoping — see [[commitDelete]]): the catalog
-    * head table's read. */
+    * head table's read, under the root's DECLARED schema — a commit
+    * that added a column widened it, so the files that predate the
+    * column read NULL for it (the Delta/Iceberg add-column contract),
+    * while a time-travel [[readAt]] of an earlier version presents the
+    * schema its own files carry. */
   def read(spark: SparkSession, root: String): DataFrame =
     frame(spark, root, None)
 
@@ -1474,21 +1480,6 @@ object Snapshots {
       }
     })
   }
-
-  /** Read the head with parquet schema MERGING — schema evolution:
-    * later commits may add columns, and the merged read resolves the
-    * union schema, nulling the added columns in pre-evolution files.
-    * History is never rewritten (files are immutable), and a
-    * time-travel [[readAt]] of a pre-evolution version still presents
-    * exactly the schema it was committed with — the two halves of the
-    * Delta/Iceberg evolution contract. This is the PINNED head: the
-    * footer-merged schema `VERSION AS OF <head>` presents, one driver
-    * footer read per file at planning; at 100 TB scale a production
-    * store would cache the union schema in the manifest, the same few
-    * bytes of metadata this protocol already centralizes. */
-  def readMerged(spark: SparkSession, root: String): DataFrame =
-    frame(spark, root, Some(resolve(root).getOrElse(throw new IllegalStateException(
-      s"no committed snapshot under $root"))))
 
   /** What one commit did to the table's rows, as every reader of the
     * log classifies it ([[Step.kind]]). */
@@ -1877,7 +1868,7 @@ object Snapshots {
     * the same atomic create-if-absent commit point. */
   def restore(root: String, version: Long): Long = {
     val snap = resolveAt(root, version) // throws clearly if expired
-    publishManifest(root, "restore")((_, _) => Manifest.retain(snap, snap.files))
+    publishManifest(root, "restore")((_, _, _) => Manifest.retain(snap, snap.files))
   }
 
   /** WRITE-AUDIT-PUBLISH (Iceberg's WAP pattern): append the AUDITED
@@ -1911,19 +1902,17 @@ object Snapshots {
     // by reference: the staging files are listed in place (no data
     // movement), each pinned at the publish version; they belong to the
     // staging root, so no sketches are built for them here
-    publishManifest(mainRoot, "publish") { (v, props) =>
-      withStaged(carried(mainRoot, None, v), snap.files, props,
+    publishManifest(mainRoot, "publish") { (v, parent, props) =>
+      withStaged(carried(parent), snap.files, props,
         pinAt = Some(v), sketch = false)
     }
   }
 
-  /** The parent of version `v` on a log, retained whole — the base of
-    * every carry-forward commit (empty below version 2). Re-resolved
-    * per attempt: after a lost race the parent is the winner's head,
-    * not the one this writer started from. */
-  private def carried(root: String, branch: Option[String], v: Long): Snapshot =
-    if (v > 1L) { val p = resolveLogAt(root, branch, v - 1); Manifest.retain(p, p.files) }
-    else Snapshot(v, Nil)
+  /** The parent retained whole — the base of every carry-forward
+    * commit. The funnel re-resolves the parent per attempt: after a
+    * lost race it is the winner's head, not the one this writer started
+    * from. */
+  private def carried(parent: Snapshot): Snapshot = Manifest.retain(parent, parent.files)
 
   /** Writer-unique staging dir for the DataSource-V2 write path, where
     * executors materialize files BEFORE the commit's version is known
@@ -1981,7 +1970,7 @@ object Snapshots {
               "contain. Re-run the statement against the current head.")
         }
         true
-      }, branch = branch) { (v, props) =>
+      }, branch = branch) { (v, _, props) =>
       withStaged(Snapshot(v, Nil), files.sorted, props, pinAt = Some(v))
         .copy(changeFiles = changeFiles.sorted, rowsUnchanged = rowsUnchanged)
     }
@@ -2002,10 +1991,10 @@ object Snapshots {
     Manifest.requireKeyName(keyCol)
     if (dataFiles.isEmpty && delKeyFiles.isEmpty)
       return branch.map(branchHead(root, _)).getOrElse(maxCommitted(root))
-    publishManifest(root, "staged-delta", branch = branch) { (v, props) =>
+    publishManifest(root, "staged-delta", branch = branch) { (v, parent, props) =>
       require(v > 1L || delKeyFiles.isEmpty,
         s"a merge-on-read delta needs a committed table under $root")
-      val base = carried(root, branch, v)
+      val base = carried(parent)
       withStaged(base, dataFiles.sorted, props, pinAt = Some(v)).copy(deletes =
         base.deletes ++ delKeyFiles.sorted.map(DeleteFile(keyCol, _, v)))
     }
@@ -2034,9 +2023,8 @@ object Snapshots {
       dataFiles: Seq[String] = Nil, branch: Option[String] = None): Long = {
     if ((affected.isEmpty || affected.forall(_._2.isEmpty)) && dataFiles.isEmpty)
       return branch.map(branchHead(root, _)).getOrElse(maxCommitted(root))
-    publishManifest(root, "staged-posdelete", branch = branch) { (v, props) =>
-      // a posdel needs a committed table
-      val parent = resolveLogAt(root, branch, v - 1)
+    publishManifest(root, "staged-posdelete", branch = branch) { (v, parent, props) =>
+      require(v > 1L, s"a position delete needs a committed table under $root")
       val live = parent.files.toSet
       val gone = affected.keys.filterNot(live)
       if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
@@ -2072,8 +2060,8 @@ object Snapshots {
       // idempotence gate, re-checked every attempt: a replayed epoch
       // (crash-restart, or a zombie losing the race to its twin) finds
       // its txn tag already committed and no-ops
-      gate = _ => lastTxn(root, appId) < epoch) { (v, props) =>
-      withStaged(carried(root, None, v), files.sorted, props, pinAt = Some(v))
+      gate = _ => lastTxn(root, appId) < epoch) { (v, parent, props) =>
+      withStaged(carried(parent), files.sorted, props, pinAt = Some(v))
         .copy(txn = Some((appId, epoch)))
     }
   }
@@ -2139,7 +2127,7 @@ object Snapshots {
         else { planned = classes; snapAtPlan = snap; true }
       },
       onLost = () =>
-        if (stage != null) deleteRecursively(Paths.get(stage))) { (v, _) =>
+        if (stage != null) deleteRecursively(Paths.get(stage))) { (v, _, _) =>
       stage = newDataDir(root, v)
       Files.createDirectories(Paths.get(stage))
       val newDels = planned.zipWithIndex.map { case ((keyCol, ds), i) =>
@@ -2239,7 +2227,7 @@ object Snapshots {
       gate = _ => txn.forall { case (appId, epoch) =>
         lastTxn(root, appId) < epoch },
       onLost = () => deleteRecursively(Paths.get(dataDir)),
-      branch = branch) { (v, props) =>
+      branch = branch) { (v, parent, props) =>
       // writer-unique staging dir: a racing writer at the same version
       // stages elsewhere, so no cross-writer list/append/delete is
       // possible; a crashed writer's dir is an orphan no manifest ever
@@ -2259,10 +2247,10 @@ object Snapshots {
           // new delete files are SCOPED to this commit: they cover only
           // files staged at versions < v, so any later append of a
           // deleted key stays visible
-          val base = carried(root, branch, v)
+          val base = carried(parent)
           base.copy(deletes = base.deletes ++ staged.map(DeleteFile(keyCol, _, v)))
         case None =>
-          val base = if (carryForward) carried(root, branch, v) else Snapshot(v, Nil)
+          val base = if (carryForward) carried(parent) else Snapshot(v, Nil)
           withStaged(base, staged, props)
       }
       snap.copy(txn = txn, rowsUnchanged = rowsUnchanged)

@@ -73,7 +73,7 @@ class Round18OpsSpec extends SparkSpec {
     // carried entries
     val staging = Qx.tmpOut("r18rblstg", sf())
     Snapshots.commit(staging)(out =>
-      spark.range(0, 10).selectExpr("id * 2 AS k", "id * 1.0 AS v")
+      spark.range(0, 10).selectExpr("id * 2 AS k", "CAST(id AS DOUBLE) AS v")
         .write.mode("append").parquet(out))
     Snapshots.publishFrom(root, staging)
     val published = Snapshots.resolve(root).get.blooms

@@ -279,7 +279,7 @@ class Round9OpsSpec extends SparkSpec {
     Snapshots.commitAppend(root)(out =>
       spark.range(4, 6).select($"id", lit("x").as("extra"))
         .write.mode("append").parquet(out))
-    val head = Snapshots.readMerged(spark, root)
+    val head = Snapshots.read(spark, root)
     assert(head.columns.toSet == Set("id", "extra"),
       s"merged head must resolve the union schema: ${head.columns.toSeq}")
     assert(head.count() == 6)

@@ -11,10 +11,11 @@ import org.apache.spark.sql.execution.joins.BaseJoinExec
 import graft.sources.Snapshots
 
 /** The explicit `Snapshots.read*` API reads through the catalog relation
-  * (`GraftTable`): pins for what that relation had to learn from the
-  * API's inputs — an undeclared root's schema, partition columns
-  * recovered from `.partitionBy` paths, and pending deletes over those
-  * partitions applied by one MOR scan. */
+  * (`GraftTable`): pins for what that relation learns from the
+  * declaration a direct-API root's first commit writes — its schema and
+  * the partition columns of `.partitionBy` paths — for the commit-time
+  * refusals of files that contradict a declaration, and for pending
+  * deletes over those partitions applied by one MOR scan. */
 class SnapshotReadPathSpec extends SparkSpec {
   import spark.implicits._
 
@@ -79,15 +80,15 @@ class SnapshotReadPathSpec extends SparkSpec {
     val root = freshRoot("flatthenparted")
     def rows(r: Seq[Long]) =
       r.toDF("id").select($"id", ($"id" % 3).cast("string").as("p"))
-    // era 1 stores p in its data files; era 2 moves p into the path
+    // era 1 stores p in its data files; era 2 would move p into the path
     val v1 = Snapshots.commit(root)(out => rows(0L until 10L).write.mode("append").parquet(out))
-    Snapshots.commitAppend(root)(out =>
-      rows(10L until 20L).write.partitionBy("p").mode("append").parquet(out))
-    val e = intercept[Exception](Snapshots.read(spark, root).collect())
-    assert(messages(e).exists(_.contains("p=<value> path segment in some eras")),
-      s"expected the mixed-layout refusal, got: ${messages(e)}")
-    // the flat era alone still reads its stored values
-    assert(Snapshots.readAt(spark, root, v1).as[(Long, String)].collect().toSet ==
+    val e = intercept[Exception](Snapshots.commitAppend(root)(out =>
+      rows(10L until 20L).write.partitionBy("p").mode("append").parquet(out)))
+    assert(messages(e).exists(_.contains("column p is declared as data but")),
+      s"expected the commit-time mixed-layout refusal, got: ${messages(e)}")
+    // nothing was published: the flat era reads its stored values
+    assert(Snapshots.maxCommitted(root) == v1)
+    assert(Snapshots.read(spark, root).as[(Long, String)].collect().toSet ==
       (0L until 10L).map(i => (i, (i % 3).toString)).toSet)
   }
 
@@ -96,12 +97,13 @@ class SnapshotReadPathSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $cat.default.dp")
     spark.sql(s"CREATE TABLE $cat.default.dp (id BIGINT, side INT) PARTITIONED BY (side)")
     spark.sql(s"INSERT INTO $cat.default.dp SELECT id, CAST(id % 2 AS INT) FROM range(10)")
-    Snapshots.commitAppend(s"${Qx.tmpOut("readpath_declpart", sf())}/default/dp")(out =>
+    val e = intercept[Exception](Snapshots.commitAppend(
+        s"${Qx.tmpOut("readpath_declpart", sf())}/default/dp")(out =>
       spark.range(10, 20).select($"id", ($"id" % 2).cast("int").as("side"))
-        .write.mode("append").parquet(out))
-    val e = intercept[Exception](spark.sql(s"SELECT * FROM $cat.default.dp").collect())
-    assert(messages(e).exists(_.contains("lacks a side=<value> segment")),
-      s"expected the missing-segment refusal, got: ${messages(e)}")
+        .write.mode("append").parquet(out)))
+    assert(messages(e).exists(_.contains("column side is declared as a path segment but")),
+      s"expected the commit-time stored-as-data refusal, got: ${messages(e)}")
+    assert(spark.sql(s"SELECT * FROM $cat.default.dp").count() == 10L)
   }
 
   test("a declared unpartitioned table refuses partitionBy-staged files") {
@@ -109,12 +111,13 @@ class SnapshotReadPathSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $cat.default.df")
     spark.sql(s"CREATE TABLE $cat.default.df (id BIGINT, side INT)")
     spark.sql(s"INSERT INTO $cat.default.df SELECT id, CAST(id % 2 AS INT) FROM range(10)")
-    Snapshots.commitAppend(s"${Qx.tmpOut("readpath_declflat", sf())}/default/df")(out =>
+    val e = intercept[Exception](Snapshots.commitAppend(
+        s"${Qx.tmpOut("readpath_declflat", sf())}/default/df")(out =>
       spark.range(10, 20).select($"id", ($"id" % 2).cast("int").as("side"))
-        .write.partitionBy("side").mode("append").parquet(out))
-    val e = intercept[Exception](spark.sql(s"SELECT * FROM $cat.default.df").collect())
-    assert(messages(e).exists(_.contains("declares no partition columns")),
-      s"expected the identity-layout refusal, got: ${messages(e)}")
+        .write.partitionBy("side").mode("append").parquet(out)))
+    assert(messages(e).exists(_.contains("column side is declared as data but")),
+      s"expected the commit-time identity-layout refusal, got: ${messages(e)}")
+    assert(spark.sql(s"SELECT * FROM $cat.default.df").count() == 10L)
   }
 
   test("pruned reads of a partitionBy root with stacked deletes plan one MOR scan, inline or lazy") {
