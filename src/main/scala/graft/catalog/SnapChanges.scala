@@ -296,7 +296,7 @@ private[catalog] class ChangesMicroBatchStream(root: String,
     * BY NAME (a partition-aware scan reorders partition columns last —
     * see [[scanOutSchema]]), so no column can ever mis-map. */
   private def scanOver(files: Seq[String]): Scan = {
-    val props = GraftTable.readMeta(root).map(_._2).getOrElse(Map.empty)
+    val props = GraftTable.declaredMeta(root)._2
     val phys = GraftTable.physOf(props)
     require(phys.isEmpty,
       s"the change feed of $root is unsupported while re-added columns " +

@@ -189,7 +189,7 @@ private[catalog] object SnapProcedures {
       val spark = SparkSession.active
       val before = Snapshots.resolve(root).getOrElse(
         throw new IllegalStateException(s"no committed snapshot under $root"))
-      val propsAtPlan = GraftTable.readMeta(root).map(_._2)
+      val propsAtPlan = GraftTable.declaredMeta(root)._2
       // through the CATALOG scan: renames coalesce, deletes apply,
       // widened columns present at declared width
       val df = spark.table(qualified(table))
@@ -260,13 +260,13 @@ private[catalog] object SnapProcedures {
       // (same murmur3-seed-42 function as every other write path) and
       // a TRANSFORM table's the _gtpart ordinal segment — or compaction
       // would silently flatten the layout, breaking SPJ/ordinal pruning
-      val partCols = propsAtPlan.map(GraftTable.partColsOf).getOrElse(Nil)
-      val bucketSpec = propsAtPlan.flatMap(SnapBucket.of)
-      val transSpec = propsAtPlan.flatMap(SnapTransform.of)
+      val partCols = GraftTable.partColsOf(propsAtPlan)
+      val bucketSpec = SnapBucket.of(propsAtPlan)
+      val transSpec = SnapTransform.of(propsAtPlan)
       // remapped (re-added) columns keep their physical spelling
       // through compaction
       val arranged2 = GraftTable.toPhysical(arranged,
-        propsAtPlan.map(GraftTable.physOf).getOrElse(Map.empty))
+        GraftTable.physOf(propsAtPlan))
       val writer = (bucketSpec, transSpec) match {
         case (Some((c, n)), _) => SnapBucket.stageBucketed(arranged2, c, n)
         case (None, Some(t)) => SnapTransform.stageTransformed(
@@ -289,15 +289,14 @@ private[catalog] object SnapProcedures {
       // clear the rename/tombstone ledgers when nothing changed since
       // planning (the COW row-level writer's rule)
       try GraftTable.withMetaLock(root) {
-        GraftTable.readMeta(root).foreach { case (sc, props) =>
-          val stale = props.keys.filter(k =>
-            k.startsWith(GraftTable.colPriorPrefix) ||
-              k.startsWith(GraftTable.droppedChainPrefix) ||
-              k.startsWith(GraftTable.dropTypePrefix) ||
-              k == GraftTable.droppedProp)
-          if (stale.nonEmpty && propsAtPlan.contains(props))
-            GraftTable.writeMeta(root, sc, props -- stale)
-        }
+        val (sc, props) = GraftTable.declaredMeta(root)
+        val stale = props.keys.filter(k =>
+          k.startsWith(GraftTable.colPriorPrefix) ||
+            k.startsWith(GraftTable.droppedChainPrefix) ||
+            k.startsWith(GraftTable.dropTypePrefix) ||
+            k == GraftTable.droppedProp)
+        if (stale.nonEmpty && propsAtPlan == props)
+          GraftTable.writeMeta(root, sc, props -- stale)
       } catch { case _: Exception => () }
       report(outSchema, row(v, before.files.size, staged.size,
         before.deletes.size))

@@ -87,7 +87,7 @@ private[catalog] class GraftGroupOperation(cmd: RowLevelOperation.Command,
           // gate
           new GraftRewriteBatchWrite(table.root, info.schema(),
             basedOn = table.snap.map(_.version).getOrElse(0L),
-            propsAtPlan = GraftTable.readMeta(table.root).map(_._2),
+            propsAtPlan = GraftTable.declaredMeta(table.root)._2,
             partCols = table.partCols, bucket = table.bucketSpec,
             transform = table.transformSpec.map(t =>
               (t, table.schema()(t.col).dataType)),
@@ -430,8 +430,7 @@ private[graft] object RewriteDiff {
       s"${GraftTable.rewriteDiffProp} does not support map-typed column " +
         s"'${f.name}' (row diffs compare full values; maps are not " +
         "comparable) — drop the property or restructure the column"))
-    val phys = GraftTable.readMeta(root).map(m =>
-      GraftTable.physOf(m._2)).getOrElse(Map.empty)
+    val phys = GraftTable.physOf(GraftTable.declaredMeta(root)._2)
     require(phys.isEmpty,
       s"${GraftTable.rewriteDiffProp} on $root is unsupported while " +
         s"re-added columns (${phys.keys.mkString(", ")}) carry a " +
@@ -519,7 +518,7 @@ private[graft] object RewriteDiff {
   * past it, because the staged list would silently drop rows a
   * concurrent commit added (see [[Snapshots.commitRewriteStaged]]). */
 private[catalog] class GraftRewriteBatchWrite(root: String, schema: StructType,
-    basedOn: Long, propsAtPlan: Option[Map[String, String]] = None,
+    basedOn: Long, propsAtPlan: Map[String, String],
     partCols: Seq[String] = Nil, bucket: Option[(String, Int)] = None,
     transform: Option[(SnapTransform.Spec,
       org.apache.spark.sql.types.DataType)] = None,
@@ -547,7 +546,7 @@ private[catalog] class GraftRewriteBatchWrite(root: String, schema: StructType,
     // spelling through the rewrite — rows are positional, only the
     // parquet schema renames
     val conf = ExecParquet.writerConf(GraftTable.toPhysicalSchema(dataSchema,
-      propsAtPlan.map(GraftTable.physOf).getOrElse(Map.empty)))
+      GraftTable.physOf(propsAtPlan)))
     (partitionId: Int, taskId: Long) => new DataWriter[InternalRow] {
       // PARTITIONED tables: split each task's rows into per-partition
       // files under col=value subdirs ([[DynPartTaskWriter]] — Hive-
@@ -608,8 +607,8 @@ private[catalog] class GraftRewriteBatchWrite(root: String, schema: StructType,
     // atomic manifest (`#changes:` lines), so commit and effects can
     // never diverge. A diff that proves the rewrite row-preserving
     // publishes with the rows-unchanged marker instead.
-    val wantDiff = branch.isEmpty && propsAtPlan.exists(
-      _.get(GraftTable.rewriteDiffProp).contains("true"))
+    val wantDiff = branch.isEmpty &&
+      propsAtPlan.get(GraftTable.rewriteDiffProp).contains("true")
     val changeFiles =
       if (wantDiff) RewriteDiff.stage(root, schema, basedOn, files, stagingDir)
       else Nil
@@ -636,15 +635,14 @@ private[catalog] class GraftRewriteBatchWrite(root: String, schema: StructType,
     // above is atomic and correct with the ledger still in place
     // either way — skipping is always safe.
     try GraftTable.withMetaLock(root) {
-      GraftTable.readMeta(root).foreach { case (sc, props) =>
-        val stale = props.keys.filter(k =>
-          k.startsWith(GraftTable.colPriorPrefix) ||
-            k.startsWith(GraftTable.droppedChainPrefix) ||
-            k.startsWith(GraftTable.dropTypePrefix) ||
-            k == GraftTable.droppedProp)
-        if (stale.nonEmpty && propsAtPlan.contains(props))
-          GraftTable.writeMeta(root, sc, props -- stale)
-      }
+      val (sc, props) = GraftTable.declaredMeta(root)
+      val stale = props.keys.filter(k =>
+        k.startsWith(GraftTable.colPriorPrefix) ||
+          k.startsWith(GraftTable.droppedChainPrefix) ||
+          k.startsWith(GraftTable.dropTypePrefix) ||
+          k == GraftTable.droppedProp)
+      if (stale.nonEmpty && propsAtPlan == props)
+        GraftTable.writeMeta(root, sc, props -- stale)
     } catch { case _: Exception => () }
   }
 
@@ -676,8 +674,7 @@ private[catalog] class GraftDeltaBatchWrite(root: String, keyCol: String,
     // files keep the logical spelling (the #del line and the loaders
     // are self-consistent on it)
     val dataConf = ExecParquet.writerConf(GraftTable.toPhysicalSchema(
-      dataSchema, GraftTable.readMeta(root).map(m =>
-        GraftTable.physOf(m._2)).getOrElse(Map.empty)))
+      dataSchema, GraftTable.physOf(GraftTable.declaredMeta(root)._2)))
     val keyConf = ExecParquet.writerConf(keySchema)
     val dir = stagingDir
     val localSchema = dataSchema
@@ -727,8 +724,7 @@ private[catalog] class GraftPosDeltaBatchWrite(root: String,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
     val dataConf = ExecParquet.writerConf(GraftTable.toPhysicalSchema(
-      dataSchema, GraftTable.readMeta(root).map(m =>
-        GraftTable.physOf(m._2)).getOrElse(Map.empty)))
+      dataSchema, GraftTable.physOf(GraftTable.declaredMeta(root)._2)))
     val dir = stagingDir
     (partitionId: Int, taskId: Long) =>
       new GraftPosDeltaWriter(dir, dataConf, partitionId, taskId)

@@ -272,8 +272,7 @@ private[catalog] class GraftMicroBatchStream(root: String,
     * by name, and a remapped logical name would read the dropped
     * column's dead bytes from pre-re-add files. */
   private def scanOver(files: Seq[String]): Scan = {
-    val phys = GraftTable.readMeta(root).map(m => GraftTable.physOf(m._2))
-      .getOrElse(Map.empty)
+    val phys = GraftTable.physOf(GraftTable.declaredMeta(root)._2)
     require(phys.isEmpty,
       s"streaming reads of $root are unsupported while re-added columns " +
         s"(${phys.keys.mkString(", ")}) carry a physical-name remap; " +
@@ -311,7 +310,7 @@ private[catalog] object GraftMicroBatchStream {
     * the index only and are never row columns). Shared by the plain
     * streaming source and the change feed. */
   def layoutPartSchema(root: String, tableSchema: StructType): StructType = {
-    val props = GraftTable.readMeta(root).map(_._2).getOrElse(Map.empty)
+    val props = GraftTable.declaredMeta(root)._2
     (SnapBucket.of(props), SnapBucket.ofRetired(props)) match {
       // bucket layouts: the synthetic _gbucket segment shapes the
       // index (it is not a row column — readSchema never requests it)
@@ -434,8 +433,7 @@ private[catalog] class GraftStreamableScanBuilder(
       : Option[SnapAggPush.Served] =
     if (!org.apache.spark.sql.SparkSession.active.conf
         .get(SnapAggPush.ConfKey, "true").toBoolean) None
-    else if (GraftTable.readMeta(root).exists(m =>
-        GraftTable.physOf(m._2).nonEmpty)) None
+    else if (GraftTable.physOf(GraftTable.declaredMeta(root)._2).nonEmpty) None
     // ^ tables with RE-ADDED (physically remapped) columns decline:
     //   old files' stats for a remapped logical name describe the
     //   DROPPED column's dead bytes — serving bounds from them would
@@ -540,7 +538,7 @@ private[catalog] class GraftScanFacade(inner: Scan, root: String,
       // count duplicate keys and misreport the partitioning, so
       // transform tables never claim key-grouping (ordinal pruning in
       // the file index is their scale lever instead)
-      GraftTable.readMeta(root).map(_._2).flatMap(SnapTransform.of).isEmpty
+      SnapTransform.of(GraftTable.declaredMeta(root)._2).isEmpty
 
   /** Identity layouts: the declared partition columns. Bucket layouts:
     * the synthetic `_gbucket` int — both are what the file paths carry
@@ -709,7 +707,7 @@ private[catalog] object GraftScanFacade {
     val out = new java.util.HashMap[
       org.apache.spark.sql.connector.expressions.NamedReference,
       org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-    val props = GraftTable.readMeta(root).map(_._2).getOrElse(Map.empty)
+    val props = GraftTable.declaredMeta(root)._2
     // keep-on-unknown like every other stats path: a corrupt ledger
     // value degrades to no-NDV, never a planning-time failure
     val ndv: Map[String, Long] = props.collect {

@@ -748,21 +748,36 @@ object GraftTable {
     * through the ledger: a physical spelling or prior name is its
     * current column, and a tombstoned name never widens. Refused, naming
     * the column and the file: a type the declared one cannot read
-    * ([[widensTo]]), a declared path column stored as data, and a
-    * declared data column staged as a path segment. */
+    * ([[widensTo]]), a declared path column stored as data or staged
+    * with a value its type cannot hold, a declared data column staged as
+    * a path segment, and a file without a Spark footer schema. A branch
+    * commit that would add a column is refused: the declaration is
+    * table-wide, and an unpublished branch must not reshape main's reads.
+    * Published BEFORE the manifest links, a declaration can outlive an
+    * attempt that crashes or whose retry its `gate` or `build` refuses,
+    * as a CREATE TABLE or ADD COLUMNS with no data would. */
   private[graft] def admit(root: String,
-      meta: Option[(StructType, Map[String, String])], files: Seq[String]): Unit =
+      meta: Option[(StructType, Map[String, String])], files: Seq[String],
+      branch: Option[String] = None): Unit =
     if (files.nonEmpty) meta match {
       case None =>
         val (sc, props) = evolved(new StructType(), Map.empty, files)
         if (!Snapshots.createOnce(Paths.get(root), Paths.get(root, metaFile),
             renderMeta(sc, props)))
-          admit(root, readMeta(root), files) // a racing first commit declared first
+          admit(root, readMeta(root), files, branch) // a racing first commit declared first
       case Some((sc, props)) =>
-        if (evolved(sc, props, files)._1 != sc) withMetaLock(root) {
-          val (cur, curProps) = declaredMeta(root)
-          val (wider, widerProps) = evolved(cur, curProps, files)
-          if (wider != cur) writeMeta(root, wider, widerProps)
+        val wider = evolved(sc, props, files)._1
+        if (wider != sc) branch match {
+          case Some(b) => throw new IllegalArgumentException(
+            s"commit refused: a commit to branch '$b' of $root adds column(s) " +
+              s"${wider.fieldNames.diff(sc.fieldNames).mkString(", ")}; a branch " +
+              "cannot change the table's declared schema — add them on main first " +
+              "(ALTER TABLE ADD COLUMNS)")
+          case None => withMetaLock(root) {
+            val (cur, curProps) = declaredMeta(root)
+            val (wider, widerProps) = evolved(cur, curProps, files)
+            if (wider != cur) writeMeta(root, wider, widerProps)
+          }
         }
     }
 
@@ -777,8 +792,8 @@ object GraftTable {
       priorsOf(props).flatMap { case (c, ps) => ps.map(_ -> c) }
     val dead = droppedOf(props)
     val fields = scala.collection.mutable.LinkedHashMap.from(sc.fields.map(f => f.name -> f))
-    for (f <- files; g <- Snapshots.footerSparkSchema(f)
-        .getOrElse(SparkSession.active.read.parquet(f).schema).fields) {
+    for (f <- files; g <- Snapshots.footerSparkSchema(f).getOrElse(refuse(
+        s"$f is not readable parquet with a Spark schema in its footer")).fields) {
       val name = current.getOrElse(g.name, g.name)
       if (current.contains(g.name) || !dead(name)) fields.get(name) match {
         case _ if parts.contains(name) =>
@@ -791,10 +806,19 @@ object GraftTable {
         case None => fields(name) = g.copy(name = name, nullable = true)
       }
     }
-    val segs = files.map(f => f -> GraftScans.segmentsOf(Paths.get(f).getParent.toString)
-      .keySet.diff(Set(Snapshots.bucketPathCol, Snapshots.transformPathCol)))
-    val added = segs.flatMap { case (f, cs) =>
-      cs.filterNot(c => parts.contains(c) || dead(c)).map { c =>
+    val segs = files.map(f => f -> (GraftScans.segmentsOf(Paths.get(f).getParent.toString)
+      -- Seq(Snapshots.bucketPathCol, Snapshots.transformPathCol)))
+    // the strict form of [[GraftScans.partitionValuesOf]]'s cast
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+    for ((f, s) <- segs; (c, raw) <- s if parts.contains(c) && raw !=
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME;
+        d <- fields.get(c) if Cast(Literal(org.apache.spark.unsafe.types.UTF8String
+          .fromString(raw), org.apache.spark.sql.types.StringType), d.dataType,
+          Some("UTC"), EvalMode.TRY).eval() == null)
+      refuse(s"column $c is declared ${d.dataType.simpleString} but $f stages " +
+        s"the path segment $c=$raw")
+    val added = segs.flatMap { case (f, s) =>
+      s.keys.filterNot(c => parts.contains(c) || dead(c)).map { c =>
         if (fields.contains(c))
           refuse(s"column $c is declared as data but $f stages it as a $c=<value> path segment")
         c
@@ -871,8 +895,8 @@ private[catalog] class GraftV1WriteBuilder(root: String, info: LogicalWriteInfo,
             Snapshots.commitToBranch(root, b)(stage)
           case None =>
             val wantDiff = (overwrite || overwriteArg) &&
-              GraftTable.readMeta(root).exists(
-                _._2.get(GraftTable.rewriteDiffProp).contains("true"))
+              GraftTable.declaredMeta(root)._2.get(GraftTable.rewriteDiffProp)
+                .contains("true")
             if (wantDiff) {
               // a `graft.changes.rewriteDiff` table's INSERT OVERWRITE
               // is a row-changing rewrite like any COW statement: stage
@@ -971,8 +995,8 @@ private[catalog] class GraftBranchTable(fullName: String, root: String,
     val t = pinnedDelegate // head meta carries the layout specs
     new GraftV1WriteBuilder(root, info, t.partCols, t.bucketSpec,
       (t.transformSpec, t.transformSpec.flatMap(ts =>
-        GraftTable.readMeta(root).map(_._1).flatMap(
-          _.fields.find(_.name == ts.col).map(_.dataType)))) match {
+        GraftTable.declaredMeta(root)._1.fields.find(_.name == ts.col)
+          .map(_.dataType))) match {
         case (Some(ts), Some(dt)) => Some((ts, dt))
         case _ => None
       },

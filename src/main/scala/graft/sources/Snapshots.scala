@@ -1014,8 +1014,8 @@ object Snapshots {
     val published = {
       val headFiles = squash0.files.toSet
       val rewrote = resolveAt(root, fork).files.exists(!headFiles(_))
-      if (!rewrote || !graft.catalog.GraftTable.readMeta(root).exists(
-          _._2.get(graft.catalog.GraftTable.rewriteDiffProp).contains("true"))) squash0
+      if (!rewrote || !graft.catalog.GraftTable.declaredMeta(root)._2
+          .get(graft.catalog.GraftTable.rewriteDiffProp).contains("true")) squash0
       else {
         val sidecars =
           graft.catalog.RewriteDiff.stageBranchDiff(root, fork, name).sorted
@@ -1230,12 +1230,11 @@ object Snapshots {
       if (!gate(head + 1)) return head
       val v = head + 1
       val parent = if (head > 0L) resolveLogAt(root, branch, head) else Snapshot(0L, Nil)
-      val meta = graft.catalog.GraftTable.readMeta(root)
-      // the first commit declares the root, so only a root committed
-      // before declarations existed can lack one
-      if (meta.isEmpty && head > 0L) throw new IllegalStateException(
-        s"$root: retired form: committed versions without a declared schema " +
-          s"(${graft.catalog.GraftTable.metaFile}); recreate the table")
+      // the first commit declares the root, so a committed root must
+      // be declared
+      val meta =
+        if (head > 0L) Some(graft.catalog.GraftTable.declaredMeta(root))
+        else graft.catalog.GraftTable.readMeta(root)
       val props = meta.map(_._2).getOrElse(Map.empty[String, String])
       val snap = build(v, parent, props)
       // '_gbucket' is a RESERVED path segment (SnapBucket layouts):
@@ -1265,7 +1264,7 @@ object Snapshots {
             s"'${graft.catalog.SnapTransform.prop}' property must not " +
             "stage files under it. Rename the partition column.")
       val known = parent.files.toSet
-      graft.catalog.GraftTable.admit(root, meta, snap.files.filterNot(known))
+      graft.catalog.GraftTable.admit(root, meta, snap.files.filterNot(known), branch)
       val ts = stampTs(if (head > 0L) Some(parent.ts) else None)
       if (link(root, targetPath(v), snap.copy(version = v, ts = ts)))
         return v

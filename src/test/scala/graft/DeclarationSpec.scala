@@ -96,6 +96,50 @@ class DeclarationSpec extends SparkSpec {
       Set(0L -> 0, 1L -> 1, 2L -> 2))
   }
 
+  test("a path segment whose value is not of the declared type is refused at commit; the head stays readable") {
+    val root = freshRoot("retypepath")
+    Snapshots.commit(root)(out => (0L until 6L).toDF("id").select($"id", ($"id" % 3).as("p"))
+      .write.partitionBy("p").mode("append").parquet(out))
+    assert(Snapshots.read(spark, root).schema("p").dataType == IntegerType)
+    for (bad <- Seq("a", "1.5")) {
+      val e = intercept[Exception](Snapshots.commitAppend(root)(out =>
+        Seq(6L).toDF("id").select($"id", lit(bad).as("p"))
+          .write.partitionBy("p").mode("append").parquet(out)))
+      assert(messages(e).exists(m => m.contains("column p is declared int") &&
+        m.contains(s"p=$bad") && m.contains(".parquet")), messages(e))
+    }
+    assert(Snapshots.maxCommitted(root) == 1L, "a refused commit publishes nothing")
+    Snapshots.commitAppend(root)(out => Seq(6L).toDF("id").select($"id", lit("7").as("p"))
+      .write.partitionBy("p").mode("append").parquet(out))
+    assert(Snapshots.read(spark, root).select($"id", $"p".cast("long")).as[(Long, Long)].collect().toSet ==
+      (0L until 6L).map(i => i -> i % 3).toSet + (6L -> 7L))
+  }
+
+  test("a branch commit that adds a column is refused; main's declaration is unchanged") {
+    val root = freshRoot("branchcol")
+    Snapshots.commit(root)(out => spark.range(3).write.mode("append").parquet(out))
+    Snapshots.createBranch(root, "b")
+    val e = intercept[Exception](Snapshots.commitToBranch(root, "b")(out =>
+      spark.range(3, 5).select($"id", lit("x").as("extra")).write.mode("append").parquet(out)))
+    assert(messages(e).exists(m => m.contains("branch 'b'") && m.contains("extra")), messages(e))
+    assert(GraftTable.readMeta(root).get._1.fieldNames.toSeq == Seq("id"))
+    assert(Snapshots.branchHead(root, "b") == 1L, "the refused branch commit published nothing")
+    assert(Snapshots.read(spark, root).columns.toSeq == Seq("id"))
+  }
+
+  test("a staged file that is not readable parquet is refused at commit, naming it") {
+    val root = freshRoot("garbage")
+    Snapshots.commit(root)(out => spark.range(3).write.mode("append").parquet(out))
+    val e = intercept[Exception](Snapshots.commitAppend(root) { out =>
+      Files.createDirectories(Paths.get(out))
+      Files.write(Paths.get(out, "part-00000-junk.parquet"), "not parquet".getBytes("UTF-8"))
+    })
+    assert(messages(e).exists(m => m.contains("part-00000-junk.parquet") &&
+      m.contains("is not readable parquet")), messages(e))
+    assert(Snapshots.maxCommitted(root) == 1L)
+    assert(Snapshots.read(spark, root).count() == 3L)
+  }
+
   test("racing first commits with different schemas: one declaration lands, no manifest without it") {
     (1 to 3).foreach { round =>
       val root = freshRoot(s"race$round")
