@@ -689,8 +689,10 @@ object PlanAudit {
         |same read isolation a Delta MERGE gives. The MERGE runs eagerly
         |inside spark.sql, so the plan below is the key's read of the
         |post-merge head: one BatchScan of the merged table and the
-        |range-partitioned sort of the ORDER BY. Spec-pinned equal to
-        |the DataFrame cdc_merge_apply row for row
+        |ORDER BY, sorted in one partition after an Exchange
+        |SinglePartition (SmallSortStrategy: the head is under the
+        |broadcast threshold, so no range-sampling job). Spec-pinned
+        |equal to the DataFrame cdc_merge_apply row for row
         |(CdcMergeSpec).""".stripMargin,
     "snapshot_stats_prune" ->
       """File skipping on manifest column bounds (r15), explicit API.

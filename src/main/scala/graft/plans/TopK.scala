@@ -508,6 +508,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => TopKStrategy)
     e.injectPlannerStrategy(_ => AsOfStrategy)
+    e.injectPlannerStrategy(_ => SmallSortStrategy)
     e.injectOptimizerRule(_ => PushFilterThroughTopK)
     e.injectOptimizerRule(_ => RewriteRowNumberTopK)
     // Scalar extension functions: any session built with this extensions
@@ -583,7 +584,7 @@ object TopK {
 
   /** Idempotent runtime injection for sessions not built with
     * [[GraftExtensions]] (e.g. a driver-owned session). Installs ALL
-    * graft planner/optimizer extensions (TopK + AsOf). */
+    * graft planner/optimizer extensions (TopK, AsOf, SmallSort). */
   def ensure(spark: SparkSession): Unit = {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental
     exp.synchronized {
@@ -591,6 +592,8 @@ object TopK {
         exp.extraStrategies = exp.extraStrategies :+ TopKStrategy
       if (!exp.extraStrategies.contains(AsOfStrategy))
         exp.extraStrategies = exp.extraStrategies :+ AsOfStrategy
+      if (!exp.extraStrategies.contains(SmallSortStrategy))
+        exp.extraStrategies = exp.extraStrategies :+ SmallSortStrategy
       if (!exp.extraOptimizations.contains(PushFilterThroughTopK))
         exp.extraOptimizations = exp.extraOptimizations :+ PushFilterThroughTopK
       if (!exp.extraOptimizations.contains(RewriteRowNumberTopK))

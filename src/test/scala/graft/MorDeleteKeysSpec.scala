@@ -31,15 +31,6 @@ class MorDeleteKeysSpec extends SparkSpec {
 
   private def sqlDf(q: String) = { wh; spark.sql(q) }
 
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** `q`'s rows (as strings, sorted) read inline and with the gate at
     * "0" (every key set lazy), plus the MOR scan's description of each
     * — the two reads must agree. */

@@ -29,15 +29,6 @@ class MorSequenceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def sqlDf(q: String) = { wh; spark.sql(q) }
 
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def morScans(df: org.apache.spark.sql.DataFrame): Seq[BatchScanExec] =
     collect(df.queryExecution.executedPlan) {
       case b: BatchScanExec if b.scan.description().contains("MOR scan") => b

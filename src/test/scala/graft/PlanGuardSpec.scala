@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
@@ -12,6 +15,11 @@ import org.apache.spark.sql.execution.window.WindowExec
   *  - `WindowExec` with an empty partitionSpec moves the whole input
   *    through ONE task — the single-partition scale-killer (flagged by
   *    the r2 bench on stream_watermark_late, fixed in r3; never again).
+  *  - a global `SortExec` over a `SinglePartition` shuffle sorts the
+  *    whole input in ONE task too: allowed only where the sort's
+  *    logical input is at or under the broadcast threshold (the
+  *    `SmallSortStrategy` gate), and never over an input that is
+  *    already in one partition (a second, wasted gather).
   *  - `CartesianProductExec` / `BroadcastNestedLoopJoinExec` are
   *    allowed only where a side is broadcast-tiny BY DESIGN (1-row
   *    corpus stats, ≤16-row centroid/probe sets, bounded payer×part
@@ -61,6 +69,13 @@ class PlanGuardSpec extends SparkSpec {
       p match {
         case w: WindowExec if w.partitionSpec.isEmpty =>
           bad += "unpartitioned WindowExec (single-task window)"
+        case SortExec(_, true, e @ ShuffleExchangeExec(SinglePartition, _, _, _), _) =>
+          val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+          val input = p.logicalLink.flatMap(_.collectFirst { case l: Sort => l.child })
+          if (!input.exists(i => threshold >= 0 && i.stats.sizeInBytes <= threshold))
+            bad += s"one-task SortExec over ${input.map(_.stats.sizeInBytes)} bytes"
+          if (e.child.outputPartitioning == SinglePartition)
+            bad += "one-task SortExec gathering an input already in one partition"
         case _: CartesianProductExec => bad += "CartesianProductExec"
         case _: BroadcastNestedLoopJoinExec => bad += "BroadcastNestedLoopJoinExec"
         case _ => ()
@@ -112,8 +127,8 @@ class PlanGuardSpec extends SparkSpec {
     test(s"plan hygiene: $name") {
       val found = offenders(fn(spark, sf()).queryExecution.executedPlan)
       if (allowUnkeyedJoin.contains(name)) {
-        // allowance covers unkeyed joins, never unpartitioned windows
-        assert(!found.exists(_.contains("WindowExec")),
+        // allowance covers unkeyed joins, never one-task windows or sorts
+        assert(!found.exists(f => f.contains("WindowExec") || f.contains("SortExec")),
           s"$name: ${found.mkString(", ")}")
       } else {
         assert(found.isEmpty, s"$name: ${found.mkString(", ")}")

@@ -10,6 +10,17 @@ trait SparkSpec extends AnyFunSuite {
 
   def sf(which: String = "0.001"): String = s"/root/testdata/sf$which"
 
+  /** Runs `body` with the session confs `kv` set, then restores each
+    * to its previous value (or unsets it). */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** The data files a DataFrame's executed plan scans, as plain local
     * paths (the manifest's form): every DSv2 batch scan's input
     * partitions, unwrapped through the MOR partitions, adaptive

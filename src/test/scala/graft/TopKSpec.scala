@@ -290,9 +290,14 @@ class TopKSpec extends SparkSpec {
     val strategies = build("buildPlannerStrategies")
     assert(strategies.contains(graft.plans.TopKStrategy))
     assert(strategies.contains(graft.plans.AsOfStrategy))
+    assert(strategies.contains(graft.plans.SmallSortStrategy))
     val rules = build("buildOptimizerRules")
     assert(rules.contains(graft.plans.PushFilterThroughTopK))
     assert(rules.contains(graft.plans.RewriteRowNumberTopK))
+    // ensure() is the runtime twin: it installs the same strategies and rules
+    TopK.ensure(spark)
+    assert(strategies.toSet == cls.experimental.extraStrategies.toSet)
+    assert(rules.toSet == cls.experimental.extraOptimizations.toSet)
     // the scalar extension functions ride the same entry point;
     // registerFunctions needs a live catalog, so assert on the
     // injected-builders list instead
