@@ -689,9 +689,9 @@ object PlanAudit {
         |same read isolation a Delta MERGE gives. The MERGE runs eagerly
         |inside spark.sql, so the plan below is the key's read of the
         |post-merge head: one BatchScan of the merged table and the
-        |ORDER BY, sorted in one partition after an Exchange
-        |SinglePartition (SmallSortStrategy: the head is under the
-        |broadcast threshold, so no range-sampling job). Spec-pinned
+        |ORDER BY as a root SmallSort, which collect() sorts on the
+        |driver (SmallSortStrategy: the head is under the broadcast
+        |threshold, so no exchange and no second job). Spec-pinned
         |equal to the DataFrame cdc_merge_apply row for row
         |(CdcMergeSpec).""".stripMargin,
     "snapshot_stats_prune" ->

@@ -1,6 +1,7 @@
 package graft
 /** Scratch per-query timer for local iteration: runMain graft.TimeOne <sfDir> <q1> <q2> ...
-  * Repeat a query name for extra timed passes. Set SPARK_GRAFT_PROFILE=1
+  * Each pass runs `collect()`, as a user does (a `.count()` would let
+  * Spark drop the result ORDER BY). Repeat a query name for extra timed passes. Set SPARK_GRAFT_PROFILE=1
   * to print per-Spark-job wall time + callsite during the timed passes
   * (guide §1.5 job labelling — shows where a multi-statement fixture
   * spends its seconds without the UI). */
@@ -19,7 +20,7 @@ object TimeOne {
     // warm each distinct query once at the timed scale: per-path memos
     // (Tables.load's footer schema) then fill here, so a key's counted
     // pass does not depend on which keys ran before it
-    args.tail.distinct.foreach { q => SparkEntry.queries(q)(spark, sfDir).count() }
+    args.tail.distinct.foreach { q => SparkEntry.queries(q)(spark, sfDir).collect() }
     val profile = sys.env.get("SPARK_GRAFT_PROFILE").contains("1")
     @volatile var t0 = 0L
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
@@ -155,7 +156,7 @@ object TimeOne {
       Seq(cJobs, cStages, cTasks, cRunMs, cCpuNs).foreach(_.set(0))
       t0 = System.nanoTime()
       sampling = true
-      SparkEntry.queries(q)(spark, sfDir).count()
+      SparkEntry.queries(q)(spark, sfDir).collect()
       sampling = false
       val wall = (System.nanoTime() - t0) / 1e9
       if (count3) {

@@ -1,24 +1,27 @@
 package graft.plans
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, InterpretedOrdering, InterpretedUnsafeProjection, NamedExpression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, LogicalPlan, Offset, Project, RepartitionOperation, ReturnAnswer, Sort, Tail, Window}
-import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.util.truncatedString
+import org.apache.spark.sql.execution.{OrderPreservingUnaryExecNode, ProjectExec, SortExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.internal.SQLConf
 
 /** Planner strategy: the ORDER BY that produces a query's result, over
-  * an input small enough to ship whole, sorts in one partition.
+  * an input small enough to ship whole, is sorted where the result
+  * lands: [[SmallSortExec]].
   *
   * Spark plans every global sort as a range shuffle, and the range
   * partitioner first runs a job of its own that recomputes the whole
   * child plan to sample the partition bounds. For a result the driver
-  * collects anyway that job is pure overhead: this strategy plans
-  *
-  *   SortExec(order, global) ← Exchange SinglePartition ← child
-  *
-  * instead, so the child keeps its parallelism, one spillable task
-  * sorts the gathered rows and no sampling job runs (the shape Presto
-  * gives every final ORDER BY).
+  * collects anyway both that job and the shuffle are overhead: the
+  * child's rows reach the driver in the one job `collect()` runs, and
+  * the driver sorts them there (the final merge Presto runs on its
+  * coordinator, and Spark's own `TakeOrderedAndProjectExec` for
+  * `ORDER BY … LIMIT`).
   *
   * Scope, by construction a small-result path:
   *  - only the result sort, `ReturnAnswer(Sort)` or
@@ -41,14 +44,12 @@ import org.apache.spark.sql.internal.SQLConf
   */
 object SmallSortStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case ReturnAnswer(s: Sort) if eligible(s) => gather(s) :: Nil
+    case ReturnAnswer(s: Sort) if eligible(s) =>
+      SmallSortExec(s.order, s.child.output, planLater(s.child)) :: Nil
     case ReturnAnswer(Project(list, s: Sort)) if eligible(s) =>
-      ProjectExec(list, gather(s)) :: Nil
+      SmallSortExec(s.order, list, planLater(s.child)) :: Nil
     case _ => Nil
   }
-
-  private def gather(s: Sort): SparkPlan =
-    SortExec(s.order, global = true, ShuffleExchangeExec(SinglePartition, planLater(s.child)))
 
   private def eligible(s: Sort): Boolean = {
     val conf = SQLConf.get
@@ -70,4 +71,62 @@ object SmallSortStrategy extends SparkStrategy {
     case s: Sort if s.global => false
     case _ => p.children.exists(onePartition)
   }
+}
+
+/** The result sort of a small query: `TakeOrderedAndProjectExec`
+  * without the limit. Planned only at the root by [[SmallSortStrategy]],
+  * so under AQE it is the root of the final stage, with no exchange
+  * of its own.
+  *
+  * `collect()` (`executeCollect`) runs the child's one job, sorts the
+  * returned rows on the driver with an interpreted ordering and projects
+  * them there as partition 0, so the sort compiles no class and needs
+  * no memory beyond the collected rows and one array of references.
+  * Every other consumer (`toLocalIterator`, `.rdd`, a
+  * cache that may change its output partitioning) goes through
+  * `execute()`, which gathers the rows into one task through a
+  * `SinglePartition` shuffle and sorts them there: the same rows in the
+  * same order, in one partition.
+  */
+case class SmallSortExec(
+    order: Seq[SortOrder],
+    projectList: Seq[NamedExpression],
+    child: SparkPlan) extends OrderPreservingUnaryExecNode {
+
+  override def output: Seq[Attribute] = projectList.map(_.toAttribute)
+  override def outputPartitioning: Partitioning = SinglePartition
+  override protected def outputExpressions: Seq[NamedExpression] = projectList
+  override protected def orderingExpressions: Seq[SortOrder] = order
+
+  private def projects: Boolean = projectList != child.output
+
+  override def simpleString(maxFields: Int): String = {
+    val orderBy = truncatedString(order, "[", ",", "]", maxFields)
+    val out = truncatedString(output, "[", ",", "]", maxFields)
+    s"$nodeName(orderBy=$orderBy, output=$out)"
+  }
+
+  override def executeCollect(): Array[InternalRow] = executeQuery {
+    // `sorted` sorts a copy of the reference array: a child may hand out
+    // an array it keeps (LocalTableScanExec does)
+    val rows = child.executeCollect().sorted(new InterpretedOrdering(order, child.output))
+    if (!projects) rows
+    else {
+      val proj = InterpretedUnsafeProjection.createProjection(
+        BindReferences.bindReferences(projectList, child.output))
+      proj.initialize(0)
+      rows.map(r => proj(r).copy())
+    }
+  }
+
+  /** The plan `execute()` runs: one task gathers and sorts every row. */
+  @transient private lazy val gathered: SparkPlan = {
+    val sorted = SortExec(order, global = true, ShuffleExchangeExec(SinglePartition, child))
+    if (projects) ProjectExec(projectList, sorted) else sorted
+  }
+
+  override protected def doExecute(): RDD[InternalRow] = gathered.execute()
+
+  override protected def withNewChildInternal(newChild: SparkPlan): SmallSortExec =
+    copy(child = newChild)
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.SmallSortExec
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution.{SortExec, SparkPlan}
@@ -16,10 +17,12 @@ import org.apache.spark.sql.execution.window.WindowExec
   *    through ONE task — the single-partition scale-killer (flagged by
   *    the r2 bench on stream_watermark_late, fixed in r3; never again).
   *  - a global `SortExec` over a `SinglePartition` shuffle sorts the
-  *    whole input in ONE task too: allowed only where the sort's
-  *    logical input is at or under the broadcast threshold (the
-  *    `SmallSortStrategy` gate), and never over an input that is
-  *    already in one partition (a second, wasted gather).
+  *    whole input in ONE task too: never planned (a small result sorts
+  *    on the driver instead, below).
+  *  - a `SmallSortExec` sorts the whole result on the driver: allowed
+  *    only at the plan's root (the final stage's root under AQE) and
+  *    where the sort's logical input is at or under the broadcast
+  *    threshold (the `SmallSortStrategy` gate).
   *  - `CartesianProductExec` / `BroadcastNestedLoopJoinExec` are
   *    allowed only where a side is broadcast-tiny BY DESIGN (1-row
   *    corpus stats, ≤16-row centroid/probe sets, bounded payer×part
@@ -65,32 +68,34 @@ class PlanGuardSpec extends SparkSpec {
     // a sweep that doesn't descend through it (and through reused
     // exchanges/stages) inspects nothing — every allowance below
     // would hold vacuously
-    def walk(p: SparkPlan): Unit = {
+    // `root`: p is the plan's root, or its final stage's root under AQE
+    def walk(p: SparkPlan, root: Boolean): Unit = {
       p match {
         case w: WindowExec if w.partitionSpec.isEmpty =>
           bad += "unpartitioned WindowExec (single-task window)"
-        case SortExec(_, true, e @ ShuffleExchangeExec(SinglePartition, _, _, _), _) =>
+        case SortExec(_, true, ShuffleExchangeExec(SinglePartition, _, _, _), _) =>
+          bad += "one-task SortExec over a SinglePartition shuffle"
+        case s: SmallSortExec =>
+          if (!root) bad += "SmallSortExec below the result root"
           val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-          val input = p.logicalLink.flatMap(_.collectFirst { case l: Sort => l.child })
+          val input = s.logicalLink.flatMap(_.collectFirst { case l: Sort => l.child })
           if (!input.exists(i => threshold >= 0 && i.stats.sizeInBytes <= threshold))
-            bad += s"one-task SortExec over ${input.map(_.stats.sizeInBytes)} bytes"
-          if (e.child.outputPartitioning == SinglePartition)
-            bad += "one-task SortExec gathering an input already in one partition"
+            bad += s"SmallSortExec over ${input.map(_.stats.sizeInBytes)} bytes"
         case _: CartesianProductExec => bad += "CartesianProductExec"
         case _: BroadcastNestedLoopJoinExec => bad += "BroadcastNestedLoopJoinExec"
         case _ => ()
       }
       p match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
+          walk(a.executedPlan, root)
         case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          walk(q.plan)
+          walk(q.plan, root = false)
         case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-          walk(r.child)
-        case other => other.children.foreach(walk)
+          walk(r.child, root = false)
+        case other => other.children.foreach(walk(_, root = false))
       }
     }
-    walk(plan)
+    walk(plan, root = true)
     bad.toSeq
   }
 
@@ -121,6 +126,23 @@ class PlanGuardSpec extends SparkSpec {
         s"$name must plan through partial+final TopKPerGroupExec:\n" +
           df.queryExecution.executedPlan)
     }
+  }
+
+  test("the sweep refuses a result sort off the root and a one-task SortExec") {
+    graft.plans.TopK.ensure(spark)
+    val plan = withConf("spark.sql.adaptive.enabled" -> "false") {
+      spark.range(0, 100, 1, 4).selectExpr("id % 7 AS k", "id").orderBy("k", "id")
+        .queryExecution.executedPlan
+    }
+    val s = plan match {
+      case s: SmallSortExec => s
+      case other => fail(s"no SmallSortExec at the root:\n$other")
+    }
+    assert(offenders(s).isEmpty)
+    assert(offenders(org.apache.spark.sql.execution.ProjectExec(s.output, s))
+      .contains("SmallSortExec below the result root"))
+    assert(offenders(SortExec(s.order, global = true,
+      ShuffleExchangeExec(SinglePartition, s.child))).exists(_.contains("SortExec")))
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

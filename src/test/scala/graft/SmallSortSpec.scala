@@ -2,17 +2,23 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import graft.plans.SmallSortExec
 import org.apache.spark.graftspec.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{ProjectExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** [[SmallSortStrategy]]: a result ORDER BY over an input at or under
-  * the broadcast threshold sorts in one partition with no sampling job;
+/** [[graft.plans.SmallSortStrategy]]: a result ORDER BY over an input at
+  * or under the broadcast threshold plans one [[SmallSortExec]] at the
+  * root, which `collect()` sorts on the driver in the child's one job;
   * everything else keeps Spark's range sort. Every spec runs with AQE
   * on and off. */
-class SmallSortSpec extends SparkSpec {
+class SmallSortSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
 
@@ -32,8 +38,18 @@ class SmallSortSpec extends SparkSpec {
   private def planOf(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  private def gathered(plan: String): Boolean =
-    plan.contains("Exchange SinglePartition") && !plan.contains("rangepartitioning")
+  /** The [[SmallSortExec]] at the root of `plan` (of its final stage
+    * under AQE), if the strategy planned one. */
+  private def rootSort(plan: SparkPlan): Option[SmallSortExec] =
+    Some(stripAQEPlan(plan)).collect { case s: SmallSortExec => s }
+
+  /** The result is sorted by a root [[SmallSortExec]], with no exchange
+    * and no range partitioning anywhere in the plan. */
+  private def sortedOnDriver(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.executedPlan
+    rootSort(plan).nonEmpty && !plan.toString.contains("Exchange") &&
+      !plan.toString.contains("rangepartitioning")
+  }
 
   /** Jobs `collect()` starts on a fresh frame built by `df`. */
   private def jobsOf(df: () => DataFrame): (Seq[Row], Int) = {
@@ -56,10 +72,10 @@ class SmallSortSpec extends SparkSpec {
     def withAqe[T](kv: (String, String)*)(body: => T): T =
       withConf(("spark.sql.adaptive.enabled" -> aqe) +: kv: _*)(body)
 
-    test(s"a root ORDER BY under the gate gathers into one partition and runs one job fewer (AQE $aqe)") {
+    test(s"a root ORDER BY under the gate sorts on the driver in one job (AQE $aqe)") {
       val df = () => table().orderBy("k", "id")
       val (small, smallJobs) = withAqe() {
-        assert(gathered(planOf(df())), planOf(df()))
+        assert(sortedOnDriver(df()), planOf(df()))
         jobsOf(df)
       }
       val (range, rangeJobs) = withAqe(Threshold -> "-1") {
@@ -67,15 +83,17 @@ class SmallSortSpec extends SparkSpec {
         jobsOf(df)
       }
       assert(small == range)
-      assert(smallJobs == rangeJobs - 1, s"jobs: gathered $smallJobs, range $rangeJobs")
+      assert(smallJobs == 1 && rangeJobs > 1, s"jobs: driver sort $smallJobs, range $rangeJobs")
     }
 
     test(s"a projection over the result sort gathers too (AQE $aqe)") {
       withAqe() {
         val df = table().orderBy("k", "id").select("v")
-        val plan = planOf(df)
-        assert(gathered(plan), plan)
-        assert(plan.contains("Project"), plan)
+        assert(sortedOnDriver(df), planOf(df))
+        // the projection is folded into the node: no ProjectExec remains
+        assert(rootSort(df.queryExecution.executedPlan).get.output.map(_.name) == Seq("v"))
+        assert(collect(df.queryExecution.executedPlan) { case p: ProjectExec => p }.isEmpty,
+          planOf(df))
         val expected = withConf(Threshold -> "-1")(table().orderBy("k", "id").select("v").collect())
         assert(df.collect().sameElements(expected))
       }
@@ -148,7 +166,7 @@ class SmallSortSpec extends SparkSpec {
       withAqe() {
         orders.foreach { o =>
           val df = () => table().orderBy(o: _*)
-          assert(gathered(planOf(df())))
+          assert(sortedOnDriver(df()), planOf(df()))
           val expected = withConf(Threshold -> "-1")(df().collect().toSeq)
           assert(df().collect().toSeq == expected, o.mkString(", "))
         }
@@ -169,6 +187,52 @@ class SmallSortSpec extends SparkSpec {
           assert(cached.cacheBuilder.cachedPlan.toString.contains("rangepartitioning"),
             cached.cacheBuilder.cachedPlan.toString)
         } finally df.unpersist(blocking = true)
+      }
+    }
+
+    test(s"toLocalIterator, .rdd and a cache return collect()'s rows in order (AQE $aqe)") {
+      import org.apache.spark.sql.functions.col
+      val frames = Seq[() => DataFrame](
+        () => table().orderBy(col("k").desc_nulls_last, col("id")),
+        () => table().orderBy(col("v").asc_nulls_last, col("id").desc).select("v", "id"))
+      withAqe("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true") {
+        frames.foreach { df =>
+          assert(sortedOnDriver(df()), planOf(df()))
+          val expected = df().collect().toSeq
+          assert(df().toLocalIterator().asScala.toSeq == expected)
+          assert(df().rdd.collect().toSeq == expected)
+          val cachedDf = df()
+          cachedDf.cache()
+          try {
+            val cached = cachedDf.queryExecution.withCachedData.collectFirst {
+              case r: InMemoryRelation => r
+            }.getOrElse(fail("not cached"))
+            assert(rootSort(cached.cacheBuilder.cachedPlan).nonEmpty,
+              cached.cacheBuilder.cachedPlan.toString)
+            assert(cachedDf.collect().toSeq == expected)
+          } finally cachedDf.unpersist(blocking = true)
+        }
+      }
+    }
+
+    test(s"rand and spark_partition_id over the result sort read as one partition 0 (AQE $aqe)") {
+      import org.apache.spark.sql.functions.{col, rand, spark_partition_id}
+      withAqe() {
+        val df = table().orderBy("k").select(col("id"), rand(7), spark_partition_id())
+        assert(sortedOnDriver(df), planOf(df))
+        val rows = df.collect().toSeq
+        // the values one task with partition index 0 draws, row by row
+        val draws = spark.range(0, rows.size, 1, 1).select(rand(7)).collect().map(_.getDouble(0))
+        assert(rows.map(_.getDouble(1)) == draws.toSeq)
+        assert(rows.forall(_.getInt(2) == 0))
+        assert(rows.map(_.getLong(0)).sorted == (0L until 600L))
+        val k = (id: Long) => if (id % 11 == 0) -1L else id % 7 // NULLS FIRST
+        val keyed = (rs: Seq[Row]) => rs.map(r => (k(r.getLong(0)), r.getDouble(1), r.getInt(2)))
+        assert(keyed(rows).map(_._1) == keyed(rows).map(_._1).sorted)
+        // execute() gathers into one task and sorts there, and draws the
+        // same values; which id takes which place among equal keys is not
+        // fixed by Spark, so ids are compared by key
+        assert(keyed(df.toLocalIterator().asScala.toSeq) == keyed(rows))
       }
     }
   }
